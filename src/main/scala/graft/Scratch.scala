@@ -56,12 +56,18 @@ object Scratch {
       finally s.close()
     }
 
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
+  /** Delete everything under `dir`, keeping `dir` itself; a missing
+    * `dir` is a no-op. The walk stream is closed on every path.
+    */
+  def wipe(dir: Path): Unit =
+    if (Files.exists(dir)) {
+      val s = Files.walk(dir)
       try s.sorted(java.util.Comparator.reverseOrder())
-        .forEach(q => { Files.deleteIfExists(q); () })
-      catch { case _: Exception => () } // best-effort at JVM exit
+        .forEach(q => if (q != dir) { Files.deleteIfExists(q); () })
       finally s.close()
     }
+
+  private def deleteRecursively(p: Path): Unit =
+    try { wipe(p); Files.deleteIfExists(p); () }
+    catch { case _: Exception => () } // best-effort at JVM exit
 }

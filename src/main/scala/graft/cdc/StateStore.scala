@@ -20,6 +20,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *     schema-<N>.json                   Spark StructType JSON
   *     schema-history.jsonl              A6 journal: one line per evolution
   *     _VERSION                          current version pointer (atomic)
+  *   <warehouse>/_BATCH                  open multi-table batch record
+  *                                       ([[atomically]]; absent when idle)
   *
   * The 100 TB design point (VERDICT r1 perf note): a micro-batch
   * rewrites ONLY the buckets containing evented keys — the new
@@ -628,6 +630,44 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
     next
   }
 
+  /** CRASH-ATOMIC MULTI-TABLE BATCH — the unit a micro-batch that
+    * writes several tables commits as (the reference sink commits each
+    * 10 s group atomically, connect-iceberg-sink.json:17-18):
+    *
+    *   1. an OPEN batch record left by a crashed scope moves each
+    *      listed table's `_VERSION` back to its recorded version (a
+    *      table recorded absent loses its pointer); the versions above
+    *      become crash debris, which [[stageCommit]] overwrites (A14);
+    *   2. the tables' current versions are recorded (tmp + ATOMIC_MOVE);
+    *   3. `body` runs, committing through the ordinary paths;
+    *   4. the record is deleted — the batch's commit point.
+    *
+    * A retried batch therefore runs against exactly the pre-batch state
+    * and ends with the same tables as a run that never crashed. Readers
+    * between a crash and its retry still see the torn state. Only an
+    * open record triggers a reset, so commits made outside any scope
+    * are never rolled back. One writer per warehouse (A17); scopes do
+    * not nest.
+    */
+  def atomically[A](tables: Seq[String])(body: => A): A = {
+    val record = Paths.get(warehouse, BatchFile)
+    if (Files.exists(record))
+      Files.readAllLines(record).asScala.filter(_.nonEmpty).foreach { l =>
+        val Array(t, v) = l.split("\t", 2)
+        if (v.toInt < 0) Files.deleteIfExists(dir(t).resolve(VersionFile))
+        else swapPointer(t, v.toInt)
+      }
+    Files.createDirectories(record.getParent)
+    val tmp = record.resolveSibling(BatchFile + ".tmp")
+    Files.writeString(tmp,
+      tables.map(t => s"$t\t${currentVersion(t)}").mkString("\n"))
+    Files.move(tmp, record, StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING)
+    val out = body
+    Files.delete(record)
+    out
+  }
+
   /** WAP BRANCH STAGE — write version `N+1` in full (data dir,
     * manifest, schema, journal) WITHOUT moving `_VERSION`: readers at
     * head never see it, but [[stateAt]] can — this is the
@@ -661,8 +701,8 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
     merged.write.mode("overwrite")
       .partitionBy(BucketCol)
       .parquet(d.resolve(verDir).toString)
-    // An affected bucket with ZERO surviving rows (a recovery rebuild
-    // that found every key hashing there gone — VERDICT r16 #3) must
+    // An affected bucket with ZERO surviving rows (a delta or rebuild
+    // that left no key hashing there — VERDICT r16 #3) must
     // still PUBLISH as empty, not vanish: the manifest will point at
     // v<next>/_bucket=b, so materialize a metadata-only parquet file
     // for any affected bucket the partitioned row write skipped.
@@ -1741,6 +1781,7 @@ object StateStore {
   val RefsFile = "refs.jsonl"
   val NamedRefsFile = "named-refs.jsonl"
   val CommitsFile = "commits.jsonl"
+  val BatchFile = "_BATCH"
 
   /** Deterministic PK → bucket assignment (xxhash64, the engine-wide
     * content hash). The same expression computes batch-side and
@@ -1756,9 +1797,9 @@ object StateStore {
     * full Spark job per emptied bucket just to write a 0-row footer —
     * pure scheduler overhead multiplied by every commit whose affected
     * set outruns its surviving rows (the L1 edge-layer relinks, the
-    * census/vocab recovery rebuilds). The file is schema-only metadata
-    * — no fixture-derived content — so the cache is the same class as
-    * the codegen cache, not result caching.
+    * census/vocab deltas that empty a bucket). The file is schema-only
+    * metadata — no fixture-derived content — so the cache is the same
+    * class as the codegen cache, not result caching.
     */
   private val emptyFileCache =
     new java.util.concurrent.ConcurrentHashMap[String, Path]()

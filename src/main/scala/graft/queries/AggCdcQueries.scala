@@ -37,37 +37,6 @@ object AggCdcQueries {
   private val StateTable = "agg.state"
   private val SummaryTable = "agg.summary"
 
-  /** The version-stamp witness lives in a SIDECAR FILE, not a fourth
-    * table: it is pure bookkeeping (never served, never joined), a
-    * tmp-write + ATOMIC_MOVE is exactly as crash-atomic as a pointer
-    * swap, and reading/writing it costs zero Spark jobs where a 1-row
-    * table commit costs one write job per micro-batch.
-    */
-  private def metaPath(store: StateStore): java.nio.file.Path =
-    java.nio.file.Paths.get(store.warehouse, "agg.meta.json")
-
-  private def readMeta(store: StateStore): Option[(Long, Long)] = {
-    val f = metaPath(store)
-    if (!java.nio.file.Files.exists(f)) None
-    else {
-      val pat = """\{"state_v":(-?\d+),"summary_v":(-?\d+)\}""".r
-      java.nio.file.Files.readString(f).trim match {
-        case pat(sv, mv) => Some((sv.toLong, mv.toLong))
-        case _ => None
-      }
-    }
-  }
-
-  private def writeMeta(store: StateStore, stateV: Long,
-                        summaryV: Long): Unit = {
-    val tmp = metaPath(store).resolveSibling("agg.meta.json.tmp")
-    java.nio.file.Files.writeString(tmp,
-      s"""{"state_v":$stateV,"summary_v":$summaryV}""")
-    java.nio.file.Files.move(tmp, metaPath(store),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
-
   /** Per-row contribution to the balance total, in integer cents. */
   private def centsExpr(bal: Column): Column =
     round(bal * 100).cast("long")
@@ -109,105 +78,71 @@ object AggCdcQueries {
 
   /** One micro-batch: ordered merge into `agg.state` (the shared
     * [[MergeCommit]] recipe), then the summary delta pass over the
-    * returned (pre, post) state slices.
-    *
-    * TORN-BATCH RECOVERY (ADVICE r15, the [[Bm25CdcQueries]] pattern):
-    * state merge and summary commit are separate atomic commits; a
-    * crash between them leaves the summary one batch behind, and the
-    * retry's re-merge telescopes a ZERO delta (preSlice == postSlice),
-    * freezing the divergence in. The summary is multi-row, so the
-    * version stamp lives in the `agg.meta.json` sidecar written LAST
-    * each batch (tmp + ATOMIC_MOVE — as crash-atomic as a pointer
-    * swap, zero Spark jobs), recording the (state, summary) versions
-    * the pair reflects. Any stamp mismatch at batch start — whichever
-    * of the three writes the crash fell between — routes the batch
-    * through [[rebuildSummary]] instead of the delta.
+    * returned (pre, post) state slices. Crash-atomic across both
+    * tables via [[StateStore.atomically]].
     */
   private[queries] def processBatch(store: StateStore,
                                     batch: DataFrame): Unit =
-    processBatchImpl(store, batch, crashAfter = 2)
+    store.atomically(Seq(StateTable, SummaryTable)) {
+      val compacted =
+        Merge.compactKeepTombstones(batch, Seq("c_custkey")).persist()
+      try {
+        val batchMeta = MergeCommit.toBatchMeta(compacted, Seq("c_custkey"),
+          NBuckets)
+        MergeCommit.mergeBatchMeta(store, StateTable, batchMeta,
+          Seq("c_custkey"), persistSlices = true).foreach { result =>
+          try commitSummaryDeltas(store, batchMeta, result)
+          finally result.unpersist()
+        }
+      } finally compacted.unpersist(blocking = false)
+    }
 
-  /** CRASH INJECTION for the spec: `crashAfter` = how many of the
-    * batch's commits run (0 after state merge, 1 after summary).
+  /** Summary deltas: −(old stored contribution) + (new stored winner),
+    * restricted to this batch's keys. A stale event that loses the
+    * merge yields old == new → the pair cancels exactly (long cents,
+    * no epsilon); a group move subtracts from the old nation and adds
+    * to the new one.
     */
-  private[queries] def processBatchCrashing(store: StateStore,
-      batch: DataFrame, crashAfter: Int): Unit =
-    processBatchImpl(store, batch, crashAfter)
-
-  private def processBatchImpl(store: StateStore, batch: DataFrame,
-                               crashAfter: Int): Unit = {
-    val spark = batch.sparkSession
-    val compacted = Merge.compactKeepTombstones(batch, Seq("c_custkey")).persist()
+  private def commitSummaryDeltas(store: StateStore, batchMeta: DataFrame,
+                                  result: MergeCommit.Result): Unit = {
+    val spark = batchMeta.sparkSession
+    val keys = batchMeta.select("c_custkey").distinct()
+    def contributions(state: DataFrame, sign: Int) =
+      state.join(keys, Seq("c_custkey"), "left_semi")
+        .filter(!col(StateStore.DeletedCol))
+        .select(col("c_nationkey"), lit(sign.toLong).as("dn"),
+          (centsExpr(col("c_acctbal")) * sign).as("dc"))
+    val deltas = contributions(result.preSlice, -1)
+      .unionAll(contributions(result.postSlice, +1))
+      .groupBy("c_nationkey")
+      .agg(sum("dn").as("dn"), sum("dc").as("dc"))
+      .withColumn(StateStore.BucketCol,
+        StateStore.bucketExpr(Seq("c_nationkey"), NBuckets))
+      .persist()
     try {
-      val batchMeta = MergeCommit.toBatchMeta(compacted, Seq("c_custkey"),
-        NBuckets)
-      val preStateV = store.currentVersion(StateTable).toLong
-      val preSumV = store.currentVersion(SummaryTable).toLong
-      val result = MergeCommit.mergeBatchMeta(store, StateTable, batchMeta,
-        Seq("c_custkey"), persistSlices = true)
-        .getOrElse(return)
-      if (crashAfter < 1) { result.unpersist(); return }
-      val stateAligned = result.preSlice
-      val merged = result.postSlice
-
-      val consistent = readMeta(store) match {
-        case Some((sv, mv)) => sv == preStateV && mv == preSumV
-        case None => preStateV < 0 // meta absent only pre-bootstrap
-      }
-
-      if (consistent) {
-        // Summary deltas: −(old stored contribution) + (new stored
-        // winner), restricted to this batch's keys. A stale event that
-        // loses the merge yields old == new → the pair cancels exactly
-        // (long cents, no epsilon); a group move subtracts from the old
-        // nation and adds to the new one.
-        val keys = batchMeta.select("c_custkey").distinct()
-        def contributions(state: DataFrame, sign: Int) =
-          state.join(keys, Seq("c_custkey"), "left_semi")
-            .filter(!col(StateStore.DeletedCol))
-            .select(col("c_nationkey"), lit(sign.toLong).as("dn"),
-              (centsExpr(col("c_acctbal")) * sign).as("dc"))
-        val deltas = contributions(stateAligned, -1)
-          .unionAll(contributions(merged, +1))
-          .groupBy("c_nationkey")
-          .agg(sum("dn").as("dn"), sum("dc").as("dc"))
+      val sumAffected = deltas.select(StateStore.BucketCol).distinct()
+        .collect().map(_.getInt(0)).toSeq.sorted
+      if (sumAffected.nonEmpty) {
+        val sumState =
+          if (store.exists(SummaryTable))
+            store.readBuckets(spark, SummaryTable, sumAffected)
+          else spark.createDataFrame(
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+            StructType.fromDDL(
+              "c_nationkey int, n bigint, cents bigint, _bucket int"))
+        // Additive upsert (no ordering metadata — long deltas commute).
+        val next = sumState.join(deltas.drop(StateStore.BucketCol),
+            Seq("c_nationkey"), "full_outer")
+          .select(col("c_nationkey"),
+            (coalesce(col("n"), lit(0L)) + coalesce(col("dn"), lit(0L)))
+              .as("n"),
+            (coalesce(col("cents"), lit(0L)) + coalesce(col("dc"), lit(0L)))
+              .as("cents"))
           .withColumn(StateStore.BucketCol,
             StateStore.bucketExpr(Seq("c_nationkey"), NBuckets))
-          .persist()
-        val sumAffected = deltas.select(StateStore.BucketCol).distinct()
-          .collect().map(_.getInt(0)).toSeq.sorted
-        if (sumAffected.nonEmpty) {
-          val sumState =
-            if (store.exists(SummaryTable))
-              store.readBuckets(spark, SummaryTable, sumAffected)
-            else spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              StructType.fromDDL(
-                "c_nationkey int, n bigint, cents bigint, _bucket int"))
-          // Additive upsert (no ordering metadata — long deltas commute).
-          val next = sumState.join(deltas.drop(StateStore.BucketCol),
-              Seq("c_nationkey"), "full_outer")
-            .select(col("c_nationkey"),
-              (coalesce(col("n"), lit(0L)) + coalesce(col("dn"), lit(0L)))
-                .as("n"),
-              (coalesce(col("cents"), lit(0L)) + coalesce(col("dc"), lit(0L)))
-                .as("cents"))
-            .withColumn(StateStore.BucketCol,
-              StateStore.bucketExpr(Seq("c_nationkey"), NBuckets))
-          store.commit(spark, SummaryTable, next, sumAffected)
-        }
-        deltas.unpersist(blocking = false)
-      } else {
-        // Torn batch: recompute the summary from merged state.
-        rebuildSummary(spark, store)
+        store.commit(spark, SummaryTable, next, sumAffected)
       }
-      result.unpersist()
-      if (crashAfter < 2) return
-      // The version stamp, written LAST: records which (state,
-      // summary) versions the pair reflects — the atomicity witness.
-      writeMeta(store, store.currentVersion(StateTable).toLong,
-        store.currentVersion(SummaryTable).toLong)
-    } finally compacted.unpersist(blocking = false)
+    } finally deltas.unpersist(blocking = false)
   }
 
   /** Drain the staged change log through the maintainer; returns the
@@ -257,10 +192,9 @@ object AggCdcQueries {
       .persist()
     val rebuiltBuckets = rebuilt.select(StateStore.BucketCol).distinct()
       .collect().map(_.getInt(0)).toSeq
-    // Recovery must be TOTAL (VERDICT r16 #3): previously-manifested
-    // buckets the rebuild no longer owns (every nation hashing there
-    // emptied) commit as EMPTY rather than refusing. Summary may not
-    // exist yet (crash before the FIRST summary commit).
+    // TOTAL (VERDICT r16 #3): previously-manifested buckets the rebuild
+    // no longer owns (every nation hashing there emptied) commit as
+    // EMPTY rather than refusing.
     val affected = (rebuiltBuckets ++ (if (store.exists(SummaryTable))
         store.manifest(SummaryTable).keySet.toSeq
       else Seq.empty[Int])).distinct.sorted

@@ -80,119 +80,70 @@ object Bm25CdcQueries {
 
   /** One micro-batch: feature-project the compacted slice map-side,
     * ordered-merge into the feature index, then the 1-row stats delta
-    * off the returned (pre, post) slices.
-    *
-    * TORN-BATCH RECOVERY (ADVICE r15): the docs merge and the stats
-    * commit are two separate atomic commits; a crash between them
-    * leaves stats reflecting the PREVIOUS docs version, and the
-    * streaming retry's re-merge then finds preSlice == postSlice (the
-    * events are already in state), telescopes a ZERO delta, and would
-    * freeze the divergence in forever. The stats row therefore carries
-    * `docs_v` — the docs-table version it reflects — stamped inside
-    * the same atomic stats commit. At batch start, a stored `docs_v`
-    * that differs from the PRE-merge docs version is the torn-batch
-    * signature (so is a missing stats table over a non-empty docs
-    * table), and the batch REBUILDS stats from the feature index (the
-    * [[statsAndRebuild]] aggregate — one narrow-index scan, the
-    * recovery price of exactly-once stats without cross-table
-    * transactions) instead of applying the delta.
+    * off the returned (pre, post) slices. Both commits are
+    * crash-atomic via [[StateStore.atomically]].
     */
   private[queries] def processBatch(store: StateStore,
                                     batch: DataFrame): Unit =
-    processBatchImpl(store, batch, skipStats = false)
-
-  /** CRASH INJECTION for the spec: the docs merge commits, the stats
-    * commit never runs — the torn-batch state a streaming retry sees.
-    */
-  private[queries] def mergeWithoutStats(store: StateStore,
-                                         batch: DataFrame): Unit =
-    processBatchImpl(store, batch, skipStats = true)
-
-  private def processBatchImpl(store: StateStore, batch: DataFrame,
-                               skipStats: Boolean): Unit = {
-    val spark = batch.sparkSession
-    val compacted = Merge.compactKeepTombstones(batch, Seq("doc_id")).persist()
-    try {
-      val meta = MergeCommit.toBatchMeta(compacted, Seq("doc_id"), NBuckets)
-      // Feature projection on BATCH rows only; text stays out of state.
-      val featMeta = graft.ops.LlmOps.bm25Features(meta)
-        .select(col("doc_id"), col("dl"),
-          col("tf1"), col("tf2"), col("tf3"),
-          col(StateStore.TsCol), col(StateStore.SeqCol),
-          col(StateStore.DeletedCol), col(StateStore.BucketCol))
-      // The docs version the stats row SHOULD reflect going in — read
-      // before the merge bumps it.
-      val preV = store.currentVersion(DocsTable).toLong
-      val result = MergeCommit.mergeBatchMeta(store, DocsTable, featMeta,
-        Seq("doc_id"), persistSlices = true)
-        .getOrElse(return)
+    store.atomically(Seq(DocsTable, StatsTable)) {
+      val compacted =
+        Merge.compactKeepTombstones(batch, Seq("doc_id")).persist()
       try {
-        if (skipStats) return
-        val stored: Option[(Array[Long], Long)] =
-          if (store.exists(StatsTable))
-            store.currentState(spark, StatsTable)
-              .select("n", "sdl", "df1", "df2", "df3", "docs_v")
-              .head() match {
-                case r => Some((Array(r.getLong(0), r.getLong(1),
-                  r.getLong(2), r.getLong(3), r.getLong(4)), r.getLong(5)))
-              }
-          else None
-        val consistent = stored match {
-          case Some((_, dv)) => dv == preV
-          case None => preV < 0 // stats may be absent only pre-bootstrap
+        val meta = MergeCommit.toBatchMeta(compacted, Seq("doc_id"), NBuckets)
+        // Feature projection on BATCH rows only; text stays out of state.
+        val featMeta = graft.ops.LlmOps.bm25Features(meta)
+          .select(col("doc_id"), col("dl"),
+            col("tf1"), col("tf2"), col("tf3"),
+            col(StateStore.TsCol), col(StateStore.SeqCol),
+            col(StateStore.DeletedCol), col(StateStore.BucketCol))
+        MergeCommit.mergeBatchMeta(store, DocsTable, featMeta,
+          Seq("doc_id"), persistSlices = true).foreach { result =>
+          try commitStatsDeltas(store, featMeta, result)
+          finally result.unpersist()
         }
-        val nextVals: Array[Long] =
-          if (consistent) {
-            // Stats deltas: −old winner + new winner over the batch's
-            // keys (LONG sums — stale-loser pairs cancel exactly,
-            // slicings telescope). One collect of ONE row per batch.
-            val keys = featMeta.select("doc_id").distinct()
-            def contrib(state: DataFrame, sign: Int): DataFrame =
-              state.join(keys, Seq("doc_id"), "left_semi")
-                .filter(!col(StateStore.DeletedCol))
-                .select(lit(sign.toLong).as("dn"),
-                  (col("dl").cast("long") * sign).as("ddl"),
-                  when(col("tf1") > 0, sign.toLong).otherwise(0L).as("ddf1"),
-                  when(col("tf2") > 0, sign.toLong).otherwise(0L).as("ddf2"),
-                  when(col("tf3") > 0, sign.toLong).otherwise(0L).as("ddf3"))
-            val d = contrib(result.preSlice, -1)
-              .unionAll(contrib(result.postSlice, +1))
-              .agg(coalesce(sum("dn"), lit(0L)).as("dn"),
-                coalesce(sum("ddl"), lit(0L)).as("ddl"),
-                coalesce(sum("ddf1"), lit(0L)).as("ddf1"),
-                coalesce(sum("ddf2"), lit(0L)).as("ddf2"),
-                coalesce(sum("ddf3"), lit(0L)).as("ddf3"))
-              .head()
-            val prev = stored.map(_._1).getOrElse(Array(0L, 0L, 0L, 0L, 0L))
-            prev.indices.map(i => prev(i) + d.getLong(i)).toArray
-          } else {
-            // Torn batch detected: rebuild from the feature index.
-            store.currentState(spark, DocsTable)
-              .agg(count(lit(1)).cast("long").as("n"),
-                coalesce(sum(col("dl").cast("long")), lit(0L)).as("sdl"),
-                coalesce(sum(when(col("tf1") > 0, 1L).otherwise(0L)),
-                  lit(0L)).as("df1"),
-                coalesce(sum(when(col("tf2") > 0, 1L).otherwise(0L)),
-                  lit(0L)).as("df2"),
-                coalesce(sum(when(col("tf3") > 0, 1L).otherwise(0L)),
-                  lit(0L)).as("df3"))
-              .head() match {
-                case r => Array(r.getLong(0), r.getLong(1), r.getLong(2),
-                  r.getLong(3), r.getLong(4))
-              }
-          }
-        import spark.implicits._
-        val next = Seq((0, nextVals(0), nextVals(1), nextVals(2),
-            nextVals(3), nextVals(4),
-            store.currentVersion(DocsTable).toLong))
-          .toDF("stat_id", "n", "sdl", "df1", "df2", "df3", "docs_v")
-          .withColumn(StateStore.TsCol, lit(0L))
-          .withColumn(StateStore.SeqCol, lit(0L))
-          .withColumn(StateStore.DeletedCol, lit(false))
-          .withColumn(StateStore.BucketCol, lit(0))
-        store.commit(spark, StatsTable, next, Seq(0))
-      } finally result.unpersist()
-    } finally compacted.unpersist(blocking = false)
+      } finally compacted.unpersist(blocking = false)
+    }
+
+  /** Stats deltas: −old winner + new winner over the batch's keys
+    * (LONG sums — stale-loser pairs cancel exactly, slicings
+    * telescope). One collect of ONE row per batch.
+    */
+  private def commitStatsDeltas(store: StateStore, featMeta: DataFrame,
+                                result: MergeCommit.Result): Unit = {
+    val spark = featMeta.sparkSession
+    val prev: Seq[Long] =
+      if (store.exists(StatsTable)) {
+        val r = store.currentState(spark, StatsTable)
+          .select("n", "sdl", "df1", "df2", "df3").head()
+        (0 to 4).map(r.getLong)
+      } else Seq.fill(5)(0L)
+    val keys = featMeta.select("doc_id").distinct()
+    def contrib(state: DataFrame, sign: Int): DataFrame =
+      state.join(keys, Seq("doc_id"), "left_semi")
+        .filter(!col(StateStore.DeletedCol))
+        .select(lit(sign.toLong).as("dn"),
+          (col("dl").cast("long") * sign).as("ddl"),
+          when(col("tf1") > 0, sign.toLong).otherwise(0L).as("ddf1"),
+          when(col("tf2") > 0, sign.toLong).otherwise(0L).as("ddf2"),
+          when(col("tf3") > 0, sign.toLong).otherwise(0L).as("ddf3"))
+    val d = contrib(result.preSlice, -1)
+      .unionAll(contrib(result.postSlice, +1))
+      .agg(coalesce(sum("dn"), lit(0L)).as("dn"),
+        coalesce(sum("ddl"), lit(0L)).as("ddl"),
+        coalesce(sum("ddf1"), lit(0L)).as("ddf1"),
+        coalesce(sum("ddf2"), lit(0L)).as("ddf2"),
+        coalesce(sum("ddf3"), lit(0L)).as("ddf3"))
+      .head()
+    val nextVals = prev.indices.map(i => prev(i) + d.getLong(i))
+    import spark.implicits._
+    val next = Seq((0, nextVals(0), nextVals(1), nextVals(2),
+        nextVals(3), nextVals(4)))
+      .toDF("stat_id", "n", "sdl", "df1", "df2", "df3")
+      .withColumn(StateStore.TsCol, lit(0L))
+      .withColumn(StateStore.SeqCol, lit(0L))
+      .withColumn(StateStore.DeletedCol, lit(false))
+      .withColumn(StateStore.BucketCol, lit(0))
+    store.commit(spark, StatsTable, next, Seq(0))
   }
 
   private[queries] def runMaintenance(spark: SparkSession, sfDir: String,

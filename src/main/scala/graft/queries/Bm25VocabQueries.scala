@@ -23,11 +23,10 @@ import org.apache.spark.sql.types.StructType
   *    batch keys only — a batch-sized explode, never the corpus),
   *    folds them to per-term LONG deltas, and upserts the affected
   *    vocab buckets. Terms whose df reaches 0 leave the vocabulary.
-  *  - `bmv.stats` — 1-row (N, Σ|d|) plus the `docs_v`/`vocab_v`
-  *    version stamps, committed LAST: any crash between the three
-  *    commits leaves a stamp mismatch, and the retry rebuilds vocab +
-  *    stats from the docs index instead of freezing a zero delta in
-  *    (the torn-batch discipline both sibling pipelines carry).
+  *  - `bmv.stats` — 1-row (N, Σ|d|), the same telescoping deltas.
+  *
+  * The three commits of a batch are crash-atomic via
+  * [[StateStore.atomically]].
   *
   * Serving an arbitrary-terms query: the query's terms semi-join the
   * vocabulary (vocab-sized scan → a |q|-row frame pivoted to ONE row
@@ -61,157 +60,103 @@ object Bm25VocabQueries {
 
   private[queries] def processBatch(store: StateStore,
                                     batch: DataFrame): Unit =
-    processBatchImpl(store, batch, skipDerived = false)
-
-  /** CRASH INJECTION for the spec: docs merge commits, vocab + stats
-    * never run.
-    */
-  private[queries] def mergeWithoutDerived(store: StateStore,
-                                           batch: DataFrame): Unit =
-    processBatchImpl(store, batch, skipDerived = true)
-
-  private def processBatchImpl(store: StateStore, batch: DataFrame,
-                               skipDerived: Boolean): Unit = {
-    val spark = batch.sparkSession
-    val compacted = Merge.compactKeepTombstones(batch, Seq("doc_id")).persist()
-    try {
-      val meta = MergeCommit.toBatchMeta(compacted, Seq("doc_id"), NBuckets)
-      val featMeta = meta
-        .withColumn("dl", size(split(col("text"), " ")))
-        .withColumn("tc", termCounts)
-        .select(col("doc_id"), col("dl"), col("tc"),
-          col(StateStore.TsCol), col(StateStore.SeqCol),
-          col(StateStore.DeletedCol), col(StateStore.BucketCol))
-      val preDocsV = store.currentVersion(DocsTable).toLong
-      val preVocabV = store.currentVersion(VocabTable).toLong
-      val result = MergeCommit.mergeBatchMeta(store, DocsTable, featMeta,
-        Seq("doc_id"), persistSlices = true)
-        .getOrElse(return)
+    store.atomically(Seq(DocsTable, VocabTable, StatsTable)) {
+      val compacted =
+        Merge.compactKeepTombstones(batch, Seq("doc_id")).persist()
       try {
-        if (skipDerived) return
-        val stored: Option[(Long, Long, Long, Long)] =
-          if (store.exists(StatsTable))
-            store.currentState(spark, StatsTable)
-              .select("n", "sdl", "docs_v", "vocab_v").head() match {
-                case r => Some((r.getLong(0), r.getLong(1), r.getLong(2),
-                  r.getLong(3)))
-              }
-          else None
-        val consistent = stored match {
-          case Some((_, _, dv, vv)) => dv == preDocsV && vv == preVocabV
-          case None => preDocsV < 0 // stats absent only pre-bootstrap
+        val meta = MergeCommit.toBatchMeta(compacted, Seq("doc_id"), NBuckets)
+        val featMeta = meta
+          .withColumn("dl", size(split(col("text"), " ")))
+          .withColumn("tc", termCounts)
+          .select(col("doc_id"), col("dl"), col("tc"),
+            col(StateStore.TsCol), col(StateStore.SeqCol),
+            col(StateStore.DeletedCol), col(StateStore.BucketCol))
+        MergeCommit.mergeBatchMeta(store, DocsTable, featMeta,
+          Seq("doc_id"), persistSlices = true).foreach { result =>
+          try commitVocabAndStats(store, featMeta, result)
+          finally result.unpersist()
         }
-        val keys = featMeta.select("doc_id").distinct()
-        val (nextN, nextSdl) =
-          if (consistent) {
-            // Scalar stats deltas, kicked off CONCURRENTLY with the
-            // vocabulary branch below (graft.Par — independent reads
-            // of the same persisted slices; only the stats COMMIT has
-            // to wait, for the vocab version it stamps).
-            def contrib(state: DataFrame, sign: Int): DataFrame =
-              state.join(keys, Seq("doc_id"), "left_semi")
-                .filter(!col(StateStore.DeletedCol))
-                .select(lit(sign.toLong).as("dn"),
-                  (col("dl").cast("long") * sign).as("ddl"))
-            val fScalar = graft.Par.future {
-              contrib(result.preSlice, -1)
-                .unionAll(contrib(result.postSlice, +1))
-                .agg(coalesce(sum("dn"), lit(0L)).as("dn"),
-                  coalesce(sum("ddl"), lit(0L)).as("ddl"))
-                .head()
-            }
-            // Vocabulary deltas: ±1 per (stored winner, distinct term)
-            // over the batch's keys — stale losers cancel exactly.
-            // Wrapped in Try so a vocab failure still JOINS the scalar
-            // future before propagating (the Par await-all rule: no
-            // stray action in flight when the caller unwinds).
-            val vocabTry = scala.util.Try {
-              def termContrib(state: DataFrame, sign: Int): DataFrame =
-                state.join(keys, Seq("doc_id"), "left_semi")
-                  .filter(!col(StateStore.DeletedCol))
-                  .select(explode(map_keys(col("tc"))).as("term"))
-                  .withColumn("dd", lit(sign.toLong))
-              val tDeltas = termContrib(result.preSlice, -1)
-                .unionAll(termContrib(result.postSlice, +1))
-                .groupBy("term").agg(sum("dd").as("dd"))
-                .filter(col("dd") =!= 0L)
-                .withColumn(StateStore.BucketCol,
-                  StateStore.bucketExpr(Seq("term"), NBuckets))
-                .persist()
-              val affected = tDeltas.select(StateStore.BucketCol).distinct()
-                .collect().map(_.getInt(0)).toSeq.sorted
-              if (affected.nonEmpty) {
-                val vState =
-                  if (store.exists(VocabTable))
-                    store.readBuckets(spark, VocabTable, affected)
-                  else spark.createDataFrame(
-                    spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                    StructType.fromDDL("term string, df bigint, _bucket int"))
-                val next = vState.join(tDeltas.drop(StateStore.BucketCol),
-                    Seq("term"), "full_outer")
-                  .select(col("term"),
-                    (coalesce(col("df"), lit(0L)) +
-                      coalesce(col("dd"), lit(0L))).as("df"))
-                  .filter(col("df") > 0) // df 0 → the term leaves the vocab
-                  .withColumn(StateStore.BucketCol,
-                    StateStore.bucketExpr(Seq("term"), NBuckets))
-                store.commit(spark, VocabTable, next, affected)
-              }
-              tDeltas.unpersist(blocking = false)
-            }
-            val dTry = scala.util.Try(graft.Par.await(fScalar))
-            vocabTry.get // rethrow vocab failure first (scalar joined)
-            val d = dTry.get
-            val (pn, psdl) = stored.map(s => (s._1, s._2)).getOrElse((0L, 0L))
-            (pn + d.getLong(0), psdl + d.getLong(1))
-          } else {
-            // Torn batch: rebuild vocabulary + stats from the index.
-            rebuildVocab(spark, store)
-            val r = store.currentState(spark, DocsTable)
-              .agg(count(lit(1)).cast("long").as("n"),
-                coalesce(sum(col("dl").cast("long")), lit(0L)).as("sdl"))
-              .head()
-            (r.getLong(0), r.getLong(1))
-          }
-        import spark.implicits._
-        val nextStats = Seq((0, nextN, nextSdl,
-            store.currentVersion(DocsTable).toLong,
-            store.currentVersion(VocabTable).toLong))
-          .toDF("stat_id", "n", "sdl", "docs_v", "vocab_v")
-          .withColumn(StateStore.TsCol, lit(0L))
-          .withColumn(StateStore.SeqCol, lit(0L))
-          .withColumn(StateStore.DeletedCol, lit(false))
-          .withColumn(StateStore.BucketCol, lit(0))
-        store.commit(spark, StatsTable, nextStats, Seq(0))
-      } finally result.unpersist()
-    } finally compacted.unpersist(blocking = false)
-  }
+      } finally compacted.unpersist(blocking = false)
+    }
 
-  /** From-scratch vocabulary recompute off the doc index — the
-    * torn-batch recovery path and the spec's equality baseline.
+  /** Vocabulary and scalar-stats deltas off the merge's (pre, post)
+    * slices, restricted to the batch's keys.
     */
-  private[queries] def rebuildVocab(spark: SparkSession,
-                                    store: StateStore): Int = {
-    val rebuilt = store.currentState(spark, DocsTable)
-      .select(explode(map_keys(col("tc"))).as("term"))
-      .groupBy("term").agg(count(lit(1)).as("df"))
-      .withColumn(StateStore.BucketCol,
-        StateStore.bucketExpr(Seq("term"), NBuckets))
-      .persist()
-    val rebuiltBuckets = rebuilt.select(StateStore.BucketCol).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    // Recovery must be TOTAL (VERDICT r16 #3): a wave can empty a
-    // bucket (every term hashing there left the vocabulary), and the
-    // rebuild then owns FEWER buckets than the stale manifest. Those
-    // buckets are part of the rebuild's truth — commit them as EMPTY
-    // (stageCommit publishes a metadata-only file) rather than
-    // refusing; a recovery path that throws on a legal state freezes
-    // the divergence in.
-    val affected = (rebuiltBuckets ++ (if (store.exists(VocabTable))
-        store.manifest(VocabTable).keySet.toSeq
-      else Seq.empty[Int])).distinct.sorted
-    try store.commit(spark, VocabTable, rebuilt, affected)
-    finally rebuilt.unpersist(blocking = false)
+  private def commitVocabAndStats(store: StateStore, featMeta: DataFrame,
+                                  result: MergeCommit.Result): Unit = {
+    val spark = featMeta.sparkSession
+    val keys = featMeta.select("doc_id").distinct()
+    // Scalar stats deltas, kicked off CONCURRENTLY with the vocabulary
+    // branch below (graft.Par — independent reads of the same
+    // persisted slices).
+    def contrib(state: DataFrame, sign: Int): DataFrame =
+      state.join(keys, Seq("doc_id"), "left_semi")
+        .filter(!col(StateStore.DeletedCol))
+        .select(lit(sign.toLong).as("dn"),
+          (col("dl").cast("long") * sign).as("ddl"))
+    val fScalar = graft.Par.future {
+      contrib(result.preSlice, -1)
+        .unionAll(contrib(result.postSlice, +1))
+        .agg(coalesce(sum("dn"), lit(0L)).as("dn"),
+          coalesce(sum("ddl"), lit(0L)).as("ddl"))
+        .head()
+    }
+    // Vocabulary deltas: ±1 per (stored winner, distinct term) over the
+    // batch's keys — stale losers cancel exactly. Wrapped in Try so a
+    // vocab failure still JOINS the scalar future before propagating
+    // (the Par await-all rule: no stray action in flight when the
+    // caller unwinds).
+    val vocabTry = scala.util.Try {
+      def termContrib(state: DataFrame, sign: Int): DataFrame =
+        state.join(keys, Seq("doc_id"), "left_semi")
+          .filter(!col(StateStore.DeletedCol))
+          .select(explode(map_keys(col("tc"))).as("term"))
+          .withColumn("dd", lit(sign.toLong))
+      val tDeltas = termContrib(result.preSlice, -1)
+        .unionAll(termContrib(result.postSlice, +1))
+        .groupBy("term").agg(sum("dd").as("dd"))
+        .filter(col("dd") =!= 0L)
+        .withColumn(StateStore.BucketCol,
+          StateStore.bucketExpr(Seq("term"), NBuckets))
+        .persist()
+      try {
+        val affected = tDeltas.select(StateStore.BucketCol).distinct()
+          .collect().map(_.getInt(0)).toSeq.sorted
+        if (affected.nonEmpty) {
+          val vState =
+            if (store.exists(VocabTable))
+              store.readBuckets(spark, VocabTable, affected)
+            else spark.createDataFrame(
+              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+              StructType.fromDDL("term string, df bigint, _bucket int"))
+          val next = vState.join(tDeltas.drop(StateStore.BucketCol),
+              Seq("term"), "full_outer")
+            .select(col("term"),
+              (coalesce(col("df"), lit(0L)) +
+                coalesce(col("dd"), lit(0L))).as("df"))
+            .filter(col("df") > 0) // df 0 → the term leaves the vocab
+            .withColumn(StateStore.BucketCol,
+              StateStore.bucketExpr(Seq("term"), NBuckets))
+          store.commit(spark, VocabTable, next, affected)
+        }
+      } finally tDeltas.unpersist(blocking = false)
+    }
+    val dTry = scala.util.Try(graft.Par.await(fScalar))
+    vocabTry.get // rethrow vocab failure first (scalar joined)
+    val d = dTry.get
+    val (pn, psdl) =
+      if (store.exists(StatsTable)) {
+        val r = store.currentState(spark, StatsTable).select("n", "sdl").head()
+        (r.getLong(0), r.getLong(1))
+      } else (0L, 0L)
+    import spark.implicits._
+    val nextStats = Seq((0, pn + d.getLong(0), psdl + d.getLong(1)))
+      .toDF("stat_id", "n", "sdl")
+      .withColumn(StateStore.TsCol, lit(0L))
+      .withColumn(StateStore.SeqCol, lit(0L))
+      .withColumn(StateStore.DeletedCol, lit(false))
+      .withColumn(StateStore.BucketCol, lit(0))
+    store.commit(spark, StatsTable, nextStats, Seq(0))
   }
 
   private[queries] def runMaintenance(spark: SparkSession, sfDir: String,

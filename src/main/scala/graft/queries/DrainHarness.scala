@@ -22,13 +22,6 @@ private[queries] object DrainHarness {
   private val workDirCache =
     new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
 
-  private def wipe(dir: String): Unit = {
-    val p = Paths.get(dir)
-    if (Files.exists(p))
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .forEach(q => if (q != p) Files.deleteIfExists(q))
-  }
-
   /** Stage `log` once per (JVM, cacheKey); [[drain]] goes through
     * here, and each family's `prestage` calls it from Bench's untimed
     * warmup so the one-time staging write never lands inside a timed
@@ -66,8 +59,8 @@ private[queries] object DrainHarness {
         // minute so wave order is unambiguous at any fs granularity.
         Files.setLastModifiedTime(dst,
           java.nio.file.attribute.FileTime.fromMillis(base + i * 60000L))
-        Files.walk(tmp).sorted(java.util.Comparator.reverseOrder())
-          .forEach(q => Files.deleteIfExists(q))
+        graft.Scratch.wipe(tmp)
+        Files.deleteIfExists(tmp)
       }
       dir
     })
@@ -105,8 +98,8 @@ private[queries] object DrainHarness {
       (graft.Scratch.dir("graft-wh-").toString,
         graft.Scratch.dir("graft-ckpt-").toString)
     })
-    wipe(whDir)
-    wipe(ckptDir)
+    graft.Scratch.wipe(Paths.get(whDir))
+    graft.Scratch.wipe(Paths.get(ckptDir))
     val store = new StateStore(whDir, nBuckets)
     // Run the drain on a CLONED session (shared SparkContext, private
     // SQLConf): the per-target micro-batch merges shuffle ~1e3 keys

@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.StructType
   * (inserts link against the graph as it exists; deletes never
   * rewrite neighbors' edge lists, they just stop being visitable).
   *
-  * Four state tables ride one drain:
+  * Three state tables ride one drain:
   *  - `hnsw.vectors` — (vec_id, v, b1..b3 band keys), the ordered
   *    merge every CDC target uses; bands computed scan-local.
   *  - `hnsw.census` — (band → n) LSH-bucket occupancy, additive ±1
@@ -44,9 +44,8 @@ import org.apache.spark.sql.types.StructType
   * drains wave-per-batch, which is what gives the oracle a closed
   * form (A-internal edges cut under A's bucket census, then unioned
   * with the insert wave's candidates under the grown census and
-  * re-cut). The torn-batch discipline still applies: a meta-stamp
-  * sidecar written last, mismatch → total graph rebuild from vector
-  * state.
+  * re-cut). The three commits of a batch are crash-atomic via
+  * [[StateStore.atomically]].
   *
   * What incremental linking COSTS versus a full rebuild is measured,
   * not assumed: `cdc_hnsw_recall` publishes the maintained graph's
@@ -115,52 +114,7 @@ object HnswCdcQueries {
       ev(pk % 9 === 0, image, nullImage, Envelope.OpDelete, 3000L))
   }
 
-  // ------------------------------------------------- sidecar stamp
-
-  private def metaPath(store: StateStore): java.nio.file.Path =
-    java.nio.file.Paths.get(store.warehouse, "hnsw.meta.json")
-
-  private def readMeta(store: StateStore): Option[Seq[Long]] = {
-    val f = metaPath(store)
-    if (!java.nio.file.Files.exists(f)) None
-    else {
-      val pat =
-        """\{"vec_v":(-?\d+),"census_v":(-?\d+),"edges_v":(-?\d+)\}""".r
-      java.nio.file.Files.readString(f).trim match {
-        case pat(a, b, c) => Some(Seq(a.toLong, b.toLong, c.toLong))
-        case _ => None
-      }
-    }
-  }
-
-  private def writeMeta(store: StateStore, vs: Seq[Long]): Unit = {
-    val tmp = metaPath(store).resolveSibling("hnsw.meta.json.tmp")
-    java.nio.file.Files.writeString(tmp,
-      s"""{"vec_v":${vs(0)},"census_v":${vs(1)},"edges_v":${vs(2)}}""")
-    java.nio.file.Files.move(tmp, metaPath(store),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  private def versions(store: StateStore): Seq[Long] =
-    Seq(VecTable, CensusTable, EdgeTable)
-      .map(store.currentVersion(_).toLong)
-
   // --------------------------------------------------- micro-batch
-
-  private[queries] def processBatch(store: StateStore,
-                                    batch: DataFrame): Unit =
-    processBatchImpl(store, batch, crashAfter = 9)
-
-  /** CRASH INJECTION for the spec: 0 = after the vectors merge only,
-    * 1 = + census, 2 = + edges (both layers commit atomically in the
-    * layered table; stamp missing). Every commit boundary of the batch
-    * remains injectable — the former base-without-L1 state no longer
-    * EXISTS as a boundary, which is the point of the layered commit.
-    */
-  private[queries] def processBatchCrashing(store: StateStore,
-      batch: DataFrame, crashAfter: Int): Unit =
-    processBatchImpl(store, batch, crashAfter)
 
   /** Phase label for the UI / JobProf (guide §1.5): thread-local, so
     * it sticks to the actions this batch thread launches next.
@@ -168,124 +122,128 @@ object HnswCdcQueries {
   private def label(spark: SparkSession, s: String): Unit =
     spark.sparkContext.setJobDescription(s"hnsw: $s")
 
-  private def processBatchImpl(store: StateStore, batch: DataFrame,
-                               crashAfter: Int): Unit = {
-    val spark = batch.sparkSession
-    label(spark, "compact batch")
-    val compacted = Merge.compactKeepTombstones(batch, Seq("vec_id")).persist()
+  private[queries] def processBatch(store: StateStore,
+                                    batch: DataFrame): Unit =
+    store.atomically(Seq(VecTable, CensusTable, EdgeTable)) {
+      val spark = batch.sparkSession
+      label(spark, "compact batch")
+      val compacted =
+        Merge.compactKeepTombstones(batch, Seq("vec_id")).persist()
+      try {
+        val meta = MergeCommit.toBatchMeta(compacted, Seq("vec_id"), NBuckets)
+        val featMeta = meta.select(
+          Seq(col("vec_id"), col("emb").as("v")) ++
+            BandDims.map { case (g, dims) =>
+              bandExpr(col("emb"), g, dims).as(s"b$g") } ++
+            Seq(col(StateStore.TsCol), col(StateStore.SeqCol),
+              col(StateStore.DeletedCol), col(StateStore.BucketCol)): _*)
+        label(spark, "vectors merge")
+        MergeCommit.mergeBatchMeta(store, VecTable, featMeta,
+          Seq("vec_id"), persistSlices = true).foreach { result =>
+          try {
+            commitCensusDeltas(store, result)
+            linkBatch(store, featMeta, result)
+          } finally result.unpersist()
+        }
+      } finally compacted.unpersist(blocking = false)
+    }
+
+  /** Census: ±1 per (stored winner, band), the additive rule. */
+  private def commitCensusDeltas(store: StateStore,
+                                 result: MergeCommit.Result): Unit = {
+    val spark = result.postSlice.sparkSession
+    label(spark, "census deltas")
+    def bandRows(state: DataFrame, sign: Int): DataFrame =
+      state.filter(!col(StateStore.DeletedCol))
+        .select(explode(array(BandDims.map { case (g, _) =>
+          col(s"b$g") }: _*)).as("band"))
+        .withColumn("dn", lit(sign.toLong))
+    val deltas = bandRows(result.preSlice, -1)
+      .unionAll(bandRows(result.postSlice, +1))
+      .groupBy("band").agg(sum("dn").as("dn"))
+      .filter(col("dn") =!= 0L)
+      .withColumn(StateStore.BucketCol,
+        StateStore.bucketExpr(Seq("band"), NBuckets))
+      .persist()
     try {
-      val meta = MergeCommit.toBatchMeta(compacted, Seq("vec_id"), NBuckets)
-      val featMeta = meta.select(
-        Seq(col("vec_id"), col("emb").as("v")) ++
-          BandDims.map { case (g, dims) =>
-            bandExpr(col("emb"), g, dims).as(s"b$g") } ++
-          Seq(col(StateStore.TsCol), col(StateStore.SeqCol),
-            col(StateStore.DeletedCol), col(StateStore.BucketCol)): _*)
-      val preVs = versions(store)
-      label(spark, "vectors merge")
-      val result = MergeCommit.mergeBatchMeta(store, VecTable, featMeta,
-        Seq("vec_id"), persistSlices = true)
-        .getOrElse(return)
-      if (crashAfter < 1) { result.unpersist(); return }
-
-      val consistent = readMeta(store) match {
-        case Some(vs) => vs == preVs
-        case None => preVs.head < 0 // meta absent only pre-bootstrap
-      }
-
-      if (consistent) {
-        label(spark, "census deltas")
-        // --- census: ±1 per (stored winner, band), the additive rule.
-        def bandRows(state: DataFrame, sign: Int): DataFrame =
-          state.filter(!col(StateStore.DeletedCol))
-            .select(explode(array(BandDims.map { case (g, _) =>
-              col(s"b$g") }: _*)).as("band"))
-            .withColumn("dn", lit(sign.toLong))
-        val deltas = bandRows(result.preSlice, -1)
-          .unionAll(bandRows(result.postSlice, +1))
-          .groupBy("band").agg(sum("dn").as("dn"))
-          .filter(col("dn") =!= 0L)
+      val cAffected = deltas.select(StateStore.BucketCol).distinct()
+        .collect().map(_.getInt(0)).toSeq.sorted
+      if (cAffected.nonEmpty) {
+        label(spark, "census commit")
+        val cState =
+          if (store.exists(CensusTable))
+            store.readBuckets(spark, CensusTable, cAffected)
+          else spark.createDataFrame(
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+            StructType.fromDDL("band string, n bigint, _bucket int"))
+        val next = cState.join(deltas.drop(StateStore.BucketCol),
+            Seq("band"), "full_outer")
+          .select(col("band"),
+            (coalesce(col("n"), lit(0L)) + coalesce(col("dn"), lit(0L)))
+              .as("n"))
+          .filter(col("n") > 0)
           .withColumn(StateStore.BucketCol,
             StateStore.bucketExpr(Seq("band"), NBuckets))
-          .persist()
-        val cAffected = deltas.select(StateStore.BucketCol).distinct()
-          .collect().map(_.getInt(0)).toSeq.sorted
-        if (cAffected.nonEmpty) {
-          label(spark, "census commit")
-          val cState =
-            if (store.exists(CensusTable))
-              store.readBuckets(spark, CensusTable, cAffected)
-            else spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              StructType.fromDDL("band string, n bigint, _bucket int"))
-          val next = cState.join(deltas.drop(StateStore.BucketCol),
-              Seq("band"), "full_outer")
-            .select(col("band"),
-              (coalesce(col("n"), lit(0L)) + coalesce(col("dn"), lit(0L)))
-                .as("n"))
-            .filter(col("n") > 0)
-            .withColumn(StateStore.BucketCol,
-              StateStore.bucketExpr(Seq("band"), NBuckets))
-          store.commit(spark, CensusTable, next, cAffected)
-        }
-        deltas.unpersist(blocking = false)
-        if (crashAfter < 2) { result.unpersist(); return }
-
-        // --- candidate pairs: batch live winners × stored bucket
-        // mates over cap-eligible bands of THIS batch.
-        label(spark, "candidate pairs")
-        val newLive = result.postSlice.filter(!col(StateStore.DeletedCol))
-          .select("vec_id", "v", "b1", "b2", "b3").persist()
-        def postings(df: DataFrame): DataFrame =
-          df.select(col("vec_id"), col("v"),
-            explode(array(BandDims.map { case (g, _) => col(s"b$g") }: _*))
-              .as("band"))
-        val batchBandBuckets = postings(newLive).select("band").distinct()
-          .select(StateStore.bucketExpr(Seq("band"), NBuckets).as("b"))
-          .distinct().collect().map(_.getInt(0)).toSeq.sorted
-        val allowed =
-          if (batchBandBuckets.isEmpty) newLive.select("vec_id").limit(0)
-            .select(col("vec_id").cast("string").as("band"))
-          else store.readBuckets(spark, CensusTable, batchBandBuckets)
-            .filter(col("n").between(CapLo, CapHi)).select("band")
-        val stateLive = store.currentState(spark, VecTable)
-        val cand0 = postings(newLive).join(broadcast(allowed), Seq("band"))
-          .select(col("band"), col("vec_id").as("a"), col("v").as("va"))
-          .join(postings(stateLive)
-            .select(col("band"), col("vec_id").as("b"), col("v").as("vb")),
-            Seq("band"))
-          .filter(col("a") =!= col("b"))
-          .select(col("a"), col("b"),
-            round(graft.ops.LlmOps.cosine(col("va"), col("vb")), 6)
-              .as("cos"))
-        // Both layers ride ONE candidate frame: base rows tagged
-        // layer 0, the L1 subsample tagged layer 1 — the layered
-        // relink below cuts each (layer, vec_id) group independently,
-        // exactly what the two per-table relinks computed, in one
-        // window pass and one commit.
-        val cand = cand0
-          .select(col("a").as("vec_id"), col("b").as("neighbor"), col("cos"))
-          .unionAll(cand0.select(col("b").as("vec_id"),
-            col("a").as("neighbor"), col("cos")))
-          .dropDuplicates("vec_id", "neighbor")
-          .persist()
-        val candL = cand.withColumn("layer", lit(BaseLayer))
-          .unionAll(cand.filter(col("vec_id") % 5 === 1 &&
-              col("neighbor") % 5 === 1)
-            .withColumn("layer", lit(L1Layer)))
-          .select("layer", "vec_id", "neighbor", "cos")
-        val batchKeys = featMeta.select("vec_id").distinct()
-        label(spark, "relink")
-        relink(spark, store, candL, batchKeys)
-        cand.unpersist(blocking = false)
-        newLive.unpersist(blocking = false)
-      } else {
-        rebuildGraph(spark, store)
+        store.commit(spark, CensusTable, next, cAffected)
       }
-      result.unpersist()
-      if (crashAfter < 3) return
-      writeMeta(store, versions(store))
-    } finally compacted.unpersist(blocking = false)
+    } finally deltas.unpersist(blocking = false)
+  }
+
+  /** Candidate pairs — batch live winners × stored bucket mates over
+    * cap-eligible bands of THIS batch — then the layered [[relink]].
+    */
+  private def linkBatch(store: StateStore, featMeta: DataFrame,
+                        result: MergeCommit.Result): Unit = {
+    val spark = featMeta.sparkSession
+    label(spark, "candidate pairs")
+    val newLive = result.postSlice.filter(!col(StateStore.DeletedCol))
+      .select("vec_id", "v", "b1", "b2", "b3").persist()
+    def postings(df: DataFrame): DataFrame =
+      df.select(col("vec_id"), col("v"),
+        explode(array(BandDims.map { case (g, _) => col(s"b$g") }: _*))
+          .as("band"))
+    val batchBandBuckets = postings(newLive).select("band").distinct()
+      .select(StateStore.bucketExpr(Seq("band"), NBuckets).as("b"))
+      .distinct().collect().map(_.getInt(0)).toSeq.sorted
+    val allowed =
+      if (batchBandBuckets.isEmpty) newLive.select("vec_id").limit(0)
+        .select(col("vec_id").cast("string").as("band"))
+      else store.readBuckets(spark, CensusTable, batchBandBuckets)
+        .filter(col("n").between(CapLo, CapHi)).select("band")
+    val stateLive = store.currentState(spark, VecTable)
+    val cand0 = postings(newLive).join(broadcast(allowed), Seq("band"))
+      .select(col("band"), col("vec_id").as("a"), col("v").as("va"))
+      .join(postings(stateLive)
+        .select(col("band"), col("vec_id").as("b"), col("v").as("vb")),
+        Seq("band"))
+      .filter(col("a") =!= col("b"))
+      .select(col("a"), col("b"),
+        round(graft.ops.LlmOps.cosine(col("va"), col("vb")), 6)
+          .as("cos"))
+    // Both layers ride ONE candidate frame: base rows tagged
+    // layer 0, the L1 subsample tagged layer 1 — the layered
+    // relink below cuts each (layer, vec_id) group independently,
+    // exactly what the two per-table relinks computed, in one
+    // window pass and one commit.
+    val cand = cand0
+      .select(col("a").as("vec_id"), col("b").as("neighbor"), col("cos"))
+      .unionAll(cand0.select(col("b").as("vec_id"),
+        col("a").as("neighbor"), col("cos")))
+      .dropDuplicates("vec_id", "neighbor")
+      .persist()
+    try {
+      val candL = cand.withColumn("layer", lit(BaseLayer))
+        .unionAll(cand.filter(col("vec_id") % 5 === 1 &&
+            col("neighbor") % 5 === 1)
+          .withColumn("layer", lit(L1Layer)))
+        .select("layer", "vec_id", "neighbor", "cos")
+      val batchKeys = featMeta.select("vec_id").distinct()
+      label(spark, "relink")
+      relink(spark, store, candL, batchKeys)
+    } finally {
+      cand.unpersist(blocking = false)
+      newLive.unpersist(blocking = false)
+    }
   }
 
   /** The re-link rule: batch vectors REBUILD their lists from fresh
@@ -348,8 +306,8 @@ object HnswCdcQueries {
     ()
   }
 
-  /** Batch graph build over a live vectors frame — the torn-batch
-    * recovery path and the recall audit's rebuilt baseline. Caps use
+  /** Batch graph build over a live vectors frame — the recall
+    * audit's rebuilt baseline. Caps use
     * the frame's OWN census (what a from-scratch build would see).
     * Returns (base edges, L1 edges).
     */
@@ -383,38 +341,6 @@ object HnswCdcQueries {
         .select("vec_id", "neighbor", "cos")
     (cut(sym),
       cut(sym.filter(col("vec_id") % 5 === 1 && col("neighbor") % 5 === 1)))
-  }
-
-  /** Total graph rebuild from vector state: census + both edge
-    * layers recommitted; buckets the rebuild no longer owns commit
-    * as EMPTY (VERDICT r16 #3).
-    */
-  private[queries] def rebuildGraph(spark: SparkSession,
-                                    store: StateStore): Unit = {
-    val live = store.currentState(spark, VecTable).persist()
-    def commitTotal(table: String, df: DataFrame, keyCols: Seq[String]): Unit = {
-      val withB = df.withColumn(StateStore.BucketCol,
-        StateStore.bucketExpr(keyCols, NBuckets)).persist()
-      val rebuiltBuckets = withB.select(StateStore.BucketCol).distinct()
-        .collect().map(_.getInt(0)).toSeq
-      val affected = (rebuiltBuckets ++ (if (store.exists(table))
-          store.manifest(table).keySet.toSeq
-        else Seq.empty[Int])).distinct.sorted
-      if (affected.nonEmpty) store.commit(spark, table, withB, affected)
-      withB.unpersist(blocking = false)
-      ()
-    }
-    val census = live.select(explode(array(BandDims.map { case (g, _) =>
-        col(s"b$g") }: _*)).as("band"))
-      .groupBy("band").agg(count(lit(1)).as("n"))
-    commitTotal(CensusTable, census, Seq("band"))
-    val (base, l1) = buildEdges(live)
-    commitTotal(EdgeTable,
-      base.withColumn("layer", lit(BaseLayer))
-        .unionByName(l1.withColumn("layer", lit(L1Layer)))
-        .select("layer", "vec_id", "neighbor", "cos"),
-      Seq("vec_id"))
-    live.unpersist(blocking = false)
   }
 
   // -------------------------------------------------------- serve

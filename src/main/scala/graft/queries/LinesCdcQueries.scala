@@ -21,10 +21,9 @@ import org.apache.spark.sql.types.StructType
   *    [[graft.ops.LlmOps.plantLines]] definition with the batch pass).
   *  - `ln.census` — (digest → n_docs), ±1 per (stored winner,
   *    DISTINCT digest) over batch keys; stale losers cancel, deletes
-  *    subtract, a digest reaching 0 leaves the census. Version
-  *    stamps in a sidecar meta file make the chain torn-batch safe
-  *    (the [[AggCdcQueries]] shape: tmp + ATOMIC_MOVE, zero Spark
-  *    jobs).
+  *    subtract, a digest reaching 0 leaves the census.
+  *
+  * Both commits of a batch are crash-atomic via [[StateStore.atomically]].
   *
   * Serving reuses the batch pass's mark/rewrite/rollup verbatim
   * ([[graft.ops.LlmOps.dedupLinesRollup]]): the census rows above the
@@ -45,140 +44,75 @@ object LinesCdcQueries {
   private val DocsTable = "ln.docs"
   private val CensusTable = "ln.census"
 
-  private def metaPath(store: StateStore): java.nio.file.Path =
-    java.nio.file.Paths.get(store.warehouse, "ln.meta.json")
-
-  private def readMeta(store: StateStore): Option[(Long, Long)] = {
-    val f = metaPath(store)
-    if (!java.nio.file.Files.exists(f)) None
-    else {
-      val pat = """\{"docs_v":(-?\d+),"census_v":(-?\d+)\}""".r
-      java.nio.file.Files.readString(f).trim match {
-        case pat(dv, cv) => Some((dv.toLong, cv.toLong))
-        case _ => None
-      }
-    }
-  }
-
-  private def writeMeta(store: StateStore, docsV: Long,
-                        censusV: Long): Unit = {
-    val tmp = metaPath(store).resolveSibling("ln.meta.json.tmp")
-    java.nio.file.Files.writeString(tmp,
-      s"""{"docs_v":$docsV,"census_v":$censusV}""")
-    java.nio.file.Files.move(tmp, metaPath(store),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
-
   private[queries] def processBatch(store: StateStore,
                                     batch: DataFrame): Unit =
-    processBatchImpl(store, batch, skipDerived = false)
-
-  /** CRASH INJECTION for the spec: docs merge commits, census + meta
-    * never run.
-    */
-  private[queries] def mergeWithoutDerived(store: StateStore,
-                                           batch: DataFrame): Unit =
-    processBatchImpl(store, batch, skipDerived = true)
-
-  private def processBatchImpl(store: StateStore, batch: DataFrame,
-                               skipDerived: Boolean): Unit = {
-    val spark = batch.sparkSession
-    val compacted = Merge.compactKeepTombstones(batch, Seq("doc_id")).persist()
-    try {
-      val meta = MergeCommit.toBatchMeta(compacted, Seq("doc_id"), NBuckets)
-      // Features map-side on batch rows: plant, split, derive source
-      // (the fixture invariant source = 'src' || doc_id % 20 — events
-      // carry only (doc_id, text)). Cast pins containsNull so the
-      // parquet round-trip can't trip the A11 widen guard.
-      val featMeta = meta
-        .withColumn("source",
-          concat(lit("src"), (col("doc_id") % 20).cast("string")))
-        .withColumn("lines",
-          split(graft.ops.LlmOps.plantLines(col("text")), "\n")
-            .cast("array<string>"))
-        .select(col("doc_id"), col("source"), col("lines"),
-          col(StateStore.TsCol), col(StateStore.SeqCol),
-          col(StateStore.DeletedCol), col(StateStore.BucketCol))
-      val preDocsV = store.currentVersion(DocsTable).toLong
-      val preCensusV = store.currentVersion(CensusTable).toLong
-      val result = MergeCommit.mergeBatchMeta(store, DocsTable, featMeta,
-        Seq("doc_id"), persistSlices = true)
-        .getOrElse(return)
+    store.atomically(Seq(DocsTable, CensusTable)) {
+      val compacted =
+        Merge.compactKeepTombstones(batch, Seq("doc_id")).persist()
       try {
-        if (skipDerived) return
-        val consistent = readMeta(store) match {
-          case Some((dv, cv)) => dv == preDocsV && cv == preCensusV
-          case None => preDocsV < 0 // meta absent only pre-bootstrap
+        val meta = MergeCommit.toBatchMeta(compacted, Seq("doc_id"), NBuckets)
+        // Features map-side on batch rows: plant, split, derive source
+        // (the fixture invariant source = 'src' || doc_id % 20 — events
+        // carry only (doc_id, text)). Cast pins containsNull so the
+        // parquet round-trip can't trip the A11 widen guard.
+        val featMeta = meta
+          .withColumn("source",
+            concat(lit("src"), (col("doc_id") % 20).cast("string")))
+          .withColumn("lines",
+            split(graft.ops.LlmOps.plantLines(col("text")), "\n")
+              .cast("array<string>"))
+          .select(col("doc_id"), col("source"), col("lines"),
+            col(StateStore.TsCol), col(StateStore.SeqCol),
+            col(StateStore.DeletedCol), col(StateStore.BucketCol))
+        MergeCommit.mergeBatchMeta(store, DocsTable, featMeta,
+          Seq("doc_id"), persistSlices = true).foreach { result =>
+          try commitCensusDeltas(store, featMeta, result)
+          finally result.unpersist()
         }
-        if (consistent) {
-          val keys = featMeta.select("doc_id").distinct()
-          // ±1 per (stored winner, DISTINCT line digest) — the exact
-          // increment of a count(DISTINCT doc_id) census.
-          def digContrib(state: DataFrame, sign: Int): DataFrame =
-            state.join(keys, Seq("doc_id"), "left_semi")
-              .filter(!col(StateStore.DeletedCol))
-              .select(explode(array_distinct(
-                transform(col("lines"), l => md5(l)))).as("d"))
-              .withColumn("dd", lit(sign.toLong))
-          val deltas = digContrib(result.preSlice, -1)
-            .unionAll(digContrib(result.postSlice, +1))
-            .groupBy("d").agg(sum("dd").as("dd"))
-            .filter(col("dd") =!= 0L)
-            .withColumn(StateStore.BucketCol,
-              StateStore.bucketExpr(Seq("d"), NBuckets))
-            .persist()
-          val affected = deltas.select(StateStore.BucketCol).distinct()
-            .collect().map(_.getInt(0)).toSeq.sorted
-          if (affected.nonEmpty) {
-            val cState =
-              if (store.exists(CensusTable))
-                store.readBuckets(spark, CensusTable, affected)
-              else spark.createDataFrame(
-                spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                StructType.fromDDL("d string, nd bigint, _bucket int"))
-            val next = cState.join(deltas.drop(StateStore.BucketCol),
-                Seq("d"), "full_outer")
-              .select(col("d"),
-                (coalesce(col("nd"), lit(0L)) +
-                  coalesce(col("dd"), lit(0L))).as("nd"))
-              .filter(col("nd") > 0) // recurrence 0 → leaves the census
-              .withColumn(StateStore.BucketCol,
-                StateStore.bucketExpr(Seq("d"), NBuckets))
-            store.commit(spark, CensusTable, next, affected)
-          }
-          deltas.unpersist(blocking = false)
-        } else {
-          rebuildCensus(spark, store) // torn batch: recount from state
-        }
-        writeMeta(store, store.currentVersion(DocsTable).toLong,
-          store.currentVersion(CensusTable).toLong)
-      } finally result.unpersist()
-    } finally compacted.unpersist(blocking = false)
-  }
+      } finally compacted.unpersist(blocking = false)
+    }
 
-  /** From-scratch census recount off the doc index — the torn-batch
-    * recovery path and the spec's equality baseline.
+  /** ±1 per (stored winner, DISTINCT line digest) over the batch's
+    * keys — the exact increment of a count(DISTINCT doc_id) census.
     */
-  private[queries] def rebuildCensus(spark: SparkSession,
-                                     store: StateStore): Int = {
-    val rebuilt = store.currentState(spark, DocsTable)
-      .select(col("doc_id"), explode(array_distinct(
-        transform(col("lines"), l => md5(l)))).as("d"))
-      .groupBy("d").agg(countDistinct("doc_id").as("nd"))
+  private def commitCensusDeltas(store: StateStore, featMeta: DataFrame,
+                                 result: MergeCommit.Result): Unit = {
+    val spark = featMeta.sparkSession
+    val keys = featMeta.select("doc_id").distinct()
+    def digContrib(state: DataFrame, sign: Int): DataFrame =
+      state.join(keys, Seq("doc_id"), "left_semi")
+        .filter(!col(StateStore.DeletedCol))
+        .select(explode(array_distinct(
+          transform(col("lines"), l => md5(l)))).as("d"))
+        .withColumn("dd", lit(sign.toLong))
+    val deltas = digContrib(result.preSlice, -1)
+      .unionAll(digContrib(result.postSlice, +1))
+      .groupBy("d").agg(sum("dd").as("dd"))
+      .filter(col("dd") =!= 0L)
       .withColumn(StateStore.BucketCol,
         StateStore.bucketExpr(Seq("d"), NBuckets))
       .persist()
-    val rebuiltBuckets = rebuilt.select(StateStore.BucketCol).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    // Recovery must be TOTAL (VERDICT r16 #3): a wave that empties a
-    // census bucket leaves it stale in the manifest; the rebuild
-    // commits it as EMPTY (metadata-only file) instead of refusing.
-    val affected = (rebuiltBuckets ++ (if (store.exists(CensusTable))
-        store.manifest(CensusTable).keySet.toSeq
-      else Seq.empty[Int])).distinct.sorted
-    try store.commit(spark, CensusTable, rebuilt, affected)
-    finally rebuilt.unpersist(blocking = false)
+    try {
+      val affected = deltas.select(StateStore.BucketCol).distinct()
+        .collect().map(_.getInt(0)).toSeq.sorted
+      if (affected.nonEmpty) {
+        val cState =
+          if (store.exists(CensusTable))
+            store.readBuckets(spark, CensusTable, affected)
+          else spark.createDataFrame(
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+            StructType.fromDDL("d string, nd bigint, _bucket int"))
+        val next = cState.join(deltas.drop(StateStore.BucketCol),
+            Seq("d"), "full_outer")
+          .select(col("d"),
+            (coalesce(col("nd"), lit(0L)) +
+              coalesce(col("dd"), lit(0L))).as("nd"))
+          .filter(col("nd") > 0) // recurrence 0 → leaves the census
+          .withColumn(StateStore.BucketCol,
+            StateStore.bucketExpr(Seq("d"), NBuckets))
+        store.commit(spark, CensusTable, next, affected)
+      }
+    } finally deltas.unpersist(blocking = false)
   }
 
   private[queries] def runMaintenance(spark: SparkSession, sfDir: String,

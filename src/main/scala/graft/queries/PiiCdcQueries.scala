@@ -30,11 +30,7 @@ import org.apache.spark.sql.types.StructType
   *    counters; the %5 full-replace wave moves each doc's digest
   *    contribution in one two-sided step.
   *
-  * Torn-batch safety: the `pii.meta.json` sidecar stamps the
-  * (docs, census) versions the pair reflects, written LAST per batch
-  * (tmp + ATOMIC_MOVE); a stamp mismatch at batch start routes the
-  * batch through [[rebuildCensus]] — which is TOTAL: buckets the
-  * rebuild no longer owns commit as EMPTY (VERDICT r16 #3).
+  * Both commits of a batch are crash-atomic via [[StateStore.atomically]].
   *
   * 100 TB: batch cost ∝ change volume (feature extraction is
   * scan-local on batch rows; the delta rollup shuffles |batch keys|
@@ -48,142 +44,97 @@ object PiiCdcQueries {
   private val DocsTable = "pii.docs"
   private val CensusTable = "pii.census"
 
-  private def metaPath(store: StateStore): java.nio.file.Path =
-    java.nio.file.Paths.get(store.warehouse, "pii.meta.json")
-
-  private def readMeta(store: StateStore): Option[(Long, Long)] = {
-    val f = metaPath(store)
-    if (!java.nio.file.Files.exists(f)) None
-    else {
-      val pat = """\{"docs_v":(-?\d+),"census_v":(-?\d+)\}""".r
-      java.nio.file.Files.readString(f).trim match {
-        case pat(dv, cv) => Some((dv.toLong, cv.toLong))
-        case _ => None
-      }
-    }
-  }
-
-  private def writeMeta(store: StateStore, docsV: Long,
-                        censusV: Long): Unit = {
-    val tmp = metaPath(store).resolveSibling("pii.meta.json.tmp")
-    java.nio.file.Files.writeString(tmp,
-      s"""{"docs_v":$docsV,"census_v":$censusV}""")
-    java.nio.file.Files.move(tmp, metaPath(store),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
-
   private[queries] def processBatch(store: StateStore,
                                     batch: DataFrame): Unit =
-    processBatchImpl(store, batch, crashAfter = 2)
+    store.atomically(Seq(DocsTable, CensusTable)) {
+      val compacted =
+        Merge.compactKeepTombstones(batch, Seq("doc_id")).persist()
+      try {
+        val meta = MergeCommit.toBatchMeta(compacted, Seq("doc_id"), NBuckets)
+        // Features map-side on batch rows: plant + detect + scrub-digest
+        // scan-local, source re-derived from the fixture invariant
+        // (source = 'src' || doc_id % 20 — events carry only the key and
+        // text, like the sibling maintainers). Text is DROPPED here.
+        val featMeta = meta
+          .select(Seq(col("doc_id"),
+            concat(lit("src"), (col("doc_id") % 20).cast("string"))
+              .as("source")) ++
+            graft.ops.LlmOps.piiDocCounters(col("doc_id"), col("text")) ++
+            Seq(col(StateStore.TsCol), col(StateStore.SeqCol),
+              col(StateStore.DeletedCol), col(StateStore.BucketCol)): _*)
+        MergeCommit.mergeBatchMeta(store, DocsTable, featMeta,
+          Seq("doc_id"), persistSlices = true).foreach { result =>
+          try commitCensusDeltas(store, featMeta, result)
+          finally result.unpersist()
+        }
+      } finally compacted.unpersist(blocking = false)
+    }
 
-  /** CRASH INJECTION for the spec: `crashAfter` = how many of the
-    * batch's writes run (0 after docs merge, 1 after census commit,
-    * 2 = the full batch incl. the meta stamp).
-    */
-  private[queries] def processBatchCrashing(store: StateStore,
-      batch: DataFrame, crashAfter: Int): Unit =
-    processBatchImpl(store, batch, crashAfter)
-
-  private def processBatchImpl(store: StateStore, batch: DataFrame,
-                               crashAfter: Int): Unit = {
-    val spark = batch.sparkSession
-    val compacted = Merge.compactKeepTombstones(batch, Seq("doc_id")).persist()
+  /** ±(stored winner's counters) per source over the batch's keys. */
+  private def commitCensusDeltas(store: StateStore, featMeta: DataFrame,
+                                 result: MergeCommit.Result): Unit = {
+    val spark = featMeta.sparkSession
+    val keys = featMeta.select("doc_id").distinct()
+    def contributions(state: DataFrame, sign: Int) =
+      state.join(keys, Seq("doc_id"), "left_semi")
+        .filter(!col(StateStore.DeletedCol))
+        .select(col("source"), lit(sign.toLong).as("dn"),
+          (when(col("e") + col("p") + col("i") > 0, 1L).otherwise(0L)
+            * sign).as("dw"),
+          (col("e").cast("long") * sign).as("de"),
+          (col("p").cast("long") * sign).as("dp"),
+          (col("i").cast("long") * sign).as("di"),
+          (col("resid").cast("long") * sign).as("dr"),
+          (col("ck") * sign).as("dk"))
+    val deltas = contributions(result.preSlice, -1)
+      .unionAll(contributions(result.postSlice, +1))
+      .groupBy("source")
+      .agg(sum("dn").as("dn"), sum("dw").as("dw"), sum("de").as("de"),
+        sum("dp").as("dp"), sum("di").as("di"), sum("dr").as("dr"),
+        sum("dk").as("dk"))
+      .withColumn(StateStore.BucketCol,
+        StateStore.bucketExpr(Seq("source"), NBuckets))
+      .persist()
     try {
-      val meta = MergeCommit.toBatchMeta(compacted, Seq("doc_id"), NBuckets)
-      // Features map-side on batch rows: plant + detect + scrub-digest
-      // scan-local, source re-derived from the fixture invariant
-      // (source = 'src' || doc_id % 20 — events carry only the key and
-      // text, like the sibling maintainers). Text is DROPPED here.
-      val featMeta = meta
-        .select(Seq(col("doc_id"),
-          concat(lit("src"), (col("doc_id") % 20).cast("string"))
-            .as("source")) ++
-          graft.ops.LlmOps.piiDocCounters(col("doc_id"), col("text")) ++
-          Seq(col(StateStore.TsCol), col(StateStore.SeqCol),
-            col(StateStore.DeletedCol), col(StateStore.BucketCol)): _*)
-      val preDocsV = store.currentVersion(DocsTable).toLong
-      val preCensusV = store.currentVersion(CensusTable).toLong
-      val result = MergeCommit.mergeBatchMeta(store, DocsTable, featMeta,
-        Seq("doc_id"), persistSlices = true)
-        .getOrElse(return)
-      if (crashAfter < 1) { result.unpersist(); return }
-
-      val consistent = readMeta(store) match {
-        case Some((dv, cv)) => dv == preDocsV && cv == preCensusV
-        case None => preDocsV < 0 // meta absent only pre-bootstrap
-      }
-
-      if (consistent) {
-        val keys = featMeta.select("doc_id").distinct()
-        def contributions(state: DataFrame, sign: Int) =
-          state.join(keys, Seq("doc_id"), "left_semi")
-            .filter(!col(StateStore.DeletedCol))
-            .select(col("source"), lit(sign.toLong).as("dn"),
-              (when(col("e") + col("p") + col("i") > 0, 1L).otherwise(0L)
-                * sign).as("dw"),
-              (col("e").cast("long") * sign).as("de"),
-              (col("p").cast("long") * sign).as("dp"),
-              (col("i").cast("long") * sign).as("di"),
-              (col("resid").cast("long") * sign).as("dr"),
-              (col("ck") * sign).as("dk"))
-        val deltas = contributions(result.preSlice, -1)
-          .unionAll(contributions(result.postSlice, +1))
-          .groupBy("source")
-          .agg(sum("dn").as("dn"), sum("dw").as("dw"), sum("de").as("de"),
-            sum("dp").as("dp"), sum("di").as("di"), sum("dr").as("dr"),
-            sum("dk").as("dk"))
+      val affected = deltas.select(StateStore.BucketCol).distinct()
+        .collect().map(_.getInt(0)).toSeq.sorted
+      if (affected.nonEmpty) {
+        val cState =
+          if (store.exists(CensusTable))
+            store.readBuckets(spark, CensusTable, affected)
+          else spark.createDataFrame(
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+            StructType.fromDDL(
+              "source string, n_docs bigint, docs_with_pii bigint, " +
+                "n_email bigint, n_phone bigint, n_ip bigint, " +
+                "n_residual bigint, scrub_checksum bigint, _bucket int"))
+        val next = cState.join(deltas.drop(StateStore.BucketCol),
+            Seq("source"), "full_outer")
+          .select(col("source"),
+            (coalesce(col("n_docs"), lit(0L)) +
+              coalesce(col("dn"), lit(0L))).as("n_docs"),
+            (coalesce(col("docs_with_pii"), lit(0L)) +
+              coalesce(col("dw"), lit(0L))).as("docs_with_pii"),
+            (coalesce(col("n_email"), lit(0L)) +
+              coalesce(col("de"), lit(0L))).as("n_email"),
+            (coalesce(col("n_phone"), lit(0L)) +
+              coalesce(col("dp"), lit(0L))).as("n_phone"),
+            (coalesce(col("n_ip"), lit(0L)) +
+              coalesce(col("di"), lit(0L))).as("n_ip"),
+            (coalesce(col("n_residual"), lit(0L)) +
+              coalesce(col("dr"), lit(0L))).as("n_residual"),
+            (coalesce(col("scrub_checksum"), lit(0L)) +
+              coalesce(col("dk"), lit(0L))).as("scrub_checksum"))
           .withColumn(StateStore.BucketCol,
             StateStore.bucketExpr(Seq("source"), NBuckets))
-          .persist()
-        val affected = deltas.select(StateStore.BucketCol).distinct()
-          .collect().map(_.getInt(0)).toSeq.sorted
-        if (affected.nonEmpty) {
-          val cState =
-            if (store.exists(CensusTable))
-              store.readBuckets(spark, CensusTable, affected)
-            else spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              StructType.fromDDL(
-                "source string, n_docs bigint, docs_with_pii bigint, " +
-                  "n_email bigint, n_phone bigint, n_ip bigint, " +
-                  "n_residual bigint, scrub_checksum bigint, _bucket int"))
-          val next = cState.join(deltas.drop(StateStore.BucketCol),
-              Seq("source"), "full_outer")
-            .select(col("source"),
-              (coalesce(col("n_docs"), lit(0L)) +
-                coalesce(col("dn"), lit(0L))).as("n_docs"),
-              (coalesce(col("docs_with_pii"), lit(0L)) +
-                coalesce(col("dw"), lit(0L))).as("docs_with_pii"),
-              (coalesce(col("n_email"), lit(0L)) +
-                coalesce(col("de"), lit(0L))).as("n_email"),
-              (coalesce(col("n_phone"), lit(0L)) +
-                coalesce(col("dp"), lit(0L))).as("n_phone"),
-              (coalesce(col("n_ip"), lit(0L)) +
-                coalesce(col("di"), lit(0L))).as("n_ip"),
-              (coalesce(col("n_residual"), lit(0L)) +
-                coalesce(col("dr"), lit(0L))).as("n_residual"),
-              (coalesce(col("scrub_checksum"), lit(0L)) +
-                coalesce(col("dk"), lit(0L))).as("scrub_checksum"))
-            .withColumn(StateStore.BucketCol,
-              StateStore.bucketExpr(Seq("source"), NBuckets))
-          store.commit(spark, CensusTable, next, affected)
-        }
-        deltas.unpersist(blocking = false)
-      } else {
-        rebuildCensus(spark, store)
+        store.commit(spark, CensusTable, next, affected)
       }
-      result.unpersist()
-      if (crashAfter < 2) return
-      writeMeta(store, store.currentVersion(DocsTable).toLong,
-        store.currentVersion(CensusTable).toLong)
-    } finally compacted.unpersist(blocking = false)
+    } finally deltas.unpersist(blocking = false)
   }
 
   /** From-scratch census recompute off the docs counters — the
-    * torn-batch recovery path and the spec's equality baseline.
-    * TOTAL: previously-manifested buckets the rebuild no longer owns
-    * commit as EMPTY (VERDICT r16 #3).
+    * spec's equality baseline. TOTAL: previously-manifested buckets
+    * the rebuild no longer owns commit as EMPTY (VERDICT r16 #3).
     */
   private[queries] def rebuildCensus(spark: SparkSession,
                                      store: StateStore): Int = {

@@ -11,9 +11,15 @@ import org.apache.spark.sql.types.StructType
 /** CROSS-TABLE whole-transaction apply — [[TxApplyQueries]] extended to
   * the multi-collection contract Debezium's transaction metadata
   * actually carries (`data_collections`: per-collection event counts on
-  * the END marker): a source transaction touching SEVERAL tables must
-  * become visible in ALL targets at once or none, so a consumer can
-  * never observe the order row without its customer row.
+  * the END marker): a source transaction touching SEVERAL tables is
+  * applied only once it is complete in ALL of them, so no target ever
+  * commits part of a transaction.
+  *
+  * What this does NOT yet give is cross-table reader isolation: each
+  * target commits through its own `_VERSION` swap, so a reader between
+  * the per-table swaps of one batch can see a transaction in one table
+  * and not yet in the other. A shared group pointer for the targets is
+  * still open (ROADMAP aim 3).
   *
   * One stream carries both tables' events in WIRE FORMAT (the A8/A15
   * JSON envelope — exactly what a multi-topic Kafka consumer sees);
@@ -58,13 +64,6 @@ object TxApplyMultiQueries {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   private val workDirCache =
     new java.util.concurrent.ConcurrentHashMap[String, (String, String, String)]()
-
-  private def wipe(dir: String): Unit = {
-    val p = Paths.get(dir)
-    if (Files.exists(p))
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .forEach(q => if (q != p) Files.deleteIfExists(q))
-  }
 
   private def changeLog(spark: SparkSession, sfDir: String,
                         t: Target): DataFrame =
@@ -142,7 +141,7 @@ object TxApplyMultiQueries {
         require(part.length == 1, s"expected 1 part file, got ${part.length}")
         Files.move(Paths.get(part.head), Paths.get(dir, f"b$i%02d.parquet"),
           StandardCopyOption.ATOMIC_MOVE)
-        wipe(tmp); Files.deleteIfExists(Paths.get(tmp))
+        graft.Scratch.wipe(Paths.get(tmp)); Files.deleteIfExists(Paths.get(tmp))
       }
       cust.unpersist(blocking = false)
       supp.unpersist(blocking = false)
@@ -218,7 +217,7 @@ object TxApplyMultiQueries {
       val tmp = Paths.get(pendingDir, "rows_next")
       rest.write.mode("overwrite").parquet(tmp.toString)
       graft.Par.awaitAll(applies) // all applies durable — retire holdback
-      wipe(pendingPath.toString)
+      graft.Scratch.wipe(pendingPath)
       Files.deleteIfExists(pendingPath)
       Files.move(tmp, pendingPath, StandardCopyOption.ATOMIC_MOVE)
     } finally all.unpersist(blocking = false)
@@ -236,7 +235,7 @@ object TxApplyMultiQueries {
           graft.Scratch.dir("graft-txmckpt-").toString,
           graft.Scratch.dir("graft-txmpend-").toString)
       })
-    wipe(whDir); wipe(ckptDir); wipe(pendDir)
+    Seq(whDir, ckptDir, pendDir).foreach(d => graft.Scratch.wipe(Paths.get(d)))
     val store = new StateStore(whDir, NBuckets)
     val applied = scala.collection.mutable.Map.empty[Long, Seq[Long]]
     val rowSchemas = Targets.map(t =>

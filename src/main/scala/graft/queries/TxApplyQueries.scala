@@ -40,13 +40,6 @@ object TxApplyQueries {
   private val workDirCache =
     new java.util.concurrent.ConcurrentHashMap[String, (String, String, String)]()
 
-  private def wipe(dir: String): Unit = {
-    val p = Paths.get(dir)
-    if (Files.exists(p))
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .forEach(q => if (q != p) Files.deleteIfExists(q))
-  }
-
   /** The customer change log plus per-wave END markers: op='t',
     * ts_ms = the wave (the transaction id — each generated wave IS one
     * source transaction), seq = the wave's event count (Debezium's
@@ -99,7 +92,7 @@ object TxApplyQueries {
         require(part.length == 1, s"expected 1 part file, got ${part.length}")
         Files.move(Paths.get(part.head), Paths.get(dir, f"b$i%02d.parquet"),
           StandardCopyOption.ATOMIC_MOVE)
-        wipe(tmp); Files.deleteIfExists(Paths.get(tmp))
+        graft.Scratch.wipe(Paths.get(tmp)); Files.deleteIfExists(Paths.get(tmp))
       }
       all.unpersist(blocking = false)
       dir
@@ -172,7 +165,7 @@ object TxApplyQueries {
       val tmp = Paths.get(pendingDir, "rows_next")
       rest.write.mode("overwrite").parquet(tmp.toString)
       graft.Par.await(applyF) // apply durable — NOW retire the holdback
-      wipe(pendingPath.toString)
+      graft.Scratch.wipe(pendingPath)
       Files.deleteIfExists(pendingPath)
       Files.move(tmp, pendingPath, StandardCopyOption.ATOMIC_MOVE)
     } finally all.unpersist(blocking = false)
@@ -190,7 +183,7 @@ object TxApplyQueries {
           graft.Scratch.dir("graft-txckpt-").toString,
           graft.Scratch.dir("graft-txpend-").toString)
       })
-    wipe(whDir); wipe(ckptDir); wipe(pendDir)
+    Seq(whDir, ckptDir, pendDir).foreach(d => graft.Scratch.wipe(Paths.get(d)))
     val store = new StateStore(whDir, NBuckets)
     val applied = scala.collection.mutable.Map.empty[Long, Seq[Long]]
     val envSchema = logWithMarkers(spark, sfDir).schema

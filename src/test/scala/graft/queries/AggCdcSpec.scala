@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{SparkTestBase, Tables}
+import graft.{BatchFaults, SparkTestBase, Tables}
 import org.apache.spark.sql.functions._
 
 /** Incremental aggregate maintenance contracts: the delta-maintained
@@ -26,6 +26,7 @@ class AggCdcSpec extends SparkTestBase {
   test("torn batch recovers on retry for BOTH crash points (after " +
       "state commit; after summary commit) via the meta-stamp mismatch") {
     val store = AggCdcQueries.runMaintenance(spark, sf, 2)
+    val clean = BatchFaults.twin(store)
     def img(nation: org.apache.spark.sql.Column,
             bal: org.apache.spark.sql.Column) =
       struct(col("c_custkey").cast("long").as("c_custkey"),
@@ -42,7 +43,7 @@ class AggCdcSpec extends SparkTestBase {
             lit("account").as("table")).as("source")))
     // Non-mutating consistency probe: the maintained summary vs an
     // independent recompute off agg.state (NOT rebuildSummary, whose
-    // commit would itself perturb the version stamps under test).
+    // commit would itself move the versions under test).
     def consistent(): Boolean = {
       val maintained = AggCdcQueries.readSummary(spark, store).collect()
         .map(r => r.getInt(0) -> (r.getLong(1), r.getDouble(2))).toMap
@@ -57,25 +58,33 @@ class AggCdcSpec extends SparkTestBase {
       maintained == expected
     }
 
-    // Crash point 1: state committed, summary + meta not.
+    // Crash point 1: state committed, summary not.
     val b1 = wave(11, 50.0, 9000L)
-    AggCdcQueries.processBatchCrashing(store, b1, crashAfter = 0)
+    BatchFaults.crashAtCommit(store, "agg.summary")(
+      AggCdcQueries.processBatch(store, b1))
     assert(!consistent(), "torn batch must leave the summary stale")
     AggCdcQueries.processBatch(store, b1) // the streaming retry
     assert(consistent(),
-      "retry must detect the stamp mismatch and rebuild the summary")
+      "retry must re-run the batch against the reset pre-batch state")
 
-    // Crash point 2: state + summary committed, meta stamp not.
+    // Crash point 2: the state commit itself fails. (A crash after the
+    // summary commit, with the batch record still open, is out of a
+    // filesystem fault's reach; BatchScopeSpec covers it.)
     val b2 = wave(13, -30.0, 9500L)
-    AggCdcQueries.processBatchCrashing(store, b2, crashAfter = 1)
+    BatchFaults.crashAtCommit(store, "agg.state")(
+      AggCdcQueries.processBatch(store, b2))
     AggCdcQueries.processBatch(store, b2) // the retry re-applies safely
     assert(consistent(),
-      "a missing stamp alone must also route through the rebuild, " +
-        "never double-apply the delta")
+      "the retry must never double-apply the delta")
 
     // And the delta path works again after recovery.
-    AggCdcQueries.processBatch(store, wave(17, 10.0, 9900L))
+    val b3 = wave(17, 10.0, 9900L)
+    AggCdcQueries.processBatch(store, b3)
     assert(consistent(), "post-recovery batches telescope correctly")
+
+    Seq(b1, b2, b3).foreach(AggCdcQueries.processBatch(clean, _))
+    BatchFaults.assertSameTables(spark, store, clean,
+      Seq("agg.state", "agg.summary"))
   }
 
   test("delta-maintained summary equals a from-scratch rebuild, and " +

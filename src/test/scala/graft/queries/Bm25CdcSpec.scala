@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.SparkTestBase
+import graft.{BatchFaults, SparkTestBase}
 import graft.ops.LlmOps
 import org.apache.spark.sql.functions._
 
@@ -41,6 +41,7 @@ class Bm25CdcSpec extends SparkTestBase {
   test("torn batch (docs committed, stats not) recovers on the retry: " +
       "stats rebuilt from the index instead of freezing the zero delta") {
     val store = Bm25CdcQueries.runMaintenance(spark, sf, 2)
+    val clean = BatchFaults.twin(store)
     val (s0, r0) = Bm25CdcQueries.statsAndRebuild(spark, store)
     assert(s0 == r0, "healthy drain: stats == rebuild")
 
@@ -58,17 +59,19 @@ class Bm25CdcSpec extends SparkTestBase {
       struct(lit("corpus").as("schema"),
         lit("documents").as("table")).as("source"))
     val batch = graft.cdc.Envelope.flatten(wave)
-    Bm25CdcQueries.mergeWithoutStats(store, batch)
+    BatchFaults.crashAtCommit(store, "bm.stats")(
+      Bm25CdcQueries.processBatch(store, batch))
     val (s1, r1) = Bm25CdcQueries.statsAndRebuild(spark, store)
     assert(s1 != r1, "the torn batch must leave stats stale (the bug)")
 
-    // The streaming RETRY re-processes the SAME batch: the re-merge
-    // telescopes a zero delta (events already in state), but the
-    // docs_v stamp mismatch routes recovery through the rebuild.
+    // The streaming RETRY re-processes the SAME batch. Re-merged onto
+    // the torn docs it would telescope a zero delta (events already in
+    // state); the batch scope resets docs to its pre-batch version
+    // first, so the retry's delta is the whole batch's.
     Bm25CdcQueries.processBatch(store, batch)
     val (s2, r2) = Bm25CdcQueries.statsAndRebuild(spark, store)
     assert(s2 == r2,
-      s"retry must rebuild stats from the index: $s2 vs $r2")
+      s"retry stats must equal the rebuild from the index: $s2 vs $r2")
 
     // And the pipeline continues healthily on the delta path after.
     val wave2 = base.filter(col("doc_id") % 13 === 1).select(
@@ -78,9 +81,14 @@ class Bm25CdcSpec extends SparkTestBase {
       col("doc_id").cast("long").as("seq"),
       struct(lit("corpus").as("schema"),
         lit("documents").as("table")).as("source"))
-    Bm25CdcQueries.processBatch(store, graft.cdc.Envelope.flatten(wave2))
+    val batch2 = graft.cdc.Envelope.flatten(wave2)
+    Bm25CdcQueries.processBatch(store, batch2)
     val (s3, r3) = Bm25CdcQueries.statsAndRebuild(spark, store)
     assert(s3 == r3, "post-recovery batches telescope correctly again")
+
+    Seq(batch, batch2).foreach(Bm25CdcQueries.processBatch(clean, _))
+    BatchFaults.assertSameTables(spark, store, clean,
+      Seq("bm.docs", "bm.stats"))
   }
 
   test("served ranking equals the batch scorer over the post-change " +

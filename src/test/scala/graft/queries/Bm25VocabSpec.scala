@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.SparkTestBase
+import graft.{BatchFaults, SparkTestBase}
 import org.apache.spark.sql.functions._
 
 /** Term-keyed CDC BM25 index ([[Bm25VocabQueries]]): the vocabulary's
@@ -28,6 +28,7 @@ class Bm25VocabSpec extends SparkTestBase {
 
   test("torn batch (docs committed, vocab+stats not) recovers on retry") {
     val store = Bm25VocabQueries.runMaintenance(spark, sf, 2)
+    val clean = BatchFaults.twin(store)
     def img(text: org.apache.spark.sql.Column) =
       struct(col("doc_id").cast("long").as("doc_id"),
         text.cast("string").as("text"))
@@ -40,7 +41,8 @@ class Bm25VocabSpec extends SparkTestBase {
         struct(lit("corpus").as("schema"),
           lit("documents").as("table")).as("source"))
     val batch = graft.cdc.Envelope.flatten(wave)
-    Bm25VocabQueries.mergeWithoutDerived(store, batch)
+    BatchFaults.crashAtCommit(store, "bmv.vocab")(
+      Bm25VocabQueries.processBatch(store, batch))
     val ((v1, _), (rv1, _)) = Bm25VocabQueries.vocabAndRebuild(spark, store)
     assert(v1 != rv1, "the torn batch must leave the vocab stale")
     assert(!v1.contains("zebra") && rv1.contains("zebra"))
@@ -49,22 +51,26 @@ class Bm25VocabSpec extends SparkTestBase {
     val ((v2, st2), (rv2, rst2)) =
       Bm25VocabQueries.vocabAndRebuild(spark, store)
     assert(v2 == rv2 && st2 == rst2,
-      "retry must rebuild vocab + stats from the index")
+      "retry vocab + stats must equal the rebuild from the index")
     // ALL %11==1 docs carry zebra — including previously deleted %7
     // docs, which the ts-9000 update REVIVES (it out-orders their
     // ts-4000 tombstone in the ordered merge).
     assert(v2("zebra") == graft.Tables.load(spark, sf, "documents")
       .filter(col("doc_id") % 11 === 1).count(),
       "the new term's df counts every updated (incl. revived) doc")
+    Bm25VocabQueries.processBatch(clean, batch)
+    BatchFaults.assertSameTables(spark, store, clean,
+      Seq("bmv.docs", "bmv.vocab", "bmv.stats"))
   }
 
   test("recovery stays total when the wave empties vocab buckets") {
     // VERDICT r16 #3: the one path that must not be fastidious. A
     // delete-every-document wave empties the whole vocabulary, so the
-    // rebuild owns ZERO buckets while the stale manifest owns them
-    // all; recovery must commit those buckets as EMPTY and converge,
+    // retry's vocab owns ZERO live rows while the manifest owns every
+    // bucket; recovery must commit those buckets as EMPTY and converge,
     // not refuse because a bucket would be "orphaned".
     val store = Bm25VocabQueries.runMaintenance(spark, sf, 2)
+    val clean = BatchFaults.twin(store)
     def img(text: org.apache.spark.sql.Column) =
       struct(col("doc_id").cast("long").as("doc_id"),
         text.cast("string").as("text"))
@@ -76,7 +82,8 @@ class Bm25VocabSpec extends SparkTestBase {
       struct(lit("corpus").as("schema"),
         lit("documents").as("table")).as("source"))
     val batch = graft.cdc.Envelope.flatten(wave)
-    Bm25VocabQueries.mergeWithoutDerived(store, batch) // the crash
+    BatchFaults.crashAtCommit(store, "bmv.vocab")(
+      Bm25VocabQueries.processBatch(store, batch))   // the crash
     Bm25VocabQueries.processBatch(store, batch)        // the retry
     val ((v2, st2), (rv2, rst2)) =
       Bm25VocabQueries.vocabAndRebuild(spark, store)
@@ -84,6 +91,9 @@ class Bm25VocabSpec extends SparkTestBase {
       "the recovered vocabulary is empty and equals the rebuild")
     assert(st2 == rst2 && st2.head == 0L,
       "stats recover to the empty corpus")
+    Bm25VocabQueries.processBatch(clean, batch)
+    BatchFaults.assertSameTables(spark, store, clean,
+      Seq("bmv.docs", "bmv.vocab", "bmv.stats"))
   }
 
   test("derived-state tables age out history like primary tables") {

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.SparkTestBase
+import graft.{BatchFaults, SparkTestBase}
 import org.apache.spark.sql.functions._
 
 /** Incremental HNSW maintenance contracts ([[HnswCdcQueries]]): the
@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * from-scratch rebuild's on the identical final corpus; deleted
   * vectors are unreachable (the tombstone mask); edge lists respect
   * the fanout bound; and torn batches recover at every commit
-  * boundary via the meta-stamp mismatch.
+  * boundary to the tables of an uncrashed run.
   */
 class HnswCdcSpec extends SparkTestBase {
 
@@ -64,6 +64,7 @@ class HnswCdcSpec extends SparkTestBase {
     val wh = graft.Scratch.dir("graft-hnsw-crash-").toString
     val store = new graft.cdc.StateStore(wh, 8)
     HnswCdcQueries.processBatch(store, waves(0)) // clean bootstrap
+    val clean = BatchFaults.twin(store)
 
     def edgesNow(): Map[Long, Seq[(Long, Double)]] =
       store.rawState(spark, "hnsw.edges")
@@ -73,17 +74,18 @@ class HnswCdcSpec extends SparkTestBase {
           k -> v.map(t => (t._2, t._3)).toSeq.sorted }
 
     // Crash after the vectors merge only: edges/census stale.
-    HnswCdcQueries.processBatchCrashing(store, waves(1), crashAfter = 0)
+    BatchFaults.crashAtCommit(store, "hnsw.census")(
+      HnswCdcQueries.processBatch(store, waves(1)))
     HnswCdcQueries.processBatch(store, waves(1)) // retry
     val afterRetry = edgesNow()
-    // The retry routed through the total rebuild — its result must
-    // equal a from-scratch rebuild on current state (not silently
-    // keep the stale bootstrap graph).
+    // The retry relinks against the reset pre-batch graph — it must
+    // not silently keep the stale bootstrap graph.
     assert(afterRetry.keys.exists(_ % 4 == 3),
       "recovered graph must contain the insert wave")
 
     // Crash after census (edges not yet relinked), then retry.
-    HnswCdcQueries.processBatchCrashing(store, waves(2), crashAfter = 1)
+    BatchFaults.crashAtCommit(store, "hnsw.edges")(
+      HnswCdcQueries.processBatch(store, waves(2)))
     HnswCdcQueries.processBatch(store, waves(2)) // retry
     assert(store.rawState(spark, "hnsw.edges")
       .filter(col("vec_id") % 9 === 0).count() == 0,
@@ -98,5 +100,8 @@ class HnswCdcSpec extends SparkTestBase {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(census == recount,
       "recovered census must equal the recount off vector state")
+    waves.drop(1).foreach(HnswCdcQueries.processBatch(clean, _))
+    BatchFaults.assertSameTables(spark, store, clean,
+      Seq("hnsw.vectors", "hnsw.census", "hnsw.edges"))
   }
 }

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.SparkTestBase
+import graft.{BatchFaults, SparkTestBase}
 import org.apache.spark.sql.functions._
 
 /** CDC-maintained boilerplate-line census ([[LinesCdcQueries]]): the
@@ -36,6 +36,7 @@ class LinesCdcSpec extends SparkTestBase {
 
   test("torn batch (docs committed, census not) recovers on retry") {
     val store = LinesCdcQueries.runMaintenance(spark, sf, 2)
+    val clean = BatchFaults.twin(store)
     def img(text: org.apache.spark.sql.Column) =
       struct(col("doc_id").cast("long").as("doc_id"),
         text.cast("string").as("text"))
@@ -48,25 +49,30 @@ class LinesCdcSpec extends SparkTestBase {
         struct(lit("corpus").as("schema"),
           lit("documents").as("table")).as("source"))
     val batch = graft.cdc.Envelope.flatten(wave)
-    LinesCdcQueries.mergeWithoutDerived(store, batch)
+    BatchFaults.crashAtCommit(store, "ln.census")(
+      LinesCdcQueries.processBatch(store, batch))
     val (c1, r1) = LinesCdcQueries.censusAndRebuild(spark, store)
     assert(c1 != r1, "the torn batch must leave the census stale")
 
     LinesCdcQueries.processBatch(store, batch) // the streaming retry
     val (c2, r2) = LinesCdcQueries.censusAndRebuild(spark, store)
-    assert(c2 == r2, "retry must recount the census from the index")
+    assert(c2 == r2, "the retry's census must equal the recount")
     val d = spark.sql("SELECT md5('totally novel body line')")
       .head().getString(0)
     assert(c2.get(d).contains(graft.Tables.load(spark, sf, "documents")
       .filter(col("doc_id") % 11 === 2).count()),
       "the new body's digest counts every updated (incl. revived) doc")
+    LinesCdcQueries.processBatch(clean, batch)
+    BatchFaults.assertSameTables(spark, store, clean,
+      Seq("ln.docs", "ln.census"))
   }
 
   test("recovery stays total when the wave empties census buckets") {
     // VERDICT r16 #3: a delete-every-document wave empties the whole
-    // line census; the rebuild must commit the stale buckets as EMPTY
+    // line census; the retry must commit the emptied buckets as EMPTY
     // and converge instead of refusing on "orphaned" buckets.
     val store = LinesCdcQueries.runMaintenance(spark, sf, 2)
+    val clean = BatchFaults.twin(store)
     def img(text: org.apache.spark.sql.Column) =
       struct(col("doc_id").cast("long").as("doc_id"),
         text.cast("string").as("text"))
@@ -78,11 +84,15 @@ class LinesCdcSpec extends SparkTestBase {
       struct(lit("corpus").as("schema"),
         lit("documents").as("table")).as("source"))
     val batch = graft.cdc.Envelope.flatten(wave)
-    LinesCdcQueries.mergeWithoutDerived(store, batch) // the crash
+    BatchFaults.crashAtCommit(store, "ln.census")(
+      LinesCdcQueries.processBatch(store, batch))   // the crash
     LinesCdcQueries.processBatch(store, batch)        // the retry
     val (c2, r2) = LinesCdcQueries.censusAndRebuild(spark, store)
     assert(c2.isEmpty && c2 == r2,
       "the recovered census is empty and equals the recount")
+    LinesCdcQueries.processBatch(clean, batch)
+    BatchFaults.assertSameTables(spark, store, clean,
+      Seq("ln.docs", "ln.census"))
   }
 
   test("served rewrite equals the batch pass over the post-change corpus") {

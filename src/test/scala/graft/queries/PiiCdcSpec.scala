@@ -1,14 +1,14 @@
 package graft.queries
 
-import graft.{SparkTestBase, Tables}
+import graft.{BatchFaults, SparkTestBase, Tables}
 import org.apache.spark.sql.functions._
 
 /** CDC-maintained PII census contracts ([[PiiCdcQueries]]): the
   * delta-maintained census is bit-identical across micro-batch
   * slicings and to a from-scratch rebuild (all counters are LONG
   * sums — no epsilon anywhere), the zero-residual audit holds on the
-  * maintained row, and torn batches recover at both crash points via
-  * the meta-stamp mismatch.
+  * maintained row, and torn batches recover at both crash points to
+  * the tables of an uncrashed run.
   */
 class PiiCdcSpec extends SparkTestBase {
 
@@ -34,6 +34,7 @@ class PiiCdcSpec extends SparkTestBase {
 
   test("torn batch recovers on retry at both crash points") {
     val store = PiiCdcQueries.runMaintenance(spark, sf, 2)
+    val clean = BatchFaults.twin(store)
     def img(text: org.apache.spark.sql.Column) =
       struct(col("doc_id").cast("long").as("doc_id"),
         text.cast("string").as("text"))
@@ -49,7 +50,7 @@ class PiiCdcSpec extends SparkTestBase {
               lit("documents").as("table")).as("source")))
     // Non-mutating consistency probe: maintained census vs an
     // independent recompute off pii.docs (NOT rebuildCensus, whose
-    // commit would perturb the version stamps under test).
+    // commit would move the versions under test).
     def consistent(): Boolean = {
       val maintained = PiiCdcQueries.readCensus(spark, store).collect()
         .map(r => r.getString(0) -> (1 to 7).map(r.getLong)).toMap
@@ -68,25 +69,32 @@ class PiiCdcSpec extends SparkTestBase {
       maintained == expected
     }
 
-    // Crash point 1: docs committed, census + meta not.
+    // Crash point 1: docs committed, census not.
     val b1 = wave(11, " torn pii wave", 9000L)
-    PiiCdcQueries.processBatchCrashing(store, b1, crashAfter = 0)
+    BatchFaults.crashAtCommit(store, "pii.census")(
+      PiiCdcQueries.processBatch(store, b1))
     assert(!consistent(), "torn batch must leave the census stale")
     PiiCdcQueries.processBatch(store, b1) // the streaming retry
     assert(consistent(),
-      "retry must detect the stamp mismatch and rebuild the census")
+      "retry must re-run the batch against the reset pre-batch state")
 
-    // Crash point 2: docs + census committed, meta stamp not.
+    // Crash point 2: the docs commit itself fails. (A crash after the
+    // census commit, with the batch record still open, is out of a
+    // filesystem fault's reach; BatchScopeSpec covers it.)
     val b2 = wave(13, " second torn wave", 9500L)
-    PiiCdcQueries.processBatchCrashing(store, b2, crashAfter = 1)
+    BatchFaults.crashAtCommit(store, "pii.docs")(
+      PiiCdcQueries.processBatch(store, b2))
     PiiCdcQueries.processBatch(store, b2) // the retry re-applies safely
-    assert(consistent(),
-      "a missing stamp alone must route through the rebuild, never " +
-        "double-apply the delta")
+    assert(consistent(), "the retry must never double-apply the delta")
 
     // And the delta path works again after recovery.
-    PiiCdcQueries.processBatch(store, wave(17, " post recovery", 9900L))
+    val b3 = wave(17, " post recovery", 9900L)
+    PiiCdcQueries.processBatch(store, b3)
     assert(consistent(), "post-recovery batches telescope correctly")
+
+    Seq(b1, b2, b3).foreach(PiiCdcQueries.processBatch(clean, _))
+    BatchFaults.assertSameTables(spark, store, clean,
+      Seq("pii.docs", "pii.census"))
   }
 
   test("delta-maintained census equals a from-scratch rebuild") {
