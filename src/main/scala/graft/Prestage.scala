@@ -11,7 +11,7 @@ import org.apache.spark.sql.SparkSession
   * cdc_pipeline_fanout's 3-run median at 2.6× its steady state from
   * exactly this. Bench calls [[all]] once before timing so every
   * staged input already exists; each module's `prestage` goes through
-  * the same `stageOnce`/`stage` cache as its query body, so the bytes
+  * the same [[Scratch.staged]] pair as its query body, so the bytes
   * are identical no matter which path stages first, and the call is
   * a no-op when already staged.
   */

@@ -939,10 +939,7 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
     val d = dir(target)
     Files.deleteIfExists(d.resolve(s"manifest-$staged.tsv"))
     Files.deleteIfExists(d.resolve(s"schema-$staged.json"))
-    val dataDir = d.resolve(s"v$staged")
-    if (Files.exists(dataDir))
-      Files.walk(dataDir).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.deleteIfExists(p))
+    graft.Scratch.delete(d.resolve(s"v$staged"))
   }
 
   /** Manifest + schema + evolution-journal files for version `next`
@@ -1499,12 +1496,7 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
         }
       }
       // All manifests now point at purged dirs — the old files can go.
-      rewritten.keys.foreach { p =>
-        val old = d.resolve(p)
-        if (Files.exists(old))
-          Files.walk(old).sorted(java.util.Comparator.reverseOrder())
-            .forEach(q => Files.deleteIfExists(q))
-      }
+      rewritten.keys.foreach(p => graft.Scratch.delete(d.resolve(p)))
     }
     erasedHead
     } finally keySet.unpersist(blocking = false)
@@ -1636,11 +1628,7 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
     }
     entries.foreach { p =>
       p.getFileName.toString match {
-        case ver(n) if n.toInt > cur =>
-          if (Files.isDirectory(p)) {
-            Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-              .forEach { q => Files.deleteIfExists(q); removed += 1 }
-          } else { Files.deleteIfExists(p); removed += 1 }
+        case ver(n) if n.toInt > cur => removed += graft.Scratch.delete(p)
         case _ => ()
       }
     }
@@ -1712,11 +1700,7 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
       .foreach { v =>
         Files.deleteIfExists(d.resolve(s"manifest-$v.tsv"))
         Files.deleteIfExists(d.resolve(s"schema-$v.json"))
-        val dataDir = d.resolve(s"v$v")
-        if (Files.exists(dataDir)) {
-          Files.walk(dataDir).sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => Files.deleteIfExists(p))
-        }
+        graft.Scratch.delete(d.resolve(s"v$v"))
       }
     val refVersions = namedRefs(target).map(_._3).toSet
     val pinned = (keepFrom to cur).toSet ++ refVersions
@@ -1735,10 +1719,7 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
       finally s.close()
     }
     purgeDirs.filterNot(p => stillReferenced(p.getFileName.toString))
-      .foreach { p =>
-        Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-          .forEach(q => Files.deleteIfExists(q))
-      }
+      .foreach(graft.Scratch.delete)
     compactCommitLog(target)
   }
 

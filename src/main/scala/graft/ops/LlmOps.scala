@@ -1965,19 +1965,13 @@ object LlmOps {
     * directories (partition pruning, no file content touched for other
     * languages) — then read back and rolled up per language. The
     * rollup reads the lang value from the partition directory name,
-    * proving the round trip. The output dir is cached per (JVM, sfDir)
-    * — `mode("overwrite")` rewrites the whole corpus on every
-    * invocation, so the measured work stays the write+read while
-    * repeated bench/verify runs can't accumulate dirs in /tmp (the
-    * PipelineQueries/StreamingOps staging discipline).
+    * proving the round trip. The output dir is one per sfDir, emptied
+    * and rewritten on every invocation ([[graft.Scratch.fresh]]), so
+    * the measured work stays the write+read while repeated
+    * bench/verify runs can't accumulate dirs in /tmp.
     */
-  private val corpusDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def curateWrite(spark: SparkSession, sfDir: String): DataFrame = {
-    val out = corpusDirCache.computeIfAbsent(sfDir, { _ =>
-      graft.Scratch.dir("graft-corpus-").toString
-    })
+    val out = graft.Scratch.fresh("graft-corpus-", sfDir).toString
     curate(spark, sfDir).write.mode("overwrite")
       .partitionBy("lang").parquet(out)
     // Eagerly materialized (ADVICE r5): the returned frame must not

@@ -1834,22 +1834,16 @@ object Relational {
 
   /** Once-per-JVM staging of a DATE-PARTITIONED copy of `events`
     * (30 `d=...` directories) — the physically-partitioned fact table
-    * [[joinDpp]] prunes at runtime. Immutable input staging, same
-    * discipline as StreamingOps/PipelineQueries.
+    * [[joinDpp]] prunes at runtime ([[graft.Scratch.staged]]).
     */
-  private val dppStageCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def stageDatePartitioned(spark: SparkSession,
                                    sfDir: String): String =
-    dppStageCache.computeIfAbsent(sfDir, { _ =>
-      val dir = graft.Scratch.dir("graft-events-bydate-").toString
+    graft.Scratch.staged("graft-events-bydate-", sfDir) { dir =>
       t(spark, sfDir, "events")
         .withColumn("d", to_date(col("ts")))
         .repartition(col("d"))
-        .write.mode("overwrite").partitionBy("d").parquet(dir)
-      dir
-    })
+        .write.mode("overwrite").partitionBy("d").parquet(dir.toString)
+    }.toString
 
   /** Stage the partitioned events copy without running the join —
     * Bench's untimed warmup hook.
@@ -1900,16 +1894,12 @@ object Relational {
     * every writing task holds exactly one bucket → ONE file per
     * bucket (multi-file buckets would re-sort on read).
     */
-  private val bucketedStageCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
   private def stageBucketedTables(spark: SparkSession,
-                                  sfDir: String): (String, String) =
-    bucketedStageCache.computeIfAbsent(sfDir, { _ =>
-      val tag = sfDir.replaceAll("[^A-Za-z0-9]", "_")
-      val ot = s"graft_orders_bucketed$tag"
-      val ct = s"graft_customer_bucketed$tag"
-      val dir = graft.Scratch.dir("graft-bucketed-").toString
+                                  sfDir: String): (String, String) = {
+    val tag = sfDir.replaceAll("[^A-Za-z0-9]", "_")
+    val ot = s"graft_orders_bucketed$tag"
+    val ct = s"graft_customer_bucketed$tag"
+    graft.Scratch.staged("graft-bucketed-", sfDir) { dir =>
       t(spark, sfDir, "orders")
         .repartition(8, col("o_custkey"))
         .write.mode("overwrite")
@@ -1920,8 +1910,9 @@ object Relational {
         .write.mode("overwrite")
         .bucketBy(8, "c_custkey").sortBy("c_custkey")
         .option("path", s"$dir/customer").saveAsTable(ct)
-      (ot, ct)
-    })
+    }
+    (ot, ct)
+  }
 
   /** Stage the bucketed tables without running the join — Bench's
     * untimed warmup hook.

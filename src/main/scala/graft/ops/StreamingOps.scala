@@ -263,8 +263,6 @@ class TtlDedup(ttl: java.time.Duration)
 object StreamingOps {
 
   private val nameCounter = new AtomicInteger(0)
-  private val stagedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Stream a fixture table through `f` into a memory sink; return
     * the drained sink table. The fixture is a single parquet file and
@@ -302,12 +300,10 @@ object StreamingOps {
     */
   private def stage(spark: SparkSession, sfDir: String,
                     table: String): String =
-    stagedCache.computeIfAbsent(s"$sfDir/$table", { _ =>
-      val dir = graft.Scratch.dir(s"graft-$table-").toString
+    graft.Scratch.staged(s"graft-$table-", sfDir) { dir =>
       Tables.load(spark, sfDir, table).repartition(4)
-        .write.mode("overwrite").parquet(dir)
-      dir
-    })
+        .write.mode("overwrite").parquet(dir.toString)
+    }.toString
 
   /** Stage every fixture this module streams, without running the
     * queries — called from Bench's untimed warmup so the one-time
@@ -486,9 +482,20 @@ object StreamingOps {
     */
   private val LateDay = "2024-01-02"
 
+  /** One synthetic event row — watermark ballast for the ordered
+    * replay logs (never joins or aggregates into a result; each query
+    * filters its sentinels out by type/user before publishing).
+    */
+  private def sentinelRow(spark: SparkSession, ts: String, id: Long,
+                          user: Long, tpe: String): DataFrame =
+    spark.range(1).select(
+      lit(id).as("event_id"), lit(ts).cast("timestamp").as("ts"),
+      lit(user).as("user_id"), lit(tpe).as("event_type"),
+      lit(0.0).as("value"), lit("{}").as("props"))
+
   /** Stage the late-drop replay log: one parquet file per slice, in
-    * REPLAY order with strictly increasing modification times (the
-    * file source processes oldest-first):
+    * REPLAY order ([[graft.Scratch.orderedSlices]]; the file source
+    * processes oldest-first):
     *   b00 — every on-time event (all events minus the late set);
     *   b01 — sentinel @ Feb 5: a BUFFER batch, because the watermark a
     *       batch actually filters with lags the progress line — batch
@@ -504,50 +511,19 @@ object StreamingOps {
     *       by watermark progression alone, without relying on a
     *       trailing flush batch.
     */
-  /** Write `slices` into `dir` as one parquet file each, named and
-    * mtime-pinned so the file stream source (maxFilesPerTrigger=1)
-    * replays them in exactly this order however fast the writes ran.
-    */
-  private def writeOrderedSlices(slices: Seq[DataFrame], dir: String): Unit =
-    slices.zipWithIndex.foreach { case (df, i) =>
-      val tmp = graft.Scratch.dir("graft-slice-").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = java.nio.file.Files.list(java.nio.file.Paths.get(tmp))
-        .toArray.map(_.toString).filter(_.endsWith(".parquet"))
-      require(part.length == 1, s"expected 1 part file, got ${part.length}")
-      val dst = java.nio.file.Paths.get(dir, f"b$i%02d.parquet")
-      java.nio.file.Files.move(java.nio.file.Paths.get(part.head), dst,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      java.nio.file.Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(1000000L + i * 10000L))
-    }
-
-  /** One synthetic event row — watermark ballast for the ordered
-    * replay logs (never joins or aggregates into a result; each query
-    * filters its sentinels out by type/user before publishing).
-    */
-  private def sentinelRow(spark: SparkSession, ts: String, id: Long,
-                          user: Long, tpe: String): DataFrame =
-    spark.range(1).select(
-      lit(id).as("event_id"), lit(ts).cast("timestamp").as("ts"),
-      lit(user).as("user_id"), lit(tpe).as("event_type"),
-      lit(0.0).as("value"), lit("{}").as("props"))
-
   private def stageLateDrop(spark: SparkSession, sfDir: String): String =
-    stagedCache.computeIfAbsent(s"$sfDir/events-latedrop", { _ =>
-      val dir = graft.Scratch.dir("graft-latedrop-").toString
+    graft.Scratch.staged("graft-latedrop-", sfDir) { dir =>
       val ev = Tables.load(spark, sfDir, "events")
       val isLate = col("ts") < lit(LateDay).cast("timestamp") &&
         col("event_id") % 10 === 0
       def sentinel(ts: String, id: Long): DataFrame =
         sentinelRow(spark, ts, id, -1L, "sentinel")
-      writeOrderedSlices(Seq(ev.filter(!isLate),
+      graft.Scratch.orderedSlices(Seq(ev.filter(!isLate),
         sentinel("2024-02-05 00:00:00", -1L),
         ev.filter(isLate),
         sentinel("2024-02-10 00:00:00", -2L),
         sentinel("2024-02-15 00:00:00", -3L)), dir)
-      dir
-    })
+    }.toString
 
   /** Replay log for [[streamStreamOuter]]: the events fixture in three
     * TIME-ORDERED slices (ten-day ranges — the lateDrop discipline, so
@@ -561,21 +537,19 @@ object StreamingOps {
     * null-pads and evicts the unmatched left rows.
     */
   private def stageOuterJoin(spark: SparkSession, sfDir: String): String =
-    stagedCache.computeIfAbsent(s"$sfDir/events-outerjoin", { _ =>
-      val dir = graft.Scratch.dir("graft-outerjoin-").toString
+    graft.Scratch.staged("graft-outerjoin-", sfDir) { dir =>
       val ev = Tables.load(spark, sfDir, "events")
       def pair(ts: String, idBase: Long): DataFrame =
         sentinelRow(spark, ts, idBase, -1L, "sentinel_p")
           .unionAll(sentinelRow(spark, ts, idBase - 1L, -2L, "sentinel_c"))
       def upTo(d: String) = col("ts") < lit(d).cast("timestamp")
-      writeOrderedSlices(Seq(
+      graft.Scratch.orderedSlices(Seq(
         ev.filter(upTo("2024-01-11")),
         ev.filter(!upTo("2024-01-11") && upTo("2024-01-21")),
         ev.filter(!upTo("2024-01-21")),
         pair("2024-02-02 00:00:00", -1L),
         pair("2024-02-04 00:00:00", -3L)), dir)
-      dir
-    })
+    }.toString
 
   /** Watermark late-data DROP, end to end in append mode — the half of
     * the SURVEY §2 "watermark + late-data drop" row that

@@ -607,9 +607,6 @@ object CdcQueries {
 
   // ------------------------------------------- decimal widening
 
-  private val decimalDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** A11 decimal evolution end to end: phase 1 commits the snapshot
     * wave with `c_acctbal` typed DECIMAL(12,2) (the Debezium NUMERIC
     * column's arrival shape), phase 2 merges the +100 update wave
@@ -622,14 +619,7 @@ object CdcQueries {
     * directions: scale change, decimal↔float).
     */
   def decimalWideningState(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val wh = decimalDirCache.computeIfAbsent(sfDir,
-      _ => graft.Scratch.dir("graft-dec-").toString)
-    val whPath = Paths.get(wh)
-    if (Files.exists(whPath)) {
-      Files.walk(whPath).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => if (p != whPath) Files.deleteIfExists(p))
-    }
+    val wh = graft.Scratch.fresh("graft-dec-", sfDir).toString
     val store = new graft.cdc.StateStore(wh, nBuckets = 8)
     val target = "cdc.commerce_customer_dec"
     val pk = Seq("c_custkey")
@@ -682,9 +672,6 @@ object CdcQueries {
 
   // ------------------------------------------- variant payload
 
-  private val variantDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** CDC with a SEMI-STRUCTURED payload column end to end: the change
     * log's row images carry a Spark 4 VARIANT column (`parse_json` of
     * the event props — the schemaless attribute bag every real event
@@ -699,14 +686,7 @@ object CdcQueries {
     * from the base table with JSON-path extraction.
     */
   def variantPayload(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val wh = variantDirCache.computeIfAbsent(sfDir,
-      _ => graft.Scratch.dir("graft-var-").toString)
-    val whPath = Paths.get(wh)
-    if (Files.exists(whPath)) {
-      Files.walk(whPath).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => if (p != whPath) Files.deleteIfExists(p))
-    }
+    val wh = graft.Scratch.fresh("graft-var-", sfDir).toString
     val store = new graft.cdc.StateStore(wh, nBuckets = 8)
     val target = "cdc.commerce_events_var"
     val pk = Seq("event_id")

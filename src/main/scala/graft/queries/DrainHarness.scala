@@ -1,26 +1,20 @@
 package graft.queries
 
-import java.nio.file.{Files, Paths}
-
+import graft.Scratch
 import graft.cdc.{Envelope, StateStore}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Shared micro-batch drain harness for the incremental-materialization
   * family (IVF index, aggregate summary, join view, SCD2 history).
-  * Stages the deterministic change log once per (JVM, cache key);
-  * reuses ONE warehouse + checkpoint dir pair per key, WIPED at entry
-  * (the maintenanceLifecycle/curateWrite discipline — repeated
-  * bench/verify runs rebuild deterministically instead of accumulating
-  * /tmp dirs); drains the staged log through `processBatch` with
-  * AvailableNow micro-batches at a state-volume shuffle size.
+  * Stages the deterministic change log once per (JVM, cache key)
+  * ([[Scratch.staged]]); reuses ONE warehouse + checkpoint dir pair per
+  * key, emptied at entry ([[Scratch.fresh]]), so repeated bench/verify
+  * runs rebuild deterministically instead of accumulating dirs; drains
+  * the staged log through `processBatch` with AvailableNow
+  * micro-batches at a state-volume shuffle size.
   */
 private[queries] object DrainHarness {
-
-  private val stagedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val workDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
 
   /** Stage `log` once per (JVM, cacheKey); [[drain]] goes through
     * here, and each family's `prestage` calls it from Bench's untimed
@@ -28,15 +22,13 @@ private[queries] object DrainHarness {
     * repeat (VERDICT r7: run-1 staging I/O dragged run-2 timings).
     */
   def stage(log: DataFrame, cacheKey: String): String =
-    stagedCache.computeIfAbsent(cacheKey, { _ =>
-      val dir = graft.Scratch.dir("graft-log-").toString
-      log.repartition(4).write.mode("overwrite").parquet(dir)
-      dir
-    })
+    Scratch.staged("graft-log-", cacheKey) { dir =>
+      log.repartition(4).write.mode("overwrite").parquet(dir.toString)
+    }.toString
 
-  /** Stage a log as ONE FILE PER WAVE with strictly increasing
-    * modification times, so `maxFilesPerTrigger = 1` drains exactly
-    * one wave per micro-batch in wave order. For most families the
+  /** Stage a log as ONE FILE PER WAVE in wave order
+    * ([[Scratch.orderedSlices]]), so `maxFilesPerTrigger = 1` drains
+    * exactly one wave per micro-batch. For most families the
     * telescoping-delta discipline makes batch slicing irrelevant and
     * [[stage]]'s arbitrary 4-way split is fine; a family whose state
     * is INSERTION-ORDER DEPENDENT by nature (the HNSW graph — real
@@ -44,26 +36,8 @@ private[queries] object DrainHarness {
     * time) pins the slicing here so its oracle has a closed form.
     */
   def stageWaves(waves: Seq[DataFrame], cacheKey: String): String =
-    stagedCache.computeIfAbsent(cacheKey, { _ =>
-      val dir = graft.Scratch.dir("graft-log-").toString
-      val base = System.currentTimeMillis()
-      waves.zipWithIndex.foreach { case (w, i) =>
-        val tmp = Paths.get(dir, s".stage$i")
-        w.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = Files.list(tmp).filter(p =>
-            p.getFileName.toString.startsWith("part-"))
-          .findFirst().orElseThrow()
-        val dst = Paths.get(dir, f"wave-$i%02d.parquet")
-        Files.move(part, dst)
-        // FileStreamSource orders new files by mtime; stagger by a
-        // minute so wave order is unambiguous at any fs granularity.
-        Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(base + i * 60000L))
-        graft.Scratch.wipe(tmp)
-        Files.deleteIfExists(tmp)
-      }
-      dir
-    })
+    Scratch.staged("graft-waves-", cacheKey)(
+      Scratch.orderedSlices(waves, _)).toString
 
   /** [[drain]] for a wave-staged log ([[stageWaves]]). */
   def drainWaves(spark: SparkSession, waves: Seq[DataFrame],
@@ -94,12 +68,8 @@ private[queries] object DrainHarness {
                        nBuckets: Int, filesPerTrigger: Int)
                       (processBatch: (StateStore, DataFrame) => Unit)
       : StateStore = {
-    val (whDir, ckptDir) = workDirCache.computeIfAbsent(cacheKey, { _ =>
-      (graft.Scratch.dir("graft-wh-").toString,
-        graft.Scratch.dir("graft-ckpt-").toString)
-    })
-    graft.Scratch.wipe(Paths.get(whDir))
-    graft.Scratch.wipe(Paths.get(ckptDir))
+    val whDir = Scratch.fresh("graft-wh-", cacheKey).toString
+    val ckptDir = Scratch.fresh("graft-ckpt-", cacheKey).toString
     val store = new StateStore(whDir, nBuckets)
     // Run the drain on a CLONED session (shared SparkContext, private
     // SQLConf): the per-target micro-batch merges shuffle ~1e3 keys

@@ -299,9 +299,6 @@ object MaintenanceQueries {
 
   // --------------------------------------- incremental z-order upkeep
 
-  private val ziDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[queries] final case class ZBounds(pkLo: Long, pkHi: Long,
                                             skLo: Long, skHi: Long)
 
@@ -430,8 +427,7 @@ object MaintenanceQueries {
     */
   def layoutZorderIncremental(spark: SparkSession,
                               sfDir: String): DataFrame = {
-    val dir = ziDirCache.computeIfAbsent(sfDir, _ =>
-      graft.Scratch.dir("graft-zi-").toString)
+    val dir = graft.Scratch.fresh("graft-zi-", sfDir).toString
     val laid = s"$dir/lineitem_z"
     val b = ziBounds(spark, sfDir)
     ziBuild(spark, sfDir, laid, b)
@@ -526,12 +522,11 @@ object MaintenanceQueries {
 
   // ------------------------------------------------- zone-map skipping
 
-  private val zonemapDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val ZonemapDir = "graft-zm-"
 
   /** The laid-out table dir for a given sfDir (test hook). */
   private[queries] def zonemapLaidDir(sfDir: String): String =
-    s"${zonemapDirCache.get(sfDir)}/orders_by_year"
+    s"${graft.Scratch.keyed(ZonemapDir, sfDir)}/orders_by_year"
 
   /** Zone-map file selection: the paths whose [lo, hi] date range
     * intersects the query window, plus the total file count. The zone
@@ -588,8 +583,7 @@ object MaintenanceQueries {
     * actually skipped and the pruned answer equals the full scan.
     */
   def layoutZonemap(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = zonemapDirCache.computeIfAbsent(sfDir, _ =>
-      graft.Scratch.dir("graft-zm-").toString)
+    val dir = graft.Scratch.fresh(ZonemapDir, sfDir).toString
     val laid = s"$dir/orders_by_year"
     val (from, to) = ("1996-04-01", "1997-03-31")
     Tables.load(spark, sfDir, "orders")
@@ -617,13 +611,12 @@ object MaintenanceQueries {
 
   // ------------------------------------- zone-map refresh under CDC
 
-  private val zmiDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val ZmiDir = "graft-zmi-"
 
   /** The laid-out table dir for the incremental-zonemap query (test
     * hook). */
   private[queries] def zmiLaidDir(sfDir: String): String =
-    s"${zmiDirCache.get(sfDir)}/orders_by_year"
+    s"${graft.Scratch.keyed(ZmiDir, sfDir)}/orders_by_year"
 
   /** Per-file (lo, hi) millis of o_orderdate, optionally restricted to
     * the given year partitions — the restricted form is the INCREMENTAL
@@ -754,9 +747,7 @@ object MaintenanceQueries {
 
   def layoutZonemapIncremental(spark: SparkSession,
       sfDir: String): DataFrame = {
-    import java.nio.file.Files
-    val dir = zmiDirCache.computeIfAbsent(sfDir, _ =>
-      graft.Scratch.dir("graft-zmi-").toString)
+    val dir = graft.Scratch.fresh(ZmiDir, sfDir).toString
     val laid = s"$dir/orders_by_year"
     zmiBuildLayout(spark, sfDir, laid)
     val statsV0 = zmiStats(spark, laid)
@@ -789,8 +780,7 @@ object MaintenanceQueries {
 
   // ------------------------------------------- bloom skipping index
 
-  private val bloomDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val BloomDir = "graft-bloom-"
   private val bloomProbeCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   private val bloomIncProbeCache =
@@ -798,7 +788,7 @@ object MaintenanceQueries {
 
   /** The laid-out table dir for the bloom-index query (test hook). */
   private[queries] def bloomLaidDir(sfDir: String): String =
-    s"${bloomDirCache.get(sfDir)}/orders_by_orderkey"
+    s"${graft.Scratch.keyed(BloomDir, sfDir)}/orders_by_orderkey"
 
   /** Per-file bloom sidecar over `o_custkey`: ONE `_metadata.file_path`
     * aggregate builds a serialized bloom filter per file (the same
@@ -906,21 +896,21 @@ object MaintenanceQueries {
     * the persisted consult agrees with a driver-side rebuild.
     */
   /** One-time build for [[layoutBloom]] — the COMMIT phase (layout +
-    * persisted sidecar blob + probe key), guarded by dir existence so
+    * persisted sidecar blob + probe key), staged once per sfDir
+    * ([[graft.Scratch.staged]]; a build that fails halfway reruns) so
     * invocations after the first are pure lookups. Also called by
     * [[prestage]] so the bench never times the build.
     */
   private def ensureBloomBuilt(spark: SparkSession,
       sfDir: String): (String, Long) = {
-    val dir = bloomDirCache.computeIfAbsent(sfDir, _ =>
-      graft.Scratch.dir("graft-bloom-").toString)
-    val laid = s"$dir/orders_by_orderkey"
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(laid))) {
+    val dir = graft.Scratch.staged(BloomDir, sfDir) { d =>
+      val laid = s"$d/orders_by_orderkey"
       Tables.load(spark, sfDir, "orders")
         .repartitionByRange(8, col("o_orderkey"))
         .write.mode("overwrite").parquet(laid)
       bloomSidecarCommit(spark, laid, 0, Seq(laid))
     }
+    val laid = s"$dir/orders_by_orderkey"
     // Probe key: deterministic, oracle-expressible, low-frequency.
     val probe = bloomProbeCache.computeIfAbsent(sfDir, _ =>
       Tables.load(spark, sfDir, "orders")
@@ -956,13 +946,12 @@ object MaintenanceQueries {
 
   // -------------------------------- bloom sidecar refresh under CDC
 
-  private val bloomIncDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val BloomIncDir = "graft-bloominc-"
 
   /** The laid-out table dir for the incremental-bloom query (test
     * hook). */
   private[queries] def bloomIncLaidDir(sfDir: String): String =
-    s"${bloomIncDirCache.get(sfDir)}/orders_by_orderkey"
+    s"${graft.Scratch.keyed(BloomIncDir, sfDir)}/orders_by_orderkey"
 
   /** Data files currently in the laid dir (driver-side listing — the
     * manifest walk every table format performs at commit). */
@@ -1041,15 +1030,13 @@ object MaintenanceQueries {
     */
   private def ensureBloomIncBuilt(spark: SparkSession,
       sfDir: String): (String, Long) = {
-    val dir = bloomIncDirCache.computeIfAbsent(sfDir, _ =>
-      graft.Scratch.dir("graft-bloominc-").toString)
-    val laid = s"$dir/orders_by_orderkey"
     val probe = bloomIncProbeCache.computeIfAbsent(sfDir, _ =>
       Tables.load(spark, sfDir, "orders")
         .groupBy("o_custkey").agg(count(lit(1)).as("n"))
         .filter(col("n") <= 2)
         .agg(min("o_custkey")).head().getLong(0))
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(laid))) {
+    val dir = graft.Scratch.staged(BloomIncDir, sfDir) { d =>
+      val laid = s"$d/orders_by_orderkey"
       // COMMIT 0: base layout + its persisted blob.
       Tables.load(spark, sfDir, "orders")
         .repartitionByRange(8, col("o_orderkey"))
@@ -1062,7 +1049,7 @@ object MaintenanceQueries {
       val newFiles = bloomDataFiles(laid).filterNot(before)
       bloomSidecarCommit(spark, laid, 1, newFiles)
     }
-    (laid, probe.longValue())
+    (s"$dir/orders_by_orderkey", probe.longValue())
   }
 
   /** Untimed one-time builds for the bench ([[graft.Prestage]]): the
@@ -1105,12 +1092,11 @@ object MaintenanceQueries {
 
   // --------------------------------- hidden-partitioning transforms
 
-  private val ptDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val PtDir = "graft-ptrans-"
 
   /** The two spec-epoch dirs for the transform query (test hook). */
   private[queries] def ptEpochDirs(sfDir: String): (String, String) =
-    (s"${ptDirCache.get(sfDir)}/epoch0", s"${ptDirCache.get(sfDir)}/epoch1")
+    { val d = graft.Scratch.keyed(PtDir, sfDir); (s"$d/epoch0", s"$d/epoch1") }
 
   /** Epoch-0 partition transform: `bucket(8, o_custkey)` — the same
     * hash family Iceberg's bucket transform uses (a hash mod n of the
@@ -1208,8 +1194,7 @@ object MaintenanceQueries {
     * [[partitionTransform]] and [[partitionsMeta]]. */
   private[queries] def ptBuildLayouts(spark: SparkSession,
       sfDir: String): (String, String) = {
-    val dir = ptDirCache.computeIfAbsent(sfDir, _ =>
-      graft.Scratch.dir("graft-ptrans-").toString)
+    val dir = graft.Scratch.fresh(PtDir, sfDir).toString
     val e0 = s"$dir/epoch0"
     val e1 = s"$dir/epoch1"
     val orders = Tables.load(spark, sfDir, "orders")
@@ -1317,9 +1302,6 @@ object MaintenanceQueries {
 
   // ------------------------------------------------- lifecycle
 
-  private val maintDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** One phase of the change log merged + committed into the store —
     * the batch spelling of the pipeline's per-micro-batch commit,
     * running the same shared [[graft.cdc.MergeCommit]] recipe.
@@ -1343,22 +1325,17 @@ object MaintenanceQueries {
     *     asserts the first version's data dir and manifest are gone
     *     while current state still reads identically.
     *
-    * The store dir is cached per (JVM, sfDir) and WIPED at entry so
-    * every invocation rebuilds from version 0 deterministically and
-    * repeated bench/verify runs can't accumulate dirs (the curateWrite
-    * discipline). Driver-side `.head()` calls collect only scalar
+    * The store dir is one per sfDir, emptied at entry
+    * ([[graft.Scratch.fresh]]), so every invocation rebuilds from
+    * version 0 deterministically and repeated bench/verify runs can't
+    * accumulate dirs. Driver-side `.head()` calls collect only scalar
     * aggregates; the maintenance operators themselves are the tested
     * full-plan paths (compactTable is one distributed rewrite commit).
     */
   def maintenanceLifecycle(spark: SparkSession, sfDir: String): DataFrame = {
     import java.nio.file.{Files, Paths}
-    val wh = maintDirCache.computeIfAbsent(sfDir,
-      _ => graft.Scratch.dir("graft-maint-").toString)
+    val wh = graft.Scratch.fresh("graft-maint-", sfDir).toString
     val whPath = Paths.get(wh)
-    if (Files.exists(whPath)) {
-      Files.walk(whPath).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => if (p != whPath) Files.deleteIfExists(p))
-    }
     val store = new graft.cdc.StateStore(wh, nBuckets = 8)
     val target = "cdc.commerce_customer_maint"
     val pk = Seq("c_custkey")
@@ -1446,9 +1423,6 @@ object MaintenanceQueries {
 
   // ------------------------------------------------- binpack compaction
 
-  private val binpackDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** SELECTIVE BIN-PACKED COMPACTION as an oracle-checked query — the
     * `rewrite_data_files(strategy => 'binpack')` analog with a touch
     * filter, exercising [[graft.cdc.StateStore.compactBinpack]]'s
@@ -1476,13 +1450,8 @@ object MaintenanceQueries {
   def maintenanceCompactBinpack(spark: SparkSession,
                                 sfDir: String): DataFrame = {
     import java.nio.file.{Files, Paths}
-    val wh = binpackDirCache.computeIfAbsent(sfDir,
-      _ => graft.Scratch.dir("graft-binpack-").toString)
+    val wh = graft.Scratch.fresh("graft-binpack-", sfDir).toString
     val whPath = Paths.get(wh)
-    if (Files.exists(whPath)) {
-      Files.walk(whPath).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => if (p != whPath) Files.deleteIfExists(p))
-    }
     val store = new graft.cdc.StateStore(wh, nBuckets = 8)
     val target = "cdc.commerce_customer_binpack"
     val pk = Seq("c_custkey")
@@ -1592,13 +1561,12 @@ object MaintenanceQueries {
 
   // ------------------------------------------- sort-ordered compaction
 
-  private val sortCompactDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val SortCompactDir = "graft-sortcomp-"
 
   /** The store warehouse dir for the sort-compaction query (test
     * hook). */
   private[queries] def sortCompactWh(sfDir: String): String =
-    sortCompactDirCache.get(sfDir)
+    graft.Scratch.keyed(SortCompactDir, sfDir).toString
 
   private[queries] val SortCompactTarget = "cdc.commerce_customer_sc"
 
@@ -1629,13 +1597,7 @@ object MaintenanceQueries {
     * tables carry the same trade as a persistent sort order.
     */
   def compactSortLifecycle(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val wh = sortCompactDirCache.computeIfAbsent(sfDir,
-      _ => graft.Scratch.dir("graft-sortcomp-").toString)
-    val whPath = Paths.get(wh)
-    if (Files.exists(whPath))
-      Files.walk(whPath).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => if (p != whPath) Files.deleteIfExists(p))
+    val wh = graft.Scratch.fresh(SortCompactDir, sfDir).toString
     val store = new graft.cdc.StateStore(wh, nBuckets = 8)
     val target = SortCompactTarget
     val pk = Seq("c_custkey")
@@ -1684,14 +1646,14 @@ object MaintenanceQueries {
 
   // --------------------------------------- timestamp-based time travel
 
-  private val ttTsDirCache =
+  private val ttTsRuns =
     new java.util.concurrent.ConcurrentHashMap[String, (String, Long, Long)]()
 
   /** The (warehouse, t1, t2) of the LAST [[timeTravelTs]] run for this
     * sfDir (test hook for TimeTravelTsSpec's resolution asserts).
     */
   private[queries] def ttTsMarkers(sfDir: String): (String, Long, Long) =
-    ttTsDirCache.get(sfDir)
+    ttTsRuns.get(sfDir)
 
   private[queries] val TtTsTarget = "cdc.commerce_supplier_tt"
 
@@ -1716,14 +1678,7 @@ object MaintenanceQueries {
     * before-first-commit refusal.
     */
   def timeTravelTs(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val prior = ttTsDirCache.get(sfDir)
-    val wh = if (prior != null) prior._1
-      else graft.Scratch.dir("graft-ttts-").toString
-    val whPath = Paths.get(wh)
-    if (Files.exists(whPath))
-      Files.walk(whPath).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => if (p != whPath) Files.deleteIfExists(p))
+    val wh = graft.Scratch.fresh("graft-ttts-", sfDir).toString
     val store = new graft.cdc.StateStore(wh, nBuckets = 8)
     val target = TtTsTarget
     val pk = Seq("s_suppkey")
@@ -1749,7 +1704,7 @@ object MaintenanceQueries {
       deleted = false)
     val t2 = store.commitTimeOf(target, 1)
     wave(sup.filter(col("s_suppkey") % 7 === 0), 3000L, deleted = true)
-    ttTsDirCache.put(sfDir, (wh, t1, t2))
+    ttTsRuns.put(sfDir, (wh, t1, t2))
 
     def summarize(step: String, df: DataFrame): DataFrame =
       df.agg(count(lit(1)).as("n_rows"),
@@ -1778,9 +1733,6 @@ object MaintenanceQueries {
       |FROM w2 WHERE s_suppkey % 7 <> 0
       |ORDER BY step""".stripMargin
 
-  private val rbTsDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** ROLLBACK TO TIMESTAMP (`RESTORE TABLE ... TO TIMESTAMP AS OF` —
     * the timestamp twin of `maintenance_clone_restore`'s
     * restore-by-version, via [[graft.cdc.StateStore.restoreAtTime]]):
@@ -1801,12 +1753,7 @@ object MaintenanceQueries {
     * the restore wrote no data directory.
     */
   def rollbackTs(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val wh = rbTsDirCache.computeIfAbsent(sfDir,
-      _ => graft.Scratch.dir("graft-rbts-").toString)
-    val whPath = Paths.get(wh)
-    Files.walk(whPath).sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => if (p != whPath) Files.deleteIfExists(p))
+    val wh = graft.Scratch.fresh("graft-rbts-", sfDir).toString
     val store = new graft.cdc.StateStore(wh, nBuckets = 8)
     val target = "cdc.commerce_supplier_rb"
     val pk = Seq("s_suppkey")
@@ -1848,9 +1795,6 @@ object MaintenanceQueries {
       |FROM supplier
       |ORDER BY step""".stripMargin
 
-  private val tcTsDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** CHANGE DATA FEED BETWEEN TIMESTAMPS (`table_changes(t, ts1, ts2)`
     * — the instant-addressed member beside `cdc_table_changes`'s
     * log-derived CDF and `maintenance_refs_diff`'s ref-addressed one,
@@ -1868,12 +1812,7 @@ object MaintenanceQueries {
     * updates, zero deletes).
     */
   def tableChangesTs(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val wh = tcTsDirCache.computeIfAbsent(sfDir,
-      _ => graft.Scratch.dir("graft-tcts-").toString)
-    val whPath = Paths.get(wh)
-    Files.walk(whPath).sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => if (p != whPath) Files.deleteIfExists(p))
+    val wh = graft.Scratch.fresh("graft-tcts-", sfDir).toString
     val store = new graft.cdc.StateStore(wh, nBuckets = 8)
     val target = "cdc.commerce_supplier_tc"
     val pk = Seq("s_suppkey")
@@ -1911,9 +1850,6 @@ object MaintenanceQueries {
       |FROM supplier WHERE s_suppkey % 7 = 0
       |ORDER BY s_suppkey""".stripMargin
 
-  private val expTsDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** EXPIRE SNAPSHOTS BY INSTANT (`expire_snapshots(older_than => ts)`
     * — the retention member of the timestamp-addressing family, via
     * [[graft.cdc.StateStore.expireOlderThan]]): wave 1 commits the
@@ -1938,11 +1874,8 @@ object MaintenanceQueries {
     */
   def expireTs(spark: SparkSession, sfDir: String): DataFrame = {
     import java.nio.file.{Files, Paths}
-    val wh = expTsDirCache.computeIfAbsent(sfDir,
-      _ => graft.Scratch.dir("graft-expts-").toString)
+    val wh = graft.Scratch.fresh("graft-expts-", sfDir).toString
     val whPath = Paths.get(wh)
-    Files.walk(whPath).sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => if (p != whPath) Files.deleteIfExists(p))
     val store = new graft.cdc.StateStore(wh, nBuckets = 8)
     val target = "cdc.commerce_supplier_exp"
     val pk = Seq("s_suppkey")
@@ -2008,11 +1941,6 @@ object MaintenanceQueries {
       |FROM supplier
       |ORDER BY step""".stripMargin
 
-  // sfDir-keyed (three fixtures here); a long-lived multi-tenant
-  // service would bound this memo — see frozenMergesCache's note.
-  private val expRetainDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** EXPIRE SNAPSHOTS WITH `retain_last` (`expire_snapshots(older_than
     * => ts, retain_last => n)` — completing the Iceberg expiry surface
     * beside [[expireTs]], via [[graft.cdc.StateStore.expireSnapshots]]):
@@ -2040,11 +1968,8 @@ object MaintenanceQueries {
     */
   def expireRetain(spark: SparkSession, sfDir: String): DataFrame = {
     import java.nio.file.{Files, Paths}
-    val wh = expRetainDirCache.computeIfAbsent(sfDir,
-      _ => graft.Scratch.dir("graft-expret-").toString)
+    val wh = graft.Scratch.fresh("graft-expret-", sfDir).toString
     val whPath = Paths.get(wh)
-    Files.walk(whPath).sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => if (p != whPath) Files.deleteIfExists(p))
     val store = new graft.cdc.StateStore(wh, nBuckets = 8)
     val target = "cdc.commerce_supplier_ret"
     val pk = Seq("s_suppkey")
@@ -2104,9 +2029,6 @@ object MaintenanceQueries {
       |SELECT 'survivors', CAST(2 AS BIGINT), 0.0, TRUE
       |ORDER BY step""".stripMargin
 
-  private val filesDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** `$files` METADATA TABLE — the Iceberg `table$files` analog
     * beside `$snapshots`/`$refs`/`$partitions`: per-bucket file count
     * and record count for the CURRENT version, read from parquet
@@ -2130,11 +2052,8 @@ object MaintenanceQueries {
     */
   def filesMeta(spark: SparkSession, sfDir: String): DataFrame = {
     import java.nio.file.{Files, Paths}
-    val wh = filesDirCache.computeIfAbsent(sfDir,
-      _ => graft.Scratch.dir("graft-files-").toString)
+    val wh = graft.Scratch.fresh("graft-files-", sfDir).toString
     val whPath = Paths.get(wh)
-    Files.walk(whPath).sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => if (p != whPath) Files.deleteIfExists(p))
     val store = new graft.cdc.StateStore(wh, nBuckets = 8)
     val target = "cdc.commerce_supplier_files"
     val pk = Seq("s_suppkey")
@@ -2177,9 +2096,6 @@ object MaintenanceQueries {
       |  CAST(1 AS BIGINT) AS n_files, count(*) AS n_records
       |FROM supplier GROUP BY 1 ORDER BY 1""".stripMargin
 
-  private val sdDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** SCHEMA EVOLUTION: COLUMN DROP (A11's third DDL beside widen and
     * add-column, `cdc_schema_evolution`): the source drops `s_name`,
     * so wave 2's envelopes simply stop carrying it. The merge's
@@ -2197,12 +2113,7 @@ object MaintenanceQueries {
     * evolution journal records nothing).
     */
   def schemaDrop(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val wh = sdDirCache.computeIfAbsent(sfDir,
-      _ => graft.Scratch.dir("graft-sdrop-").toString)
-    val whPath = Paths.get(wh)
-    Files.walk(whPath).sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => if (p != whPath) Files.deleteIfExists(p))
+    val wh = graft.Scratch.fresh("graft-sdrop-", sfDir).toString
     val store = new graft.cdc.StateStore(wh, nBuckets = 8)
     val target = "cdc.commerce_supplier_sd"
     val pk = Seq("s_suppkey")
@@ -2235,9 +2146,6 @@ object MaintenanceQueries {
       |                       ELSE s_acctbal END, 2)), 2) AS bal_sum
       |FROM supplier""".stripMargin
 
-  private val srDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** SCHEMA EVOLUTION: COLUMN RENAME (A11's fourth DDL;
     * `StateStore.renameColumn`) — the Iceberg metadata-only rename,
     * name-mapped. Wave 1 commits the full supplier image under
@@ -2255,12 +2163,7 @@ object MaintenanceQueries {
     * both hash-checked against the oracle.
     */
   def schemaRename(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val wh = srDirCache.computeIfAbsent(sfDir,
-      _ => graft.Scratch.dir("graft-srename-").toString)
-    val whPath = Paths.get(wh)
-    Files.walk(whPath).sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => if (p != whPath) Files.deleteIfExists(p))
+    val wh = graft.Scratch.fresh("graft-srename-", sfDir).toString
     val store = new graft.cdc.StateStore(wh, nBuckets = 8)
     val target = "cdc.commerce_supplier_sr"
     val pk = Seq("s_suppkey")
@@ -2303,9 +2206,6 @@ object MaintenanceQueries {
 
   // ------------------------------------------------- point lookup
 
-  private val lookupDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** POINT LOOKUPS against the bucketed store — the serving-path read
     * the CDC-maintained table exists for (the reference serves it via
     * Trino; a feature store serves it by key). A probe set resolves by
@@ -2318,14 +2218,7 @@ object MaintenanceQueries {
     * includes the delete wave's keys and the oracle excludes them.
     */
   def pointLookup(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val wh = lookupDirCache.computeIfAbsent(sfDir,
-      _ => graft.Scratch.dir("graft-lkp-").toString)
-    val whPath = Paths.get(wh)
-    if (Files.exists(whPath)) {
-      Files.walk(whPath).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => if (p != whPath) Files.deleteIfExists(p))
-    }
+    val wh = graft.Scratch.fresh("graft-lkp-", sfDir).toString
     val store = new graft.cdc.StateStore(wh, nBuckets = 8)
     val target = "cdc.commerce_customer_lkp"
     val base = Tables.load(spark, sfDir, "customer")
@@ -2355,8 +2248,7 @@ object MaintenanceQueries {
 
   // ------------------------------------------------- rebucketing
 
-  private val rebucketDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
+  private val Rebucket16Dir = "graft-rb16-"
 
   /** BUCKET-LAYOUT EVOLUTION — the partition-spec-evolution problem
     * (Iceberg's headline feature the classic Hive layout lacks): the
@@ -2373,16 +2265,8 @@ object MaintenanceQueries {
     * migrated state is row-identical and stays bucket-prunable.
     */
   def rebucket(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val (wh8, wh16) = rebucketDirCache.computeIfAbsent(sfDir,
-      _ => (graft.Scratch.dir("graft-rb8-").toString,
-        graft.Scratch.dir("graft-rb16-").toString))
-    Seq(wh8, wh16).foreach { d =>
-      val p = Paths.get(d)
-      if (Files.exists(p))
-        Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-          .forEach(q => if (q != p) Files.deleteIfExists(q))
-    }
+    val wh8 = graft.Scratch.fresh("graft-rb8-", sfDir).toString
+    val wh16 = graft.Scratch.fresh(Rebucket16Dir, sfDir).toString
     val target = "cdc.commerce_customer_rb"
     val pk = Seq("c_custkey")
     val ev = Envelope.flatten(ChangeGen.changeLog(
@@ -2431,7 +2315,8 @@ object MaintenanceQueries {
     * spec access for bucket-pruning assertions on the 16-way layout.
     */
   private[queries] def evolvedStore(sfDir: String): graft.cdc.StateStore =
-    new graft.cdc.StateStore(rebucketDirCache.get(sfDir)._2, nBuckets = 16)
+    new graft.cdc.StateStore(
+      graft.Scratch.keyed(Rebucket16Dir, sfDir).toString, nBuckets = 16)
 
   /** Checksums from the wave formulas: the ts ≤ 3000 state (every key,
     * +100 %3 overridden by +200 %5) must survive the re-hash
@@ -2514,9 +2399,6 @@ object MaintenanceQueries {
 
   // ------------------------------------------------- merge-on-read
 
-  private val morDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** MERGE-ON-READ current state — the write-amplification counterpart
     * of the copy-on-write merge the cdc_merge_* family and every
     * StateStore commit perform (the Iceberg v2 equality-delete / Delta
@@ -2537,8 +2419,8 @@ object MaintenanceQueries {
     * fresh base (the read-cost/write-cost trade is the compaction
     * cadence, exactly the Iceberg/Delta MOR contract).
     *
-    * The working dir is cached per (JVM, sfDir) and wiped at entry
-    * (the maintenanceLifecycle discipline): reruns rebuild from the
+    * The working dir is one per sfDir, emptied at entry
+    * ([[graft.Scratch.fresh]]): reruns rebuild from the
     * base snapshot deterministically, and callers consume the returned
     * frame before the next invocation.
     */
@@ -2546,14 +2428,7 @@ object MaintenanceQueries {
     morRead(spark, buildMor(spark, sfDir))
 
   private[queries] def buildMor(spark: SparkSession, sfDir: String): String = {
-    import java.nio.file.{Files, Paths}
-    val dir = morDirCache.computeIfAbsent(sfDir,
-      _ => graft.Scratch.dir("graft-mor-").toString)
-    val dirPath = Paths.get(dir)
-    if (Files.exists(dirPath)) {
-      Files.walk(dirPath).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => if (p != dirPath) Files.deleteIfExists(p))
-    }
+    val dir = graft.Scratch.fresh("graft-mor-", sfDir).toString
     val base = Tables.load(spark, sfDir, "customer")
     val pk = col("c_custkey")
     base.withColumn("_v", lit(0)).write.parquet(s"$dir/base")
@@ -2609,21 +2484,14 @@ object MaintenanceQueries {
     import java.nio.file.{Files, Paths}
     morAssemble(spark, dir).drop("_v").withColumn("_v", lit(0))
       .write.parquet(s"$dir/base-next")
-    def rm(p: java.nio.file.Path): Unit = if (Files.exists(p))
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .forEach(q => Files.deleteIfExists(q))
-    rm(Paths.get(dir, "base"))
-    rm(Paths.get(dir, "delta"))
-    rm(Paths.get(dir, "deletes"))
+    Seq("base", "delta", "deletes")
+      .foreach(d => graft.Scratch.delete(Paths.get(dir, d)))
     Files.move(Paths.get(dir, "base-next"), Paths.get(dir, "base"))
   }
 
   val mergeMorOracle: String = ChangeGen.mergedOracleSql(
     "customer", "c_custkey", "c_acctbal",
     Seq("c_name", "c_nationkey", "c_acctbal", "c_mktsegment"))
-
-  private val orphanDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** ORPHAN-FILE GC as an oracle-checked query — the
     * `remove_orphan_files` maintenance action run end-to-end: a store
@@ -2642,11 +2510,7 @@ object MaintenanceQueries {
     */
   def orphanVacuum(spark: SparkSession, sfDir: String): DataFrame = {
     import java.nio.file.{Files, Paths}
-    val wh = orphanDirCache.computeIfAbsent(sfDir,
-      _ => graft.Scratch.dir("graft-gc-").toString)
-    val whPath = Paths.get(wh)
-    Files.walk(whPath).sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => if (p != whPath) Files.deleteIfExists(p))
+    val wh = graft.Scratch.fresh("graft-gc-", sfDir).toString
     val store = new graft.cdc.StateStore(wh, nBuckets = 8)
     val target = "cdc.commerce_customer_gc"
     val pk = Seq("c_custkey")
@@ -2701,8 +2565,7 @@ object MaintenanceQueries {
       |UNION ALL SELECT 'idempotent', 0, n, bal, TRUE FROM fin
       |ORDER BY step""".stripMargin
 
-  private val cloneDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val CloneDir = "graft-clone-"
 
   /** SHALLOW CLONE + RESTORE as one oracle-checked lifecycle — the
     * Delta `SHALLOW CLONE` / `RESTORE VERSION AS OF` pair run
@@ -2724,16 +2587,13 @@ object MaintenanceQueries {
     *     restore wrote no data directory (a pointer commit, nothing
     *     else — rollback at 100 TB must not be a rewrite).
     *
-    * Store dir cached per (JVM, sfDir) + wiped at entry (the
-    * maintenanceLifecycle discipline) so reruns are deterministic.
+    * Store dir one per sfDir, emptied at entry
+    * ([[graft.Scratch.fresh]]), so reruns are deterministic.
     */
   def cloneRestore(spark: SparkSession, sfDir: String): DataFrame = {
     import java.nio.file.{Files, Paths}
-    val wh = cloneDirCache.computeIfAbsent(sfDir,
-      _ => graft.Scratch.dir("graft-clone-").toString)
+    val wh = graft.Scratch.fresh(CloneDir, sfDir).toString
     val whPath = Paths.get(wh)
-    Files.walk(whPath).sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => if (p != whPath) Files.deleteIfExists(p))
     val store = new graft.cdc.StateStore(wh, nBuckets = 8)
     val src = "cdc.commerce_customer_cl"
     val dst = "cdc.commerce_customer_cl_clone"
@@ -2793,7 +2653,8 @@ object MaintenanceQueries {
     * access for detach-by-compaction and unrestorable-version checks.
     */
   private[queries] def cloneStore(sfDir: String): graft.cdc.StateStore =
-    new graft.cdc.StateStore(cloneDirCache.get(sfDir), nBuckets = 8)
+    new graft.cdc.StateStore(
+      graft.Scratch.keyed(CloneDir, sfDir).toString, nBuckets = 8)
 
   /** Checksums from the wave formulas: pre = every key with the +100%3
     * / +200%5 arithmetic; the clone's wave drops %14 keys; the
@@ -2826,9 +2687,6 @@ object MaintenanceQueries {
       |UNION ALL SELECT 'source_wave', n, bal, TRUE FROM sw
       |ORDER BY step""".stripMargin
 
-  private val cloneVacDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** CLONE-AWARE VACUUM as an oracle-checked lifecycle — the hazard
     * Delta/Iceberg document (source `expire_snapshots` stranding a
     * shallow clone) closed by the store's back-reference protocol
@@ -2854,11 +2712,8 @@ object MaintenanceQueries {
   def cloneVacuum(spark: SparkSession, sfDir: String): DataFrame = {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
-    val wh = cloneVacDirCache.computeIfAbsent(sfDir,
-      _ => graft.Scratch.dir("graft-clvacq-").toString)
+    val wh = graft.Scratch.fresh("graft-clvacq-", sfDir).toString
     val whPath = Paths.get(wh)
-    Files.walk(whPath).sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => if (p != whPath) Files.deleteIfExists(p))
     val store = new graft.cdc.StateStore(wh, nBuckets = 8)
     val src = "cdc.commerce_customer_cv"
     val dst = "cdc.commerce_customer_cv_clone"
@@ -2937,9 +2792,6 @@ object MaintenanceQueries {
       |UNION ALL SELECT 'source_current', n, bal, TRUE FROM sw
       |ORDER BY step""".stripMargin
 
-  private val purgeDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** RIGHT-TO-BE-FORGOTTEN purge as an oracle-checked lifecycle
     * (StateStore.purgeKeys): the store is built from the usual two
     * commit phases, then every customer with `c_custkey % 10 = 3` is
@@ -2962,12 +2814,7 @@ object MaintenanceQueries {
     * bulk-erasure caller never funnels keys through the driver.
     */
   def purgeLifecycle(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val wh = purgeDirCache.computeIfAbsent(sfDir,
-      _ => graft.Scratch.dir("graft-purgeq-").toString)
-    val whPath = Paths.get(wh)
-    Files.walk(whPath).sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => if (p != whPath) Files.deleteIfExists(p))
+    val wh = graft.Scratch.fresh("graft-purgeq-", sfDir).toString
     val store = new graft.cdc.StateStore(wh, nBuckets = 8)
     val target = "cdc.commerce_customer_pg"
     val pk = Seq("c_custkey")
@@ -3027,8 +2874,7 @@ object MaintenanceQueries {
       |UNION ALL SELECT 'time_travel', n, bal, TRUE FROM pre
       |ORDER BY step""".stripMargin
 
-  private val partEvolveDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val PartEvolveDir = "graft-pe-"
 
   /** PARTITION-SPEC EVOLUTION — the Iceberg capability the reference's
     * sink relies on for long-lived tables (Iceberg 1.9.2, pom.xml:15:
@@ -3054,9 +2900,7 @@ object MaintenanceQueries {
     * reason specs evolve toward finer partitioning as tables grow.
     */
   def partitionEvolution(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.Files
-    val root = partEvolveDirCache.computeIfAbsent(sfDir,
-      _ => graft.Scratch.dir("graft-pe-").toString)
+    val root = graft.Scratch.fresh(PartEvolveDir, sfDir).toString
     val (v1Dir, v2Dir) = (s"$root/v1", s"$root/v2")
     val o = Tables.load(spark, sfDir, "orders")
       .withColumn("p_year", year(col("o_orderdate")))
@@ -3083,7 +2927,7 @@ object MaintenanceQueries {
     * spec access for the pruning assertions.
     */
   private[queries] def partEvolveRoot(sfDir: String): String =
-    partEvolveDirCache.get(sfDir)
+    graft.Scratch.keyed(PartEvolveDir, sfDir).toString
 
   val partitionEvolutionOracle: String =
     """SELECT CAST(year(o_orderdate) AS INT) AS p_year, o_orderpriority,
@@ -3092,8 +2936,7 @@ object MaintenanceQueries {
 
   // ------------------------------------------------- write-audit-publish
 
-  private val wapDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val WapDir = "graft-wap-"
 
   /** WRITE-AUDIT-PUBLISH — the Iceberg staging-branch workflow
     * (`spark.wap.branch` / cherry-pick publish) that keeps bad batches
@@ -3122,14 +2965,7 @@ object MaintenanceQueries {
     * unaffected data.
     */
   def wapPublish(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val dir = wapDirCache.computeIfAbsent(sfDir,
-      _ => graft.Scratch.dir("graft-wap-").toString)
-    val dirPath = Paths.get(dir)
-    if (Files.exists(dirPath)) {
-      Files.walk(dirPath).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => if (p != dirPath) Files.deleteIfExists(p))
-    }
+    val dir = graft.Scratch.fresh(WapDir, sfDir).toString
     val base = Tables.load(spark, sfDir, "customer")
     val pk = col("c_custkey")
     val wave = base.filter(pk % 4 === 0)
@@ -3179,10 +3015,7 @@ object MaintenanceQueries {
   }
 
   private[queries] def wapRoot(sfDir: String): String =
-    wapDirCache.get(sfDir)
-
-  private val wapBranchDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    graft.Scratch.keyed(WapDir, sfDir).toString
 
   /** WRITE-AUDIT-PUBLISH ON THE VERSIONED STORE — the Iceberg
     * branch-based WAP flow ([[wapPublish]] is the row-level
@@ -3211,14 +3044,7 @@ object MaintenanceQueries {
     * branch's own files — nothing ever rewrites committed data.
     */
   def wapBranch(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val wh = wapBranchDirCache.computeIfAbsent(sfDir,
-      _ => graft.Scratch.dir("graft-wapbr-").toString)
-    val whPath = Paths.get(wh)
-    if (Files.exists(whPath)) {
-      Files.walk(whPath).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => if (p != whPath) Files.deleteIfExists(p))
-    }
+    val wh = graft.Scratch.fresh("graft-wapbr-", sfDir).toString
     val store = new graft.cdc.StateStore(wh, nBuckets = 8)
     val target = "cdc.commerce_customer_wapbr"
     val pk = Seq("c_custkey")
@@ -3309,9 +3135,6 @@ object MaintenanceQueries {
       |  c_mktsegment
       |FROM customer ORDER BY c_custkey""".stripMargin
 
-  private val refsDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** NAMED REFS — the Iceberg tag/branch surface
     * ([[graft.cdc.StateStore.createRef]]) as an oracle-checked query:
     * three committed waves, a TAG pinning the pre-delete state
@@ -3332,14 +3155,7 @@ object MaintenanceQueries {
     * versions.
     */
   def maintenanceRefs(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val wh = refsDirCache.computeIfAbsent(sfDir,
-      _ => graft.Scratch.dir("graft-refs-").toString)
-    val whPath = Paths.get(wh)
-    if (Files.exists(whPath)) {
-      Files.walk(whPath).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => if (p != whPath) Files.deleteIfExists(p))
-    }
+    val wh = graft.Scratch.fresh("graft-refs-", sfDir).toString
     val store = new graft.cdc.StateStore(wh, nBuckets = 8)
     val target = "cdc.commerce_customer_refs"
     val pk = Seq("c_custkey")
@@ -3378,9 +3194,6 @@ object MaintenanceQueries {
       |UNION ALL SELECT 'release', 'branch', 2, n - d FROM n, d
       |ORDER BY ref_name""".stripMargin
 
-  private val refsDiffDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** REF-TO-REF CHANGE DATA FEED
     * ([[graft.cdc.StateStore.diffRefs]]) — "what changed since the
     * q1-audit tag", the question tags exist to answer: snapshot
@@ -3398,14 +3211,7 @@ object MaintenanceQueries {
     * single-bucket commit and the self-diff empty case.
     */
   def maintenanceRefsDiff(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val wh = refsDiffDirCache.computeIfAbsent(sfDir,
-      _ => graft.Scratch.dir("graft-refsdiff-").toString)
-    val whPath = Paths.get(wh)
-    if (Files.exists(whPath)) {
-      Files.walk(whPath).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => if (p != whPath) Files.deleteIfExists(p))
-    }
+    val wh = graft.Scratch.fresh("graft-refsdiff-", sfDir).toString
     val store = new graft.cdc.StateStore(wh, nBuckets = 8)
     val target = "cdc.commerce_customer_refsdiff"
     val pk = Seq("c_custkey")
@@ -3455,9 +3261,6 @@ object MaintenanceQueries {
       |FROM customer WHERE c_custkey % 11 = 0
       |ORDER BY c_custkey""".stripMargin
 
-  private val snapDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** METADATA TABLES as an oracle-checked query — the Iceberg
     * `table$snapshots` / `$history` surface over the versioned store:
     * four commits (snapshot wave, update wave, delete wave, then a
@@ -3476,14 +3279,7 @@ object MaintenanceQueries {
     * counts touch data.
     */
   def maintenanceSnapshots(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val wh = snapDirCache.computeIfAbsent(sfDir,
-      _ => graft.Scratch.dir("graft-snap-").toString)
-    val whPath = Paths.get(wh)
-    if (Files.exists(whPath)) {
-      Files.walk(whPath).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => if (p != whPath) Files.deleteIfExists(p))
-    }
+    val wh = graft.Scratch.fresh("graft-snap-", sfDir).toString
     val store = new graft.cdc.StateStore(wh, nBuckets = 8)
     val target = "cdc.commerce_customer_snap"
     val pk = Seq("c_custkey")
@@ -3524,9 +3320,6 @@ object MaintenanceQueries {
       |UNION ALL SELECT 3, 8, 1, FALSE, n - d FROM n, d
       |ORDER BY version""".stripMargin
 
-  private val histDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** METADATA TABLE `$history` (the Iceberg `$history` analog,
     * completing the metadata family beside `$snapshots`/`$files`/
     * `$partitions`/`$refs`): one row per surviving version with its
@@ -3544,12 +3337,7 @@ object MaintenanceQueries {
     * no data file is opened, O(versions) rows.
     */
   def maintenanceHistory(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val wh = histDirCache.computeIfAbsent(sfDir,
-      _ => graft.Scratch.dir("graft-hist-").toString)
-    val whPath = Paths.get(wh)
-    Files.walk(whPath).sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => if (p != whPath) Files.deleteIfExists(p))
+    val wh = graft.Scratch.fresh("graft-hist-", sfDir).toString
     val store = new graft.cdc.StateStore(wh, nBuckets = 8)
     val target = "cdc.commerce_supplier_hist"
     val pk = Seq("s_suppkey")
@@ -3586,9 +3374,6 @@ object MaintenanceQueries {
       |UNION ALL SELECT 3, TRUE, TRUE
       |ORDER BY version""".stripMargin
 
-  private val vacPlanDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** VACUUM DRY RUN (`VACUUM ... DRY RUN` / Iceberg expire dry-run —
     * the plan-before-execute surface of the retention family, via
     * [[graft.cdc.StateStore.vacuumPlan]]): four full-coverage waves
@@ -3605,11 +3390,8 @@ object MaintenanceQueries {
     */
   def vacuumPlanQ(spark: SparkSession, sfDir: String): DataFrame = {
     import java.nio.file.{Files, Paths}
-    val wh = vacPlanDirCache.computeIfAbsent(sfDir,
-      _ => graft.Scratch.dir("graft-vacplan-").toString)
+    val wh = graft.Scratch.fresh("graft-vacplan-", sfDir).toString
     val whPath = Paths.get(wh)
-    Files.walk(whPath).sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => if (p != whPath) Files.deleteIfExists(p))
     val store = new graft.cdc.StateStore(wh, nBuckets = 8)
     val target = "cdc.commerce_supplier_vp"
     val pk = Seq("s_suppkey")

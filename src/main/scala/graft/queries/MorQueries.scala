@@ -121,13 +121,6 @@ object MorQueries {
 
   // --------------------------- position-delete MOR (physical files)
 
-  private val posDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** The position-MOR working dir (test hook). */
-  private[queries] def posMorDir(sfDir: String): String =
-    posDirCache.get(sfDir)
-
   /** Live rows under position-delete masking: every data file's rows,
     * addressed by the parquet reader's own (`_metadata.file_path`,
     * `_metadata.row_index`), anti-joined against the accumulated
@@ -164,17 +157,11 @@ object MorQueries {
     * immutable (file, pos) addresses harvested from files that existed
     * when it was written, so it can never retro-mask a later append —
     * the property Iceberg encodes as "applies to data sequence <= own"
-    * holds here by construction. The dir is cached per (JVM, sfDir)
-    * and wiped at entry (the mergeMor discipline).
+    * holds here by construction. The dir is one per sfDir, emptied
+    * at entry ([[graft.Scratch.fresh]]).
     */
   private[queries] def buildPosMor(spark: SparkSession, sfDir: String): String = {
-    import java.nio.file.{Files, Paths}
-    val dir = posDirCache.computeIfAbsent(sfDir,
-      _ => graft.Scratch.dir("graft-posmor-").toString)
-    val dirPath = Paths.get(dir)
-    if (Files.exists(dirPath))
-      Files.walk(dirPath).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => if (p != dirPath) Files.deleteIfExists(p))
+    val dir = graft.Scratch.fresh("graft-posmor-", sfDir).toString
     val base = Tables.load(spark, sfDir, "customer")
       .select("c_custkey", "c_name", "c_nationkey", "c_acctbal")
     val pk = col("c_custkey")
@@ -204,11 +191,8 @@ object MorQueries {
     import java.nio.file.{Files, Paths}
     posLive(spark, dir).drop("_file", "_pos")
       .write.parquet(s"$dir/data-next")
-    def rm(p: java.nio.file.Path): Unit = if (Files.exists(p))
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .forEach(q => Files.deleteIfExists(q))
-    rm(Paths.get(dir, "data"))
-    rm(Paths.get(dir, "pos-deletes"))
+    graft.Scratch.delete(Paths.get(dir, "data"))
+    graft.Scratch.delete(Paths.get(dir, "pos-deletes"))
     Files.move(Paths.get(dir, "data-next"), Paths.get(dir, "data"))
   }
 

@@ -1,8 +1,6 @@
 package graft.queries
 
-import java.nio.file.Files
-
-import graft.Tables
+import graft.{Scratch, Tables}
 import graft.cdc._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -22,28 +20,17 @@ object PipelineQueries {
   private def rowSchemaOf(log: DataFrame): StructType =
     log.schema("after").dataType.asInstanceOf[StructType]
 
-  /** Change-log staging, once per (sfDir, variant) per JVM: the logs
-    * are deterministic functions of the fixtures (ChangeGen is seeded),
-    * so every invocation reads the same immutable staged copy — the
-    * same discipline StreamingOps applies to its events staging. The
-    * pipeline's own dirs (checkpoint, warehouse) stay fresh per run;
-    * only the INPUT is cached, so the measured work is the pipeline,
-    * not the test harness's log writing.
+  /** Change-log staging, once per (sfDir, variant) per JVM
+    * ([[Scratch.staged]]): the logs are deterministic functions of the
+    * fixtures (ChangeGen is seeded), so every invocation reads the same
+    * immutable staged copy. The pipeline's own dirs (checkpoint,
+    * warehouse) stay fresh per run; only the INPUT is cached, so the
+    * measured work is the pipeline, not the test harness's log writing.
     */
-  private val stagedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def stageOnce(key: String)(write: String => Unit): String =
-    stagedCache.computeIfAbsent(key, { _ =>
-      val dir = graft.Scratch.dir("graft-changelog-").toString
-      write(dir)
-      dir
-    })
-
   private def stageLog(log: DataFrame, key: String): String =
-    stageOnce(key) { dir =>
-      log.repartition(4).write.mode("overwrite").parquet(dir)
-    }
+    Scratch.staged("graft-changelog-", key) { dir =>
+      log.repartition(4).write.mode("overwrite").parquet(dir.toString)
+    }.toString
 
   /** The change-log builders, one per staged key — shared by the query
     * bodies and [[prestage]] so the staged bytes are identical no
@@ -63,10 +50,10 @@ object PipelineQueries {
   }
 
   private def stageFanoutWire(spark: SparkSession, sfDir: String): String =
-    stageOnce(s"$sfDir:wire-fanout") { dir =>
+    Scratch.staged("graft-changelog-", s"$sfDir:wire-fanout") { dir =>
       fanoutWire(spark, sfDir).repartition(4)
-        .write.mode("overwrite").text(dir)
-    }
+        .write.mode("overwrite").text(dir.toString)
+    }.toString
 
   /** STREAMING schema-on-read routing — the [[CdcQueries.wireVariant]]
     * batch router as a live micro-batched stream: the staged
@@ -153,35 +140,17 @@ object PipelineQueries {
     } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
   }
 
-  /** Write slices as one parquet file each, named and mtime-pinned so
-    * the file source (maxFilesPerTrigger=1) replays them in exactly
-    * this order — the StreamingOps ordered-replay discipline applied
-    * to a change log, so each wave is its own micro-batch and the WAP
-    * gate's batch-level verdicts are deterministic.
-    */
-  private def writeOrderedSlices(slices: Seq[DataFrame],
-                                 dir: String): Unit =
-    slices.zipWithIndex.foreach { case (df, i) =>
-      val tmp = graft.Scratch.dir("graft-slice-").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = Files.list(java.nio.file.Paths.get(tmp))
-        .toArray.map(_.toString).filter(_.endsWith(".parquet"))
-      require(part.length == 1, s"expected 1 part file, got ${part.length}")
-      val dst = java.nio.file.Paths.get(dir, f"b$i%02d.parquet")
-      Files.move(java.nio.file.Paths.get(part.head), dst,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(1000000L + i * 10000L))
-    }
-
   /** The poisoned replay log for [[pipelineWap]]: the standard
     * customer waves in commit order, with a POISON micro-batch
     * (out-of-band balances on every pk%5 key, ts between the update
-    * and delete waves) spliced in as its own slice.
+    * and delete waves) spliced in as its own slice. One file per
+    * slice in order ([[Scratch.orderedSlices]]), so each wave is its
+    * own micro-batch and the WAP gate's batch-level verdicts are
+    * deterministic.
     */
   private def stagePoisonedLog(spark: SparkSession,
                                sfDir: String): String =
-    stageOnce(s"$sfDir:customer-poisoned") { dir =>
+    Scratch.staged("graft-changelog-", s"$sfDir:customer-poisoned") { dir =>
       val base = Tables.load(spark, sfDir, "customer")
       val log = customerLog(spark, sfDir)
       val ts = col("ts_ms")
@@ -194,18 +163,20 @@ object PipelineQueries {
           k.cast("long").as("seq"),
           struct(lit("commerce").as("schema"),
             lit("customer").as("table")).as("source"))
-      writeOrderedSlices(Seq(
+      Scratch.orderedSlices(Seq(
         log.filter(ts <= 1000),
         log.filter(ts > 1000 && ts <= 3000),
         poison,
         log.filter(ts > 3000)), dir)
-    }
+    }.toString
 
-  private val wapPipeDirCache =
+  /** (warehouse, quarantine) of the LAST [[pipelineWap]] run per sfDir
+    * (test hook; the run mints both dirs). */
+  private val wapPipeRuns =
     new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
 
   private[queries] def wapPipeDirs(sfDir: String): (String, String) =
-    wapPipeDirCache.get(sfDir)
+    wapPipeRuns.get(sfDir)
 
   /** WAP INSIDE THE STREAMING COMMIT PATH ([[graft.cdc.WapGate]]):
     * the full A2→A14 pipeline with every micro-batch commit gated —
@@ -230,7 +201,7 @@ object PipelineQueries {
     val store = new StateStore(
       graft.Scratch.dir("graft-warehouse-").toString, nBuckets = 8)
     val quarantine = graft.Scratch.dir("graft-quarantine-").toString
-    wapPipeDirCache.put(sfDir, (store.warehouse, quarantine))
+    wapPipeRuns.put(sfDir, (store.warehouse, quarantine))
     val logDir = stagePoisonedLog(spark, sfDir)
     val ckptDir = graft.Scratch.dir("graft-ckpt-")
     val cfg = PipelineConfig(

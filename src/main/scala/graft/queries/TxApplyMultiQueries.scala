@@ -60,11 +60,6 @@ object TxApplyMultiQueries {
     "op string, ts_ms long, seq long, " +
       "source struct<schema: string, `table`: string>"
 
-  private val stagedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val workDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String, String)]()
-
   private def changeLog(spark: SparkSession, sfDir: String,
                         t: Target): DataFrame =
     ChangeGen.changeLog(Tables.load(spark, sfDir, t.fixture), t.pk,
@@ -111,8 +106,7 @@ object TxApplyMultiQueries {
   }
 
   private def stageBatches(spark: SparkSession, sfDir: String): String =
-    stagedCache.computeIfAbsent(sfDir, { _ =>
-      val dir = graft.Scratch.dir("graft-txmlog-").toString
+    graft.Scratch.staged("graft-txmlog-", sfDir) { dir =>
       val cust = logWithMarkers(spark, sfDir, Targets(0)).persist()
       val supp = logWithMarkers(spark, sfDir, Targets(1)).persist()
       val ev = col("op") =!= "t"
@@ -133,20 +127,9 @@ object TxApplyMultiQueries {
           .unionAll(w(s.filter((ts === 500L && mk) || ts === 2000L))),
         w(c.filter((ts === 3000L && ((ev && !even) || mk)) || ts === 4000L))
           .unionAll(w(s.filter(ts === 3000L || ts === 4000L))))
-      slices(cust, supp).zipWithIndex.foreach { case (df, i) =>
-        val tmp = graft.Scratch.dir("graft-txmslice-").toString
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = Files.list(Paths.get(tmp)).toArray.map(_.toString)
-          .filter(p => p.endsWith(".parquet") && !p.contains("_SUCCESS"))
-        require(part.length == 1, s"expected 1 part file, got ${part.length}")
-        Files.move(Paths.get(part.head), Paths.get(dir, f"b$i%02d.parquet"),
-          StandardCopyOption.ATOMIC_MOVE)
-        graft.Scratch.wipe(Paths.get(tmp)); Files.deleteIfExists(Paths.get(tmp))
-      }
-      cust.unpersist(blocking = false)
-      supp.unpersist(blocking = false)
-      dir
-    })
+      try graft.Scratch.orderedSlices(slices(cust, supp), dir)
+      finally Seq(cust, supp).foreach(_.unpersist(blocking = false))
+    }.toString
 
   /** One micro-batch over raw wire rows: metadata-only parse, ALL-
     * collections completeness, per-table FAILFAST parse + ordered
@@ -217,8 +200,7 @@ object TxApplyMultiQueries {
       val tmp = Paths.get(pendingDir, "rows_next")
       rest.write.mode("overwrite").parquet(tmp.toString)
       graft.Par.awaitAll(applies) // all applies durable — retire holdback
-      graft.Scratch.wipe(pendingPath)
-      Files.deleteIfExists(pendingPath)
+      graft.Scratch.delete(pendingPath)
       Files.move(tmp, pendingPath, StandardCopyOption.ATOMIC_MOVE)
     } finally all.unpersist(blocking = false)
   }
@@ -229,13 +211,9 @@ object TxApplyMultiQueries {
   private[queries] def runTxApplyMulti(spark: SparkSession, sfDir: String)
       : (StateStore, Map[Long, Seq[Long]]) = {
     val logDir = stageBatches(spark, sfDir)
-    val (whDir, ckptDir, pendDir) =
-      workDirCache.computeIfAbsent(sfDir, { _ =>
-        (graft.Scratch.dir("graft-txmwh-").toString,
-          graft.Scratch.dir("graft-txmckpt-").toString,
-          graft.Scratch.dir("graft-txmpend-").toString)
-      })
-    Seq(whDir, ckptDir, pendDir).foreach(d => graft.Scratch.wipe(Paths.get(d)))
+    val whDir = graft.Scratch.fresh("graft-txmwh-", sfDir).toString
+    val ckptDir = graft.Scratch.fresh("graft-txmckpt-", sfDir).toString
+    val pendDir = graft.Scratch.fresh("graft-txmpend-", sfDir).toString
     val store = new StateStore(whDir, NBuckets)
     val applied = scala.collection.mutable.Map.empty[Long, Seq[Long]]
     val rowSchemas = Targets.map(t =>

@@ -35,11 +35,6 @@ object TxApplyQueries {
   private val NBuckets = 8
   private val TargetTable = "tx.customer"
 
-  private val stagedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val workDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String, String)]()
-
   /** The customer change log plus per-wave END markers: op='t',
     * ts_ms = the wave (the transaction id — each generated wave IS one
     * source transaction), seq = the wave's event count (Debezium's
@@ -72,8 +67,7 @@ object TxApplyQueries {
     *       4000 apply; nothing left pending.
     */
   private def stageBatches(spark: SparkSession, sfDir: String): String =
-    stagedCache.computeIfAbsent(sfDir, { _ =>
-      val dir = graft.Scratch.dir("graft-txlog-").toString
+    graft.Scratch.staged("graft-txlog-", sfDir) { dir =>
       val all = logWithMarkers(spark, sfDir).persist()
       val ev = col("op") =!= "t"
       val mk = col("op") === "t"
@@ -84,19 +78,9 @@ object TxApplyQueries {
         ((ts === 1000L && ev && !even) || (ts === 500L && ev)),
         ((ts === 500L && mk) || ts === 2000L || (ts === 3000L && ev && even)),
         ((ts === 3000L && ((ev && !even) || mk)) || ts === 4000L))
-      slices.zipWithIndex.foreach { case (pred, i) =>
-        val tmp = graft.Scratch.dir("graft-txslice-").toString
-        all.filter(pred).coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = Files.list(Paths.get(tmp)).toArray.map(_.toString)
-          .filter(p => p.endsWith(".parquet") && !p.contains("_SUCCESS"))
-        require(part.length == 1, s"expected 1 part file, got ${part.length}")
-        Files.move(Paths.get(part.head), Paths.get(dir, f"b$i%02d.parquet"),
-          StandardCopyOption.ATOMIC_MOVE)
-        graft.Scratch.wipe(Paths.get(tmp)); Files.deleteIfExists(Paths.get(tmp))
-      }
-      all.unpersist(blocking = false)
-      dir
-    })
+      try graft.Scratch.orderedSlices(slices.map(p => all.filter(p)), dir)
+      finally all.unpersist(blocking = false)
+    }.toString
 
   /** Stage the engineered micro-batch files without running the apply
     * loop — Bench's untimed warmup, so staging I/O never lands in a
@@ -165,8 +149,7 @@ object TxApplyQueries {
       val tmp = Paths.get(pendingDir, "rows_next")
       rest.write.mode("overwrite").parquet(tmp.toString)
       graft.Par.await(applyF) // apply durable — NOW retire the holdback
-      graft.Scratch.wipe(pendingPath)
-      Files.deleteIfExists(pendingPath)
+      graft.Scratch.delete(pendingPath)
       Files.move(tmp, pendingPath, StandardCopyOption.ATOMIC_MOVE)
     } finally all.unpersist(blocking = false)
   }
@@ -177,13 +160,9 @@ object TxApplyQueries {
   private[queries] def runTxApply(spark: SparkSession, sfDir: String)
       : (StateStore, Map[Long, Seq[Long]]) = {
     val logDir = stageBatches(spark, sfDir)
-    val (whDir, ckptDir, pendDir) =
-      workDirCache.computeIfAbsent(sfDir, { _ =>
-        (graft.Scratch.dir("graft-txwh-").toString,
-          graft.Scratch.dir("graft-txckpt-").toString,
-          graft.Scratch.dir("graft-txpend-").toString)
-      })
-    Seq(whDir, ckptDir, pendDir).foreach(d => graft.Scratch.wipe(Paths.get(d)))
+    val whDir = graft.Scratch.fresh("graft-txwh-", sfDir).toString
+    val ckptDir = graft.Scratch.fresh("graft-txckpt-", sfDir).toString
+    val pendDir = graft.Scratch.fresh("graft-txpend-", sfDir).toString
     val store = new StateStore(whDir, NBuckets)
     val applied = scala.collection.mutable.Map.empty[Long, Seq[Long]]
     val envSchema = logWithMarkers(spark, sfDir).schema
