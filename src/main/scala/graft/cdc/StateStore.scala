@@ -1,6 +1,6 @@
 package graft.cdc
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -16,12 +16,27 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *
   *   <warehouse>/<target>/
   *     v<N>/_bucket=<B>/part-*.parquet   data, hash-bucketed by PK
+  *     purge-v<N>/_bucket=<B>/           a bucket dir rewritten by [[purgeKeys]]
   *     manifest-<N>.tsv                  bucket -> data dir (any version)
   *     schema-<N>.json                   Spark StructType JSON
   *     schema-history.jsonl              A6 journal: one line per evolution
+  *                                       or rename
+  *     commits.jsonl                     commit instant per version
+  *     named-refs.jsonl                  tags and branches ([[createRef]])
+  *     refs.jsonl                        clones reading this table's dirs
+  *                                       ([[cloneTable]])
+  *     commit-<N>.lock                   optimistic claim on version N
+  *                                       ([[commitOptimistic]])
   *     _VERSION                          current version pointer (atomic)
   *   <warehouse>/_BATCH                  open multi-table batch record
   *                                       ([[atomically]]; absent when idle)
+  *
+  * A file replaced in place (`_VERSION`, `_BATCH`, a re-pointed
+  * manifest, the refs files, a compacted `commits.jsonl`) is first
+  * written to its `<name>.tmp` sibling and then atomically moved over
+  * it ([[StateStore.replace]]). Every version, however it is made
+  * (commit, WAP stage, optimistic commit, rename, restore, clone),
+  * becomes visible through one writer, [[writeVersion]].
   *
   * The 100 TB design point (VERDICT r1 perf note): a micro-batch
   * rewrites ONLY the buckets containing evented keys — the new
@@ -44,16 +59,40 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
 
   private def dir(target: String): Path = Paths.get(warehouse, target)
 
+  private def manifestFile(target: String, v: Int): Path =
+    dir(target).resolve(s"manifest-$v.tsv")
+
   def exists(target: String): Boolean = Files.exists(dir(target).resolve(VersionFile))
 
   def currentVersion(target: String): Int =
     if (!exists(target)) -1
     else Files.readString(dir(target).resolve(VersionFile)).trim.toInt
 
-  def schemaOf(target: String): StructType = {
-    val v = currentVersion(target)
-    DataType.fromJson(Files.readString(dir(target).resolve(s"schema-$v.json")))
-      .asInstanceOf[StructType]
+  /** The SURVIVING versions of `target`, ascending: every version up
+    * to the head whose manifest vacuum has not reclaimed. WAP-staged
+    * versions above the head are not listed.
+    */
+  def versions(target: String): Seq[Int] =
+    (0 to currentVersion(target)).filter(v => Files.exists(manifestFile(target, v)))
+
+  def schemaOf(target: String): StructType =
+    schemaAt(target, currentVersion(target))
+
+  private def schemaAt(target: String, v: Int): StructType =
+    parseSchema(Files.readString(dir(target).resolve(s"schema-$v.json")))
+
+  /** The schema a manifest entry's files were written under:
+    * `schema-<K>.json` beside their `v<K>` dir (the source table's, for
+    * a clone's cross-reference). None for a purge dir, or when vacuum
+    * reclaimed the schema file.
+    */
+  private def writtenSchema(target: String, verDir: String): Option[StructType] = {
+    val abs = dir(target).resolve(verDir).normalize()
+    val vName = abs.getFileName.toString
+    val f = abs.getParent.resolve(s"schema-${vName.drop(1)}.json")
+    if (vName.matches("v\\d+") && Files.exists(f))
+      Some(parseSchema(Files.readString(f)))
+    else None
   }
 
   /** COLUMN RENAMES journaled at versions <= `version`, in commit
@@ -86,7 +125,7 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
     */
   def columnRenameEntries(target: String,
                           version: Int): Seq[(Int, String, String)] = {
-    val f = dir(target).resolve("schema-history.jsonl")
+    val f = dir(target).resolve(HistoryFile)
     if (!Files.exists(f)) return Seq.empty
     val key = (target, currentVersion(target), Files.size(f))
     val all = renameJournalCache.computeIfAbsent(key, _ => {
@@ -148,7 +187,7 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
     * rename semantic), and whose A6 journal line records the mapping
     * that [[columnRenames]] serves to every reader. Single-writer like
     * [[commit]]. Reintroducing a renamed-away name is rejected at the
-    * next commit ([[writeMetadata]]): the name mapping is what keeps
+    * next commit ([[writeVersion]]): the name mapping is what keeps
     * old files readable, and a new column under the old name would
     * make their bytes ambiguous.
     */
@@ -181,19 +220,12 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
     // reads is free.
     manifest(target).values.toSeq.distinct.foreach { p =>
       val verDir = p.substring(0, p.lastIndexOf('/'))
-      val abs = dir(target).resolve(verDir).normalize()
-      val vName = abs.getFileName.toString
-      if (vName.startsWith("v")) {
-        val sf = abs.getParent.resolve(s"schema-${vName.drop(1)}.json")
-        if (Files.exists(sf)) {
-          val fileNames = DataType.fromJson(Files.readString(sf))
-            .asInstanceOf[StructType].fieldNames.toSeq
-          val foldedNames = guardFold(chain, fileNames).map(_._1)
-          require(!foldedNames.exists(_.equalsIgnoreCase(to)),
-            s"cannot rename $from to $to on $target: live files under " +
-              s"$verDir still carry a column that reads as $to — the " +
-              "name mapping would capture its bytes; pick a fresh name")
-        }
+      writtenSchema(target, verDir).foreach { fileSchema =>
+        val foldedNames = guardFold(chain, fileSchema.fieldNames.toSeq).map(_._1)
+        require(!foldedNames.exists(_.equalsIgnoreCase(to)),
+          s"cannot rename $from to $to on $target: live files under " +
+            s"$verDir still carry a column that reads as $to — the " +
+            "name mapping would capture its bytes; pick a fresh name")
       }
     }
     // Fold-identity on the would-be current schema: files written
@@ -216,45 +248,21 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
         "read time (name-mapping ambiguity); pick a fresh name")
     val renamed = StructType(schema.map(f =>
       if (f.name.equalsIgnoreCase(from)) f.copy(name = to) else f))
-    val d = dir(target)
     // Manifest carry-over: every bucket keeps pointing at the files it
     // already points at — the rename never opens, reads, or rewrites a
     // data file, which is what makes it a free DDL at 100 TB.
-    val lines = manifest(target).toSeq.sortBy(_._1)
-      .map { case (b, p) => s"$b\t$p" }.mkString("\n")
-    Files.writeString(d.resolve(s"manifest-$next.tsv"), lines)
-    Files.writeString(d.resolve(s"schema-$next.json"), renamed.json)
-    // Single-writer check BEFORE the journal append (ADVICE r16, low):
-    // a lost race must not leave a rename mapping at a version some
-    // other writer is about to claim. A crash between the append and
-    // the pointer swap still orphans the line — the read-side
-    // validation in [[columnRenameEntries]] drops it once another
-    // commit claims the version (its schema-<v>.json won't match the
-    // line's embedded schema).
-    if (currentVersion(target) != prev)
-      throw new IllegalStateException(
-        s"single-writer invariant violated on $target during rename")
-    Files.writeString(d.resolve("schema-history.jsonl"),
-      s"""{"version":$next,"rename":{"from":"$from","to":"$to"},"schema":${renamed.json}}""" + "\n",
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
-    recordCommitTime(target, next)
-    swapPointer(target, next)
+    writeVersion(target, prev, Head, manifestAt(target, prev), renamed.json,
+      Seq(from -> to), None)
     next
   }
 
   def manifest(target: String): Map[Int, String] =
     manifestAt(target, currentVersion(target))
 
-  def manifestAt(target: String, version: Int): Map[Int, String] =
-    if (version < 0 ||
-        !Files.exists(dir(target).resolve(s"manifest-$version.tsv"))) Map.empty
-    else Files.readAllLines(dir(target).resolve(s"manifest-$version.tsv"))
-      .asScala.filter(_.nonEmpty)
-      .map { line =>
-        val Array(b, p) = line.split("\t", 2)
-        b.toInt -> p
-      }.toMap
+  def manifestAt(target: String, version: Int): Map[Int, String] = {
+    val f = manifestFile(target, version)
+    if (version < 0 || !Files.exists(f)) Map.empty else readManifest(f)
+  }
 
   /** METADATA TABLE — the Iceberg `table$snapshots` / `$history`
     * analog: one row per committed version with the manifest's bucket
@@ -273,12 +281,10 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
     * callers doing `getBoolean(3)` must null-check first.
     */
   def snapshots(spark: SparkSession, target: String): DataFrame = {
-    val cur = currentVersion(target)
     // Versions whose manifest was deleted by expireSnapshots are
     // SKIPPED, not thrown on — Iceberg's $snapshots likewise simply
     // omits expired snapshots after a vacuum.
-    val rows = (0 to cur)
-      .filter(v => Files.exists(dir(target).resolve(s"manifest-$v.tsv")))
+    val rows = versions(target)
       .map { v =>
         val m = manifestAt(target, v)
         val own = s"v$v/"
@@ -310,8 +316,7 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
   def history(spark: SparkSession, target: String): DataFrame = {
     val cur = currentVersion(target)
     val times = commitTimes(target) // one sidecar parse for all rows
-    val rows = (0 to cur)
-      .filter(v => Files.exists(dir(target).resolve(s"manifest-$v.tsv")))
+    val rows = versions(target)
       .map(v => (v, resolveCommitTime(target, times, v), v == cur))
     import spark.implicits._
     rows.toDF("version", "committed_at", "is_current")
@@ -340,7 +345,7 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
   private def readManifestEntries(spark: SparkSession, target: String,
                                   m: Map[Int, String],
                                   schema: StructType,
-                                  renames: Seq[(String, String)] = Seq.empty)
+                                  renames: Seq[(String, String)])
       : DataFrame = {
     if (m.isEmpty) return emptyState(spark, target)
     // Group by the bucket dir's PARENT path (not just the leading
@@ -354,7 +359,7 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
       val base = dir(target).resolve(verDir).toString
       val paths = bs.map(b => dir(target).resolve(m(b)).toString)
       // Explicit per-version schema: `schema-N.json` is written from
-      // the SAME frame as vN's data files ([[writeMetadata]]), so it
+      // the SAME frame as vN's data files ([[writeVersion]]), so it
       // is authoritative for this group — including pre-rename column
       // names, which the mapping below expects raw. Passing it skips
       // the driver-side parquet footer read schema inference costs on
@@ -362,16 +367,9 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
       // micro-batch across ~25 maintainer queries). Fall back to
       // inference only when vacuum reclaimed a carried version's
       // schema file, or for pre-schema-file stores.
-      val abs = dir(target).resolve(verDir).normalize()
-      val vName = abs.getFileName.toString
-      val schemaFile = abs.getParent.resolve(s"schema-${vName.drop(1)}.json")
       val reader0 = spark.read.option("basePath", base)
-      val reader =
-        if (vName.matches("v\\d+") && Files.exists(schemaFile))
-          reader0.schema(
-            DataType.fromJson(Files.readString(schemaFile))
-              .asInstanceOf[StructType].add(BucketCol, "int"))
-        else reader0
+      val reader = writtenSchema(target, verDir)
+        .fold(reader0)(s => reader0.schema(s.add(BucketCol, "int")))
       val df = reader.parquet(paths: _*)
       // Name mapping FIRST ([[columnRenames]]): files written before a
       // rename carry the old name; applied in journal order the chain
@@ -414,9 +412,11 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
     * what `SELECT * FROM <target>` means.
     */
   def currentState(spark: SparkSession, target: String): DataFrame =
-    rawState(spark, target)
-      .filter(!col(DeletedCol))
-      .drop(TsCol, SeqCol, DeletedCol, BucketCol)
+    live(rawState(spark, target))
+
+  /** Live rows in user shape: tombstones filtered, metadata dropped. */
+  private def live(raw: DataFrame): DataFrame =
+    raw.filter(!col(DeletedCol)).drop(MetaCols: _*)
 
   /** TIME TRAVEL: the table as of an earlier committed version.
     * Old manifests + their data dirs are immutable (commits only add
@@ -426,15 +426,9 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
     */
   def stateAt(spark: SparkSession, target: String, version: Int): DataFrame = {
     val m = manifestAt(target, version)
-    if (m.isEmpty) return emptyState(spark, target)
-      .drop(TsCol, SeqCol, DeletedCol, BucketCol)
-    val schema = DataType.fromJson(
-      Files.readString(dir(target).resolve(s"schema-$version.json")))
-      .asInstanceOf[StructType]
-    readManifestEntries(spark, target, m, schema,
-      columnRenames(target, version))
-      .filter(!col(DeletedCol))
-      .drop(TsCol, SeqCol, DeletedCol, BucketCol)
+    if (m.isEmpty) emptyState(spark, target).drop(MetaCols: _*)
+    else live(readManifestEntries(spark, target, m,
+      schemaAt(target, version), columnRenames(target, version)))
   }
 
   /** COMMIT INSTANT of a version: the millisecond timestamp recorded in
@@ -488,38 +482,11 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
   private def resolveCommitTime(target: String, times: Map[Int, Long],
                                 version: Int): Long =
     times.getOrElse(version, {
-      val m = dir(target).resolve(s"manifest-$version.tsv")
+      val m = manifestFile(target, version)
       require(Files.exists(m),
         s"no commit record or manifest for version $version of $target")
       Files.getLastModifiedTime(m).toMillis
     })
-
-  /** Stamp version `next`'s commit instant into `commits.jsonl`:
-    * strictly greater than every instant already recorded, so
-    * resolution is monotone by construction regardless of clock or
-    * filesystem granularity.
-    */
-  private def recordCommitTime(target: String, next: Int): Long = {
-    val f = dir(target).resolve(CommitsFile)
-    // Appends are strictly monotone by construction, so the LAST line
-    // carries the running maximum — no full-file fold. (The read is
-    // still O(file); a deployment with very deep histories would keep
-    // the tail offset in the version pointer, the same compaction
-    // pressure Iceberg's metadata.json answers with rewrites.)
-    val last: Long =
-      if (!Files.exists(f)) Long.MinValue
-      else {
-        val pat = """"ts":(\d+)\}""".r.unanchored
-        Files.readAllLines(f).asScala.reverseIterator.collectFirst {
-          case pat(ts) => ts.toLong
-        }.getOrElse(Long.MinValue)
-      }
-    val ts = math.max(System.currentTimeMillis(), last + 1)
-    Files.writeString(f, s"""{"version":$next,"ts":$ts}""" + "\n",
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
-    ts
-  }
 
   /** TIMESTAMP AS OF resolution (the Iceberg snapshot-at-timestamp
     * lookup beside [[stateAt]]'s `VERSION AS OF`): the latest
@@ -532,10 +499,8 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
     */
   def versionAtTime(target: String, tsMillis: Long): Int = {
     val times = commitTimes(target) // one sidecar parse for the walk
-    val vs = (0 to currentVersion(target)).filter { v =>
-      Files.exists(dir(target).resolve(s"manifest-$v.tsv")) &&
-        resolveCommitTime(target, times, v) <= tsMillis
-    }
+    val vs = versions(target)
+      .filter(v => resolveCommitTime(target, times, v) <= tsMillis)
     require(vs.nonEmpty,
       s"no surviving version of $target committed at or before $tsMillis")
     vs.max
@@ -596,10 +561,9 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
     val cur = currentVersion(target)
     val times = commitTimes(target) // one sidecar parse for the walk
     val firstKeptByTime = olderThan.map { ts =>
-      (0 to cur).find { v =>
-        Files.exists(dir(target).resolve(s"manifest-$v.tsv")) &&
-          resolveCommitTime(target, times, v) >= ts
-      }.getOrElse(cur)
+      versions(target)
+        .find(v => resolveCommitTime(target, times, v) >= ts)
+        .getOrElse(cur)
     }.getOrElse(cur) // retain_last only: propose all but head
     // Clamp to 0: retain_last larger than the version count keeps
     // everything (firstKept = 0), never a negative index that would
@@ -619,15 +583,9 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
     */
   def commit(spark: SparkSession, target: String, merged: DataFrame,
              affected: Seq[Int]): Int = {
-    val next = stageCommit(spark, target, merged, affected)
-    // A17 single-writer detection: if the committed pointer moved while
-    // this merge ran, another writer raced us — abort before publishing.
-    if (currentVersion(target) != next - 1)
-      throw new IllegalStateException(
-        s"single-writer invariant violated on $target: version moved " +
-          s"from ${next - 1} to ${currentVersion(target)} during commit")
-    swapPointer(target, next)
-    next
+    val prev = currentVersion(target)
+    writeRows(spark, target, prev, merged, affected, Head)
+    prev + 1
   }
 
   /** CRASH-ATOMIC MULTI-TABLE BATCH — the unit a micro-batch that
@@ -637,7 +595,7 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
     *   1. an OPEN batch record left by a crashed scope moves each
     *      listed table's `_VERSION` back to its recorded version (a
     *      table recorded absent loses its pointer); the versions above
-    *      become crash debris, which [[stageCommit]] overwrites (A14);
+    *      become crash debris, which [[writeVersion]] clears (A14);
     *   2. the tables' current versions are recorded (tmp + ATOMIC_MOVE);
     *   3. `body` runs, committing through the ordinary paths;
     *   4. the record is deleted — the batch's commit point.
@@ -658,11 +616,7 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
         else swapPointer(t, v.toInt)
       }
     Files.createDirectories(record.getParent)
-    val tmp = record.resolveSibling(BatchFile + ".tmp")
-    Files.writeString(tmp,
-      tables.map(t => s"$t\t${currentVersion(t)}").mkString("\n"))
-    Files.move(tmp, record, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    replace(record, tables.map(t => s"$t\t${currentVersion(t)}").mkString("\n"))
     val out = body
     Files.delete(record)
     out
@@ -682,48 +636,9 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
     */
   def stageCommit(spark: SparkSession, target: String, merged: DataFrame,
                   affected: Seq[Int]): Int = {
-    val d = dir(target)
-    Files.createDirectories(d)
     val prev = currentVersion(target)
-    val next = prev + 1
-    // Crash recovery (A14): `_VERSION` is the ONLY commit point. Files
-    // at version `next` while `_VERSION` still says `prev` are debris
-    // from a crashed commit attempt (under the single-writer invariant
-    // A17 nothing else can have written them) — a checkpoint-replayed
-    // micro-batch must be able to clean them up and retry, not wedge.
-    // The claim marker is debris of the same class: deleting it is
-    // only safe because this path ASSUMES single-writer; do not mix
-    // [[commit]] and [[commitOptimistic]] writers on one target.
-    Seq(d.resolve(s"manifest-$next.tsv"), d.resolve(s"schema-$next.json"),
-        d.resolve(s"commit-$next.lock"))
-      .foreach(Files.deleteIfExists)
-    val verDir = s"v$next"
-    merged.write.mode("overwrite")
-      .partitionBy(BucketCol)
-      .parquet(d.resolve(verDir).toString)
-    // An affected bucket with ZERO surviving rows (a delta or rebuild
-    // that left no key hashing there — VERDICT r16 #3) must
-    // still PUBLISH as empty, not vanish: the manifest will point at
-    // v<next>/_bucket=b, so materialize a metadata-only parquet file
-    // for any affected bucket the partitioned row write skipped.
-    // Metadata-sized work — one empty footer per emptied bucket.
-    val missing = affected.filter(b =>
-      !Files.exists(d.resolve(verDir).resolve(s"$BucketCol=$b")))
-    if (missing.nonEmpty) {
-      // One cached 0-row template per schema, file-copied per bucket:
-      // publishing an emptied bucket is metadata work and must not cost
-      // a Spark job each ([[StateStore.emptyParquetFor]]).
-      val rowSchema = StructType(merged.schema.filterNot(_.name == BucketCol))
-      val tmpl = StateStore.emptyParquetFor(spark, rowSchema)
-      missing.foreach { b =>
-        val dst = d.resolve(verDir).resolve(s"$BucketCol=$b")
-        Files.createDirectories(dst)
-        Files.copy(tmpl, dst.resolve("part-00000-empty.parquet"),
-          StandardCopyOption.REPLACE_EXISTING)
-      }
-    }
-    writeMetadata(target, merged, affected, prev, next)
-    next
+    writeRows(spark, target, prev, merged, affected, Branch)
+    prev + 1
   }
 
   /** WAP PUBLISH: fast-forward the head pointer onto a staged branch
@@ -760,15 +675,15 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
     require(name != "head", "ref name 'head' is reserved for the implicit current branch")
     require(kind == "tag" || kind == "branch", s"unknown ref kind $kind")
     require(version <= currentVersion(target) &&
-      Files.exists(dir(target).resolve(s"manifest-$version.tsv")),
+      Files.exists(manifestFile(target, version)),
       s"cannot ref version $version of $target: not a committed version")
     require(!namedRefs(target).exists(_._1 == name),
       s"ref '$name' already exists on $target")
-    Files.writeString(dir(target).resolve(NamedRefsFile),
-      s"""{"name":"$name","kind":"$kind","version":$version}""" + "\n",
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
+    append(dir(target).resolve(NamedRefsFile), Seq(refLine(name, kind, version)))
   }
+
+  private def refLine(name: String, kind: String, version: Int): String =
+    s"""{"name":"$name","kind":"$kind","version":$version}"""
 
   /** Move a BRANCH ref to a new version (tags refuse — immutability
     * is their contract). Rewrites the refs file atomically.
@@ -780,7 +695,7 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
         s"no ref '$name' on $target"))
     require(ref._2 == "branch", s"ref '$name' is a tag; tags never move")
     require(version <= currentVersion(target) &&
-      Files.exists(dir(target).resolve(s"manifest-$version.tsv")),
+      Files.exists(manifestFile(target, version)),
       s"cannot move '$name' to $version: not a committed version")
     writeRefs(target, refs.map(r =>
       if (r._1 == name) (r._1, r._2, version) else r))
@@ -801,15 +716,9 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
   }
 
   private def writeRefs(target: String,
-                        refs: Seq[(String, String, Int)]): Unit = {
-    val f = dir(target).resolve(NamedRefsFile)
-    val tmp = dir(target).resolve(NamedRefsFile + ".tmp")
-    Files.writeString(tmp, refs.map { case (n, k, v) =>
-      s"""{"name":"$n","kind":"$k","version":$v}"""
-    }.mkString("", "\n", "\n"))
-    Files.move(tmp, f, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+                        refs: Seq[(String, String, Int)]): Unit =
+    replace(dir(target).resolve(NamedRefsFile),
+      refs.map((refLine _).tupled).mkString("", "\n", "\n"))
 
   /** METADATA TABLE twin of Iceberg's `$refs`: every named ref plus
     * the implicit `head` branch, with each ref's live row count
@@ -889,17 +798,10 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
   def diffVersions(spark: SparkSession, target: String, vFrom: Int,
                    vTo: Int, pkCols: Seq[String]): DataFrame = {
     val changed = changedBucketsBetween(target, vFrom, vTo)
-    def side(v: Int): DataFrame = {
-      val m = manifestAt(target, v).view
-        .filterKeys(changed.contains).toMap
-      val schema = DataType.fromJson(
-        Files.readString(dir(target).resolve(s"schema-$v.json")))
-        .asInstanceOf[StructType]
-      readManifestEntries(spark, target, m, schema,
-        columnRenames(target, v))
-        .filter(!col(DeletedCol))
-        .drop(TsCol, SeqCol, DeletedCol, BucketCol)
-    }
+    def side(v: Int): DataFrame =
+      live(readManifestEntries(spark, target,
+        manifestAt(target, v).view.filterKeys(changed.contains).toMap,
+        schemaAt(target, v), columnRenames(target, v)))
     val before0 = side(vFrom)
     val after0 = side(vTo)
     val before = SchemaEvolution.align(before0, after0)
@@ -937,70 +839,198 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
     require(staged > cur,
       s"refusing to drop committed version $staged (head is $cur)")
     val d = dir(target)
-    Files.deleteIfExists(d.resolve(s"manifest-$staged.tsv"))
+    Files.deleteIfExists(manifestFile(target, staged))
     Files.deleteIfExists(d.resolve(s"schema-$staged.json"))
     graft.Scratch.delete(d.resolve(s"v$staged"))
   }
 
-  /** Manifest + schema + evolution-journal files for version `next`
-    * (everything between the data write and the pointer swap) — shared
-    * by [[commit]] and [[commitOptimistic]].
+  /** THE VERSION WRITER — the only code that makes a version visible.
+    * Every version-creating call (commit, WAP stage, optimistic
+    * commit, rename, restore, clone) publishes version `prev + 1`
+    * here, in one order:
+    *
+    *   1. the retired-name guard (below), before anything is written;
+    *   2. crash debris at `next` is cleared (A14): files at a version
+    *      `_VERSION` never reached were left by a crashed attempt, and
+    *      under the single-writer invariant A17 nothing else can have
+    *      written them — a replayed micro-batch must clean them up and
+    *      retry, not wedge. A stale claim marker is debris of the same
+    *      class, so only an optimistic writer (which holds it) keeps
+    *      it; do not mix [[commit]] and [[commitOptimistic]] writers
+    *      on one target. For a table not yet published (`prev < 0`)
+    *      the journal and the commit log are debris too;
+    *   3. `rows`, if any, are written to `v<next>`, and every affected
+    *      bucket the partitioned write skipped (a delta or rebuild that
+    *      left no key hashing there — VERDICT r16 #3) is published as
+    *      an EMPTY parquet file, not left missing: the manifest points
+    *      at `v<next>/_bucket=b` for every affected `b`. An optimistic
+    *      writer's heartbeat runs for the whole data write;
+    *   4. the manifest (`carried` plus the rewritten buckets) and the
+    *      schema file;
+    *   5. the claim check: the pointer must still say `prev`, and an
+    *      optimistic claim's marker must still carry its token. A lost
+    *      optimistic claim returns false (the caller retries); any
+    *      other lost claim throws — BEFORE the journal append (ADVICE
+    *      r16, low), so a lost race never leaves a journal line at a
+    *      version another writer is about to claim;
+    *   6. the A6 journal: one line per rename (each embeds the schema),
+    *      and a schema line when the schema changed and no rename line
+    *      already records it (v0 always gets its bootstrap line, also
+    *      after a clone's carried renames). A crash between this
+    *      append and the pointer swap orphans the lines; the read-side
+    *      validation in [[columnRenameEntries]] drops a phantom rename
+    *      once another commit claims the version;
+    *   7. the commit instant in `commits.jsonl`, strictly greater than
+    *      every instant already recorded (the last line carries the
+    *      running maximum), so resolution is monotone whatever the
+    *      clock or filesystem granularity. Stamped only after the claim
+    *      check (ADVICE r14, low): a stale-claim loser that appended
+    *      after the thief would win last-line-wins with a bogus
+    *      instant;
+    *   8. the atomic `_VERSION` swap, except for a WAP branch.
+    *
+    * The retired-name guard: renamed-away names may never come back
+    * ([[renameColumn]]). The read-time mapping lands old-name file
+    * bytes on the new name, so a NEW column under a retired name would
+    * have its values silently captured. CHAIN-AWARE (VERDICT r16 #1):
+    * the chain is the journal up to `prev` plus this version's own
+    * `renames`, so a name re-targeted by a later rename (a→b then b→a,
+    * or a restore's undo) is live again, not retired. A phantom line
+    * at `next` (crashed rename) never guards the version about to be
+    * claimed.
     */
-  private def writeMetadata(target: String, merged: DataFrame,
-                            affected: Seq[Int], prev: Int,
-                            next: Int, stampTime: Boolean = true): Unit = {
+  private def writeVersion(target: String, prev: Int, claim: Claim,
+                           carried: Map[Int, String], schemaJson: String,
+                           renames: Seq[(String, String)],
+                           rows: Option[Rows]): Boolean = {
     val d = dir(target)
-    val schemaJson = merged.drop(BucketCol).schema.json
-    // Renamed-away names may never come back ([[renameColumn]]): the
-    // read-time mapping lands old-name file bytes on the new name, so
-    // a NEW column under a retired name would have its values silently
-    // captured by the mapping. CHAIN-AWARE (VERDICT r16 #1): a name
-    // re-targeted by a later rename (a→b then b→a) is live again, not
-    // retired — the old every-`from`-ever rule rejected the table's
-    // own schema after a legal rename-back and bricked it for writes.
-    // Renames at <= prev only: a phantom line at `next` (crashed
-    // rename) must not guard a commit that is about to claim the
-    // version. Fail BEFORE any metadata is written — the caller must
-    // pick a fresh name.
-    val retired = retiredNames(columnRenames(target, prev))
+    val next = prev + 1
+    val retired = retiredNames(columnRenames(target, prev) ++ renames)
     if (retired.nonEmpty) {
-      val clash = merged.drop(BucketCol).schema.fieldNames
+      val clash = parseSchema(schemaJson).fieldNames
         .filter(f => retired.contains(f.toLowerCase))
       require(clash.isEmpty,
         s"column name(s) ${clash.mkString(",")} were renamed away on " +
           s"$target and cannot be reintroduced (name-mapped reads would " +
           "capture them)")
     }
-    val prevManifest = manifest(target)
-    val nextManifest = prevManifest ++
-      affected.map(b => b -> s"v$next/$BucketCol=$b").toMap
-    val lines = nextManifest.toSeq.sortBy(_._1)
-      .map { case (b, p) => s"$b\t$p" }.mkString("\n")
-    Files.writeString(d.resolve(s"manifest-$next.tsv"), lines)
+    Files.createDirectories(d)
+    val lock = claim match {
+      case _: Marker => Nil
+      case _ => Seq(d.resolve(s"commit-$next.lock"))
+    }
+    val unpublished =
+      if (prev < 0) Seq(d.resolve(HistoryFile), d.resolve(CommitsFile)) else Nil
+    (Seq(manifestFile(target, next), d.resolve(s"schema-$next.json")) ++
+      lock ++ unpublished).foreach(Files.deleteIfExists)
+    rows.foreach { r =>
+      claim match {
+        case m: Marker =>
+          heartbeat(m, s"occ-heartbeat-$target-$next")(writeData(d, next, r))
+        case _ => writeData(d, next, r)
+      }
+    }
+    val written = rows.fold(Map.empty[Int, String])(
+      _.affected.map(b => b -> s"v$next/$BucketCol=$b").toMap)
+    Files.writeString(manifestFile(target, next), encodeManifest(carried ++ written))
     Files.writeString(d.resolve(s"schema-$next.json"), schemaJson)
-    // A6 — schema-history journal: one line per schema change.
+    val held = currentVersion(target) == prev && (claim match {
+      case Marker(marker, token, _) =>
+        Files.exists(marker) &&
+          (try Files.readString(marker) == token
+           catch { case _: Throwable => false })
+      case _ => true
+    })
+    if (!held) claim match {
+      case _: Marker => return false
+      case _ => throw new IllegalStateException(
+        s"single-writer invariant violated on $target: version moved " +
+          s"from $prev to ${currentVersion(target)} while writing $next")
+    }
     val changed = prev < 0 ||
       Files.readString(d.resolve(s"schema-$prev.json")) != schemaJson
-    if (changed)
-      Files.writeString(d.resolve("schema-history.jsonl"),
-        s"""{"version":$next,"schema":$schemaJson}""" + "\n",
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-    // The OCC path defers the stamp until after its claim is
-    // re-verified (ADVICE r14, low): a stale-claim loser that appends
-    // AFTER the thief would win last-line-wins with a bogus instant.
-    if (stampTime) recordCommitTime(target, next)
-    ()
+    append(d.resolve(HistoryFile),
+      renames.map { case (from, to) =>
+        s"""{"version":$next,"rename":{"from":"$from","to":"$to"},"schema":$schemaJson}"""
+      } ++ (if (changed && (prev < 0 || renames.isEmpty))
+        Seq(s"""{"version":$next,"schema":$schemaJson}""") else Nil))
+    val log = d.resolve(CommitsFile)
+    val last =
+      if (!Files.exists(log)) Long.MinValue
+      else {
+        val pat = """"ts":(\d+)\}""".r.unanchored
+        Files.readAllLines(log).asScala.reverseIterator.collectFirst {
+          case pat(ts) => ts.toLong
+        }.getOrElse(Long.MinValue)
+      }
+    val ts = math.max(System.currentTimeMillis(), last + 1)
+    append(log, Seq(s"""{"version":$next,"ts":$ts}"""))
+    if (claim != Branch) swapPointer(target, next)
+    true
+  }
+
+  /** A merge result as version `prev + 1`: the head's manifest with
+    * the affected buckets re-pointed at the new data dir.
+    */
+  private def writeRows(spark: SparkSession, target: String, prev: Int,
+                        merged: DataFrame, affected: Seq[Int],
+                        claim: Claim): Boolean =
+    writeVersion(target, prev, claim, manifestAt(target, prev),
+      merged.drop(BucketCol).schema.json, Nil,
+      Some(Rows(spark, merged, affected)))
+
+  /** One Spark job writes every affected bucket (`partitionBy`), then
+    * each affected bucket the job skipped gets an empty file: one
+    * cached 0-row template per schema, file-copied per bucket, because
+    * publishing an emptied bucket is metadata work and must not cost a
+    * Spark job each ([[StateStore.emptyParquetFor]]).
+    */
+  private def writeData(d: Path, next: Int, r: Rows): Unit = {
+    val out = d.resolve(s"v$next")
+    r.merged.write.mode("overwrite").partitionBy(BucketCol).parquet(out.toString)
+    val missing = r.affected.map(b => out.resolve(s"$BucketCol=$b"))
+      .filterNot(Files.exists(_))
+    if (missing.nonEmpty) {
+      val tmpl = emptyParquetFor(r.spark,
+        StructType(r.merged.schema.filterNot(_.name == BucketCol)))
+      missing.foreach { dst =>
+        Files.createDirectories(dst)
+        Files.copy(tmpl, dst.resolve("part-00000-empty.parquet"),
+          StandardCopyOption.REPLACE_EXISTING)
+      }
+    }
   }
 
   /** Atomic `_VERSION` swap: readers see the old or the new version,
     * never a mix.
     */
-  private def swapPointer(target: String, next: Int): Unit = {
-    val tmp = dir(target).resolve("_VERSION.tmp")
-    Files.writeString(tmp, next.toString)
-    Files.move(tmp, dir(target).resolve(VersionFile),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+  private def swapPointer(target: String, v: Int): Unit =
+    replace(dir(target).resolve(VersionFile), v.toString)
+
+  /** Run `body` while a daemon thread re-writes the claim's token into
+    * its marker every `staleLockMs/4`, so a live claim can never be
+    * judged stale by a waiter however long the data write takes.
+    * Re-writing the token (not just touching) also repairs the mtime on
+    * filesystems with coarse timestamp granularity.
+    */
+  private def heartbeat[A](m: Marker, name: String)(body: => A): A = {
+    @volatile var writing = true
+    val beat = new Thread(() => {
+      try {
+        while (writing) {
+          try Files.writeString(m.marker, m.token)
+          catch { case _: Throwable => () }
+          Thread.sleep(math.max(10L, m.staleLockMs / 4))
+        }
+      } catch { case _: InterruptedException => () }
+    }, name)
+    beat.setDaemon(true)
+    beat.start()
+    try body
+    finally {
+      writing = false
+      beat.interrupt()
+    }
   }
 
   /** OPTIMISTIC concurrent commit — the Iceberg optimistic-concurrency
@@ -1031,8 +1061,8 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
     *      go stale however long the write takes (ADVICE r8, medium:
     *      without the refresh, any data write longer than
     *      `staleLockMs` let a waiter steal the claim and both writers
-    *      raced on the same `v<next>` dir). Immediately before the
-    *      pointer swap the writer re-verifies BOTH that the pointer
+    *      raced on the same `v<next>` dir). Before it journals, stamps
+    *      and swaps, [[writeVersion]] re-verifies BOTH that the pointer
     *      still says `prev` AND that the marker still carries its own
     *      token — a stolen claim (only possible once this writer's
     *      heartbeat has stopped, i.e. it crashed or stalled past
@@ -1076,51 +1106,9 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
         }
         catch { case _: java.nio.file.FileAlreadyExistsException => false }
       if (claimed && currentVersion(target) == prev) {
-        // Heartbeat: keep the marker's mtime fresh for the whole data
-        // write so a live claim can never be judged stale by a waiter.
-        // Re-writing the token (not just touching) also repairs the
-        // mtime on filesystems with coarse timestamp granularity.
-        @volatile var writing = true
-        val beat = new Thread(() => {
-          try {
-            while (writing) {
-              try Files.writeString(marker, token)
-              catch { case _: Throwable => () }
-              Thread.sleep(math.max(10L, staleLockMs / 4))
-            }
-          } catch { case _: InterruptedException => () }
-        }, s"occ-heartbeat-$target-$next")
-        beat.setDaemon(true)
-        beat.start()
-        try {
-          merged.write.mode("overwrite")
-            .partitionBy(BucketCol)
-            .parquet(d.resolve(s"v$next").toString)
-        } finally {
-          writing = false
-          beat.interrupt()
-        }
-        writeMetadata(target, merged, affected, prev, next,
-          stampTime = false)
-        // Final guard (ADVICE r8, medium): the claim is only still ours
-        // if the pointer hasn't moved AND the marker still carries our
-        // token. A thief that stole a (genuinely stale — heartbeat
-        // dead) claim overwrote the token; publishing over it would be
-        // a silent lost update, so abandon and retry with fresh state.
-        val stillOurs = currentVersion(target) == prev &&
-          Files.exists(marker) &&
-          (try Files.readString(marker) == token
-           catch { case _: Throwable => false })
-        if (stillOurs) {
-          // Stamp the commit instant only now, INSIDE the verified
-          // claim (ADVICE r14, low): stamping in writeMetadata let a
-          // stale-claim loser append its line after the thief's, so
-          // last-line-wins handed the committed version the loser's
-          // instant and broke the sidecar's running-maximum invariant.
-          recordCommitTime(target, next)
-          swapPointer(target, next)
-          return next
-        }
+        // False when the claim was stolen (step 3): retry fresh.
+        if (writeRows(spark, target, prev, merged, affected,
+            Marker(marker, token, staleLockMs))) return next
       } else if (claimed) {
         // Claim succeeded but the pointer had already moved past
         // `prev` — only possible after a stale-marker steal let the
@@ -1174,15 +1162,8 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
   def cloneTable(src: String, dst: String): Unit = {
     require(exists(src), s"clone source $src does not exist")
     require(!exists(dst), s"clone destination $dst already exists")
-    val d = dir(dst)
-    Files.createDirectories(d)
-    val rel = d.relativize(dir(src)).toString
-    val entries = manifest(src).toSeq.sortBy(_._1)
-      .map { case (b, p) => s"$b\t$rel/$p" }.mkString("\n")
-    Files.writeString(d.resolve("manifest-0.tsv"), entries)
-    val schemaJson =
-      Files.readString(dir(src).resolve(s"schema-${currentVersion(src)}.json"))
-    Files.writeString(d.resolve("schema-0.json"), schemaJson)
+    val srcV = currentVersion(src)
+    val rel = dir(dst).relativize(dir(src)).toString
     // The source's RENAME mappings must ride into the clone's journal
     // (re-versioned to the clone's v0, source order preserved so
     // chains compose): the clone's manifest reaches into the source's
@@ -1190,93 +1171,49 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
     // without the mapping, every renamed column would null
     // ([[columnRenames]]); with it, the clone reads and guards
     // (retired-name reintroduction) exactly like the source.
-    val carried = columnRenames(src, currentVersion(src))
-      .map { case (from, to) =>
-        s"""{"version":0,"rename":{"from":"$from","to":"$to"},"schema":$schemaJson}""" + "\n"
-      }.mkString
-    Files.writeString(d.resolve("schema-history.jsonl"),
-      carried + s"""{"version":0,"schema":$schemaJson}""" + "\n")
-    recordCommitTime(dst, 0)
-    val tmp = d.resolve("_VERSION.tmp")
-    Files.writeString(tmp, "0")
-    Files.move(tmp, d.resolve(VersionFile),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    writeVersion(dst, -1, Head,
+      manifestAt(src, srcV).map { case (b, p) => b -> s"$rel/$p" },
+      Files.readString(dir(src).resolve(s"schema-$srcV.json")),
+      columnRenames(src, srcV), None)
     // Back-reference for clone-aware vacuum: the source records who
-    // points into it. One line per clone; [[vacuum]] prunes lines for
+    // points into it. One line per clone; [[pruneRefs]] drops lines for
     // clones that no longer exist or no longer reference the source.
-    Files.writeString(dir(src).resolve(RefsFile),
-      s"""{"clone":"$dst"}""" + "\n",
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
+    append(dir(src).resolve(RefsFile), Seq(s"""{"clone":"$dst"}"""))
   }
 
-  /** Table names registered in `target`'s `refs.jsonl` whose tables
-    * still exist — candidates for holding live references into
-    * `target`'s version dirs.
+  /** Prune `target`'s `refs.jsonl` to the clones that still exist AND
+    * still reach into this table — dead entries never pin history
+    * again — and return each live clone with the top-level dirs of
+    * `target` (`v<K>`, `purge-v<K>`) its manifests reach into. Entries
+    * are of the form `../<target>/v<K>/_bucket=<B>`, resolved, not
+    * string-matched, so nested warehouse layouts work. Each clone's
+    * manifests are listed and parsed once per call.
     */
-  private def cloneRefs(target: String): Seq[String] = {
+  private def pruneRefs(target: String): Seq[(String, Set[String])] = {
     val f = dir(target).resolve(RefsFile)
-    if (!Files.exists(f)) Seq.empty
-    else {
-      val pat = """\{"clone":"([^"]+)"\}""".r
-      Files.readAllLines(f).asScala.toSeq.collect {
-        case pat(name) if exists(name) => name
-      }.distinct
-    }
-  }
-
-  /** The version dirs of `target` that a live clone's RETAINED
-    * manifests still reach into (entries of the form
-    * `../<target>/v<K>/_bucket=<B>` — resolved, not string-matched, so
-    * nested warehouse layouts work).
-    */
-  private def cloneReferencedDirs(target: String): Set[String] = {
+    if (!Files.exists(f)) return Seq.empty
     val targetDir = dir(target).toAbsolutePath.normalize
-    cloneRefs(target).flatMap { clone =>
-      val cd = dir(clone)
-      val manifests = {
-        val s = Files.list(cd)
-        try s.iterator().asScala.toList.filter(
-          _.getFileName.toString.matches("manifest-\\d+\\.tsv"))
-        finally s.close()
-      }
-      manifests.flatMap { mf =>
-        Files.readAllLines(mf).asScala.filter(_.nonEmpty).flatMap { line =>
-          val p = line.split("\t", 2)(1)
+    val pat = """\{"clone":"([^"]+)"\}""".r
+    val live = Files.readAllLines(f).asScala.toSeq
+      .collect { case pat(clone) if exists(clone) => clone }.distinct
+      .map { clone =>
+        val cd = dir(clone)
+        val manifests = {
+          val s = Files.list(cd)
+          try s.iterator().asScala.toList.filter(
+            _.getFileName.toString.matches("manifest-\\d+\\.tsv"))
+          finally s.close()
+        }
+        clone -> manifests.flatMap(readManifest(_).values).flatMap { p =>
           val resolved = cd.resolve(p).toAbsolutePath.normalize
           if (resolved.startsWith(targetDir) && resolved != targetDir)
             Some(targetDir.relativize(resolved).getName(0).toString)
           else None
-        }
-      }
-    }.toSet
-  }
-
-  /** Rewrite `refs.jsonl` keeping only clones that still exist AND
-    * still reference this table — dead entries never pin history
-    * again.
-    */
-  private def pruneRefs(target: String): Unit = {
-    val f = dir(target).resolve(RefsFile)
-    if (!Files.exists(f)) return
-    val targetDir = dir(target).toAbsolutePath.normalize
-    val live = cloneRefs(target).filter { clone =>
-      val cd = dir(clone)
-      val s = Files.list(cd)
-      val manifests =
-        try s.iterator().asScala.toList.filter(
-          _.getFileName.toString.matches("manifest-\\d+\\.tsv"))
-        finally s.close()
-      manifests.exists { mf =>
-        Files.readAllLines(mf).asScala.filter(_.nonEmpty).exists { line =>
-          cd.resolve(line.split("\t", 2)(1)).toAbsolutePath.normalize
-            .startsWith(targetDir)
-        }
-      }
-    }
+        }.toSet
+      }.filter(_._2.nonEmpty)
     if (live.isEmpty) Files.deleteIfExists(f)
-    else Files.writeString(f,
-      live.map(c => s"""{"clone":"$c"}""").mkString("", "\n", "\n"))
+    else replace(f, live.map(c => s"""{"clone":"${c._1}"}""").mkString("", "\n", "\n"))
+    live
   }
 
   /** RESTORE (the Delta `RESTORE TABLE ... TO VERSION AS OF` analog):
@@ -1288,41 +1225,28 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
     * rolled-past versions remain time-travelable until vacuumed.
     * Fails loudly if the requested version's manifest has already been
     * vacuumed away.
+    * Renames the restore rolls past are undone in the journal, so the
+    * head reads exactly like the restored version and stays writable.
     */
   def restore(target: String, toVersion: Int): Int = {
-    val d = dir(target)
     val prev = currentVersion(target)
     require(toVersion >= 0 && toVersion <= prev,
       s"cannot restore $target to $toVersion (current: $prev)")
-    require(Files.exists(d.resolve(s"manifest-$toVersion.tsv")),
+    require(Files.exists(manifestFile(target, toVersion)),
       s"version $toVersion of $target has been vacuumed — unrestorable")
-    val next = prev + 1
-    // Same crash-debris discipline as commit(): clear any files a
-    // crashed attempt left at `next` before writing.
-    Seq(d.resolve(s"manifest-$next.tsv"), d.resolve(s"schema-$next.json"))
-      .foreach(Files.deleteIfExists)
-    Files.copy(d.resolve(s"manifest-$toVersion.tsv"),
-      d.resolve(s"manifest-$next.tsv"))
-    val schemaJson = Files.readString(d.resolve(s"schema-$toVersion.json"))
-    Files.writeString(d.resolve(s"schema-$next.json"), schemaJson)
-    if (Files.readString(d.resolve(s"schema-$prev.json")) != schemaJson)
-      Files.writeString(d.resolve("schema-history.jsonl"),
-        s"""{"version":$next,"schema":$schemaJson}""" + "\n",
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-    // The restore's own commit instant — the copied manifest must NOT
-    // inherit the restored-to version's instant, or resolution would
-    // lose monotonicity (Delta stamps RESTORE commits the same way).
-    recordCommitTime(target, next)
-    if (currentVersion(target) != prev)
-      throw new IllegalStateException(
-        s"single-writer invariant violated on $target: version moved " +
-          s"from $prev to ${currentVersion(target)} during restore")
-    val tmp = d.resolve("_VERSION.tmp")
-    Files.writeString(tmp, next.toString)
-    Files.move(tmp, d.resolve(VersionFile),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    next
+    // The restored manifest's files are read through the WHOLE rename
+    // chain, so a rename the restore rolls past would keep mapping
+    // them off the restored schema's names (and retire the restored
+    // name for writes). Undo each rolled-past rename, newest first —
+    // the chain-aware guard accepts a rename-back. The restore stamps
+    // its own commit instant: inheriting the restored-to version's
+    // would break monotone resolution (Delta stamps RESTORE the same).
+    val undo = columnRenameEntries(target, prev).filter(_._1 > toVersion)
+      .reverse.map { case (_, from, to) => (to, from) }
+    writeVersion(target, prev, Head, manifestAt(target, toVersion),
+      Files.readString(dir(target).resolve(s"schema-$toVersion.json")),
+      undo, None)
+    prev + 1
   }
 
   /** RIGHT-TO-BE-FORGOTTEN purge (the GDPR/CCPA erasure workload
@@ -1389,9 +1313,9 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
                 driverListThreshold: Long = 100000L): Long = {
     // A clone that detached (compacted + vacuumed its history) must
     // not block erasure — prune dead references before judging.
-    pruneRefs(target)
-    require(cloneRefs(target).isEmpty,
-      s"purge refused: live clones ${cloneRefs(target)} reference " +
+    val clones = pruneRefs(target).map(_._1)
+    require(clones.isEmpty,
+      s"purge refused: live clones $clones reference " +
         s"$target — purge or detach them first")
     val d = dir(target)
     val cur = currentVersion(target)
@@ -1424,10 +1348,8 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
       case Some(ks) => df.filter(col(pkCol).isin(ks: _*))
       case None => df.join(keySet, Seq(pkCol), "left_semi")
     }
-    val retained = (0 to cur)
-      .filter(v => Files.exists(d.resolve(s"manifest-$v.tsv")))
     // Distinct affected dirs across all retained manifests.
-    val perVersion = retained.map(v => v -> manifestAt(target, v))
+    val perVersion = versions(target).map(v => v -> manifestAt(target, v))
     // Clone-escape guard (ADVICE r8, high): a shallow clone's manifest
     // entries are relative paths into its SOURCE ("../<src>/vK/_bucket=B").
     // Resolving and deleting those here would escape this table's
@@ -1483,16 +1405,9 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
       // Atomically re-point every retained manifest.
       perVersion.foreach { case (v, m) =>
         if (m.exists { case (b, p) => buckets(b) && rewritten.contains(p) }) {
-          val updated = m.map { case (b, p) =>
-            b -> rewritten.getOrElse(p, p)
-          }
-          val lines = updated.toSeq.sortBy(_._1)
-            .map { case (b, p) => s"$b\t$p" }.mkString("\n")
-          val tmp = d.resolve(s"manifest-$v.tsv.tmp")
-          Files.writeString(tmp, lines)
-          Files.move(tmp, d.resolve(s"manifest-$v.tsv"),
-            StandardCopyOption.ATOMIC_MOVE,
-            StandardCopyOption.REPLACE_EXISTING)
+          replace(manifestFile(target, v), encodeManifest(m.map {
+            case (b, p) => b -> rewritten.getOrElse(p, p)
+          }))
         }
       }
       // All manifests now point at purged dirs — the old files can go.
@@ -1635,15 +1550,6 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
     removed
   }
 
-  /** Maintenance: expire old snapshots (the `expire_snapshots` analog).
-    * Deletes version manifests/schemas older than `keepVersions` back
-    * from current, plus any data directory no retained manifest
-    * references. Time travel stays available for retained versions.
-    * CLONE-AWARE: version dirs a live clone's retained manifests still
-    * reach into (see [[cloneTable]]'s back-reference) are kept however
-    * old, so expiring source history can never strand a clone; dead
-    * references are pruned first so they never pin history.
-    */
   /** The vacuum DECISION for every surviving version, without
     * executing it — the Delta `VACUUM ... DRY RUN` / Iceberg
     * expire-with-dry-run analog, and the exact plan [[vacuum]]
@@ -1660,57 +1566,63 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
     * they never pin the plan.
     */
   def vacuumPlan(target: String,
-                 keepVersions: Int = 1): Seq[(Int, String)] = {
-    val d = dir(target)
+                 keepVersions: Int = 1): Seq[(Int, String)] =
+    planVacuum(target, keepVersions)._1
+
+  /** [[vacuumPlan]] plus the REACHABLE set it decides by: every
+    * top-level dir (`v<K>`, `purge-v<K>`) a pinned manifest or a live
+    * clone's manifest reaches into. One pass serves both the version
+    * decisions and [[vacuum]]'s purge-dir sweep.
+    */
+  private def planVacuum(target: String, keepVersions: Int)
+      : (Seq[(Int, String)], Set[String]) = {
     val cur = currentVersion(target)
     val keepFrom = math.max(0, cur - keepVersions + 1)
-    pruneRefs(target)
-    // A retained version's manifest may already be gone if an earlier
-    // vacuum ran with a tighter window — skip missing manifests so
-    // repeated maintenance is a no-op, never a crash.
+    val survivors = versions(target)
     // NAMED REFS pin like retention: a tagged/branched version keeps
     // its manifest+schema AND every data dir that manifest reaches
     // (a tag's manifest may reference older versions' dirs for
-    // buckets its commit didn't rewrite).
+    // buckets its commit didn't rewrite). A retained version's
+    // manifest may already be gone if an earlier vacuum ran with a
+    // tighter window — only survivors count, so repeated maintenance
+    // is a no-op, never a crash.
     val refVersions = namedRefs(target).map(_._3).toSet
-    val pinned = (keepFrom to cur).toSet ++ refVersions
-    val referenced = pinned.toSeq.sorted
-      .filter(v => Files.exists(d.resolve(s"manifest-$v.tsv")))
+    val reachable = survivors.filter(v => v >= keepFrom || refVersions(v))
       .flatMap(v => manifestAt(target, v).values.map(_.split("/")(0))).toSet ++
-      cloneReferencedDirs(target)
-    (0 to cur)
-      .filter(v => Files.exists(d.resolve(s"manifest-$v.tsv")))
-      .map { v =>
-        val action =
-          if (v == cur) "keep-head"
-          else if (v >= keepFrom) "keep-retained"
-          else if (refVersions(v)) "keep-ref-pinned"
-          else if (referenced(s"v$v")) "keep-dir-referenced"
-          else "expire"
-        (v, action)
-      }
+      pruneRefs(target).flatMap(_._2)
+    val plan = survivors.map { v =>
+      val action =
+        if (v == cur) "keep-head"
+        else if (v >= keepFrom) "keep-retained"
+        else if (refVersions(v)) "keep-ref-pinned"
+        else if (reachable(s"v$v")) "keep-dir-referenced"
+        else "expire"
+      (v, action)
+    }
+    (plan, reachable)
   }
 
+  /** Maintenance: expire old snapshots (the `expire_snapshots` analog).
+    * Deletes version manifests/schemas older than `keepVersions` back
+    * from current, plus any data directory no retained manifest
+    * references. Time travel stays available for retained versions.
+    * CLONE-AWARE: version dirs a live clone's retained manifests still
+    * reach into (see [[cloneTable]]'s back-reference) are kept however
+    * old, so expiring source history can never strand a clone; dead
+    * references are pruned first so they never pin history.
+    */
   def vacuum(target: String, keepVersions: Int = 1): Unit = {
     val d = dir(target)
-    val cur = currentVersion(target)
-    val keepFrom = math.max(0, cur - keepVersions + 1)
-    vacuumPlan(target, keepVersions)
-      .collect { case (v, "expire") => v }
+    val (plan, reachable) = planVacuum(target, keepVersions)
+    plan.collect { case (v, "expire") => v }
       .foreach { v =>
-        Files.deleteIfExists(d.resolve(s"manifest-$v.tsv"))
+        Files.deleteIfExists(manifestFile(target, v))
         Files.deleteIfExists(d.resolve(s"schema-$v.json"))
         graft.Scratch.delete(d.resolve(s"v$v"))
       }
-    val refVersions = namedRefs(target).map(_._3).toSet
-    val pinned = (keepFrom to cur).toSet ++ refVersions
     // Purge-rewrite dirs ([[purgeKeys]]) live outside the v<N>
     // numbering; reclaim any that no retained manifest (nor live
     // clone) references anymore.
-    val stillReferenced = pinned.toSeq.sorted
-      .filter(v => Files.exists(d.resolve(s"manifest-$v.tsv")))
-      .flatMap(v => manifestAt(target, v).values.map(_.split("/")(0)))
-      .toSet ++ cloneReferencedDirs(target)
     val purgeDirs = {
       val s = Files.list(d)
       try s.iterator().asScala.toList.filter(p =>
@@ -1718,7 +1630,7 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
           p.getFileName.toString.startsWith("purge-"))
       finally s.close()
     }
-    purgeDirs.filterNot(p => stillReferenced(p.getFileName.toString))
+    purgeDirs.filterNot(p => reachable(p.getFileName.toString))
       .foreach(graft.Scratch.delete)
     compactCommitLog(target)
   }
@@ -1728,28 +1640,22 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
     * expired/dropped versions otherwise grow the sidecar forever — the
     * r14 one-parse fix removed the quadratic read, not the growth.
     * Runs under vacuum's existing single-writer-maintenance assumption
-    * and atomicity discipline (tmp + ATOMIC_MOVE, like the pointer
-    * swap): readers see the old or the compacted sidecar, never a
-    * partial one. Resolution is unchanged by construction — the kept
-    * line per version IS what last-line-wins parsing resolved, written
-    * back in ts order so the last line still carries the running
-    * maximum that [[recordCommitTime]]'s monotone stamp reads.
+    * and is an atomic [[StateStore.replace]]: readers see the old or
+    * the compacted sidecar, never a partial one. Resolution is
+    * unchanged by construction — the kept line per version IS what
+    * last-line-wins parsing resolved, written back in ts order so the
+    * last line still carries the running maximum that
+    * [[writeVersion]]'s monotone stamp reads.
     */
   private def compactCommitLog(target: String): Unit = {
     val f = dir(target).resolve(CommitsFile)
     if (!Files.exists(f)) return
-    val times = commitTimes(target) // last-line-wins, one parse
-    val lines = times.toSeq
-      .filter { case (v, _) =>
-        Files.exists(dir(target).resolve(s"manifest-$v.tsv")) }
+    val lines = commitTimes(target).toSeq // last-line-wins, one parse
+      .filter { case (v, _) => Files.exists(manifestFile(target, v)) }
       .map { case (v, ts) => (ts, v) }
       .sorted
       .map { case (ts, v) => s"""{"version":$v,"ts":$ts}""" }
-    val tmp = dir(target).resolve("commits.jsonl.tmp")
-    Files.writeString(tmp,
-      if (lines.isEmpty) "" else lines.mkString("", "\n", "\n"))
-    Files.move(tmp, f, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    replace(f, if (lines.isEmpty) "" else lines.mkString("", "\n", "\n"))
   }
 }
 
@@ -1763,6 +1669,55 @@ object StateStore {
   val NamedRefsFile = "named-refs.jsonl"
   val CommitsFile = "commits.jsonl"
   val BatchFile = "_BATCH"
+  private val HistoryFile = "schema-history.jsonl"
+  private val MetaCols = Seq(TsCol, SeqCol, DeletedCol, BucketCol)
+
+  /** How [[StateStore.writeVersion]] holds the version number it
+    * writes, and whether publishing moves `_VERSION`.
+    */
+  private sealed trait Claim
+  /** Single writer (A17): the pointer must still say `prev`; swap it. */
+  private case object Head extends Claim
+  /** WAP branch: checked like [[Head]], but the pointer stays put. */
+  private case object Branch extends Claim
+  /** Optimistic: `marker` must still carry `token`; swap the pointer. */
+  private final case class Marker(marker: Path, token: String,
+                                  staleLockMs: Long) extends Claim
+
+  /** A merge result's rows and the buckets it rewrites. */
+  private final case class Rows(spark: SparkSession, merged: DataFrame,
+                                affected: Seq[Int])
+
+  /** Replace `f` atomically: write its `<name>.tmp` sibling, then move
+    * it over `f` — readers see the old or the new content, never a mix.
+    */
+  private def replace(f: Path, content: String): Unit = {
+    val tmp = f.resolveSibling(f.getFileName.toString + ".tmp")
+    Files.writeString(tmp, content)
+    Files.move(tmp, f, StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  /** Append `lines` to `f`, each newline-terminated; creates `f`. */
+  private def append(f: Path, lines: Seq[String]): Unit =
+    if (lines.nonEmpty)
+      Files.writeString(f, lines.map(_ + "\n").mkString,
+        StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+
+  /** Manifest file format: one `bucket<TAB>data dir` line per bucket,
+    * ascending by bucket, no trailing newline.
+    */
+  private def encodeManifest(m: Map[Int, String]): String =
+    m.toSeq.sortBy(_._1).map { case (b, p) => s"$b\t$p" }.mkString("\n")
+
+  private def readManifest(f: Path): Map[Int, String] =
+    Files.readAllLines(f).asScala.filter(_.nonEmpty).map { line =>
+      val Array(b, p) = line.split("\t", 2)
+      b.toInt -> p
+    }.toMap
+
+  private def parseSchema(json: String): StructType =
+    DataType.fromJson(json).asInstanceOf[StructType]
 
   /** Deterministic PK → bucket assignment (xxhash64, the engine-wide
     * content hash). The same expression computes batch-side and

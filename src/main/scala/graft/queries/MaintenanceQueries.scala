@@ -1377,7 +1377,7 @@ object MaintenanceQueries {
     store.vacuum(target, keepVersions = 1)
     val (vn, vbal) = summarize(store.currentState(spark, target))
     val vacuumOk = !Files.exists(whPath.resolve(target).resolve(s"v$v1")) &&
-      !Files.exists(whPath.resolve(target).resolve(s"manifest-$v1.tsv")) &&
+      !store.versions(target).contains(v1) &&
       vn == an && vbal == abal
     import spark.implicits._
     Seq(
@@ -1873,9 +1873,7 @@ object MaintenanceQueries {
     * expired-history timestamps and head-never-expires.
     */
   def expireTs(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     val wh = graft.Scratch.fresh("graft-expts-", sfDir).toString
-    val whPath = Paths.get(wh)
     val store = new graft.cdc.StateStore(wh, nBuckets = 8)
     val target = "cdc.commerce_supplier_exp"
     val pk = Seq("s_suppkey")
@@ -1901,10 +1899,9 @@ object MaintenanceQueries {
     wave(sup.filter(col("s_suppkey") % 7 === 0), 3000L, deleted = true)
     store.expireOlderThan(target, horizon)
 
-    val d = whPath.resolve(target)
-    val survivors = (0 to store.currentVersion(target))
-      .count(v => Files.exists(d.resolve(s"manifest-$v.tsv"))).toLong
-    val wave2Gone = !Files.exists(d.resolve("manifest-1.tsv"))
+    val kept = store.versions(target)
+    val survivors = kept.size.toLong
+    val wave2Gone = !kept.contains(1)
     val headResolves = store.versionAtTime(target,
       System.currentTimeMillis()) == store.currentVersion(target)
 
@@ -1967,9 +1964,7 @@ object MaintenanceQueries {
     * keeping what count proposed) is pinned in ExpireTsSpec.
     */
   def expireRetain(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     val wh = graft.Scratch.fresh("graft-expret-", sfDir).toString
-    val whPath = Paths.get(wh)
     val store = new graft.cdc.StateStore(wh, nBuckets = 8)
     val target = "cdc.commerce_supplier_ret"
     val pk = Seq("s_suppkey")
@@ -1993,11 +1988,9 @@ object MaintenanceQueries {
     store.expireSnapshots(target,
       olderThan = Some(System.currentTimeMillis()), retainLast = Some(2))
 
-    val d = whPath.resolve(target)
-    val survivors = (0 to store.currentVersion(target))
-      .count(v => Files.exists(d.resolve(s"manifest-$v.tsv"))).toLong
-    val oldGone = !Files.exists(d.resolve("manifest-0.tsv")) &&
-      !Files.exists(d.resolve("manifest-1.tsv"))
+    val kept = store.versions(target)
+    val survivors = kept.size.toLong
+    val oldGone = !kept.contains(0) && !kept.contains(1)
     val headResolves = store.versionAtTime(target,
       System.currentTimeMillis()) == store.currentVersion(target)
 
@@ -3389,9 +3382,7 @@ object MaintenanceQueries {
     * Metadata-only: the plan opens no data file at any table size.
     */
   def vacuumPlanQ(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     val wh = graft.Scratch.fresh("graft-vacplan-", sfDir).toString
-    val whPath = Paths.get(wh)
     val store = new graft.cdc.StateStore(wh, nBuckets = 8)
     val target = "cdc.commerce_supplier_vp"
     val pk = Seq("s_suppkey")
@@ -3417,10 +3408,9 @@ object MaintenanceQueries {
     wave(300.0, 4000L) // v3
     val plan = store.vacuumPlan(target, keepVersions = 2)
     store.vacuum(target, keepVersions = 2)
+    val kept = store.versions(target)
     val outcomes = plan.map { case (v, action) =>
-      val manifestSurvives = Files.exists(
-        whPath.resolve(target).resolve(s"manifest-$v.tsv"))
-      (v, action, manifestSurvives == (action != "expire"))
+      (v, action, kept.contains(v) == (action != "expire"))
     }
     val session = spark
     import session.implicits._

@@ -185,4 +185,30 @@ class ConcurrentCommitSpec extends SparkTestBase {
       .select("cnt").as[Long].head()
     assert(cnt === 7L)
   }
+
+  test("an optimistic commit publishes emptied affected buckets, like commit") {
+    // A merge whose rows land in one bucket while it names every
+    // bucket affected must publish the others as EMPTY: the manifest
+    // points at v<next>/_bucket=<b> for each affected b, so a bucket
+    // the partitioned write skipped would leave the head unreadable.
+    val store = new StateStore(
+      graft.Scratch.dir("graft-occ-empty-").toString, NBuckets)
+    val target = "occ.emptied"
+    val init = withMeta(
+      (0L until NKeys).map(k => (k, 0L)).toDF("k", "cnt"), ts = 0L)
+    store.commit(spark, target, init, 0 until NBuckets)
+    val onlyFirst = withMeta(
+      (0L until NKeys).map(k => (k, 1L)).toDF("k", "cnt"), ts = 1L)
+      .filter(col(StateStore.BucketCol) === 0)
+    val kept = onlyFirst.count()
+    assert(kept > 0 && kept < NKeys, "the fixture must empty some buckets")
+    val v = store.commitOptimistic(spark, target) { _ =>
+      (onlyFirst, 0 until NBuckets)
+    }
+    assert(v === 1)
+    val state = store.currentState(spark, target)
+      .select("k", "cnt").as[(Long, Long)].collect()
+    assert(state.length.toLong === kept)
+    assert(state.forall(_._2 == 1L))
+  }
 }
