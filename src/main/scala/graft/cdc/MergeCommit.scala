@@ -117,6 +117,83 @@ object MergeCommit {
       pkCols, affectedBuckets(slice, pkCols, store.nBuckets),
       persistSlices, stage)
 
+  /** ADDITIVE COUNTER-TABLE UPSERT — the one maintenance step of every
+    * family that keeps a derived table of counters (a summary, a
+    * census, a vocabulary, an index) current by COUNTING (Gupta, Mumick
+    * & Subrahmanian, SIGMOD 1993): per batch, subtract the old stored
+    * winner's contribution and add the new one's, over the batch's
+    * keys only.
+    *
+    * `contrib` maps live source rows to `keyCols` plus the family's
+    * UNSIGNED counters (numeric, in table column order); it runs on
+    * `result`'s pre and post slices semi-joined to `batchKeys` (whose
+    * columns are the source primary key) with tombstones dropped. The
+    * pre side is negated, both are unioned and summed per key — a
+    * stale event that loses the merge yields pre == post and cancels
+    * exactly. The delta rows are bucketed by `bucketCols` (a subset of
+    * `keyCols`), and only the buckets they touch are read, full-outer
+    * joined with them on `keyCols`, added counter by counter (absent
+    * side = 0) and committed. No ordering metadata: deltas commute, so
+    * any micro-batch slicing telescopes to the same table. Before the
+    * first commit the state is an empty frame in the deltas' schema
+    * (every column nullable, as a state read surfaces it), so the
+    * table's schema follows from `contrib`. One persist, one bucket
+    * collect, one read, one join and one commit per call; a call whose
+    * deltas are empty commits nothing.
+    *
+    * With `dropAtZero` the table is a count census: zero delta rows
+    * are no change and are dropped before bucketing, and a row whose
+    * first counter (its count) reaches 0 leaves the table. Without it
+    * every touched key keeps its row, zeros included.
+    */
+  def commitDeltas(store: StateStore, table: String, result: Result,
+                   batchKeys: DataFrame, keyCols: Seq[String],
+                   bucketCols: Seq[String], dropAtZero: Boolean)
+                  (contrib: DataFrame => DataFrame): Unit = {
+    val spark = batchKeys.sparkSession
+    def side(slice: DataFrame): DataFrame =
+      contrib(slice.join(batchKeys, batchKeys.columns.toSeq, "left_semi")
+        .filter(!col(StateStore.DeletedCol)))
+    val post = side(result.postSlice)
+    val counters = post.columns.toSeq.filterNot(keyCols.contains)
+    val pre = side(result.preSlice).select(keyCols.map(col) ++
+      counters.map(c => (-col(c)).as(c)): _*)
+    val summed = pre.unionAll(post.select((keyCols ++ counters).map(col): _*))
+      .groupBy(keyCols.map(col): _*)
+      .agg(sum(counters.head).as(counters.head),
+        counters.tail.map(c => sum(c).as(c)): _*)
+    val deltas = (if (dropAtZero)
+        summed.filter(counters.map(c => col(c) =!= 0).reduce(_ || _))
+      else summed)
+      .withColumn(StateStore.BucketCol,
+        StateStore.bucketExpr(bucketCols, store.nBuckets))
+      .persist()
+    try {
+      val affected = deltas.select(StateStore.BucketCol).distinct()
+        .collect().map(_.getInt(0)).toSeq.sorted
+      if (affected.nonEmpty) {
+        val state =
+          if (store.exists(table)) store.readBuckets(spark, table, affected)
+          else spark.createDataFrame(
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+            org.apache.spark.sql.types.StructType(
+              deltas.schema.map(_.copy(nullable = true))))
+        val types = deltas.schema.map(f => f.name -> f.dataType).toMap
+        def delta(c: String) = s"_delta_$c"
+        val next0 = state.join(deltas.select(keyCols.map(col) ++
+            counters.map(c => col(c).as(delta(c))): _*), keyCols, "full_outer")
+          .select(keyCols.map(col) ++ counters.map { c =>
+            val zero = lit(0).cast(types(c))
+            (coalesce(col(c), zero) + coalesce(col(delta(c)), zero)).as(c)
+          }: _*)
+        val next = if (dropAtZero) next0.filter(col(counters.head) > 0)
+          else next0
+        store.commit(spark, table, next.withColumn(StateStore.BucketCol,
+          StateStore.bucketExpr(bucketCols, store.nBuckets)), affected)
+      }
+    } finally deltas.unpersist(blocking = false)
+  }
+
   /** Audit-scope tag for [[mergeGatedFlattened]]: batch rows carry
     * `true`, state rows surface `null` through schema alignment, and
     * [[Merge.mergeOrdered]]'s whole-row `max_by` makes the merge WINNER

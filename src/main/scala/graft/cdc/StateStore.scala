@@ -1420,14 +1420,12 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
   /** Maintenance: rewrite the WHOLE table into one fresh version (the
     * `rewrite_data_files` analog). After many incremental commits each
     * bucket accumulates one small file per touching micro-batch
-    * version; compaction folds them back to one dir per bucket so read
+    * version; compaction folds them back to one file per bucket so read
     * fan-in stays bounded. Runs through the normal commit path, so
     * readers never see a partial rewrite.
     */
-  def compactTable(spark: SparkSession, target: String): Int = {
-    val all = rawState(spark, target)
-    commit(spark, target, all, manifest(target).keys.toSeq.sorted)
-  }
+  def compactTable(spark: SparkSession, target: String): Int =
+    rewriteAll(spark, target, Nil, 0L)
 
   /** Maintenance: SORT-ORDERED full rewrite — the `rewrite_data_files`
     * SORT strategy where [[compactTable]] is binpack-without-order:
@@ -1452,16 +1450,28 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
     */
   def compactTableSorted(spark: SparkSession, target: String,
                          sortCols: Seq[String],
-                         maxRecordsPerFile: Long = 0L): Int = {
-    val all = rawState(spark, target)
-    val sorted = all.repartition(col(BucketCol))
+                         maxRecordsPerFile: Long = 0L): Int =
+    rewriteAll(spark, target, sortCols, maxRecordsPerFile)
+
+  /** The full rewrite both compactions share: every bucket's rows are
+    * shuffled onto one partition (so the bucket dir lands as one file,
+    * or as `maxRecordsPerFile`-row files when capped) and ordered by
+    * (`_bucket`, `sortCols`) there — the order the partitioned write
+    * sorts by anyway — then committed as one version.
+    */
+  private def rewriteAll(spark: SparkSession, target: String,
+                         sortCols: Seq[String],
+                         maxRecordsPerFile: Long): Int = {
+    val sorted = rawState(spark, target).repartition(col(BucketCol))
       .sortWithinPartitions((col(BucketCol) +: sortCols.map(col)): _*)
-    val confKey = "spark.sql.files.maxRecordsPerFile"
-    val prev = spark.conf.get(confKey)
-    if (maxRecordsPerFile > 0)
+    def write() = commit(spark, target, sorted, manifest(target).keys.toSeq.sorted)
+    if (maxRecordsPerFile <= 0) write()
+    else {
+      val confKey = "spark.sql.files.maxRecordsPerFile"
+      val prev = spark.conf.get(confKey)
       spark.conf.set(confKey, maxRecordsPerFile.toString)
-    try commit(spark, target, sorted, manifest(target).keys.toSeq.sorted)
-    finally spark.conf.set(confKey, prev)
+      try write() finally spark.conf.set(confKey, prev)
+    }
   }
 
   /** Maintenance: SELECTIVE bin-packed compaction (the

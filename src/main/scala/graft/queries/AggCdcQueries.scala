@@ -4,7 +4,6 @@ import graft.Tables
 import graft.cdc.{Envelope, Merge, MergeCommit, StateStore}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** Incremental MATERIALIZED-AGGREGATE maintenance under CDC updates —
   * the relational sibling of [[IvfCdcQueries]]: a per-nation summary
@@ -91,59 +90,17 @@ object AggCdcQueries {
           NBuckets)
         MergeCommit.mergeBatchMeta(store, StateTable, batchMeta,
           Seq("c_custkey"), persistSlices = true).foreach { result =>
-          try commitSummaryDeltas(store, batchMeta, result)
+          // Summary deltas: a group move subtracts from the old nation
+          // and adds to the new one.
+          try MergeCommit.commitDeltas(store, SummaryTable, result,
+              batchMeta.select("c_custkey").distinct(), Seq("c_nationkey"),
+              Seq("c_nationkey"), dropAtZero = false)(
+              _.select(col("c_nationkey"), lit(1L).as("n"),
+                centsExpr(col("c_acctbal")).as("cents")))
           finally result.unpersist()
         }
       } finally compacted.unpersist(blocking = false)
     }
-
-  /** Summary deltas: −(old stored contribution) + (new stored winner),
-    * restricted to this batch's keys. A stale event that loses the
-    * merge yields old == new → the pair cancels exactly (long cents,
-    * no epsilon); a group move subtracts from the old nation and adds
-    * to the new one.
-    */
-  private def commitSummaryDeltas(store: StateStore, batchMeta: DataFrame,
-                                  result: MergeCommit.Result): Unit = {
-    val spark = batchMeta.sparkSession
-    val keys = batchMeta.select("c_custkey").distinct()
-    def contributions(state: DataFrame, sign: Int) =
-      state.join(keys, Seq("c_custkey"), "left_semi")
-        .filter(!col(StateStore.DeletedCol))
-        .select(col("c_nationkey"), lit(sign.toLong).as("dn"),
-          (centsExpr(col("c_acctbal")) * sign).as("dc"))
-    val deltas = contributions(result.preSlice, -1)
-      .unionAll(contributions(result.postSlice, +1))
-      .groupBy("c_nationkey")
-      .agg(sum("dn").as("dn"), sum("dc").as("dc"))
-      .withColumn(StateStore.BucketCol,
-        StateStore.bucketExpr(Seq("c_nationkey"), NBuckets))
-      .persist()
-    try {
-      val sumAffected = deltas.select(StateStore.BucketCol).distinct()
-        .collect().map(_.getInt(0)).toSeq.sorted
-      if (sumAffected.nonEmpty) {
-        val sumState =
-          if (store.exists(SummaryTable))
-            store.readBuckets(spark, SummaryTable, sumAffected)
-          else spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            StructType.fromDDL(
-              "c_nationkey int, n bigint, cents bigint, _bucket int"))
-        // Additive upsert (no ordering metadata — long deltas commute).
-        val next = sumState.join(deltas.drop(StateStore.BucketCol),
-            Seq("c_nationkey"), "full_outer")
-          .select(col("c_nationkey"),
-            (coalesce(col("n"), lit(0L)) + coalesce(col("dn"), lit(0L)))
-              .as("n"),
-            (coalesce(col("cents"), lit(0L)) + coalesce(col("dc"), lit(0L)))
-              .as("cents"))
-          .withColumn(StateStore.BucketCol,
-            StateStore.bucketExpr(Seq("c_nationkey"), NBuckets))
-        store.commit(spark, SummaryTable, next, sumAffected)
-      }
-    } finally deltas.unpersist(blocking = false)
-  }
 
   /** Drain the staged change log through the maintainer; returns the
     * store so callers can read either maintained table.

@@ -4,7 +4,6 @@ import graft.Tables
 import graft.cdc.{Merge, MergeCommit, StateStore}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** TERM-KEYED CDC-maintained BM25 index — [[Bm25CdcQueries]] grown up:
   * that pipeline's 1-row stats hard-codes df columns for the fixed
@@ -101,45 +100,16 @@ object Bm25VocabQueries {
           coalesce(sum("ddl"), lit(0L)).as("ddl"))
         .head()
     }
-    // Vocabulary deltas: ±1 per (stored winner, distinct term) over the
-    // batch's keys — stale losers cancel exactly. Wrapped in Try so a
+    // Vocabulary deltas: ±1 per (stored winner, distinct term); a term
+    // whose df reaches 0 leaves the vocabulary. Wrapped in Try so a
     // vocab failure still JOINS the scalar future before propagating
     // (the Par await-all rule: no stray action in flight when the
     // caller unwinds).
     val vocabTry = scala.util.Try {
-      def termContrib(state: DataFrame, sign: Int): DataFrame =
-        state.join(keys, Seq("doc_id"), "left_semi")
-          .filter(!col(StateStore.DeletedCol))
-          .select(explode(map_keys(col("tc"))).as("term"))
-          .withColumn("dd", lit(sign.toLong))
-      val tDeltas = termContrib(result.preSlice, -1)
-        .unionAll(termContrib(result.postSlice, +1))
-        .groupBy("term").agg(sum("dd").as("dd"))
-        .filter(col("dd") =!= 0L)
-        .withColumn(StateStore.BucketCol,
-          StateStore.bucketExpr(Seq("term"), NBuckets))
-        .persist()
-      try {
-        val affected = tDeltas.select(StateStore.BucketCol).distinct()
-          .collect().map(_.getInt(0)).toSeq.sorted
-        if (affected.nonEmpty) {
-          val vState =
-            if (store.exists(VocabTable))
-              store.readBuckets(spark, VocabTable, affected)
-            else spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              StructType.fromDDL("term string, df bigint, _bucket int"))
-          val next = vState.join(tDeltas.drop(StateStore.BucketCol),
-              Seq("term"), "full_outer")
-            .select(col("term"),
-              (coalesce(col("df"), lit(0L)) +
-                coalesce(col("dd"), lit(0L))).as("df"))
-            .filter(col("df") > 0) // df 0 → the term leaves the vocab
-            .withColumn(StateStore.BucketCol,
-              StateStore.bucketExpr(Seq("term"), NBuckets))
-          store.commit(spark, VocabTable, next, affected)
-        }
-      } finally tDeltas.unpersist(blocking = false)
+      MergeCommit.commitDeltas(store, VocabTable, result, keys, Seq("term"),
+        Seq("term"), dropAtZero = true)(
+        _.select(explode(map_keys(col("tc"))).as("term"))
+          .withColumn("df", lit(1L)))
     }
     val dTry = scala.util.Try(graft.Par.await(fScalar))
     vocabTry.get // rethrow vocab failure first (scalar joined)

@@ -141,52 +141,25 @@ object HnswCdcQueries {
         MergeCommit.mergeBatchMeta(store, VecTable, featMeta,
           Seq("vec_id"), persistSlices = true).foreach { result =>
           try {
-            commitCensusDeltas(store, result)
+            commitCensusDeltas(store, featMeta, result)
             linkBatch(store, featMeta, result)
           } finally result.unpersist()
         }
       } finally compacted.unpersist(blocking = false)
     }
 
-  /** Census: ±1 per (stored winner, band), the additive rule. */
-  private def commitCensusDeltas(store: StateStore,
+  /** Census: ±1 per (stored winner, band); a band whose occupancy
+    * reaches 0 leaves the census.
+    */
+  private def commitCensusDeltas(store: StateStore, featMeta: DataFrame,
                                  result: MergeCommit.Result): Unit = {
-    val spark = result.postSlice.sparkSession
-    label(spark, "census deltas")
-    def bandRows(state: DataFrame, sign: Int): DataFrame =
-      state.filter(!col(StateStore.DeletedCol))
-        .select(explode(array(BandDims.map { case (g, _) =>
+    label(featMeta.sparkSession, "census deltas")
+    MergeCommit.commitDeltas(store, CensusTable, result,
+      featMeta.select("vec_id").distinct(), Seq("band"), Seq("band"),
+      dropAtZero = true)(
+      _.select(explode(array(BandDims.map { case (g, _) =>
           col(s"b$g") }: _*)).as("band"))
-        .withColumn("dn", lit(sign.toLong))
-    val deltas = bandRows(result.preSlice, -1)
-      .unionAll(bandRows(result.postSlice, +1))
-      .groupBy("band").agg(sum("dn").as("dn"))
-      .filter(col("dn") =!= 0L)
-      .withColumn(StateStore.BucketCol,
-        StateStore.bucketExpr(Seq("band"), NBuckets))
-      .persist()
-    try {
-      val cAffected = deltas.select(StateStore.BucketCol).distinct()
-        .collect().map(_.getInt(0)).toSeq.sorted
-      if (cAffected.nonEmpty) {
-        label(spark, "census commit")
-        val cState =
-          if (store.exists(CensusTable))
-            store.readBuckets(spark, CensusTable, cAffected)
-          else spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            StructType.fromDDL("band string, n bigint, _bucket int"))
-        val next = cState.join(deltas.drop(StateStore.BucketCol),
-            Seq("band"), "full_outer")
-          .select(col("band"),
-            (coalesce(col("n"), lit(0L)) + coalesce(col("dn"), lit(0L)))
-              .as("n"))
-          .filter(col("n") > 0)
-          .withColumn(StateStore.BucketCol,
-            StateStore.bucketExpr(Seq("band"), NBuckets))
-        store.commit(spark, CensusTable, next, cAffected)
-      }
-    } finally deltas.unpersist(blocking = false)
+        .withColumn("n", lit(1L)))
   }
 
   /** Candidate pairs — batch live winners × stored bucket mates over

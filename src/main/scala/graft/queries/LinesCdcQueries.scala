@@ -4,7 +4,6 @@ import graft.Tables
 import graft.cdc.{Merge, MergeCommit, StateStore}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** CDC-MAINTAINED BOILERPLATE-LINE CENSUS — [[graft.ops.LlmOps
   * .dedupLines]]'s C4 rewrite kept fresh under the document change
@@ -66,54 +65,18 @@ object LinesCdcQueries {
             col(StateStore.DeletedCol), col(StateStore.BucketCol))
         MergeCommit.mergeBatchMeta(store, DocsTable, featMeta,
           Seq("doc_id"), persistSlices = true).foreach { result =>
-          try commitCensusDeltas(store, featMeta, result)
+          // ±1 per (stored winner, DISTINCT line digest) — the exact
+          // increment of a count(DISTINCT doc_id) census.
+          try MergeCommit.commitDeltas(store, CensusTable, result,
+              featMeta.select("doc_id").distinct(), Seq("d"), Seq("d"),
+              dropAtZero = true)(
+              _.select(explode(array_distinct(
+                  transform(col("lines"), l => md5(l)))).as("d"))
+                .withColumn("nd", lit(1L)))
           finally result.unpersist()
         }
       } finally compacted.unpersist(blocking = false)
     }
-
-  /** ±1 per (stored winner, DISTINCT line digest) over the batch's
-    * keys — the exact increment of a count(DISTINCT doc_id) census.
-    */
-  private def commitCensusDeltas(store: StateStore, featMeta: DataFrame,
-                                 result: MergeCommit.Result): Unit = {
-    val spark = featMeta.sparkSession
-    val keys = featMeta.select("doc_id").distinct()
-    def digContrib(state: DataFrame, sign: Int): DataFrame =
-      state.join(keys, Seq("doc_id"), "left_semi")
-        .filter(!col(StateStore.DeletedCol))
-        .select(explode(array_distinct(
-          transform(col("lines"), l => md5(l)))).as("d"))
-        .withColumn("dd", lit(sign.toLong))
-    val deltas = digContrib(result.preSlice, -1)
-      .unionAll(digContrib(result.postSlice, +1))
-      .groupBy("d").agg(sum("dd").as("dd"))
-      .filter(col("dd") =!= 0L)
-      .withColumn(StateStore.BucketCol,
-        StateStore.bucketExpr(Seq("d"), NBuckets))
-      .persist()
-    try {
-      val affected = deltas.select(StateStore.BucketCol).distinct()
-        .collect().map(_.getInt(0)).toSeq.sorted
-      if (affected.nonEmpty) {
-        val cState =
-          if (store.exists(CensusTable))
-            store.readBuckets(spark, CensusTable, affected)
-          else spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            StructType.fromDDL("d string, nd bigint, _bucket int"))
-        val next = cState.join(deltas.drop(StateStore.BucketCol),
-            Seq("d"), "full_outer")
-          .select(col("d"),
-            (coalesce(col("nd"), lit(0L)) +
-              coalesce(col("dd"), lit(0L))).as("nd"))
-          .filter(col("nd") > 0) // recurrence 0 → leaves the census
-          .withColumn(StateStore.BucketCol,
-            StateStore.bucketExpr(Seq("d"), NBuckets))
-        store.commit(spark, CensusTable, next, affected)
-      }
-    } finally deltas.unpersist(blocking = false)
-  }
 
   private[queries] def runMaintenance(spark: SparkSession, sfDir: String,
       filesPerTrigger: Int): StateStore =

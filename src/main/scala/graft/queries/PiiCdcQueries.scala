@@ -4,7 +4,6 @@ import graft.Tables
 import graft.cdc.{Merge, MergeCommit, StateStore}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** The PII census MAINTAINED under CDC (VERDICT r16 #6) — the
   * curation-stage completion of the batch/stream/CDC symmetry the PII
@@ -64,73 +63,22 @@ object PiiCdcQueries {
               col(StateStore.DeletedCol), col(StateStore.BucketCol)): _*)
         MergeCommit.mergeBatchMeta(store, DocsTable, featMeta,
           Seq("doc_id"), persistSlices = true).foreach { result =>
-          try commitCensusDeltas(store, featMeta, result)
+          // ±(stored winner's counters) per source.
+          try MergeCommit.commitDeltas(store, CensusTable, result,
+              featMeta.select("doc_id").distinct(), Seq("source"),
+              Seq("source"), dropAtZero = false)(
+              _.select(col("source"), lit(1L).as("n_docs"),
+                when(col("e") + col("p") + col("i") > 0, 1L).otherwise(0L)
+                  .as("docs_with_pii"),
+                col("e").cast("long").as("n_email"),
+                col("p").cast("long").as("n_phone"),
+                col("i").cast("long").as("n_ip"),
+                col("resid").cast("long").as("n_residual"),
+                col("ck").as("scrub_checksum")))
           finally result.unpersist()
         }
       } finally compacted.unpersist(blocking = false)
     }
-
-  /** ±(stored winner's counters) per source over the batch's keys. */
-  private def commitCensusDeltas(store: StateStore, featMeta: DataFrame,
-                                 result: MergeCommit.Result): Unit = {
-    val spark = featMeta.sparkSession
-    val keys = featMeta.select("doc_id").distinct()
-    def contributions(state: DataFrame, sign: Int) =
-      state.join(keys, Seq("doc_id"), "left_semi")
-        .filter(!col(StateStore.DeletedCol))
-        .select(col("source"), lit(sign.toLong).as("dn"),
-          (when(col("e") + col("p") + col("i") > 0, 1L).otherwise(0L)
-            * sign).as("dw"),
-          (col("e").cast("long") * sign).as("de"),
-          (col("p").cast("long") * sign).as("dp"),
-          (col("i").cast("long") * sign).as("di"),
-          (col("resid").cast("long") * sign).as("dr"),
-          (col("ck") * sign).as("dk"))
-    val deltas = contributions(result.preSlice, -1)
-      .unionAll(contributions(result.postSlice, +1))
-      .groupBy("source")
-      .agg(sum("dn").as("dn"), sum("dw").as("dw"), sum("de").as("de"),
-        sum("dp").as("dp"), sum("di").as("di"), sum("dr").as("dr"),
-        sum("dk").as("dk"))
-      .withColumn(StateStore.BucketCol,
-        StateStore.bucketExpr(Seq("source"), NBuckets))
-      .persist()
-    try {
-      val affected = deltas.select(StateStore.BucketCol).distinct()
-        .collect().map(_.getInt(0)).toSeq.sorted
-      if (affected.nonEmpty) {
-        val cState =
-          if (store.exists(CensusTable))
-            store.readBuckets(spark, CensusTable, affected)
-          else spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            StructType.fromDDL(
-              "source string, n_docs bigint, docs_with_pii bigint, " +
-                "n_email bigint, n_phone bigint, n_ip bigint, " +
-                "n_residual bigint, scrub_checksum bigint, _bucket int"))
-        val next = cState.join(deltas.drop(StateStore.BucketCol),
-            Seq("source"), "full_outer")
-          .select(col("source"),
-            (coalesce(col("n_docs"), lit(0L)) +
-              coalesce(col("dn"), lit(0L))).as("n_docs"),
-            (coalesce(col("docs_with_pii"), lit(0L)) +
-              coalesce(col("dw"), lit(0L))).as("docs_with_pii"),
-            (coalesce(col("n_email"), lit(0L)) +
-              coalesce(col("de"), lit(0L))).as("n_email"),
-            (coalesce(col("n_phone"), lit(0L)) +
-              coalesce(col("dp"), lit(0L))).as("n_phone"),
-            (coalesce(col("n_ip"), lit(0L)) +
-              coalesce(col("di"), lit(0L))).as("n_ip"),
-            (coalesce(col("n_residual"), lit(0L)) +
-              coalesce(col("dr"), lit(0L))).as("n_residual"),
-            (coalesce(col("scrub_checksum"), lit(0L)) +
-              coalesce(col("dk"), lit(0L))).as("scrub_checksum"))
-          .withColumn(StateStore.BucketCol,
-            StateStore.bucketExpr(Seq("source"), NBuckets))
-        store.commit(spark, CensusTable, next, affected)
-      }
-    } finally deltas.unpersist(blocking = false)
-  }
 
   /** From-scratch census recompute off the docs counters — the
     * spec's equality baseline. TOTAL: previously-manifested buckets

@@ -72,6 +72,40 @@ class CompactBinpackSpec extends SparkTestBase {
     assert(v2 === v && again.isEmpty, "a packed table is a no-op")
   }
 
+  test("compactTable rewrites every bucket dir to one file") {
+    val wh = graft.Scratch.dir("graft-compact-spec-").toString
+    val store = new StateStore(wh, nBuckets = 4)
+    val target = "t"
+    def filesPerBucket(): Map[Int, Long] =
+      store.manifest(target).map { case (b, entry) =>
+        val s = Files.list(Paths.get(wh, target).resolve(entry))
+        try b -> s.filter(_.getFileName.toString.endsWith(".parquet")).count()
+        finally s.close()
+      }
+    // 40 rows over 4 buckets from 3 round-robin partitions: each bucket
+    // dir lands as up to 3 files.
+    val df = graft.Tables.load(spark, sf, "customer").limit(40)
+      .withColumn(StateStore.TsCol, lit(1000L))
+      .withColumn(StateStore.SeqCol, col("c_custkey").cast("long"))
+      .withColumn(StateStore.DeletedCol, lit(false))
+      .withColumn(StateStore.BucketCol,
+        StateStore.bucketExpr(Seq("c_custkey"), 4))
+      .repartition(3)
+    store.commit(spark, target, df, 0 until 4)
+    assert(filesPerBucket().values.max > 1L,
+      "precondition: some bucket dir must be fragmented")
+    val before = store.currentState(spark, target)
+      .collect().map(_.toString).sorted.toSeq
+
+    val v = store.compactTable(spark, target)
+    assert(v === 1)
+    assert(filesPerBucket() === (0 until 4).map(_ -> 1L).toMap,
+      "every compacted bucket dir holds one file")
+    assert(store.currentState(spark, target)
+      .collect().map(_.toString).sorted.toSeq === before,
+      "compaction changes no data")
+  }
+
   /** Model-based property: random upsert/delete waves with binpack
     * passes interleaved at random points must leave EXACTLY the
     * latest-wins state a plain in-memory map computes — compaction is

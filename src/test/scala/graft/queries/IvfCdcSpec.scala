@@ -1,6 +1,8 @@
 package graft.queries
 
-import graft.{SparkTestBase, Tables}
+import graft.{BatchFaults, SparkTestBase, Tables}
+import graft.cdc.Envelope
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Incremental IVF maintenance vs a from-scratch rebuild: after the
@@ -76,5 +78,33 @@ class IvfCdcSpec extends SparkTestBase {
       assert(math.abs(deltas(k)._2 - m) < 1e-9,
         s"centroid differs at $k after rebuild (drift beyond epsilon)")
     }
+  }
+
+  test("torn batch: a crash between the assignments and index commits " +
+      "recovers on retry to the uncrashed tables") {
+    val store = IvfCdcQueries.runMaintenance(spark, sf, 2)
+    val clean = BatchFaults.twin(store)
+    val embD = transform(col("embedding"), x => x.cast("double"))
+    def img(label: Column, emb: Column) =
+      struct(col("vec_id").cast("long").as("vec_id"),
+        label.cast("int").as("label"), emb.as("emb"))
+    // A cluster-move wave: every touched vector changes label and values.
+    val batch = Envelope.flatten(Tables.load(spark, sf, "embeddings")
+      .filter(col("vec_id") % 11 === 1).select(
+        img(col("label"), embD).as("before"),
+        img(col("label") + 2000, transform(embD, x => x * 2.0)).as("after"),
+        lit(Envelope.OpUpdate).as("op"), lit(9000L).as("ts_ms"),
+        col("vec_id").cast("long").as("seq"),
+        struct(lit("vectors").as("schema"),
+          lit("embeddings").as("table")).as("source")))
+
+    // Assignments committed, index not: the retry must re-run the batch
+    // against the pre-batch assignments, or its deltas cancel.
+    BatchFaults.crashAtCommit(store, "ivf.index")(
+      IvfCdcQueries.processBatch(store, batch))
+    IvfCdcQueries.processBatch(store, batch) // the streaming retry
+    IvfCdcQueries.processBatch(clean, batch)
+    BatchFaults.assertSameTables(spark, store, clean,
+      Seq("ivf.assignments", "ivf.index"))
   }
 }
