@@ -1,6 +1,6 @@
 package graft.cdc
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** The ONE ordered-merge commit recipe (A11+A12+A13): compact a
@@ -117,6 +117,82 @@ object MergeCommit {
       pkCols, affectedBuckets(slice, pkCols, store.nBuckets),
       persistSlices, stage)
 
+  /** The batch's data columns as [[toBatchMeta]] lays them out: the
+    * `features` of a family that merges its change-log rows as they are.
+    */
+  def rowColumns(meta: DataFrame): Seq[Column] =
+    meta.columns.toSeq.filterNot(StateStore.MetaCols.contains).map(col)
+
+  /** An empty frame in `df`'s schema with every column nullable, as a
+    * state read surfaces it: a derived table's state before its first
+    * commit, so the table's schema follows from the frame that fills it.
+    */
+  def emptyLike(df: DataFrame): DataFrame = {
+    val spark = df.sparkSession
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      org.apache.spark.sql.types.StructType(
+        df.schema.map(_.copy(nullable = true))))
+  }
+
+  /** THE MAINTAINED-FAMILY MICRO-BATCH STEP — one flattened change-log
+    * batch ([[Envelope.flatten]] output) applied to a family that keeps
+    * `derivedTables` current off the state transition of its primary
+    * `table`. Inside one [[StateStore.atomically]] scope over all of
+    * them (a crash anywhere in the step resets every listed table to
+    * its pre-batch version on the next entry), it:
+    *  1. compacts the batch latest-per-key with tombstones kept
+    *     ([[Merge.compactKeepTombstones]]) and persists it;
+    *  1. lays it out with [[toBatchMeta]] at `store.nBuckets`;
+    *  1. projects it to the family's `features` — the data columns
+    *     only, as expressions over that layout ([[rowColumns]] keeps
+    *     the row as it is); the merge metadata is appended here;
+    *  1. runs the ordered merge into `table` with persisted slices;
+    *  1. calls `derive(featMeta, result)` only when the merge committed
+    *     (an empty batch commits to no table) — the family's derived
+    *     commits ([[commitDeltas]], a graph relink, a codes rewrite)
+    *     run there, `featMeta`'s key column giving the batch keys;
+    *  1. unpersists the slices and the compacted frame however the
+    *     step ends.
+    *
+    * Per batch: one persisted compaction, one bucket collect, one merge
+    * commit, then `derive`'s jobs. Families that merge several primary
+    * tables or hold batches back (the join view, the transactional
+    * appliers) compose [[toBatchMeta]] and [[mergeBatchMeta]] themselves.
+    */
+  def mergeMaintained(store: StateStore, table: String,
+                      derivedTables: Seq[String], batch: DataFrame,
+                      pkCols: Seq[String])
+                     (features: DataFrame => Seq[Column])
+                     (derive: (DataFrame, Result) => Unit): Unit =
+    store.atomically(table +: derivedTables) {
+      val compacted = Merge.compactKeepTombstones(batch, pkCols).persist()
+      try {
+        val meta = toBatchMeta(compacted, pkCols, store.nBuckets)
+        val featMeta = meta.select(
+          features(meta) ++ StateStore.MetaCols.map(col): _*)
+        mergeBatchMeta(store, table, featMeta, pkCols, persistSlices = true)
+          .foreach { result =>
+            try derive(featMeta, result) finally result.unpersist()
+          }
+      } finally compacted.unpersist(blocking = false)
+    }
+
+  /** One wave of PLAIN rows (no change-log envelope) merged into
+    * `table`: every row carries the commit instant `ts`, its key
+    * column `key` as sequence number, the tombstone flag `deleted` and
+    * its key's hash bucket — the shape of a hand-written batch phase
+    * (the maintenance and time-travel queries' waves).
+    */
+  def mergeRows(store: StateStore, table: String, rows: DataFrame,
+                key: String, ts: Long,
+                deleted: Column = lit(false)): Option[Result] =
+    mergeBatchMeta(store, table, rows
+      .withColumn(StateStore.TsCol, lit(ts))
+      .withColumn(StateStore.SeqCol, col(key).cast("long"))
+      .withColumn(StateStore.DeletedCol, deleted)
+      .withColumn(StateStore.BucketCol,
+        StateStore.bucketExpr(Seq(key), store.nBuckets)), Seq(key))
+
   /** ADDITIVE COUNTER-TABLE UPSERT — the one maintenance step of every
     * family that keeps a derived table of counters (a summary, a
     * census, a vocabulary, an index) current by COUNTING (Gupta, Mumick
@@ -174,10 +250,7 @@ object MergeCommit {
       if (affected.nonEmpty) {
         val state =
           if (store.exists(table)) store.readBuckets(spark, table, affected)
-          else spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType(
-              deltas.schema.map(_.copy(nullable = true))))
+          else emptyLike(deltas)
         val types = deltas.schema.map(f => f.name -> f.dataType).toMap
         def delta(c: String) = s"_delta_$c"
         val next0 = state.join(deltas.select(keyCols.map(col) ++

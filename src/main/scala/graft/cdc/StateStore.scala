@@ -1680,7 +1680,7 @@ object StateStore {
   val CommitsFile = "commits.jsonl"
   val BatchFile = "_BATCH"
   private val HistoryFile = "schema-history.jsonl"
-  private val MetaCols = Seq(TsCol, SeqCol, DeletedCol, BucketCol)
+  private[cdc] val MetaCols = Seq(TsCol, SeqCol, DeletedCol, BucketCol)
 
   /** How [[StateStore.writeVersion]] holds the version number it
     * writes, and whether publishing moves `_VERSION`.

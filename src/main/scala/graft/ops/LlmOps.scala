@@ -3322,10 +3322,12 @@ object LlmOps {
     * them on batch rows only, never a corpus rescan).
     */
   private[graft] def bm25Features(df: DataFrame): DataFrame =
-    bm25Terms.zipWithIndex.foldLeft(df.withColumn("dl", size(words))) {
-      case (d, (q, i)) =>
-        d.withColumn(s"tf${i + 1}", size(filter(words, w => w === q)))
-    }
+    df.select(col("*") +: bm25FeatureCols: _*)
+
+  /** [[bm25Features]]' columns (dl, tf1..3) as expressions over `text`. */
+  private[graft] def bm25FeatureCols: Seq[Column] =
+    size(words).as("dl") +: bm25Terms.zipWithIndex.map { case (q, i) =>
+      size(filter(words, w => w === q)).as(s"tf${i + 1}") }
 
   /** BM25 top-20 off a FEATURE frame (doc_id, dl, tf1..3) and a 1-row
     * stats frame (n, sdl, df1..3 — exact integers; avgdl = sdl/n is

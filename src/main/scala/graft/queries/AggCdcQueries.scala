@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.cdc.{Envelope, Merge, MergeCommit, StateStore}
+import graft.cdc.{Envelope, MergeCommit, StateStore}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -75,31 +75,20 @@ object AggCdcQueries {
     move.unionAll(stale).unionAll(del).unionAll(snap).unionAll(u1)
   }
 
-  /** One micro-batch: ordered merge into `agg.state` (the shared
-    * [[MergeCommit]] recipe), then the summary delta pass over the
-    * returned (pre, post) state slices. Crash-atomic across both
-    * tables via [[StateStore.atomically]].
+  /** One micro-batch ([[MergeCommit.mergeMaintained]]): ordered merge
+    * into `agg.state`, then the summary delta pass over the returned
+    * (pre, post) state slices — a group move subtracts from the old
+    * nation and adds to the new one.
     */
   private[queries] def processBatch(store: StateStore,
                                     batch: DataFrame): Unit =
-    store.atomically(Seq(StateTable, SummaryTable)) {
-      val compacted =
-        Merge.compactKeepTombstones(batch, Seq("c_custkey")).persist()
-      try {
-        val batchMeta = MergeCommit.toBatchMeta(compacted, Seq("c_custkey"),
-          NBuckets)
-        MergeCommit.mergeBatchMeta(store, StateTable, batchMeta,
-          Seq("c_custkey"), persistSlices = true).foreach { result =>
-          // Summary deltas: a group move subtracts from the old nation
-          // and adds to the new one.
-          try MergeCommit.commitDeltas(store, SummaryTable, result,
-              batchMeta.select("c_custkey").distinct(), Seq("c_nationkey"),
-              Seq("c_nationkey"), dropAtZero = false)(
-              _.select(col("c_nationkey"), lit(1L).as("n"),
-                centsExpr(col("c_acctbal")).as("cents")))
-          finally result.unpersist()
-        }
-      } finally compacted.unpersist(blocking = false)
+    MergeCommit.mergeMaintained(store, StateTable, Seq(SummaryTable), batch,
+      Seq("c_custkey"))(MergeCommit.rowColumns) { (batchMeta, result) =>
+      MergeCommit.commitDeltas(store, SummaryTable, result,
+        batchMeta.select("c_custkey").distinct(), Seq("c_nationkey"),
+        Seq("c_nationkey"), dropAtZero = false)(
+        _.select(col("c_nationkey"), lit(1L).as("n"),
+          centsExpr(col("c_acctbal")).as("cents")))
     }
 
   /** Drain the staged change log through the maintainer; returns the

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.cdc.{Envelope, Merge, MergeCommit, StateStore}
+import graft.cdc.{Envelope, MergeCommit, StateStore}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -78,73 +78,27 @@ object Bm25CdcQueries {
     u2.unionAll(stale).unionAll(del).unionAll(snap).unionAll(u1)
   }
 
-  /** One micro-batch: feature-project the compacted slice map-side,
-    * ordered-merge into the feature index, then the 1-row stats delta
-    * off the returned (pre, post) slices. Both commits are
-    * crash-atomic via [[StateStore.atomically]].
+  /** One micro-batch ([[MergeCommit.mergeMaintained]]): feature-project
+    * the compacted slice map-side (text stays out of state),
+    * ordered-merge into the feature index, then the 1-row stats deltas
+    * off the returned (pre, post) slices: −old winner + new winner over
+    * the batch's keys, LONG sums keyed by the one constant `stat_id` —
+    * stale-loser pairs cancel exactly, slicings telescope.
     */
   private[queries] def processBatch(store: StateStore,
                                     batch: DataFrame): Unit =
-    store.atomically(Seq(DocsTable, StatsTable)) {
-      val compacted =
-        Merge.compactKeepTombstones(batch, Seq("doc_id")).persist()
-      try {
-        val meta = MergeCommit.toBatchMeta(compacted, Seq("doc_id"), NBuckets)
-        // Feature projection on BATCH rows only; text stays out of state.
-        val featMeta = graft.ops.LlmOps.bm25Features(meta)
-          .select(col("doc_id"), col("dl"),
-            col("tf1"), col("tf2"), col("tf3"),
-            col(StateStore.TsCol), col(StateStore.SeqCol),
-            col(StateStore.DeletedCol), col(StateStore.BucketCol))
-        MergeCommit.mergeBatchMeta(store, DocsTable, featMeta,
-          Seq("doc_id"), persistSlices = true).foreach { result =>
-          try commitStatsDeltas(store, featMeta, result)
-          finally result.unpersist()
-        }
-      } finally compacted.unpersist(blocking = false)
+    MergeCommit.mergeMaintained(store, DocsTable, Seq(StatsTable), batch,
+      Seq("doc_id"))(_ => col("doc_id") +: graft.ops.LlmOps.bm25FeatureCols) {
+      (featMeta, result) =>
+        MergeCommit.commitDeltas(store, StatsTable, result,
+          featMeta.select("doc_id").distinct(), Seq("stat_id"),
+          Seq("stat_id"), dropAtZero = false)(
+          _.select(lit(0).as("stat_id"), lit(1L).as("n"),
+            col("dl").cast("long").as("sdl"),
+            when(col("tf1") > 0, 1L).otherwise(0L).as("df1"),
+            when(col("tf2") > 0, 1L).otherwise(0L).as("df2"),
+            when(col("tf3") > 0, 1L).otherwise(0L).as("df3")))
     }
-
-  /** Stats deltas: −old winner + new winner over the batch's keys
-    * (LONG sums — stale-loser pairs cancel exactly, slicings
-    * telescope). One collect of ONE row per batch.
-    */
-  private def commitStatsDeltas(store: StateStore, featMeta: DataFrame,
-                                result: MergeCommit.Result): Unit = {
-    val spark = featMeta.sparkSession
-    val prev: Seq[Long] =
-      if (store.exists(StatsTable)) {
-        val r = store.currentState(spark, StatsTable)
-          .select("n", "sdl", "df1", "df2", "df3").head()
-        (0 to 4).map(r.getLong)
-      } else Seq.fill(5)(0L)
-    val keys = featMeta.select("doc_id").distinct()
-    def contrib(state: DataFrame, sign: Int): DataFrame =
-      state.join(keys, Seq("doc_id"), "left_semi")
-        .filter(!col(StateStore.DeletedCol))
-        .select(lit(sign.toLong).as("dn"),
-          (col("dl").cast("long") * sign).as("ddl"),
-          when(col("tf1") > 0, sign.toLong).otherwise(0L).as("ddf1"),
-          when(col("tf2") > 0, sign.toLong).otherwise(0L).as("ddf2"),
-          when(col("tf3") > 0, sign.toLong).otherwise(0L).as("ddf3"))
-    val d = contrib(result.preSlice, -1)
-      .unionAll(contrib(result.postSlice, +1))
-      .agg(coalesce(sum("dn"), lit(0L)).as("dn"),
-        coalesce(sum("ddl"), lit(0L)).as("ddl"),
-        coalesce(sum("ddf1"), lit(0L)).as("ddf1"),
-        coalesce(sum("ddf2"), lit(0L)).as("ddf2"),
-        coalesce(sum("ddf3"), lit(0L)).as("ddf3"))
-      .head()
-    val nextVals = prev.indices.map(i => prev(i) + d.getLong(i))
-    import spark.implicits._
-    val next = Seq((0, nextVals(0), nextVals(1), nextVals(2),
-        nextVals(3), nextVals(4)))
-      .toDF("stat_id", "n", "sdl", "df1", "df2", "df3")
-      .withColumn(StateStore.TsCol, lit(0L))
-      .withColumn(StateStore.SeqCol, lit(0L))
-      .withColumn(StateStore.DeletedCol, lit(false))
-      .withColumn(StateStore.BucketCol, lit(0))
-    store.commit(spark, StatsTable, next, Seq(0))
-  }
 
   private[queries] def runMaintenance(spark: SparkSession, sfDir: String,
       filesPerTrigger: Int): StateStore =
@@ -166,7 +120,7 @@ object Bm25CdcQueries {
     val store = runMaintenance(spark, sfDir, filesPerTrigger)
     val feat = store.currentState(spark, DocsTable)
       .select("doc_id", "dl", "tf1", "tf2", "tf3")
-    val stats = store.currentState(spark, StatsTable)
+    val stats = store.rawState(spark, StatsTable)
       .select("n", "sdl", "df1", "df2", "df3")
     graft.ops.LlmOps.bm25TopK(feat, stats)
       .localCheckpoint(eager = true)
@@ -177,7 +131,7 @@ object Bm25CdcQueries {
     */
   private[queries] def statsAndRebuild(spark: SparkSession,
       store: StateStore): (Seq[Long], Seq[Long]) = {
-    val s = store.currentState(spark, StatsTable)
+    val s = store.rawState(spark, StatsTable)
       .select("n", "sdl", "df1", "df2", "df3").head()
     val r = store.currentState(spark, DocsTable)
       .agg(count(lit(1)).cast("long").as("n"),

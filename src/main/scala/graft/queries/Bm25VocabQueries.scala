@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.cdc.{Merge, MergeCommit, StateStore}
+import graft.cdc.{MergeCommit, StateStore}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -57,77 +57,29 @@ object Bm25VocabQueries {
       .cast("map<string,int>")
   }
 
+  /** One micro-batch ([[MergeCommit.mergeMaintained]]): features
+    * scan-local on batch rows, then, off the merge's (pre, post) slices
+    * restricted to the batch's keys, the vocabulary deltas — ±1 per
+    * (stored winner, distinct term); a term whose df reaches 0 leaves
+    * the vocabulary — and the scalar stats deltas, keyed by the one
+    * constant `stat_id`.
+    */
   private[queries] def processBatch(store: StateStore,
                                     batch: DataFrame): Unit =
-    store.atomically(Seq(DocsTable, VocabTable, StatsTable)) {
-      val compacted =
-        Merge.compactKeepTombstones(batch, Seq("doc_id")).persist()
-      try {
-        val meta = MergeCommit.toBatchMeta(compacted, Seq("doc_id"), NBuckets)
-        val featMeta = meta
-          .withColumn("dl", size(split(col("text"), " ")))
-          .withColumn("tc", termCounts)
-          .select(col("doc_id"), col("dl"), col("tc"),
-            col(StateStore.TsCol), col(StateStore.SeqCol),
-            col(StateStore.DeletedCol), col(StateStore.BucketCol))
-        MergeCommit.mergeBatchMeta(store, DocsTable, featMeta,
-          Seq("doc_id"), persistSlices = true).foreach { result =>
-          try commitVocabAndStats(store, featMeta, result)
-          finally result.unpersist()
-        }
-      } finally compacted.unpersist(blocking = false)
-    }
-
-  /** Vocabulary and scalar-stats deltas off the merge's (pre, post)
-    * slices, restricted to the batch's keys.
-    */
-  private def commitVocabAndStats(store: StateStore, featMeta: DataFrame,
-                                  result: MergeCommit.Result): Unit = {
-    val spark = featMeta.sparkSession
-    val keys = featMeta.select("doc_id").distinct()
-    // Scalar stats deltas, kicked off CONCURRENTLY with the vocabulary
-    // branch below (graft.Par — independent reads of the same
-    // persisted slices).
-    def contrib(state: DataFrame, sign: Int): DataFrame =
-      state.join(keys, Seq("doc_id"), "left_semi")
-        .filter(!col(StateStore.DeletedCol))
-        .select(lit(sign.toLong).as("dn"),
-          (col("dl").cast("long") * sign).as("ddl"))
-    val fScalar = graft.Par.future {
-      contrib(result.preSlice, -1)
-        .unionAll(contrib(result.postSlice, +1))
-        .agg(coalesce(sum("dn"), lit(0L)).as("dn"),
-          coalesce(sum("ddl"), lit(0L)).as("ddl"))
-        .head()
-    }
-    // Vocabulary deltas: ±1 per (stored winner, distinct term); a term
-    // whose df reaches 0 leaves the vocabulary. Wrapped in Try so a
-    // vocab failure still JOINS the scalar future before propagating
-    // (the Par await-all rule: no stray action in flight when the
-    // caller unwinds).
-    val vocabTry = scala.util.Try {
+    MergeCommit.mergeMaintained(store, DocsTable,
+      Seq(VocabTable, StatsTable), batch, Seq("doc_id"))(_ => Seq(
+        col("doc_id"), size(split(col("text"), " ")).as("dl"),
+        termCounts.as("tc"))) { (featMeta, result) =>
+      val keys = featMeta.select("doc_id").distinct()
       MergeCommit.commitDeltas(store, VocabTable, result, keys, Seq("term"),
         Seq("term"), dropAtZero = true)(
         _.select(explode(map_keys(col("tc"))).as("term"))
           .withColumn("df", lit(1L)))
+      MergeCommit.commitDeltas(store, StatsTable, result, keys,
+        Seq("stat_id"), Seq("stat_id"), dropAtZero = false)(
+        _.select(lit(0).as("stat_id"), lit(1L).as("n"),
+          col("dl").cast("long").as("sdl")))
     }
-    val dTry = scala.util.Try(graft.Par.await(fScalar))
-    vocabTry.get // rethrow vocab failure first (scalar joined)
-    val d = dTry.get
-    val (pn, psdl) =
-      if (store.exists(StatsTable)) {
-        val r = store.currentState(spark, StatsTable).select("n", "sdl").head()
-        (r.getLong(0), r.getLong(1))
-      } else (0L, 0L)
-    import spark.implicits._
-    val nextStats = Seq((0, pn + d.getLong(0), psdl + d.getLong(1)))
-      .toDF("stat_id", "n", "sdl")
-      .withColumn(StateStore.TsCol, lit(0L))
-      .withColumn(StateStore.SeqCol, lit(0L))
-      .withColumn(StateStore.DeletedCol, lit(false))
-      .withColumn(StateStore.BucketCol, lit(0))
-    store.commit(spark, StatsTable, nextStats, Seq(0))
-  }
 
   private[queries] def runMaintenance(spark: SparkSession, sfDir: String,
       filesPerTrigger: Int): StateStore =
@@ -180,7 +132,7 @@ object Bm25VocabQueries {
     val dfRow = store.readBuckets(spark, VocabTable, termBuckets)
       .filter(col("term").isin(terms: _*))
       .agg(dfCols.head, dfCols.tail: _*)
-    val stats = store.currentState(spark, StatsTable).select("n", "sdl")
+    val stats = store.rawState(spark, StatsTable).select("n", "sdl")
     graft.ops.LlmOps.bm25TopKN(feat, stats.crossJoin(dfRow), terms.size)
   }
 
@@ -193,7 +145,7 @@ object Bm25VocabQueries {
     val v = store.rawState(spark, VocabTable)
       .select("term", "df")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val s = store.currentState(spark, StatsTable)
+    val s = store.rawState(spark, StatsTable)
       .select("n", "sdl").head()
     val rv = store.currentState(spark, DocsTable)
       .select(explode(map_keys(col("tc"))).as("term"))

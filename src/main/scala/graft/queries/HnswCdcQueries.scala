@@ -1,10 +1,9 @@
 package graft.queries
 
 import graft.Tables
-import graft.cdc.{Envelope, Merge, MergeCommit, StateStore}
+import graft.cdc.{Envelope, MergeCommit, StateStore}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** Incremental HNSW graph maintenance under CDC (VERDICT r16 #5) —
   * the ANN family's strongest index freed from its batch-only build:
@@ -122,44 +121,29 @@ object HnswCdcQueries {
   private def label(spark: SparkSession, s: String): Unit =
     spark.sparkContext.setJobDescription(s"hnsw: $s")
 
-  private[queries] def processBatch(store: StateStore,
-                                    batch: DataFrame): Unit =
-    store.atomically(Seq(VecTable, CensusTable, EdgeTable)) {
-      val spark = batch.sparkSession
-      label(spark, "compact batch")
-      val compacted =
-        Merge.compactKeepTombstones(batch, Seq("vec_id")).persist()
-      try {
-        val meta = MergeCommit.toBatchMeta(compacted, Seq("vec_id"), NBuckets)
-        val featMeta = meta.select(
-          Seq(col("vec_id"), col("emb").as("v")) ++
-            BandDims.map { case (g, dims) =>
-              bandExpr(col("emb"), g, dims).as(s"b$g") } ++
-            Seq(col(StateStore.TsCol), col(StateStore.SeqCol),
-              col(StateStore.DeletedCol), col(StateStore.BucketCol)): _*)
-        label(spark, "vectors merge")
-        MergeCommit.mergeBatchMeta(store, VecTable, featMeta,
-          Seq("vec_id"), persistSlices = true).foreach { result =>
-          try {
-            commitCensusDeltas(store, featMeta, result)
-            linkBatch(store, featMeta, result)
-          } finally result.unpersist()
-        }
-      } finally compacted.unpersist(blocking = false)
-    }
-
-  /** Census: ±1 per (stored winner, band); a band whose occupancy
-    * reaches 0 leaves the census.
+  /** One micro-batch ([[MergeCommit.mergeMaintained]]): bands
+    * scan-local on batch rows, then the census deltas — ±1 per (stored
+    * winner, band); a band whose occupancy reaches 0 leaves the census
+    * — and the relink.
     */
-  private def commitCensusDeltas(store: StateStore, featMeta: DataFrame,
-                                 result: MergeCommit.Result): Unit = {
-    label(featMeta.sparkSession, "census deltas")
-    MergeCommit.commitDeltas(store, CensusTable, result,
-      featMeta.select("vec_id").distinct(), Seq("band"), Seq("band"),
-      dropAtZero = true)(
-      _.select(explode(array(BandDims.map { case (g, _) =>
-          col(s"b$g") }: _*)).as("band"))
-        .withColumn("n", lit(1L)))
+  private[queries] def processBatch(store: StateStore,
+                                    batch: DataFrame): Unit = {
+    label(batch.sparkSession, "merge batch")
+    MergeCommit.mergeMaintained(store, VecTable,
+      Seq(CensusTable, EdgeTable), batch, Seq("vec_id"))(_ =>
+        Seq(col("vec_id"), col("emb").as("v")) ++
+          BandDims.map { case (g, dims) =>
+            bandExpr(col("emb"), g, dims).as(s"b$g") }) {
+      (featMeta, result) =>
+        label(featMeta.sparkSession, "census deltas")
+        MergeCommit.commitDeltas(store, CensusTable, result,
+          featMeta.select("vec_id").distinct(), Seq("band"), Seq("band"),
+          dropAtZero = true)(
+          _.select(explode(array(BandDims.map { case (g, _) =>
+              col(s"b$g") }: _*)).as("band"))
+            .withColumn("n", lit(1L)))
+        linkBatch(store, featMeta, result)
+    }
   }
 
   /** Candidate pairs — batch live winners × stored bucket mates over
@@ -242,10 +226,7 @@ object HnswCdcQueries {
     val existing =
       if (store.exists(EdgeTable)) store.readBuckets(spark, EdgeTable, affected)
         .select("layer", "vec_id", "neighbor", "cos")
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType.fromDDL(
-          "layer int, vec_id bigint, neighbor bigint, cos double"))
+      else MergeCommit.emptyLike(candL)
     // ONE window pass over (stored-minus-batch-keys ∪ candidates)
     // replaces the former keep/accumulate/recut three-way split (six
     // shuffles, ~17 jobs per relink in the r17 JobProf): batch keys'

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.cdc.{Envelope, Merge, MergeCommit, StateStore}
+import graft.cdc.{Envelope, MergeCommit, StateStore}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   *    the postings, upserted with the same bucket-pruned, (ts,seq)-
   *    ordered merge as every CDC target — only buckets containing
   *    evented keys are rewritten.
-  *  - `ivf.index` (label, dim → running sum, member count): the coarse
+  *  - `ivf.index` (label, dim → member count, running sum): the coarse
   *    quantizer state, updated by DELTAS — each batch subtracts the
   *    evented keys' OLD contributions (read from assignment state
   *    before the merge) and adds their NEW ones. Un-evented vectors
@@ -88,32 +88,24 @@ object IvfCdcQueries {
     move.unionAll(stale).unionAll(del).unionAll(snap)
   }
 
-  /** One micro-batch: ordered merge into assignments (the shared
-    * [[MergeCommit]] recipe) plus the index delta pass over the
-    * returned (pre, post) state slices: per (label, dim), the evented
-    * keys' old components leave and their new ones join
+  /** One micro-batch ([[MergeCommit.mergeMaintained]]): ordered merge
+    * into assignments plus the index delta pass over the returned
+    * (pre, post) state slices: per (label, dim), the evented keys' old
+    * components leave and their new ones join
     * ([[MergeCommit.commitDeltas]]; index rows bucket by label alone).
-    * Crash-atomic across both tables via [[StateStore.atomically]].
+    * A (label, dim) whose member count reaches 0 leaves the index, so
+    * dead keys never linger with the roundoff of cancelled double sums.
     */
   private[queries] def processBatch(store: StateStore,
                                     batch: DataFrame): Unit =
-    store.atomically(Seq(AssignTable, IndexTable)) {
-      val compacted =
-        Merge.compactKeepTombstones(batch, Seq("vec_id")).persist()
-      try {
-        val batchMeta = MergeCommit.toBatchMeta(compacted, Seq("vec_id"),
-          NBuckets)
-        MergeCommit.mergeBatchMeta(store, AssignTable, batchMeta,
-          Seq("vec_id"), persistSlices = true).foreach { result =>
-          try MergeCommit.commitDeltas(store, IndexTable, result,
-              batchMeta.select("vec_id").distinct(), Seq("label", "i"),
-              Seq("label"), dropAtZero = false)(
-              _.select(col("label"), posexplode(col("emb")).as(Seq("p", "v")))
-                .select(col("label"), (col("p") + 1).as("i"),
-                  col("v").as("s"), lit(1L).as("n")))
-          finally result.unpersist()
-        }
-      } finally compacted.unpersist(blocking = false)
+    MergeCommit.mergeMaintained(store, AssignTable, Seq(IndexTable), batch,
+      Seq("vec_id"))(MergeCommit.rowColumns) { (batchMeta, result) =>
+      MergeCommit.commitDeltas(store, IndexTable, result,
+        batchMeta.select("vec_id").distinct(), Seq("label", "i"),
+        Seq("label"), dropAtZero = true)(
+        _.select(col("label"), posexplode(col("emb")).as(Seq("p", "v")))
+          .select(col("label"), (col("p") + 1).as("i"), lit(1L).as("n"),
+            col("v").as("s")))
     }
 
   /** The registered query: stream the staged embedding change log
@@ -155,7 +147,7 @@ object IvfCdcQueries {
       .orderBy("label", "i")
 
   /** The compaction-time hygiene pass the delta path's scaladoc
-    * promises: recompute the (label, i → s, n) index from the
+    * promises: recompute the (label, i → n, s) index from the
     * assignments table from scratch and commit it as a fresh version.
     * Run periodically on a real deployment to re-zero double-precision
     * drift (deltas accumulate machine epsilon per reorder); the rebuild
@@ -170,7 +162,7 @@ object IvfCdcQueries {
     val rebuilt = store.currentState(spark, AssignTable)
       .select(col("label"), posexplode(col("emb")).as(Seq("p", "v")))
       .groupBy(col("label"), (col("p") + 1).as("i"))
-      .agg(sum("v").as("s"), count(lit(1)).as("n"))
+      .agg(count(lit(1)).as("n"), sum("v").as("s"))
       .withColumn(StateStore.BucketCol,
         StateStore.bucketExpr(Seq("label"), NBuckets))
       .persist()

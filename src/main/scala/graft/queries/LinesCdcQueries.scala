@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.cdc.{Merge, MergeCommit, StateStore}
+import graft.cdc.{MergeCommit, StateStore}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -43,39 +43,27 @@ object LinesCdcQueries {
   private val DocsTable = "ln.docs"
   private val CensusTable = "ln.census"
 
+  /** One micro-batch ([[MergeCommit.mergeMaintained]]): features
+    * map-side on batch rows — plant, split, derive source (the fixture
+    * invariant source = 'src' || doc_id % 20; events carry only
+    * (doc_id, text)); the cast pins containsNull so the parquet
+    * round-trip can't trip the A11 widen guard — then ±1 per (stored
+    * winner, DISTINCT line digest), the exact increment of a
+    * count(DISTINCT doc_id) census.
+    */
   private[queries] def processBatch(store: StateStore,
                                     batch: DataFrame): Unit =
-    store.atomically(Seq(DocsTable, CensusTable)) {
-      val compacted =
-        Merge.compactKeepTombstones(batch, Seq("doc_id")).persist()
-      try {
-        val meta = MergeCommit.toBatchMeta(compacted, Seq("doc_id"), NBuckets)
-        // Features map-side on batch rows: plant, split, derive source
-        // (the fixture invariant source = 'src' || doc_id % 20 — events
-        // carry only (doc_id, text)). Cast pins containsNull so the
-        // parquet round-trip can't trip the A11 widen guard.
-        val featMeta = meta
-          .withColumn("source",
-            concat(lit("src"), (col("doc_id") % 20).cast("string")))
-          .withColumn("lines",
-            split(graft.ops.LlmOps.plantLines(col("text")), "\n")
-              .cast("array<string>"))
-          .select(col("doc_id"), col("source"), col("lines"),
-            col(StateStore.TsCol), col(StateStore.SeqCol),
-            col(StateStore.DeletedCol), col(StateStore.BucketCol))
-        MergeCommit.mergeBatchMeta(store, DocsTable, featMeta,
-          Seq("doc_id"), persistSlices = true).foreach { result =>
-          // ±1 per (stored winner, DISTINCT line digest) — the exact
-          // increment of a count(DISTINCT doc_id) census.
-          try MergeCommit.commitDeltas(store, CensusTable, result,
-              featMeta.select("doc_id").distinct(), Seq("d"), Seq("d"),
-              dropAtZero = true)(
-              _.select(explode(array_distinct(
-                  transform(col("lines"), l => md5(l)))).as("d"))
-                .withColumn("nd", lit(1L)))
-          finally result.unpersist()
-        }
-      } finally compacted.unpersist(blocking = false)
+    MergeCommit.mergeMaintained(store, DocsTable, Seq(CensusTable), batch,
+      Seq("doc_id"))(_ => Seq(col("doc_id"),
+        concat(lit("src"), (col("doc_id") % 20).cast("string")).as("source"),
+        split(graft.ops.LlmOps.plantLines(col("text")), "\n")
+          .cast("array<string>").as("lines"))) { (featMeta, result) =>
+      MergeCommit.commitDeltas(store, CensusTable, result,
+        featMeta.select("doc_id").distinct(), Seq("d"), Seq("d"),
+        dropAtZero = true)(
+        _.select(explode(array_distinct(
+            transform(col("lines"), l => md5(l)))).as("d"))
+          .withColumn("nd", lit(1L)))
     }
 
   private[queries] def runMaintenance(spark: SparkSession, sfDir: String,

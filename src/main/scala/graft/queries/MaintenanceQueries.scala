@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.cdc.{ChangeGen, Envelope, Merge}
+import graft.cdc.{ChangeGen, Envelope, Merge, MergeCommit}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1457,19 +1457,10 @@ object MaintenanceQueries {
     val pk = Seq("c_custkey")
     val cust = Tables.load(spark, sfDir, "customer")
 
-    def wave(df: DataFrame, ts: Long): Unit = {
-      graft.cdc.MergeCommit.mergeBatchMeta(store, target, df
-        .withColumn(graft.cdc.StateStore.TsCol, lit(ts))
-        .withColumn(graft.cdc.StateStore.SeqCol,
-          col("c_custkey").cast("long"))
-        .withColumn(graft.cdc.StateStore.DeletedCol, lit(false))
-        .withColumn(graft.cdc.StateStore.BucketCol,
-          graft.cdc.StateStore.bucketExpr(pk, 8)), pk)
-      ()
-    }
     def keyWave(key: Int, delta: Double, ts: Long): Unit =
-      wave(cust.filter(col("c_custkey") === key)
-        .withColumn("c_acctbal", col("c_acctbal") + delta), ts)
+      MergeCommit.mergeRows(store, target, cust
+        .filter(col("c_custkey") === key)
+        .withColumn("c_acctbal", col("c_acctbal") + delta), "c_custkey", ts)
     def bucketOf(key: Int): Int =
       cust.filter(col("c_custkey") === key)
         .select(graft.cdc.StateStore.bucketExpr(pk, 8)).head.getInt(0)
@@ -1478,7 +1469,8 @@ object MaintenanceQueries {
       store.compactBinpack(spark, target,
         targetFilesPerBucket = Int.MaxValue, maxVersionLag = 2)
 
-    wave(cust, 1000L)              // v0: snapshot, all buckets
+    // v0: snapshot, all buckets
+    MergeCommit.mergeRows(store, target, cust, "c_custkey", 1000L)
     keyWave(44, 100.0, 2000L)      // v1: hot bucket only
     keyWave(44, 250.0, 3000L)      // v2: hot bucket again (latest wins)
     val hot = bucketOf(44)
@@ -1600,20 +1592,11 @@ object MaintenanceQueries {
     val wh = graft.Scratch.fresh(SortCompactDir, sfDir).toString
     val store = new graft.cdc.StateStore(wh, nBuckets = 8)
     val target = SortCompactTarget
-    val pk = Seq("c_custkey")
     val cust = Tables.load(spark, sfDir, "customer")
-    def wave(df: DataFrame, ts: Long): Unit = {
-      graft.cdc.MergeCommit.mergeBatchMeta(store, target, df
-        .withColumn(graft.cdc.StateStore.TsCol, lit(ts))
-        .withColumn(graft.cdc.StateStore.SeqCol, col("c_custkey").cast("long"))
-        .withColumn(graft.cdc.StateStore.DeletedCol, lit(false))
-        .withColumn(graft.cdc.StateStore.BucketCol,
-          graft.cdc.StateStore.bucketExpr(pk, 8)), pk)
-      ()
-    }
-    wave(cust, 1000L)
-    wave(cust.filter(col("c_custkey") % 5 === 0)
-      .withColumn("c_acctbal", col("c_acctbal") + 200.0), 2000L)
+    MergeCommit.mergeRows(store, target, cust, "c_custkey", 1000L)
+    MergeCommit.mergeRows(store, target, cust
+      .filter(col("c_custkey") % 5 === 0)
+      .withColumn("c_acctbal", col("c_acctbal") + 200.0), "c_custkey", 2000L)
     // ~4 files per bucket at any sf, so per-file ranges are visible.
     val perFile = math.max(1L, cust.count() / (8L * 4L))
     def summarize(step: String): DataFrame =
@@ -1681,29 +1664,20 @@ object MaintenanceQueries {
     val wh = graft.Scratch.fresh("graft-ttts-", sfDir).toString
     val store = new graft.cdc.StateStore(wh, nBuckets = 8)
     val target = TtTsTarget
-    val pk = Seq("s_suppkey")
     val sup = Tables.load(spark, sfDir, "supplier")
-    def wave(df: DataFrame, ts: Long, deleted: Boolean): Unit = {
-      graft.cdc.MergeCommit.mergeBatchMeta(store, target, df
-        .withColumn(graft.cdc.StateStore.TsCol, lit(ts))
-        .withColumn(graft.cdc.StateStore.SeqCol, col("s_suppkey").cast("long"))
-        .withColumn(graft.cdc.StateStore.DeletedCol, lit(deleted))
-        .withColumn(graft.cdc.StateStore.BucketCol,
-          graft.cdc.StateStore.bucketExpr(pk, 8)), pk)
-      ()
-    }
     // Markers are the committed versions' OWN persisted instants
     // (ADVICE r13: wall-clock-plus-sleep markers aliased to the
     // neighboring commit on coarse-mtime filesystems; commits.jsonl
     // instants are strictly monotone, so `AS OF commitTimeOf(v)`
     // resolves to exactly v regardless of clock or fs granularity).
-    wave(sup, 1000L, deleted = false)
+    MergeCommit.mergeRows(store, target, sup, "s_suppkey", 1000L)
     val t1 = store.commitTimeOf(target, 0)
-    wave(sup.filter(col("s_suppkey") % 3 === 0)
-      .withColumn("s_acctbal", col("s_acctbal") + 100.0), 2000L,
-      deleted = false)
+    MergeCommit.mergeRows(store, target, sup
+      .filter(col("s_suppkey") % 3 === 0)
+      .withColumn("s_acctbal", col("s_acctbal") + 100.0), "s_suppkey", 2000L)
     val t2 = store.commitTimeOf(target, 1)
-    wave(sup.filter(col("s_suppkey") % 7 === 0), 3000L, deleted = true)
+    MergeCommit.mergeRows(store, target,
+      sup.filter(col("s_suppkey") % 7 === 0), "s_suppkey", 3000L, lit(true))
     ttTsRuns.put(sfDir, (wh, t1, t2))
 
     def summarize(step: String, df: DataFrame): DataFrame =
@@ -1756,24 +1730,15 @@ object MaintenanceQueries {
     val wh = graft.Scratch.fresh("graft-rbts-", sfDir).toString
     val store = new graft.cdc.StateStore(wh, nBuckets = 8)
     val target = "cdc.commerce_supplier_rb"
-    val pk = Seq("s_suppkey")
     val sup = Tables.load(spark, sfDir, "supplier")
-    def wave(df: DataFrame, ts: Long, deleted: Boolean): Unit = {
-      graft.cdc.MergeCommit.mergeBatchMeta(store, target, df
-        .withColumn(graft.cdc.StateStore.TsCol, lit(ts))
-        .withColumn(graft.cdc.StateStore.SeqCol, col("s_suppkey").cast("long"))
-        .withColumn(graft.cdc.StateStore.DeletedCol, lit(deleted))
-        .withColumn(graft.cdc.StateStore.BucketCol,
-          graft.cdc.StateStore.bucketExpr(pk, 8)), pk)
-      ()
-    }
-    wave(sup, 1000L, deleted = false)
+    MergeCommit.mergeRows(store, target, sup, "s_suppkey", 1000L)
     val t1 = store.commitTimeOf(target, 0)
-    wave(sup.filter(col("s_suppkey") % 3 === 0)
-      .withColumn("s_acctbal", col("s_acctbal") + 100.0), 2000L,
-      deleted = false)
+    MergeCommit.mergeRows(store, target, sup
+      .filter(col("s_suppkey") % 3 === 0)
+      .withColumn("s_acctbal", col("s_acctbal") + 100.0), "s_suppkey", 2000L)
     val vRestored = store.restoreAtTime(target, t1)
-    wave(sup.filter(col("s_suppkey") % 7 === 0), 3000L, deleted = true)
+    MergeCommit.mergeRows(store, target,
+      sup.filter(col("s_suppkey") % 7 === 0), "s_suppkey", 3000L, lit(true))
 
     def summarize(step: String, df: DataFrame): DataFrame =
       df.agg(count(lit(1)).as("n_rows"),
@@ -1817,21 +1782,13 @@ object MaintenanceQueries {
     val target = "cdc.commerce_supplier_tc"
     val pk = Seq("s_suppkey")
     val sup = Tables.load(spark, sfDir, "supplier")
-    def wave(df: DataFrame, ts: Long, deleted: Boolean): Unit = {
-      graft.cdc.MergeCommit.mergeBatchMeta(store, target, df
-        .withColumn(graft.cdc.StateStore.TsCol, lit(ts))
-        .withColumn(graft.cdc.StateStore.SeqCol, col("s_suppkey").cast("long"))
-        .withColumn(graft.cdc.StateStore.DeletedCol, lit(deleted))
-        .withColumn(graft.cdc.StateStore.BucketCol,
-          graft.cdc.StateStore.bucketExpr(pk, 8)), pk)
-      ()
-    }
-    wave(sup, 1000L, deleted = false)
+    MergeCommit.mergeRows(store, target, sup, "s_suppkey", 1000L)
     val t1 = store.commitTimeOf(target, 0)
-    wave(sup.filter(col("s_suppkey") % 3 === 0)
-      .withColumn("s_acctbal", col("s_acctbal") + 100.0), 2000L,
-      deleted = false)
-    wave(sup.filter(col("s_suppkey") % 7 === 0), 3000L, deleted = true)
+    MergeCommit.mergeRows(store, target, sup
+      .filter(col("s_suppkey") % 3 === 0)
+      .withColumn("s_acctbal", col("s_acctbal") + 100.0), "s_suppkey", 2000L)
+    MergeCommit.mergeRows(store, target,
+      sup.filter(col("s_suppkey") % 7 === 0), "s_suppkey", 3000L, lit(true))
 
     store.diffTimes(spark, target, t1,
       store.commitTimeOf(target, store.currentVersion(target)), pk)
@@ -1876,27 +1833,18 @@ object MaintenanceQueries {
     val wh = graft.Scratch.fresh("graft-expts-", sfDir).toString
     val store = new graft.cdc.StateStore(wh, nBuckets = 8)
     val target = "cdc.commerce_supplier_exp"
-    val pk = Seq("s_suppkey")
     val sup = Tables.load(spark, sfDir, "supplier")
-    def wave(df: DataFrame, ts: Long, deleted: Boolean): Unit = {
-      graft.cdc.MergeCommit.mergeBatchMeta(store, target, df
-        .withColumn(graft.cdc.StateStore.TsCol, lit(ts))
-        .withColumn(graft.cdc.StateStore.SeqCol, col("s_suppkey").cast("long"))
-        .withColumn(graft.cdc.StateStore.DeletedCol, lit(deleted))
-        .withColumn(graft.cdc.StateStore.BucketCol,
-          graft.cdc.StateStore.bucketExpr(pk, 8)), pk)
-      ()
-    }
-    wave(sup, 1000L, deleted = false)
+    MergeCommit.mergeRows(store, target, sup, "s_suppkey", 1000L)
     store.createRef(target, "audit", 0)
-    wave(sup.filter(col("s_suppkey") % 3 === 0)
-      .withColumn("s_acctbal", col("s_acctbal") + 100.0), 2000L,
-      deleted = false)
+    MergeCommit.mergeRows(store, target, sup
+      .filter(col("s_suppkey") % 3 === 0)
+      .withColumn("s_acctbal", col("s_acctbal") + 100.0), "s_suppkey", 2000L)
     // Horizon strictly between wave 2's and wave 3's instants:
     // commits.jsonl stamping is strictly monotone, so +1 is guaranteed
     // to sit in the gap — no sleeps, no granularity dependence.
     val horizon = store.commitTimeOf(target, 1) + 1
-    wave(sup.filter(col("s_suppkey") % 7 === 0), 3000L, deleted = true)
+    MergeCommit.mergeRows(store, target,
+      sup.filter(col("s_suppkey") % 7 === 0), "s_suppkey", 3000L, lit(true))
     store.expireOlderThan(target, horizon)
 
     val kept = store.versions(target)
@@ -1967,24 +1915,14 @@ object MaintenanceQueries {
     val wh = graft.Scratch.fresh("graft-expret-", sfDir).toString
     val store = new graft.cdc.StateStore(wh, nBuckets = 8)
     val target = "cdc.commerce_supplier_ret"
-    val pk = Seq("s_suppkey")
     val sup = Tables.load(spark, sfDir, "supplier")
-    def wave(df: DataFrame, ts: Long, deleted: Column): Unit = {
-      graft.cdc.MergeCommit.mergeBatchMeta(store, target, df
-        .withColumn(graft.cdc.StateStore.TsCol, lit(ts))
-        .withColumn(graft.cdc.StateStore.SeqCol, col("s_suppkey").cast("long"))
-        .withColumn(graft.cdc.StateStore.DeletedCol, deleted)
-        .withColumn(graft.cdc.StateStore.BucketCol,
-          graft.cdc.StateStore.bucketExpr(pk, 8)), pk)
-      ()
-    }
-    wave(sup, 1000L, lit(false))                                      // v0
-    wave(sup.withColumn("s_acctbal", col("s_acctbal") + 100.0),
-      2000L, lit(false))                                              // v1
-    wave(sup.withColumn("s_acctbal", col("s_acctbal") + 200.0),
-      3000L, lit(false))                                              // v2
-    wave(sup.withColumn("s_acctbal", col("s_acctbal") + 300.0),
-      4000L, col("s_suppkey") % 7 === 0)                              // v3
+    def bal(delta: Double) =
+      sup.withColumn("s_acctbal", col("s_acctbal") + delta)
+    MergeCommit.mergeRows(store, target, sup, "s_suppkey", 1000L)        // v0
+    MergeCommit.mergeRows(store, target, bal(100.0), "s_suppkey", 2000L) // v1
+    MergeCommit.mergeRows(store, target, bal(200.0), "s_suppkey", 3000L) // v2
+    MergeCommit.mergeRows(store, target, bal(300.0), "s_suppkey", 4000L,
+      col("s_suppkey") % 7 === 0)                                        // v3
     store.expireSnapshots(target,
       olderThan = Some(System.currentTimeMillis()), retainLast = Some(2))
 
@@ -2109,20 +2047,11 @@ object MaintenanceQueries {
     val wh = graft.Scratch.fresh("graft-sdrop-", sfDir).toString
     val store = new graft.cdc.StateStore(wh, nBuckets = 8)
     val target = "cdc.commerce_supplier_sd"
-    val pk = Seq("s_suppkey")
     val sup = Tables.load(spark, sfDir, "supplier")
-    def wave(df: DataFrame, ts: Long): Unit = {
-      graft.cdc.MergeCommit.mergeBatchMeta(store, target, df
-        .withColumn(graft.cdc.StateStore.TsCol, lit(ts))
-        .withColumn(graft.cdc.StateStore.SeqCol, col("s_suppkey"))
-        .withColumn(graft.cdc.StateStore.DeletedCol, lit(false))
-        .withColumn(graft.cdc.StateStore.BucketCol,
-          graft.cdc.StateStore.bucketExpr(pk, 8)), pk)
-      ()
-    }
-    wave(sup, 1000L)
-    wave(sup.filter(col("s_suppkey") % 3 === 0).drop("s_name")
-      .withColumn("s_acctbal", col("s_acctbal") + 100.0), 2000L)
+    MergeCommit.mergeRows(store, target, sup, "s_suppkey", 1000L)
+    MergeCommit.mergeRows(store, target, sup
+      .filter(col("s_suppkey") % 3 === 0).drop("s_name")
+      .withColumn("s_acctbal", col("s_acctbal") + 100.0), "s_suppkey", 2000L)
 
     store.currentState(spark, target)
       .agg(count(lit(1)).as("n_rows"),
@@ -2159,23 +2088,14 @@ object MaintenanceQueries {
     val wh = graft.Scratch.fresh("graft-srename-", sfDir).toString
     val store = new graft.cdc.StateStore(wh, nBuckets = 8)
     val target = "cdc.commerce_supplier_sr"
-    val pk = Seq("s_suppkey")
     val sup = Tables.load(spark, sfDir, "supplier")
-    def wave(df: DataFrame, ts: Long): Unit = {
-      graft.cdc.MergeCommit.mergeBatchMeta(store, target, df
-        .withColumn(graft.cdc.StateStore.TsCol, lit(ts))
-        .withColumn(graft.cdc.StateStore.SeqCol, col("s_suppkey"))
-        .withColumn(graft.cdc.StateStore.DeletedCol, lit(false))
-        .withColumn(graft.cdc.StateStore.BucketCol,
-          graft.cdc.StateStore.bucketExpr(pk, 8)), pk)
-      ()
-    }
-    wave(sup, 1000L)
+    MergeCommit.mergeRows(store, target, sup, "s_suppkey", 1000L)
     store.renameColumn(target, "s_name", "supplier_name")
-    wave(sup.filter(col("s_suppkey") % 3 === 0)
+    MergeCommit.mergeRows(store, target, sup
+      .filter(col("s_suppkey") % 3 === 0)
       .withColumn("s_name", concat(col("s_name"), lit(" v2")))
       .withColumn("s_acctbal", col("s_acctbal") + 100.0)
-      .withColumnRenamed("s_name", "supplier_name"), 2000L)
+      .withColumnRenamed("s_name", "supplier_name"), "s_suppkey", 2000L)
 
     store.currentState(spark, target)
       .agg(count(lit(1)).as("n_rows"),
@@ -3333,22 +3253,13 @@ object MaintenanceQueries {
     val wh = graft.Scratch.fresh("graft-hist-", sfDir).toString
     val store = new graft.cdc.StateStore(wh, nBuckets = 8)
     val target = "cdc.commerce_supplier_hist"
-    val pk = Seq("s_suppkey")
     val sup = Tables.load(spark, sfDir, "supplier")
-    def wave(df: DataFrame, ts: Long, deleted: Boolean): Unit = {
-      graft.cdc.MergeCommit.mergeBatchMeta(store, target, df
-        .withColumn(graft.cdc.StateStore.TsCol, lit(ts))
-        .withColumn(graft.cdc.StateStore.SeqCol, col("s_suppkey").cast("long"))
-        .withColumn(graft.cdc.StateStore.DeletedCol, lit(deleted))
-        .withColumn(graft.cdc.StateStore.BucketCol,
-          graft.cdc.StateStore.bucketExpr(pk, 8)), pk)
-      ()
-    }
-    wave(sup, 1000L, deleted = false)                                  // v0
-    wave(sup.filter(col("s_suppkey") % 3 === 0)
-      .withColumn("s_acctbal", col("s_acctbal") + 100.0), 2000L,
-      deleted = false)                                                 // v1
-    wave(sup.filter(col("s_suppkey") % 7 === 0), 3000L, deleted = true) // v2
+    MergeCommit.mergeRows(store, target, sup, "s_suppkey", 1000L)      // v0
+    MergeCommit.mergeRows(store, target, sup                           // v1
+      .filter(col("s_suppkey") % 3 === 0)
+      .withColumn("s_acctbal", col("s_acctbal") + 100.0), "s_suppkey", 2000L)
+    MergeCommit.mergeRows(store, target,                               // v2
+      sup.filter(col("s_suppkey") % 7 === 0), "s_suppkey", 3000L, lit(true))
     store.restore(target, 0)                                           // v3
     val w = org.apache.spark.sql.expressions.Window.orderBy("version")
     store.history(spark, target)
@@ -3385,20 +3296,14 @@ object MaintenanceQueries {
     val wh = graft.Scratch.fresh("graft-vacplan-", sfDir).toString
     val store = new graft.cdc.StateStore(wh, nBuckets = 8)
     val target = "cdc.commerce_supplier_vp"
-    val pk = Seq("s_suppkey")
     val sup = Tables.load(spark, sfDir, "supplier")
     // Full-table waves: every version rewrites every bucket, so dir
     // reachability is deterministic at any scale factor (a modular
     // wave could leave old dirs referenced at small sf and not at
     // large, making the plan sf-dependent).
     def wave(delta: Double, ts: Long): Unit = {
-      graft.cdc.MergeCommit.mergeBatchMeta(store, target, sup
-        .withColumn("s_acctbal", col("s_acctbal") + delta)
-        .withColumn(graft.cdc.StateStore.TsCol, lit(ts))
-        .withColumn(graft.cdc.StateStore.SeqCol, col("s_suppkey").cast("long"))
-        .withColumn(graft.cdc.StateStore.DeletedCol, lit(false))
-        .withColumn(graft.cdc.StateStore.BucketCol,
-          graft.cdc.StateStore.bucketExpr(pk, 8)), pk)
+      MergeCommit.mergeRows(store, target,
+        sup.withColumn("s_acctbal", col("s_acctbal") + delta), "s_suppkey", ts)
       ()
     }
     wave(0.0, 1000L)   // v0

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.cdc.{Merge, MergeCommit, StateStore}
+import graft.cdc.{MergeCommit, StateStore}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -43,41 +43,31 @@ object PiiCdcQueries {
   private val DocsTable = "pii.docs"
   private val CensusTable = "pii.census"
 
+  /** One micro-batch ([[MergeCommit.mergeMaintained]]): features
+    * map-side on batch rows — plant + detect + scrub-digest scan-local,
+    * source re-derived from the fixture invariant (source = 'src' ||
+    * doc_id % 20 — events carry only the key and text, like the
+    * sibling maintainers); text is DROPPED here — then ±(stored
+    * winner's counters) per source.
+    */
   private[queries] def processBatch(store: StateStore,
                                     batch: DataFrame): Unit =
-    store.atomically(Seq(DocsTable, CensusTable)) {
-      val compacted =
-        Merge.compactKeepTombstones(batch, Seq("doc_id")).persist()
-      try {
-        val meta = MergeCommit.toBatchMeta(compacted, Seq("doc_id"), NBuckets)
-        // Features map-side on batch rows: plant + detect + scrub-digest
-        // scan-local, source re-derived from the fixture invariant
-        // (source = 'src' || doc_id % 20 — events carry only the key and
-        // text, like the sibling maintainers). Text is DROPPED here.
-        val featMeta = meta
-          .select(Seq(col("doc_id"),
-            concat(lit("src"), (col("doc_id") % 20).cast("string"))
-              .as("source")) ++
-            graft.ops.LlmOps.piiDocCounters(col("doc_id"), col("text")) ++
-            Seq(col(StateStore.TsCol), col(StateStore.SeqCol),
-              col(StateStore.DeletedCol), col(StateStore.BucketCol)): _*)
-        MergeCommit.mergeBatchMeta(store, DocsTable, featMeta,
-          Seq("doc_id"), persistSlices = true).foreach { result =>
-          // ±(stored winner's counters) per source.
-          try MergeCommit.commitDeltas(store, CensusTable, result,
-              featMeta.select("doc_id").distinct(), Seq("source"),
-              Seq("source"), dropAtZero = false)(
-              _.select(col("source"), lit(1L).as("n_docs"),
-                when(col("e") + col("p") + col("i") > 0, 1L).otherwise(0L)
-                  .as("docs_with_pii"),
-                col("e").cast("long").as("n_email"),
-                col("p").cast("long").as("n_phone"),
-                col("i").cast("long").as("n_ip"),
-                col("resid").cast("long").as("n_residual"),
-                col("ck").as("scrub_checksum")))
-          finally result.unpersist()
-        }
-      } finally compacted.unpersist(blocking = false)
+    MergeCommit.mergeMaintained(store, DocsTable, Seq(CensusTable), batch,
+      Seq("doc_id"))(_ => Seq(col("doc_id"),
+        concat(lit("src"), (col("doc_id") % 20).cast("string")).as("source")) ++
+        graft.ops.LlmOps.piiDocCounters(col("doc_id"), col("text"))) {
+      (featMeta, result) =>
+        MergeCommit.commitDeltas(store, CensusTable, result,
+          featMeta.select("doc_id").distinct(), Seq("source"),
+          Seq("source"), dropAtZero = false)(
+          _.select(col("source"), lit(1L).as("n_docs"),
+            when(col("e") + col("p") + col("i") > 0, 1L).otherwise(0L)
+              .as("docs_with_pii"),
+            col("e").cast("long").as("n_email"),
+            col("p").cast("long").as("n_phone"),
+            col("i").cast("long").as("n_ip"),
+            col("resid").cast("long").as("n_residual"),
+            col("ck").as("scrub_checksum")))
     }
 
   /** From-scratch census recompute off the docs counters — the

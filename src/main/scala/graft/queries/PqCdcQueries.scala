@@ -1,11 +1,10 @@
 package graft.queries
 
 import graft.Tables
-import graft.cdc.{Merge, MergeCommit, StateStore}
+import graft.cdc.{MergeCommit, StateStore}
 import graft.ops.ClusterOps
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** Incremental PRODUCT-QUANTIZATION code maintenance under CDC updates —
   * the PQ twin of [[IvfCdcQueries]], completing the pattern the IVF
@@ -51,6 +50,8 @@ import org.apache.spark.sql.types.StructType
 object PqCdcQueries {
 
   private val NBuckets = 8
+  private val AssignTable = "pq.assignments"
+  private val CodesTable = "pq.codes"
 
   /** Snapshot-trained codebooks, one per (JVM, sfDir) — the model
     * artifact. Training reads the base embeddings table (= the op='r'
@@ -60,32 +61,26 @@ object PqCdcQueries {
   private val bookCache =
     new java.util.concurrent.ConcurrentHashMap[String, Seq[Seq[Seq[Double]]]]()
 
-  private def codebooks(spark: SparkSession,
-                        sfDir: String): Seq[Seq[Seq[Double]]] =
+  private[queries] def codebooks(spark: SparkSession,
+                                 sfDir: String): Seq[Seq[Seq[Double]]] =
     bookCache.computeIfAbsent(sfDir, { _ =>
       val e = ClusterOps.embD(spark, sfDir).persist()
       try (0 until ClusterOps.PqM).map(m => ClusterOps.pqCodebook(e, m))
       finally e.unpersist(blocking = false)
     })
 
-  private val CodesSchema =
-    "vec_id bigint, k0 int, k1 int, k2 int, k3 int, _bucket int"
-
-  /** One micro-batch: ordered merge into assignments, then re-encode
-    * exactly this batch's keys from the post-merge slice and rewrite
-    * the affected `pq.codes` buckets (batch-key rows replaced,
-    * tombstones dropped, untouched keys carried).
+  /** One micro-batch ([[MergeCommit.mergeMaintained]]): ordered merge
+    * into assignments, then re-encode exactly this batch's keys from
+    * the post-merge slice and rewrite the affected `pq.codes` buckets
+    * (batch-key rows replaced, tombstones dropped, untouched keys
+    * carried). Both commits of a batch are crash-atomic.
     */
-  private def processBatch(books: Seq[Seq[Seq[Double]]])
-                          (store: StateStore, batch: DataFrame): Unit = {
-    val spark = batch.sparkSession
-    val compacted = Merge.compactKeepTombstones(batch, Seq("vec_id")).persist()
-    try {
-      val batchMeta = MergeCommit.toBatchMeta(compacted, Seq("vec_id"),
-        NBuckets)
-      val result = MergeCommit.mergeBatchMeta(store, "pq.assignments",
-        batchMeta, Seq("vec_id"), persistSlices = true)
-        .getOrElse(return)
+  private[queries] def processBatch(books: Seq[Seq[Seq[Double]]])
+                                   (store: StateStore,
+                                    batch: DataFrame): Unit =
+    MergeCommit.mergeMaintained(store, AssignTable, Seq(CodesTable), batch,
+      Seq("vec_id"))(MergeCommit.rowColumns) { (batchMeta, result) =>
+      val spark = batch.sparkSession
       val keys = batchMeta.select("vec_id").distinct()
       val newCodes = result.postSlice
         .join(keys, Seq("vec_id"), "left_semi")
@@ -96,35 +91,38 @@ object PqCdcQueries {
         .withColumn(StateStore.BucketCol,
           StateStore.bucketExpr(Seq("vec_id"), NBuckets))
         .persist()
-      val affected = batchMeta.select(StateStore.BucketCol).distinct()
-        .collect().map(_.getInt(0)).toSeq.sorted
-      val codes = "pq.codes"
-      val codesState =
-        if (store.exists(codes)) store.readBuckets(spark, codes, affected)
-        else spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-          StructType.fromDDL(CodesSchema))
-      val next = codesState.join(keys, Seq("vec_id"), "left_anti")
-        .unionByName(newCodes)
-      store.commit(spark, codes, next, affected)
-      newCodes.unpersist(blocking = false)
-      result.unpersist()
-    } finally compacted.unpersist(blocking = false)
-  }
+      try {
+        val affected = batchMeta.select(StateStore.BucketCol).distinct()
+          .collect().map(_.getInt(0)).toSeq.sorted
+        val codesState =
+          if (store.exists(CodesTable))
+            store.readBuckets(spark, CodesTable, affected)
+          else MergeCommit.emptyLike(newCodes)
+        store.commit(spark, CodesTable,
+          codesState.join(keys, Seq("vec_id"), "left_anti")
+            .unionByName(newCodes), affected)
+      } finally newCodes.unpersist(blocking = false)
+    }
 
-  /** The registered query: drain the staged embedding change log
-    * (shared with the IVF maintainer — same waves: stale loser,
-    * snapshot, cluster move with 1.5× re-scale, deletes) through the
-    * code maintainer, then read the final codes back.
+  /** Drain the staged embedding change log (shared with the IVF
+    * maintainer — same waves: stale loser, snapshot, cluster move with
+    * 1.5× re-scale, deletes) through the code maintainer; returns the
+    * store.
     */
-  def pqIncremental(spark: SparkSession, sfDir: String,
-                    filesPerTrigger: Int = 2): DataFrame = {
-    val books = codebooks(spark, sfDir)
-    val store = DrainHarness.drain(spark,
+  private[queries] def runMaintenance(spark: SparkSession, sfDir: String,
+      filesPerTrigger: Int): StateStore =
+    DrainHarness.drain(spark,
       IvfCdcQueries.embeddingChangeLog(Tables.load(spark, sfDir,
         "embeddings")),
-      s"$sfDir/pq", NBuckets, filesPerTrigger)(processBatch(books))
-    readCodes(spark, store)
-  }
+      s"$sfDir/pq", NBuckets, filesPerTrigger)(
+      processBatch(codebooks(spark, sfDir)))
+
+  /** The registered query: drain the log, then read the final codes
+    * back.
+    */
+  def pqIncremental(spark: SparkSession, sfDir: String,
+                    filesPerTrigger: Int = 2): DataFrame =
+    readCodes(spark, runMaintenance(spark, sfDir, filesPerTrigger))
 
   /** Stage this family's change log without draining it — Bench's
     * untimed warmup, so staging I/O never lands in a timed repeat.
@@ -137,7 +135,7 @@ object PqCdcQueries {
 
   private[queries] def readCodes(spark: SparkSession,
                                  store: StateStore): DataFrame =
-    store.rawState(spark, "pq.codes")
+    store.rawState(spark, CodesTable)
       .select("vec_id", "k0", "k1", "k2", "k3")
       .orderBy("vec_id")
 

@@ -107,4 +107,15 @@ class IvfCdcSpec extends SparkTestBase {
     BatchFaults.assertSameTables(spark, store, clean,
       Seq("ivf.assignments", "ivf.index"))
   }
+
+  test("no raw index row keeps a member count of 0") {
+    // The stale wave's label -1 keys are put in and taken out again; a
+    // dead key must leave the table, not linger with the roundoff of
+    // its cancelled double sums.
+    val store = IvfCdcQueries.runMaintenance(spark, sf, 2)
+    val raw = store.rawState(spark, "ivf.index")
+    assert(raw.count() > 0)
+    assert(raw.filter(col("n") === 0).count() === 0,
+      "ivf.index keeps (label, i) rows whose count fell to 0")
+  }
 }

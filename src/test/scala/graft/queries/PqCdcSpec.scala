@@ -1,7 +1,10 @@
 package graft.queries
 
-import graft.SparkTestBase
+import graft.{BatchFaults, SparkTestBase, Tables}
+import graft.cdc.Envelope
 import graft.ops.ClusterOps
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions._
 
 /** Incremental PQ code maintenance: codes are a pure function of the
   * merged per-key state given snapshot codebooks, so the drained state
@@ -32,5 +35,34 @@ class PqCdcSpec extends SparkTestBase {
       r.getInt(4)))
     assert(ks.forall(k => k >= 0 && k < 8),
       s"codes must index the ${ClusterOps.PqM} 8-codeword codebooks")
+  }
+
+  test("torn batch: a crash between the assignments and codes commits " +
+      "recovers on retry to the uncrashed tables") {
+    val store = PqCdcQueries.runMaintenance(spark, sf, 2)
+    val clean = BatchFaults.twin(store)
+    val books = PqCdcQueries.codebooks(spark, sf)
+    val embD = transform(col("embedding"), x => x.cast("double"))
+    def img(label: Column, emb: Column) =
+      struct(col("vec_id").cast("long").as("vec_id"),
+        label.cast("int").as("label"), emb.as("emb"))
+    // A sign-flip wave: every touched vector changes label and values.
+    val batch = Envelope.flatten(Tables.load(spark, sf, "embeddings")
+      .filter(col("vec_id") % 11 === 1).select(
+        img(col("label"), embD).as("before"),
+        img(col("label") + 2000, transform(embD, x => -x)).as("after"),
+        lit(Envelope.OpUpdate).as("op"), lit(9000L).as("ts_ms"),
+        col("vec_id").cast("long").as("seq"),
+        struct(lit("vectors").as("schema"),
+          lit("embeddings").as("table")).as("source")))
+
+    // Assignments committed, codes not: the retry must re-run the batch
+    // against the pre-batch assignments.
+    BatchFaults.crashAtCommit(store, "pq.codes")(
+      PqCdcQueries.processBatch(books)(store, batch))
+    PqCdcQueries.processBatch(books)(store, batch) // the streaming retry
+    PqCdcQueries.processBatch(books)(clean, batch)
+    BatchFaults.assertSameTables(spark, store, clean,
+      Seq("pq.assignments", "pq.codes"))
   }
 }
