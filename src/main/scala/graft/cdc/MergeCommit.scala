@@ -8,20 +8,24 @@ import org.apache.spark.sql.functions._
   * only the affected state buckets, mutually align schemas, run the
   * latest-(ts,seq)-wins merge, commit just those buckets atomically.
   * Every maintainer — the streaming pipeline's per-target merge, the
-  * lifecycle query's batch phases, and the incremental aggregate /
-  * join-view maintainers — runs THIS code path, so merge-metadata or
-  * affected-bucket changes happen in exactly one place.
+  * lifecycle query's batch phases, the transactional appliers
+  * ([[mergeFlattened]]) and every maintained family, the join view
+  * included ([[mergeMaintained]]) — runs THIS code path, so
+  * merge-metadata or affected-bucket changes happen in exactly one
+  * place.
   */
 object MergeCommit {
 
   /** The committed merge's working frames: the pre-merge and post-merge
     * affected-bucket slices (for callers that derive deltas from the
     * state transition, e.g. the incremental-aggregate contribution
-    * pass) and the committed version. All frames stay readable after
-    * later commits — version dirs are immutable until vacuum.
+    * pass), the committed version and the sorted buckets it rewrote
+    * (so a derived table on the same bucketing reads no bucket set of
+    * its own). All frames stay readable after later commits — version
+    * dirs are immutable until vacuum.
     */
   final case class Result(preSlice: DataFrame, postSlice: DataFrame,
-                          version: Int) {
+                          version: Int, affected: Seq[Int]) {
     def unpersist(): Unit = {
       preSlice.unpersist(blocking = false)
       postSlice.unpersist(blocking = false)
@@ -65,14 +69,17 @@ object MergeCommit {
     * bucket-projection distinct is a scan + map-side partial agg,
     * not the compaction's `groupBy`+`max_by` shuffle) avoid paying
     * the compaction twice per micro-batch: once for the bucket
-    * collect and again inside the merge job.
+    * collect and again inside the merge job. `audit` wraps the merged
+    * frame the commit writes ([[mergeGatedFlattened]]'s observation).
     */
   private def mergeBatchMetaAffected(store: StateStore, table: String,
                                      batchMeta: DataFrame,
                                      pkCols: Seq[String],
                                      affected: Seq[Int],
                                      persistSlices: Boolean,
-                                     stage: Boolean): Option[Result] = {
+                                     stage: Boolean,
+                                     audit: DataFrame => DataFrame = identity)
+      : Option[Result] = {
     val spark = batchMeta.sparkSession
     if (affected.isEmpty) return None
     val state =
@@ -86,9 +93,9 @@ object MergeCommit {
       SchemaEvolution.align(batchMeta, stateAligned), pkCols)
     val merged = if (persistSlices) merged0.persist() else merged0
     val v =
-      if (stage) store.stageCommit(spark, table, merged, affected)
-      else store.commit(spark, table, merged, affected)
-    Some(Result(stateAligned, merged, v))
+      if (stage) store.stageCommit(spark, table, audit(merged), affected)
+      else store.commit(spark, table, audit(merged), affected)
+    Some(Result(stateAligned, merged, v, affected))
   }
 
   /** Affected buckets straight off a flattened slice: same hash
@@ -134,47 +141,80 @@ object MergeCommit {
         df.schema.map(_.copy(nullable = true))))
   }
 
-  /** THE MAINTAINED-FAMILY MICRO-BATCH STEP — one flattened change-log
-    * batch ([[Envelope.flatten]] output) applied to a family that keeps
-    * `derivedTables` current off the state transition of its primary
-    * `table`. Inside one [[StateStore.atomically]] scope over all of
-    * them (a crash anywhere in the step resets every listed table to
-    * its pre-batch version on the next entry), it:
-    *  1. compacts the batch latest-per-key with tombstones kept
-    *     ([[Merge.compactKeepTombstones]]) and persists it;
-    *  1. lays it out with [[toBatchMeta]] at `store.nBuckets`;
-    *  1. projects it to the family's `features` — the data columns
-    *     only, as expressions over that layout ([[rowColumns]] keeps
-    *     the row as it is); the merge metadata is appended here;
-    *  1. runs the ordered merge into `table` with persisted slices;
-    *  1. calls `derive(featMeta, result)` only when the merge committed
-    *     (an empty batch commits to no table) — the family's derived
-    *     commits ([[commitDeltas]], a graph relink, a codes rewrite)
-    *     run there, `featMeta`'s key column giving the batch keys;
-    *  1. unpersists the slices and the compacted frame however the
-    *     step ends.
-    *
-    * Per batch: one persisted compaction, one bucket collect, one merge
-    * commit, then `derive`'s jobs. Families that merge several primary
-    * tables or hold batches back (the join view, the transactional
-    * appliers) compose [[toBatchMeta]] and [[mergeBatchMeta]] themselves.
+  /** One primary table of a [[mergeMaintained]] batch: its name, its
+    * primary key, its `slice` of the flattened batch and its
+    * `features` — the data columns only, as expressions over the
+    * [[toBatchMeta]] layout ([[rowColumns]] keeps the row as it is).
+    */
+  final case class Primary(table: String, pkCols: Seq[String],
+                           slice: DataFrame,
+                           features: DataFrame => Seq[Column])
+
+  /** [[mergeMaintained]] for a family with one primary `table`: `derive`
+    * gets its `(featMeta, result)` whenever the merge committed.
     */
   def mergeMaintained(store: StateStore, table: String,
                       derivedTables: Seq[String], batch: DataFrame,
                       pkCols: Seq[String])
                      (features: DataFrame => Seq[Column])
                      (derive: (DataFrame, Result) => Unit): Unit =
-    store.atomically(table +: derivedTables) {
-      val compacted = Merge.compactKeepTombstones(batch, pkCols).persist()
+    mergeMaintained(store, Seq(Primary(table, pkCols, batch, features)),
+      derivedTables) { case Seq((featMeta, result)) =>
+      derive(featMeta, result.get)
+    }
+
+  /** THE MAINTAINED-FAMILY MICRO-BATCH STEP — one flattened change-log
+    * batch ([[Envelope.flatten]] output) applied to a family that keeps
+    * `derivedTables` current off the state transition of its
+    * `primaries`. Inside one [[StateStore.atomically]] scope over all
+    * of them (a crash anywhere in the step resets every listed table to
+    * its pre-batch version on the next entry), it:
+    *  1. compacts each primary's slice latest-per-key with tombstones
+    *     kept ([[Merge.compactKeepTombstones]]) and persists it;
+    *  1. lays it out with [[toBatchMeta]] at `store.nBuckets` and
+    *     projects it to the primary's `features`, appending the merge
+    *     metadata;
+    *  1. runs the ordered merge into each primary with persisted slices
+    *     — on the caller's thread for one primary, through
+    *     [[graft.Par.run]] for several (every merge joins before a
+    *     failure is rethrown);
+    *  1. calls `derive` with each primary's `(featMeta, result)`, in
+    *     order, only when some merge committed (an empty batch commits
+    *     to no table; a primary the batch left alone has `None`) — the
+    *     family's derived commits ([[commitDeltas]], a graph relink, an
+    *     index repair) run there, `featMeta`'s key column giving the
+    *     batch keys;
+    *  1. unpersists the slices and the compacted frames however the
+    *     step ends.
+    *
+    * Per primary and batch: one persisted compaction, one bucket
+    * collect, one merge commit; then `derive`'s jobs. The transactional
+    * appliers hold batches back and derive nothing, so they merge
+    * through [[mergeFlattened]].
+    */
+  def mergeMaintained(store: StateStore, primaries: Seq[Primary],
+                      derivedTables: Seq[String])
+                     (derive: Seq[(DataFrame, Option[Result])] => Unit)
+      : Unit =
+    store.atomically(primaries.map(_.table) ++ derivedTables) {
+      val compacted = primaries.map(p =>
+        Merge.compactKeepTombstones(p.slice, p.pkCols).persist())
+      val merged = new java.util.concurrent.ConcurrentLinkedQueue[Result]()
       try {
-        val meta = toBatchMeta(compacted, pkCols, store.nBuckets)
-        val featMeta = meta.select(
-          features(meta) ++ StateStore.MetaCols.map(col): _*)
-        mergeBatchMeta(store, table, featMeta, pkCols, persistSlices = true)
-          .foreach { result =>
-            try derive(featMeta, result) finally result.unpersist()
-          }
-      } finally compacted.unpersist(blocking = false)
+        val merges = primaries.zip(compacted).map { case (p, c) =>
+          val meta = toBatchMeta(c, p.pkCols, store.nBuckets)
+          val featMeta =
+            meta.select(p.features(meta) ++ StateStore.MetaCols.map(col): _*)
+          () => featMeta -> mergeBatchMeta(store, p.table, featMeta,
+            p.pkCols, persistSlices = true).map { r => merged.add(r); r }
+        }
+        val results =
+          if (merges.size == 1) Seq(merges.head()) else graft.Par.run(merges)
+        if (results.exists(_._2.isDefined)) derive(results)
+      } finally {
+        merged.forEach(_.unpersist())
+        compacted.foreach(_.unpersist(blocking = false))
+      }
     }
 
   /** One wave of PLAIN rows (no change-log envelope) merged into
@@ -304,26 +344,18 @@ object MergeCommit {
   def mergeGatedFlattened(store: StateStore, table: String,
                           slice: DataFrame, pkCols: Seq[String],
                           violation: org.apache.spark.sql.Column): Option[Gated] = {
-    val batchMeta = toBatchMeta(Merge.compactKeepTombstones(slice, pkCols),
-      pkCols, store.nBuckets)
-      .withColumn(GateCol, lit(true))
-    val spark = batchMeta.sparkSession
-    val affected = affectedBuckets(slice, pkCols, store.nBuckets)
-    if (affected.isEmpty) return None
-    val state =
-      if (store.exists(table)) store.readBuckets(spark, table, affected)
-      else store.emptyState(spark, table)
-    val stateAligned = SchemaEvolution.align(state, batchMeta)
-    val merged = Merge.mergeOrdered(stateAligned,
-      SchemaEvolution.align(batchMeta, stateAligned), pkCols)
     // Tombstones the batch writes are never violations (they remove
     // rows); a null tag (state-won row) conjoins to null → counted 0.
     val obs = new org.apache.spark.sql.Observation()
-    val audited = merged.observe(obs,
-      coalesce(sum(when(col(GateCol) && !col(StateStore.DeletedCol) &&
-        violation, 1L).otherwise(0L)), lit(0L)).as("violations"))
-      .drop(GateCol)
-    val v = store.stageCommit(spark, table, audited, affected)
-    Some(Gated(v, obs.get("violations").asInstanceOf[Long]))
+    mergeBatchMetaAffected(store, table,
+      toBatchMeta(Merge.compactKeepTombstones(slice, pkCols), pkCols,
+        store.nBuckets).withColumn(GateCol, lit(true)),
+      pkCols, affectedBuckets(slice, pkCols, store.nBuckets),
+      persistSlices = false, stage = true,
+      audit = _.observe(obs,
+        coalesce(sum(when(col(GateCol) && !col(StateStore.DeletedCol) &&
+          violation, 1L).otherwise(0L)), lit(0L)).as("violations"))
+        .drop(GateCol))
+      .map(r => Gated(r.version, obs.get("violations").asInstanceOf[Long]))
   }
 }

@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import graft.Tables
 import graft.catalog.Warehouse
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}

@@ -7,9 +7,9 @@ import org.apache.spark.sql.types.StructType
 
 /** Shared micro-batch drain harness for the incremental-materialization
   * families: every maintained family (the aggregate summary, the
-  * Lines and PII censuses, both BM25 indexes, HNSW, IVF, PQ) drains
-  * through here into the one batch step
-  * [[graft.cdc.MergeCommit.mergeMaintained]]; the join view, the SCD2
+  * Lines and PII censuses, both BM25 indexes, HNSW, IVF, PQ, and the
+  * join view over its two primaries) drains through here into the one
+  * batch step [[graft.cdc.MergeCommit.mergeMaintained]]; the SCD2
   * history and the MinHash signature tables drain their own steps.
   * Stages the deterministic change log once per (JVM, cache key)
   * ([[Scratch.staged]]); reuses ONE warehouse + checkpoint dir pair per

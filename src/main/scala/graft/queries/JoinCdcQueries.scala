@@ -1,10 +1,9 @@
 package graft.queries
 
 import graft.Tables
-import graft.cdc.{Envelope, Merge, MergeCommit, StateStore}
+import graft.cdc.{Envelope, MergeCommit, StateStore}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** Incremental JOIN-VIEW maintenance under CDC updates — the third
   * member of the incremental-materialization family ([[IvfCdcQueries]]:
@@ -41,10 +40,6 @@ object JoinCdcQueries {
   private val OrdTable = "jv.orders"
   private val IdxTable = "jv.orders_by_cust"
   private val ViewTable = "jv.view"
-
-  private val viewSchemaDdl =
-    "o_orderkey bigint, o_custkey bigint, o_totalprice double, " +
-      "c_nationkey int, c_acctbal double, _bucket int"
 
   /** Deterministic two-table change log in ONE envelope stream: the row
     * image is the union of both tables' columns (each event fills its
@@ -113,97 +108,87 @@ object JoinCdcQueries {
     df.select(StateStore.bucketExpr(keyCols, NBuckets).as("b"))
       .distinct().collect().map(_.getInt(0)).toSeq.sorted
 
-  /** One micro-batch: split → merge both base tables → repair the
-    * secondary index → recompute the view for affected order keys.
+  private val live = !col(StateStore.DeletedCol)
+
+  /** One micro-batch ([[MergeCommit.mergeMaintained]] over two
+    * primaries, whose merges run concurrently): split by
+    * `source.table` → merge both base tables → repair the secondary
+    * index and recompute the view for affected order keys, also
+    * concurrently (the view never reads the index table). All four
+    * commits of a batch are crash-atomic.
     */
-  private def processBatch(store: StateStore, batch: DataFrame): Unit = {
-    val spark = batch.sparkSession
-    def tableBatch(table: String, cols: Seq[String], pk: String): DataFrame =
-      Merge.compactKeepTombstones(
-          batch.filter(col("_cdc.source.table") === table), Seq(pk))
-        .select(cols.map(c => col(s"row.$c")) ++ Seq(
-          col("_cdc.ts_ms").as(StateStore.TsCol),
-          col("_cdc.seq").as(StateStore.SeqCol),
-          (col("_cdc.op") === Envelope.OpDelete).as(StateStore.DeletedCol)): _*)
-        .withColumn(StateStore.BucketCol,
-          StateStore.bucketExpr(Seq(pk), NBuckets))
-    val custB = tableBatch("customer",
-      Seq("c_custkey", "c_nationkey", "c_acctbal"), "c_custkey").persist()
-    val ordB = tableBatch("orders",
-      Seq("o_orderkey", "o_custkey", "o_totalprice"), "o_orderkey").persist()
-    val live = !col(StateStore.DeletedCol)
+  private[queries] def processBatch(store: StateStore,
+                                    batch: DataFrame): Unit = {
+    def primary(table: String, source: String, cols: Seq[String]) = // pk first
+      MergeCommit.Primary(table, Seq(cols.head),
+        batch.filter(col("_cdc.source.table") === source),
+        _ => cols.map(col))
+    MergeCommit.mergeMaintained(store, Seq(
+        primary(CustTable, "customer",
+          Seq("c_custkey", "c_nationkey", "c_acctbal")),
+        primary(OrdTable, "orders",
+          Seq("o_orderkey", "o_custkey", "o_totalprice"))),
+      Seq(IdxTable, ViewTable)) { case Seq((custB, _), (ordB, ordSlices)) =>
+      graft.Par.run(Seq(
+        () => ordSlices.foreach(repairIndex(store, _)),
+        () => recomputeView(store, custB, ordB, ordSlices)))
+      ()
+    }
+  }
+
+  /** Secondary-index repair for the evented order keys: live entries
+    * upserted under the winner's (ts, seq); entries whose (custkey,
+    * orderkey) no longer holds (move or delete) tombstoned under the
+    * SAME new (ts, seq), so replays telescope.
+    */
+  private def repairIndex(store: StateStore,
+                          slices: MergeCommit.Result): Unit = {
+    val (oldOrd, newOrd) = (slices.preSlice, slices.postSlice)
+    val entry = (df: DataFrame) => df.filter(live)
+      .select(col("o_custkey").as("c_custkey"), col("o_orderkey"))
+    val newLive = newOrd.filter(live).select(
+      col("o_custkey").as("c_custkey"), col("o_orderkey"),
+      col(StateStore.TsCol), col(StateStore.SeqCol))
+    val gone = entry(oldOrd)
+      .join(newLive.select("c_custkey", "o_orderkey"),
+        Seq("c_custkey", "o_orderkey"), "left_anti")
+      .join(newOrd.select(col("o_orderkey"), col(StateStore.TsCol),
+        col(StateStore.SeqCol)), Seq("o_orderkey"))
+    val idxBatch = newLive
+      .withColumn(StateStore.DeletedCol, lit(false))
+      .unionByName(gone.withColumn(StateStore.DeletedCol, lit(true)))
+      .withColumn(StateStore.BucketCol,
+        StateStore.bucketExpr(Seq("c_custkey"), NBuckets))
+    // Nothing reads the index merge's slices, so they stay unpersisted.
+    MergeCommit.mergeBatchMeta(store, IdxTable, idxBatch,
+      Seq("c_custkey", "o_orderkey"))
+    ()
+  }
+
+  /** Recompute the view rows of the affected order keys (evented orders
+    * ∪ orders referencing evented customers) from the two committed
+    * states.
+    */
+  private def recomputeView(store: StateStore, custB: DataFrame,
+                            ordB: DataFrame,
+                            ordSlices: Option[MergeCommit.Result]): Unit = {
+    val spark = custB.sparkSession
+    // Orders referencing evented customers, off the index. The index
+    // only changes for orders evented in THIS batch, whose keys the
+    // ordB term already holds — so whether this read resolves the index
+    // before or after the concurrent repair commits, the affected set
+    // is the same (committed version dirs are immutable).
+    val custKeys = custB.select("c_custkey").distinct()
+    val idxHits =
+      if (store.exists(IdxTable))
+        store.readBuckets(spark, IdxTable,
+            bucketIdsOf(custKeys, Seq("c_custkey"))).filter(live)
+          .join(custKeys, Seq("c_custkey"), "left_semi")
+          .select("o_orderkey")
+      else custKeys.select(lit(0L).as("o_orderkey")).limit(0)
+    val affectedOk = ordB.select("o_orderkey").union(idxHits)
+      .distinct().persist()
     try {
-      // The two base merges write DIFFERENT store tables (disjoint
-      // dirs, single-writer per table holds trivially), so they run as
-      // CONCURRENT Spark actions: on a real cluster the scheduler
-      // interleaves their stages across executors instead of leaving
-      // them idle during each other's small commit writes — the same
-      // reason multi-sink jobs use FAIR scheduling. The customer merge
-      // is awaited before the view recompute (its first reader).
-      // No slice reader downstream for the customer merge — persisting
-      // its pre/post frames would cache both full-table states during
-      // the commit write for nothing (the ords merge persists because
-      // the index repair consumes its slices).
-      val custF = graft.Par.future {
-        MergeCommit.mergeBatchMeta(store, CustTable, custB, Seq("c_custkey"))
-      }
-      val ordSlices = MergeCommit.mergeBatchMeta(store, OrdTable, ordB,
-        Seq("o_orderkey"), persistSlices = true)
-
-      // Affected view keys, resolved from the PRE-repair index state:
-      // the index only changes for orders evented in THIS batch, and
-      // those keys are already in the ordB term of the union — so
-      // pre-repair and post-repair index hits yield the same affected
-      // set, and reading the pre-state lets the index repair below run
-      // CONCURRENTLY with the whole view recompute (readBuckets
-      // resolves the manifest eagerly here, and committed version
-      // dirs are immutable, so the concurrent index commit can never
-      // change what this read returns).
-      val custKeys = custB.select("c_custkey").distinct()
-      val idxHits =
-        if (store.exists(IdxTable)) {
-          val bs = bucketIdsOf(custKeys, Seq("c_custkey"))
-          store.readBuckets(spark, IdxTable, bs).filter(live)
-            .join(custKeys, Seq("c_custkey"), "left_semi")
-            .select("o_orderkey")
-        } else custKeys.select(lit(0L).as("o_orderkey")).limit(0)
-
-      // Secondary-index repair for the evented order keys: live entries
-      // upserted under the winner's (ts, seq); entries whose (custkey,
-      // orderkey) no longer holds (move or delete) tombstoned under the
-      // SAME new (ts, seq), so replays telescope. Runs concurrently
-      // with the view phase (the view never reads the index table).
-      val idxF = graft.Par.future {
-        ordSlices.foreach { slices =>
-          val (oldOrd, newOrd) = (slices.preSlice, slices.postSlice)
-          val entry = (df: DataFrame) => df.filter(live)
-            .select(col("o_custkey").as("c_custkey"), col("o_orderkey"))
-          val newLive = newOrd.filter(live).select(
-            col("o_custkey").as("c_custkey"), col("o_orderkey"),
-            col(StateStore.TsCol), col(StateStore.SeqCol))
-          val gone = entry(oldOrd)
-            .join(newLive.select("c_custkey", "o_orderkey"),
-              Seq("c_custkey", "o_orderkey"), "left_anti")
-            .join(newOrd.select(col("o_orderkey"), col(StateStore.TsCol),
-              col(StateStore.SeqCol)), Seq("o_orderkey"))
-          val idxBatch = newLive
-            .withColumn(StateStore.DeletedCol, lit(false))
-            .unionByName(gone.withColumn(StateStore.DeletedCol, lit(true)))
-            .withColumn(StateStore.BucketCol,
-              StateStore.bucketExpr(Seq("c_custkey"), NBuckets))
-          // Same: nothing reads the index merge's slices. (postSlice
-          // is ALSO consumed by the concurrent view recompute below —
-          // the shared unpersist happens after both phases join.)
-          MergeCommit.mergeBatchMeta(store, IdxTable, idxBatch,
-            Seq("c_custkey", "o_orderkey"))
-        }
-      }
-
-      // The view recompute below reads the customer state — join the
-      // concurrent merge before its first reader.
-      graft.Par.await(custF)
-      val affectedOk = ordB.select("o_orderkey").union(idxHits)
-        .distinct().persist()
       val okBuckets = bucketIdsOf(affectedOk, Seq("o_orderkey"))
       if (okBuckets.nonEmpty) {
         // Recompute affected rows from the two committed states: the
@@ -221,8 +206,7 @@ object JoinCdcQueries {
         // the view phase's orders scan from |affected buckets| into
         // |FK-fan-in-only buckets| — zero when a batch only updates
         // orders.
-        val ordBuckets = ordB.select(StateStore.BucketCol)
-          .distinct().collect().map(_.getInt(0)).toSet
+        val ordBuckets = ordSlices.toSeq.flatMap(_.affected).toSet
         val extraBuckets = okBuckets.filterNot(ordBuckets)
         val ordCols = (df: DataFrame) => df.filter(live)
           .join(affectedOk, Seq("o_orderkey"), "left_semi")
@@ -237,58 +221,43 @@ object JoinCdcQueries {
           else Seq.empty))
           .reduce(_ unionByName _)
           .persist()
-        // Customer buckets WITHOUT materializing ordSlice first: every
-        // custkey an affected order references is either (a) the
-        // post-merge custkey of a batch-evented order — in postSlice —
-        // or (b) for an idxHits-only order, the evented customer its
-        // pre-repair index entry named (the order wasn't evented, so
-        // its committed custkey is the index's c, and c ∈ custKeys by
-        // idxHits' semi-join). A superset is safe — the inner join
-        // drops customers nothing references — and it takes the
-        // ordSlice materialization off the custSlice read's critical
-        // path: ordSlice now materializes once, inside the view
-        // commit, instead of twice per batch.
-        val ckKeyFrames = ordSlices.map(s => s.postSlice.filter(live)
-            .join(affectedOk, Seq("o_orderkey"), "left_semi")
-            .select(col("o_custkey").as("c_custkey"))).toSeq :+ custKeys
-        val ckBuckets = bucketIdsOf(ckKeyFrames.reduce(_ unionByName _),
-          Seq("c_custkey"))
-        val custSlice =
-          if (store.exists(CustTable) && ckBuckets.nonEmpty)
-            store.readBuckets(spark, CustTable, ckBuckets).filter(live)
-              .select("c_custkey", "c_nationkey", "c_acctbal")
-          else spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            StructType.fromDDL(
-              "c_custkey bigint, c_nationkey int, c_acctbal double"))
-        val liveView = ordSlice
-          .join(custSlice, col("o_custkey") === col("c_custkey"))
-          .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-            col("c_nationkey"), col("c_acctbal"))
-          .withColumn(StateStore.BucketCol,
-            StateStore.bucketExpr(Seq("o_orderkey"), NBuckets))
-        val oldView =
-          if (store.exists(ViewTable))
-            store.readBuckets(spark, ViewTable, okBuckets)
-          else spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            StructType.fromDDL(viewSchemaDdl))
-        val next = oldView.join(affectedOk, Seq("o_orderkey"), "left_anti")
-          .unionByName(liveView)
-        store.commit(spark, ViewTable, next, okBuckets)
-        ordSlice.unpersist(blocking = false)
+        try {
+          // Customer buckets WITHOUT materializing ordSlice first: every
+          // custkey an affected order references is either (a) the
+          // post-merge custkey of a batch-evented order — in postSlice —
+          // or (b) for an idxHits-only order, the evented customer its
+          // index entry named (the order wasn't evented, so its
+          // committed custkey is the index's c, and c ∈ custKeys by
+          // idxHits' semi-join). A superset is safe — the inner join
+          // drops customers nothing references — and ordSlice
+          // materializes once, inside the view commit.
+          val ckKeyFrames = ordSlices.map(s => s.postSlice.filter(live)
+              .join(affectedOk, Seq("o_orderkey"), "left_semi")
+              .select(col("o_custkey").as("c_custkey"))).toSeq :+ custKeys
+          val ckBuckets = bucketIdsOf(ckKeyFrames.reduce(_ unionByName _),
+            Seq("c_custkey"))
+          val custCols = (df: DataFrame) => df.filter(live)
+            .select("c_custkey", "c_nationkey", "c_acctbal")
+          val custSlice =
+            if (store.exists(CustTable) && ckBuckets.nonEmpty)
+              custCols(store.readBuckets(spark, CustTable, ckBuckets))
+            else MergeCommit.emptyLike(custCols(custB))
+          val liveView = ordSlice
+            .join(custSlice, col("o_custkey") === col("c_custkey"))
+            .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
+              col("c_nationkey"), col("c_acctbal"))
+            .withColumn(StateStore.BucketCol,
+              StateStore.bucketExpr(Seq("o_orderkey"), NBuckets))
+          val oldView =
+            if (store.exists(ViewTable))
+              store.readBuckets(spark, ViewTable, okBuckets)
+            else MergeCommit.emptyLike(liveView)
+          val next = oldView.join(affectedOk, Seq("o_orderkey"), "left_anti")
+            .unionByName(liveView)
+          store.commit(spark, ViewTable, next, okBuckets)
+        } finally ordSlice.unpersist(blocking = false)
       }
-      affectedOk.unpersist(blocking = false)
-      // The index repair must land before the batch completes (the
-      // NEXT batch's affected-key resolution reads it). The slices
-      // unpersist only after BOTH consumers (index repair + view
-      // recompute) are done with postSlice.
-      graft.Par.await(idxF)
-      ordSlices.foreach(_.unpersist())
-    } finally {
-      custB.unpersist(blocking = false)
-      ordB.unpersist(blocking = false)
-    }
+    } finally affectedOk.unpersist(blocking = false)
   }
 
   /** Drain the staged two-table log through the maintainer; returns the

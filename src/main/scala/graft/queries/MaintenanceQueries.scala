@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.cdc.{ChangeGen, Envelope, Merge, MergeCommit}
+import graft.cdc.{ChangeGen, Envelope, MergeCommit}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1306,8 +1306,8 @@ object MaintenanceQueries {
     * the batch spelling of the pipeline's per-micro-batch commit,
     * running the same shared [[graft.cdc.MergeCommit]] recipe.
     */
-  private def commitPhase(spark: SparkSession, store: graft.cdc.StateStore,
-      target: String, pk: Seq[String], slice: DataFrame): Int =
+  private def commitPhase(store: graft.cdc.StateStore, target: String,
+      pk: Seq[String], slice: DataFrame): Int =
     graft.cdc.MergeCommit.mergeFlattened(store, target, slice, pk)
       .fold(store.currentVersion(target))(_.version)
 
@@ -1343,10 +1343,10 @@ object MaintenanceQueries {
       Tables.load(spark, sfDir, "customer"),
       "c_custkey", "c_acctbal", "commerce", "customer"))
     val ts = col("_cdc.ts_ms")
-    val v1 = commitPhase(spark, store, target, pk, ev.filter(ts <= 1000))
-    commitPhase(spark, store, target, pk,
+    val v1 = commitPhase(store, target, pk, ev.filter(ts <= 1000))
+    commitPhase(store, target, pk,
       ev.filter(ts > 1000 && ts <= 3000))
-    commitPhase(spark, store, target, pk, ev.filter(ts > 3000))
+    commitPhase(store, target, pk, ev.filter(ts > 3000))
 
     def summarize(df: DataFrame): (Long, Double) = {
       val r = df.agg(count(lit(1)), round(sum(round(col("c_acctbal"), 2)), 2))
@@ -2135,7 +2135,7 @@ object MaintenanceQueries {
     val store = new graft.cdc.StateStore(wh, nBuckets = 8)
     val target = "cdc.commerce_customer_lkp"
     val base = Tables.load(spark, sfDir, "customer")
-    commitPhase(spark, store, target, Seq("c_custkey"),
+    commitPhase(store, target, Seq("c_custkey"),
       Envelope.flatten(ChangeGen.changeLog(base,
         "c_custkey", "c_acctbal", "commerce", "customer")))
     val probes = base.filter(col("c_custkey") % 97 === 0)
@@ -2188,7 +2188,7 @@ object MaintenanceQueries {
     val ts = col("_cdc.ts_ms")
 
     val store8 = new graft.cdc.StateStore(wh8, nBuckets = 8)
-    commitPhase(spark, store8, target, pk, ev.filter(ts <= 3000))
+    commitPhase(store8, target, pk, ev.filter(ts <= 3000))
 
     def summarize(df: DataFrame): (Long, Double) = {
       val r = df.agg(count(lit(1)), round(sum(round(col("c_acctbal"), 2)), 2))
@@ -2431,8 +2431,8 @@ object MaintenanceQueries {
       Tables.load(spark, sfDir, "customer"),
       "c_custkey", "c_acctbal", "commerce", "customer"))
     val ts = col("_cdc.ts_ms")
-    commitPhase(spark, store, target, pk, ev.filter(ts <= 3000))
-    commitPhase(spark, store, target, pk, ev.filter(ts > 3000))
+    commitPhase(store, target, pk, ev.filter(ts <= 3000))
+    commitPhase(store, target, pk, ev.filter(ts > 3000))
     def summarize(df: DataFrame): (Long, Double) = {
       val r = df.agg(count(lit(1)), round(sum(round(col("c_acctbal"), 2)), 2))
         .head()
@@ -2515,7 +2515,7 @@ object MaintenanceQueries {
       Tables.load(spark, sfDir, "customer"),
       "c_custkey", "c_acctbal", "commerce", "customer"))
     val ts = col("_cdc.ts_ms")
-    val vPre = commitPhase(spark, store, src, pk, ev.filter(ts <= 3000))
+    val vPre = commitPhase(store, src, pk, ev.filter(ts <= 3000))
 
     store.cloneTable(src, dst)
     def parquetFilesUnder(t: String): Long = {
@@ -2635,7 +2635,7 @@ object MaintenanceQueries {
       Tables.load(spark, sfDir, "customer"),
       "c_custkey", "c_acctbal", "commerce", "customer"))
     val ts = col("_cdc.ts_ms")
-    commitPhase(spark, store, src, pk, ev.filter(ts <= 3000))
+    commitPhase(store, src, pk, ev.filter(ts <= 3000))
     store.cloneTable(src, dst)
 
     def summarize(df: DataFrame): (Long, Double) = {
@@ -2645,7 +2645,7 @@ object MaintenanceQueries {
     }
     val pre = summarize(store.currentState(spark, dst))
 
-    commitPhase(spark, store, src, pk, ev.filter(ts > 3000))
+    commitPhase(store, src, pk, ev.filter(ts > 3000))
     store.vacuum(src, keepVersions = 1)
     // Every dir the clone's manifest reaches into must have survived.
     val cloneDirsIntact = store.manifest(dst).values.forall(p =>
@@ -2735,8 +2735,8 @@ object MaintenanceQueries {
       Tables.load(spark, sfDir, "customer"),
       "c_custkey", "c_acctbal", "commerce", "customer"))
     val ts = col("_cdc.ts_ms")
-    val vPre = commitPhase(spark, store, target, pk, ev.filter(ts <= 3000))
-    commitPhase(spark, store, target, pk, ev.filter(ts > 3000))
+    val vPre = commitPhase(store, target, pk, ev.filter(ts <= 3000))
+    commitPhase(store, target, pk, ev.filter(ts > 3000))
     val vHead = store.currentVersion(target)
 
     import spark.implicits._
@@ -3076,10 +3076,10 @@ object MaintenanceQueries {
       Tables.load(spark, sfDir, "customer"),
       "c_custkey", "c_acctbal", "commerce", "customer"))
     val ts = col("_cdc.ts_ms")
-    commitPhase(spark, store, target, pk, ev.filter(ts <= 1000))
-    commitPhase(spark, store, target, pk,
+    commitPhase(store, target, pk, ev.filter(ts <= 1000))
+    commitPhase(store, target, pk,
       ev.filter(ts > 1000 && ts <= 3000))
-    commitPhase(spark, store, target, pk, ev.filter(ts > 3000))
+    commitPhase(store, target, pk, ev.filter(ts > 3000))
     store.createRef(target, "q1-audit", 1, "tag")
     store.createRef(target, "release", 2, "branch")
     store.vacuum(target, keepVersions = 1)
@@ -3132,11 +3132,11 @@ object MaintenanceQueries {
     val ev = Envelope.flatten(ChangeGen.changeLog(
       base, "c_custkey", "c_acctbal", "commerce", "customer"))
     val ts = col("_cdc.ts_ms")
-    commitPhase(spark, store, target, pk, ev.filter(ts <= 1000))
+    commitPhase(store, target, pk, ev.filter(ts <= 1000))
     store.createRef(target, "q1-audit", 0, "tag")
-    commitPhase(spark, store, target, pk,
+    commitPhase(store, target, pk,
       ev.filter(ts > 1000 && ts <= 3000))
-    commitPhase(spark, store, target, pk, ev.filter(ts > 3000))
+    commitPhase(store, target, pk, ev.filter(ts > 3000))
     // Insert wave: brand-new keys (fixture key + 1e6), full images.
     val k = col("c_custkey")
     val insRows = base.filter(k % 11 === 0)
@@ -3148,7 +3148,7 @@ object MaintenanceQueries {
       col("c_custkey").cast("long").as("seq"),
       struct(lit("commerce").as("schema"),
         lit("customer").as("table")).as("source"))
-    commitPhase(spark, store, target, pk, Envelope.flatten(insEnv))
+    commitPhase(store, target, pk, Envelope.flatten(insEnv))
     store.diffRefs(spark, target, "q1-audit", "head", pk)
       .select(col("c_custkey"), round(col("c_acctbal"), 2).as("c_acctbal"),
         col("change_type"))
@@ -3200,14 +3200,14 @@ object MaintenanceQueries {
       Tables.load(spark, sfDir, "customer"),
       "c_custkey", "c_acctbal", "commerce", "customer"))
     val ts = col("_cdc.ts_ms")
-    commitPhase(spark, store, target, pk, ev.filter(ts <= 1000))
-    commitPhase(spark, store, target, pk,
+    commitPhase(store, target, pk, ev.filter(ts <= 1000))
+    commitPhase(store, target, pk,
       ev.filter(ts > 1000 && ts <= 3000))
-    commitPhase(spark, store, target, pk, ev.filter(ts > 3000))
+    commitPhase(store, target, pk, ev.filter(ts > 3000))
     // v3: replay key 0's ts=2000 update AFTER its ts=4000 delete —
     // one key → one rewritten bucket, and latest-wins must keep the
     // tombstone (live count unchanged).
-    commitPhase(spark, store, target, pk,
+    commitPhase(store, target, pk,
       ev.filter(ts === 2000 && col("_cdc.seq") === 0))
     val session = spark
     import session.implicits._

@@ -160,19 +160,19 @@ object MinhashCdcQueries {
                                  batch: DataFrame): Unit = {
     // Two DIFFERENT derived tables off one slice — disjoint dirs, so
     // the merges run as concurrent Spark actions (the per-table
-    // single-writer invariant holds trivially).
-    val docsF = graft.Par.future {
-      MergeCommit.mergeFlattened(store, "cur.docs", batch, Seq("doc_id"))
-    }
+    // single-writer invariant holds trivially), both joined before a
+    // failure is rethrown.
     val sigged = batch.withColumn("row",
       struct(col("row.doc_id").as("doc_id"),
         graft.functions.BandedMinHash.bandedMinhash(
           graft.functions.ShingleSet.shingleSet(
             split(col("row.text"), " ")))
           .cast("array<string>").as("ms")))
-    MergeCommit.mergeFlattened(store, "cur.signatures", sigged,
-      Seq("doc_id"))
-    graft.Par.await(docsF)
+    graft.Par.run(Seq(
+      () => MergeCommit.mergeFlattened(store, "cur.docs", batch,
+        Seq("doc_id")),
+      () => MergeCommit.mergeFlattened(store, "cur.signatures", sigged,
+        Seq("doc_id"))))
     ()
   }
 

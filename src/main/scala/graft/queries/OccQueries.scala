@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import graft.Tables
 import graft.cdc.StateStore
 import org.apache.spark.sql.{DataFrame, SparkSession}

@@ -115,8 +115,7 @@ object PipelineQueries {
     * batches) is really exercised in every run.
     */
   private def runPipeline(spark: SparkSession, store: StateStore,
-                          log: DataFrame, logKey: String,
-                          target: String): Unit = {
+                          log: DataFrame, logKey: String): Unit = {
     val logDir = stageLog(log, logKey)
     val ckptDir = graft.Scratch.dir("graft-ckpt-")
     val cfg = PipelineConfig(
@@ -231,8 +230,7 @@ object PipelineQueries {
     CdcAdmin.enableCdc("commerce.customer", Seq("c_custkey"))
     val store = new StateStore(
       graft.Scratch.dir("graft-warehouse-").toString, nBuckets = 8)
-    runPipeline(spark, store, customerLog(spark, sfDir), s"$sfDir:customer",
-      "cdc.commerce_customer")
+    runPipeline(spark, store, customerLog(spark, sfDir), s"$sfDir:customer")
     store.currentState(spark, "cdc.commerce_customer")
       .withColumn("c_acctbal", round(col("c_acctbal"), 2))
       .orderBy("c_custkey")
@@ -257,11 +255,11 @@ object PipelineQueries {
     runPipeline(spark, store,
       ChangeGen.changeLogIntPk(base, "c_custkey", "c_acctbal",
         "commerce", "customer"),
-      s"$sfDir:customer-intpk", "cdc.commerce_customer")
+      s"$sfDir:customer-intpk")
     runPipeline(spark, store,
       ChangeGen.evolvedChangeLog(base, "c_custkey", "c_acctbal",
         "commerce", "customer"),
-      s"$sfDir:customer-evolved", "cdc.commerce_customer")
+      s"$sfDir:customer-evolved")
     store.currentState(spark, "cdc.commerce_customer")
       .withColumn("c_acctbal", round(col("c_acctbal"), 2))
       .select("c_custkey", "c_name", "c_nationkey", "c_acctbal",

@@ -92,15 +92,14 @@ object PqCdcQueries {
           StateStore.bucketExpr(Seq("vec_id"), NBuckets))
         .persist()
       try {
-        val affected = batchMeta.select(StateStore.BucketCol).distinct()
-          .collect().map(_.getInt(0)).toSeq.sorted
+        // Codes share the assignments' bucketing: the merge's buckets.
         val codesState =
           if (store.exists(CodesTable))
-            store.readBuckets(spark, CodesTable, affected)
+            store.readBuckets(spark, CodesTable, result.affected)
           else MergeCommit.emptyLike(newCodes)
         store.commit(spark, CodesTable,
           codesState.join(keys, Seq("vec_id"), "left_anti")
-            .unionByName(newCodes), affected)
+            .unionByName(newCodes), result.affected)
       } finally newCodes.unpersist(blocking = false)
     }
 

@@ -3,8 +3,8 @@ package graft.queries
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import graft.Tables
-import graft.cdc.{ChangeGen, Envelope, Merge, MergeCommit, StateStore}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.cdc.{ChangeGen, Envelope, MergeCommit, StateStore}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -173,33 +173,30 @@ object TxApplyMultiQueries {
       // applies run as CONCURRENT Spark actions; the atomic commit
       // point stays per table, and the transaction boundary is already
       // enforced above by the completeness gate, not by apply order.
-      val applies = Targets.map { t => graft.Par.future {
-        val toApply = Envelope.fromWire(
-          completeRows.filter(col("m.op") =!= "t" &&
-            col("m.source.table") === t.fixture).select("value"),
-          rowSchemas(t.fixture))
-        val compacted = Merge.compactKeepTombstones(
-          Envelope.flatten(toApply), Seq(t.pk)).persist()
-        try {
-          val meta = MergeCommit.toBatchMeta(compacted, Seq(t.pk), NBuckets)
-          MergeCommit.mergeBatchMeta(store, t.table, meta, Seq(t.pk))
-            .foreach(_.unpersist())
-        } finally compacted.unpersist(blocking = false)
-      } }
+      val applies = Targets.map { t => () =>
+        MergeCommit.mergeFlattened(store, t.table,
+          Envelope.flatten(Envelope.fromWire(
+            completeRows.filter(col("m.op") =!= "t" &&
+              col("m.source.table") === t.fixture).select("value"),
+            rowSchemas(t.fixture))),
+          Seq(t.pk))
+        ()
+      }
       // Raw-wire holdback: incomplete transactions' rows (events AND
       // markers) wait as opaque strings — only the TEMP-path write
       // overlaps the applies; the pending dir (the sole durable copy
       // of complete transactions' events until every per-table apply
       // commits) is wiped and atomically replaced ONLY after ALL
-      // applies succeeded. Par.awaitAll also joins every apply before
-      // rethrowing a failure, so a crash/retry never races stray
-      // in-flight table writers (A17).
+      // applies succeeded. Par.run joins the applies and the holdback
+      // write before rethrowing a failure, so a crash/retry never races
+      // stray in-flight table writers (A17).
       val rest = all.join(broadcast(complete),
           all("m.ts_ms") === complete("ts_ms"), "left_anti")
         .select("value")
       val tmp = Paths.get(pendingDir, "rows_next")
-      rest.write.mode("overwrite").parquet(tmp.toString)
-      graft.Par.awaitAll(applies) // all applies durable — retire holdback
+      graft.Par.run(applies :+ (() =>
+        rest.write.mode("overwrite").parquet(tmp.toString)))
+      // All applies durable — retire the holdback.
       graft.Scratch.delete(pendingPath)
       Files.move(tmp, pendingPath, StandardCopyOption.ATOMIC_MOVE)
     } finally all.unpersist(blocking = false)

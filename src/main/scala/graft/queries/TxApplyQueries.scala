@@ -3,7 +3,7 @@ package graft.queries
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import graft.Tables
-import graft.cdc.{ChangeGen, Envelope, Merge, MergeCommit, StateStore}
+import graft.cdc.{ChangeGen, Envelope, MergeCommit, StateStore}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -122,33 +122,27 @@ object TxApplyQueries {
       val completeRows = all.join(broadcast(complete), Seq("ts_ms"))
       val toApply = Envelope.flatten(
         completeRows.filter(col("op") =!= "t"))
-      // The apply (store table) and the holdback rewrite (pending dir)
-      // write DISJOINT locations off the same persisted frame — run
-      // them as concurrent Spark actions. Only the `rest` parquet
-      // write to the TEMP path overlaps the apply: the pending dir —
-      // the sole durable copy of complete transactions' events until
-      // the apply commits — is wiped and atomically replaced ONLY
-      // after the apply future has succeeded. (The reverse order would
-      // lose those events permanently if the apply failed or the
-      // process crashed in the window; the old sequential
-      // apply-then-rewrite only ever risked an idempotent re-apply.)
-      val applyF = graft.Par.future {
-        val compacted = Merge.compactKeepTombstones(toApply,
-          Seq("c_custkey")).persist()
-        try {
-          val meta = MergeCommit.toBatchMeta(compacted, Seq("c_custkey"),
-            NBuckets)
-          MergeCommit.mergeBatchMeta(store, TargetTable, meta,
-            Seq("c_custkey")).foreach(_.unpersist())
-        } finally compacted.unpersist(blocking = false)
-      }
       // Held-back rewrite: everything NOT in a complete transaction
       // (events and markers) waits for the next batch.
       val rest = all.join(broadcast(complete), Seq("ts_ms"), "left_anti")
         .select("before", "after", "op", "ts_ms", "seq", "source")
       val tmp = Paths.get(pendingDir, "rows_next")
-      rest.write.mode("overwrite").parquet(tmp.toString)
-      graft.Par.await(applyF) // apply durable — NOW retire the holdback
+      // The apply (store table) and the holdback rewrite (pending dir)
+      // write DISJOINT locations off the same persisted frame — run
+      // them as concurrent Spark actions, both joined before a failure
+      // is rethrown. Only the `rest` parquet write to the TEMP path
+      // overlaps the apply: the pending dir — the sole durable copy of
+      // complete transactions' events until the apply commits — is
+      // wiped and atomically replaced ONLY after the apply has
+      // succeeded. (The reverse order would lose those events
+      // permanently if the apply failed or the process crashed in the
+      // window; the old sequential apply-then-rewrite only ever risked
+      // an idempotent re-apply.)
+      graft.Par.run(Seq(
+        () => { MergeCommit.mergeFlattened(store, TargetTable, toApply,
+          Seq("c_custkey")); () },
+        () => rest.write.mode("overwrite").parquet(tmp.toString)))
+      // Apply durable — NOW retire the holdback.
       graft.Scratch.delete(pendingPath)
       Files.move(tmp, pendingPath, StandardCopyOption.ATOMIC_MOVE)
     } finally all.unpersist(blocking = false)

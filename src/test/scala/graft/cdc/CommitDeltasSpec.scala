@@ -33,7 +33,7 @@ class CommitDeltasSpec extends SparkTestBase {
   private def upsert(store: StateStore, pre: DataFrame, post: DataFrame,
                      batch: DataFrame, dropAtZero: Boolean)
                     (contrib: DataFrame => DataFrame): Unit =
-    MergeCommit.commitDeltas(store, "c", MergeCommit.Result(pre, post, 0),
+    MergeCommit.commitDeltas(store, "c", MergeCommit.Result(pre, post, 0, Nil),
       batch, Seq("g"), Seq("g"), dropAtZero)(contrib)
 
   private def table(store: StateStore): Map[String, Seq[Long]] =

@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
   * over a primary table keyed by `k` and a parity census derived from
   * it: a `derive` that throws leaves nothing persisted and its batch
   * rolled back on the next entry; an empty batch derives nothing and
-  * commits to no table.
+  * commits to no table. Over two primaries, a primary the batch leaves
+  * alone reaches `derive` as `None` and gets no commit.
   */
 class MergeCommitSpec extends SparkTestBase {
   import spark.implicits._
@@ -24,12 +25,16 @@ class MergeCommitSpec extends SparkTestBase {
 
   /** A flattened batch of (k, v) upserts at commit instant `ts`. */
   private def batch(ts: Long, rows: (Long, Long)*): DataFrame =
+    batchOf("t", ts, rows: _*)
+
+  /** [[batch]] with its events sourced from `table`. */
+  private def batchOf(table: String, ts: Long, rows: (Long, Long)*): DataFrame =
     Envelope.flatten(rows.toDF("k", "v").select(
       lit(null).cast("struct<k:bigint,v:bigint>").as("before"),
       struct(col("k"), col("v")).as("after"),
       lit(Envelope.OpUpdate).as("op"), lit(ts).as("ts_ms"),
       col("k").as("seq"),
-      struct(lit("s").as("schema"), lit("t").as("table")).as("source")))
+      struct(lit("s").as("schema"), lit(table).as("table")).as("source")))
 
   private def step(store: StateStore, b: DataFrame)
                   (derive: (DataFrame, MergeCommit.Result) => Unit): Unit =
@@ -42,6 +47,21 @@ class MergeCommitSpec extends SparkTestBase {
     MergeCommit.commitDeltas(store, Census, result,
       meta.select("k").distinct(), Seq("g"), Seq("g"), dropAtZero = false)(
       _.select((col("v") % 2).as("g"), lit(1L).as("n")))
+
+  private val Second = "m.second"
+
+  /** The step over two primaries: `t`-sourced events merge into
+    * [[Primary]], `u`-sourced ones into [[Second]].
+    */
+  private def twoStep(store: StateStore, b: DataFrame)
+                     (derive: Seq[(DataFrame, Option[MergeCommit.Result])]
+                       => Unit): Unit = {
+    def primary(table: String, source: String) = MergeCommit.Primary(table,
+      Seq("k"), b.filter(col("_cdc.source.table") === source),
+      MergeCommit.rowColumns)
+    MergeCommit.mergeMaintained(store,
+      Seq(primary(Primary, "t"), primary(Second, "u")), Seq(Census))(derive)
+  }
 
   private def persisted: Set[Int] =
     spark.sparkContext.getPersistentRDDs.keySet.toSet
@@ -85,5 +105,31 @@ class MergeCommitSpec extends SparkTestBase {
     assert(derived === 1)
     assert(store.currentVersion(Primary) === 0)
     assert(store.currentVersion(Census) === 0)
+  }
+
+  test("several primaries: a batch for the second alone derives with no " +
+      "result for the first and commits nothing to it, and a derive that " +
+      "throws leaves nothing persisted") {
+    val store = freshStore()
+    var seen = Seq.empty[(Long, Option[Int])]
+    twoStep(store, batchOf("u", 1000L, 1L -> 10L, 2L -> 20L)) { results =>
+      seen = results.map { case (meta, r) => (meta.count(), r.map(_.version)) }
+    }
+    assert(seen === Seq((0L, None), (2L, Some(0))))
+    assert(!store.exists(Primary) && !store.exists(Census))
+    assert(store.currentState(spark, Second).as[(Long, Long)].collect()
+      .sorted.toSeq === Seq(1L -> 10L, 2L -> 20L))
+    val before = persisted
+    intercept[Crash] {
+      twoStep(store, batchOf("t", 2000L, 3L -> 30L)
+          .unionByName(batchOf("u", 2000L, 1L -> 11L))) { results =>
+        assert(results.map(_._2.map(_.version)) === Seq(Some(0), Some(1)))
+        assert((persisted -- before).nonEmpty,
+          "precondition: the step's frames are persisted while derive runs")
+        throw new Crash
+      }
+    }
+    assert(persisted -- before === Set.empty[Int],
+      "every frame the step persisted is unpersisted")
   }
 }
