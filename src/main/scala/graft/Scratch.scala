@@ -96,7 +96,7 @@ object Scratch {
     * hidden temp dir under `dir`, deleted once its part file moved.
     */
   def orderedSlices(slices: Seq[DataFrame], dir: Path): Unit =
-    slices.zipWithIndex.foreach { case (df, i) =>
+    orderMtimes(slices.zipWithIndex.map { case (df, i) =>
       val tmp = dir.resolve(s"_slice$i")
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val parts = {
@@ -110,9 +110,18 @@ object Scratch {
       val dst = dir.resolve(f"b$i%02d.parquet")
       Files.move(parts.head, dst,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(1000000L + i * 60000L))
       delete(tmp)
+      dst
+    })
+
+  /** Give `files` modification times a minute apart in the given order,
+    * so a file stream source (which orders by mtime) replays them in
+    * that order at any filesystem time granularity.
+    */
+  def orderMtimes(files: Seq[Path]): Unit =
+    files.zipWithIndex.foreach { case (f, i) =>
+      Files.setLastModifiedTime(f,
+        java.nio.file.attribute.FileTime.fromMillis(1000000L + i * 60000L))
     }
 
   /** Number of live scratch dirs under the root (bench forensics). */

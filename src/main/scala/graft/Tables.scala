@@ -19,10 +19,19 @@ object Tables {
   val all: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Configs every engine SparkSession needs for the fixture layout. */
+  /** Configs every engine SparkSession needs: the fixture layout's, and
+    * local file I/O that starts no process — file modes set in-process
+    * ([[NioLocalFileSystem]]) and a checkpoint manager that renames
+    * through the FileSystem API (the FileContext one forks a `readlink`
+    * per rename).
+    */
   val sessionConfigs: Map[String, String] = Map(
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-    "spark.sql.session.timeZone" -> "UTC")
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      ("org.apache.spark.sql.execution.streaming.checkpointing." +
+        "FileSystemBasedCheckpointFileManager"))
 
   /** The one local-session builder every tool main (Bench, Verify,
     * TimeQ, PlanAudit) shares: `cores` drives both the local[...]

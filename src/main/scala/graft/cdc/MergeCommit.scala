@@ -4,32 +4,50 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** The ONE ordered-merge commit recipe (A11+A12+A13): compact a
-  * flattened micro-batch slice, attach merge metadata + bucket, read
-  * only the affected state buckets, mutually align schemas, run the
-  * latest-(ts,seq)-wins merge, commit just those buckets atomically.
-  * Every maintainer — the streaming pipeline's per-target merge, the
-  * lifecycle query's batch phases, the transactional appliers
-  * ([[mergeFlattened]]) and every maintained family, the join view
-  * included ([[mergeMaintained]]) — runs THIS code path, so
-  * merge-metadata or affected-bucket changes happen in exactly one
-  * place.
+  * flattened micro-batch slice, attach merge metadata + bucket, then
+  * commit it one of two ways:
+  *  - MERGE-ON-READ ([[StateStore.commitDelta]]), when no caller asked
+  *    for the merge's slices: the compacted batch is written as a delta
+  *    and appended to its buckets' chains. No state is read and no
+  *    bucket is rewritten; readers resolve the chains latest-(ts,seq)-
+  *    wins. The pipeline, the lifecycle and maintenance waves
+  *    ([[mergeRows]]), the transactional appliers, MinHash and the join
+  *    view's index ([[appendBatchMeta]]) commit this way.
+  *  - REWRITE, for callers that hold the merged buckets
+  *    ([[mergeMaintained]]'s persisted slices), a WAP stage, or a write
+  *    that folds a chain at its length limit ([[StateStore.foldDue]]):
+  *    read only the affected state buckets, mutually align schemas, run
+  *    the latest-(ts,seq)-wins merge, and commit just those buckets as
+  *    plain bases, atomically.
+  * Every maintainer runs THIS code path, so merge-metadata or
+  * affected-bucket changes happen in exactly one place.
   */
 object MergeCommit {
 
   /** The committed merge's working frames: the pre-merge and post-merge
     * affected-bucket slices (for callers that derive deltas from the
     * state transition, e.g. the incremental-aggregate contribution
-    * pass), the committed version and the sorted buckets it rewrote
+    * pass), the committed version and the sorted buckets it touched
     * (so a derived table on the same bucketing reads no bucket set of
     * its own). All frames stay readable after later commits — version
-    * dirs are immutable until vacuum.
+    * dirs are immutable until vacuum. A delta commit's slices are read
+    * from the two versions on first use, so a caller that never reads
+    * them pays nothing.
     */
-  final case class Result(preSlice: DataFrame, postSlice: DataFrame,
-                          version: Int, affected: Seq[Int]) {
+  final class Result(pre: => DataFrame, post: => DataFrame,
+                     val version: Int, val affected: Seq[Int]) {
+    lazy val preSlice: DataFrame = pre
+    lazy val postSlice: DataFrame = post
     def unpersist(): Unit = {
       preSlice.unpersist(blocking = false)
       postSlice.unpersist(blocking = false)
     }
+  }
+
+  object Result {
+    def apply(preSlice: => DataFrame, postSlice: => DataFrame, version: Int,
+              affected: Seq[Int]): Result =
+      new Result(preSlice, postSlice, version, affected)
   }
 
   /** Merge-metadata projection of a [[Merge.compactKeepTombstones]]
@@ -47,22 +65,72 @@ object MergeCommit {
         StateStore.bucketExpr(pkCols, nBuckets))
 
   /** Merge a metadata-carrying batch (the [[toBatchMeta]] shape — any
-    * column subset that keeps the pk + metadata columns) into `table`.
-    * None when the batch is empty. With `persistSlices` the returned
-    * pre/post slices are persisted — the caller unpersists via
-    * [[Result.unpersist]].
+    * column subset that keeps the pk + metadata columns) into `table`
+    * by rewriting its buckets. None when the batch is empty. With
+    * `persistSlices` the returned pre/post slices are persisted — the
+    * caller unpersists via [[Result.unpersist]].
     */
   def mergeBatchMeta(store: StateStore, table: String, batchMeta: DataFrame,
                      pkCols: Seq[String],
                      persistSlices: Boolean = false,
-                     stage: Boolean = false): Option[Result] = {
-    val affected = batchMeta.select(StateStore.BucketCol).distinct()
+                     stage: Boolean = false): Option[Result] =
+    mergeBatchMetaAffected(store, table, batchMeta, pkCols,
+      bucketsOf(batchMeta), persistSlices, stage)
+
+  /** [[mergeBatchMeta]] as a merge-on-read delta: the batch, kept
+    * latest per key, is appended to its buckets' chains (or rewrites
+    * them when a chain is due).
+    */
+  def appendBatchMeta(store: StateStore, table: String, batchMeta: DataFrame,
+                      pkCols: Seq[String]): Option[Result] =
+    commitBatch(store, table, batchMeta, pkCols, persistSlices = false,
+      stage = false, compacted = false)(bucketsOf(batchMeta))
+
+  private def bucketsOf(batchMeta: DataFrame): Seq[Int] =
+    batchMeta.select(StateStore.BucketCol).distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
-    mergeBatchMetaAffected(store, table, batchMeta, pkCols, affected,
-      persistSlices, stage)
+
+  /** The one fork between the two commits of the object doc: a delta
+    * when no slices are asked for and no chain is due, else the
+    * rewrite of the batch's buckets (`batchBuckets`, evaluated only
+    * then) and the due chains. A `compacted` batch holds one row per
+    * key already; any other is kept latest per key for its delta.
+    */
+  private def commitBatch(store: StateStore, table: String,
+                          batchMeta: DataFrame, pkCols: Seq[String],
+                          persistSlices: Boolean, stage: Boolean,
+                          compacted: Boolean)
+                         (batchBuckets: => Seq[Int]): Option[Result] = {
+    val due = if (store.exists(table)) store.foldDue(table) else Nil
+    if (persistSlices || stage || due.nonEmpty)
+      mergeBatchMetaAffected(store, table, batchMeta, pkCols,
+        (batchBuckets ++ due).distinct.sorted, persistSlices, stage)
+    else appendDelta(store, table, batchMeta, pkCols, compacted)
   }
 
-  /** The merge body once the affected buckets are known. Callers that
+  /** The merge-on-read commit: the batch, aligned to the state's
+    * schema as the rewrite would align it, written as a delta. The
+    * Result's slices read the touched buckets at the two versions.
+    */
+  private def appendDelta(store: StateStore, table: String,
+                          batchMeta: DataFrame, pkCols: Seq[String],
+                          compacted: Boolean): Option[Result] = {
+    val spark = batchMeta.sparkSession
+    val prev = store.currentVersion(table)
+    val empty = SchemaEvolution.align(store.emptyState(spark, table), batchMeta)
+    val batch = SchemaEvolution.align(batchMeta, empty)
+    val delta =
+      if (compacted) empty.unionByName(batch, allowMissingColumns = true)
+      else Merge.mergeOrdered(empty, batch, pkCols)
+    store.commitDelta(spark, table, delta, pkCols).map { case (v, affected) =>
+      Result(
+        if (prev < 0) emptyLike(delta)
+        else store.readBucketsAt(spark, table, prev, affected),
+        store.readBucketsAt(spark, table, v, affected), v, affected)
+    }
+  }
+
+  /** The rewrite once the affected buckets are known. Callers that
     * can compute `affected` from a CHEAPER frame than the compacted
     * batch (the flattened paths below use the raw slice — the bucket
     * set is invariant under latest-per-key compaction, and a
@@ -109,20 +177,21 @@ object MergeCommit {
         nBuckets).as("b"))
       .distinct().collect().map(_.getInt(0)).toSeq.sorted
 
-  /** Compact + merge a flattened slice ([[Envelope.flatten]] output).
+  /** Compact + merge a flattened slice ([[Envelope.flatten]] output):
+    * a delta commit unless slices are asked for or a chain is due.
     * With `stage = true` the merge lands as an UNPUBLISHED branch
     * version ([[StateStore.stageCommit]]) for a write-audit-publish
-    * gate — same merge path, head pointer untouched.
+    * gate — the rewrite, head pointer untouched.
     */
   def mergeFlattened(store: StateStore, table: String, slice: DataFrame,
                      pkCols: Seq[String],
                      persistSlices: Boolean = false,
                      stage: Boolean = false): Option[Result] =
-    mergeBatchMetaAffected(store, table,
+    commitBatch(store, table,
       toBatchMeta(Merge.compactKeepTombstones(slice, pkCols), pkCols,
         store.nBuckets),
-      pkCols, affectedBuckets(slice, pkCols, store.nBuckets),
-      persistSlices, stage)
+      pkCols, persistSlices, stage, compacted = true)(
+      affectedBuckets(slice, pkCols, store.nBuckets))
 
   /** The batch's data columns as [[toBatchMeta]] lays them out: the
     * `features` of a family that merges its change-log rows as they are.
@@ -226,7 +295,7 @@ object MergeCommit {
   def mergeRows(store: StateStore, table: String, rows: DataFrame,
                 key: String, ts: Long,
                 deleted: Column = lit(false)): Option[Result] =
-    mergeBatchMeta(store, table, rows
+    appendBatchMeta(store, table, rows
       .withColumn(StateStore.TsCol, lit(ts))
       .withColumn(StateStore.SeqCol, col(key).cast("long"))
       .withColumn(StateStore.DeletedCol, deleted)

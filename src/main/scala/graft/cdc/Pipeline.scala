@@ -283,10 +283,10 @@ final class Pipeline(store: StateStore, gate: Option[WapGate] = None) {
 
   /** Ordered merge of one target's slice of the micro-batch into state:
     * the shared [[MergeCommit]] recipe — compact within batch → bucket
-    * → read ONLY affected state buckets → mutual schema alignment
-    * (A11) → latest-(ts,seq)-wins merge → atomic commit of just those
-    * buckets (A13). With a [[WapGate]], the commit lands as a staged
-    * branch first and publishes only if the audit passes.
+    * → atomic commit of the compacted batch as a delta that readers
+    * resolve latest-(ts,seq)-wins (A13). With a [[WapGate]], the merge
+    * rewrites the affected buckets as a staged branch first and
+    * publishes only if the audit passes.
     */
   private def mergeTarget(target: String, pk: Seq[String],
                           slice: DataFrame, batchId: Long = 0L,

@@ -28,6 +28,13 @@ private[queries] object DrainHarness {
   def stage(log: DataFrame, cacheKey: String): String =
     Scratch.staged("graft-log-", cacheKey) { dir =>
       log.repartition(4).write.mode("overwrite").parquet(dir.toString)
+      // The part files' mtimes can tie, and the file source orders by
+      // mtime: without a strict order, which files form a micro-batch
+      // would change from run to run.
+      val s = java.nio.file.Files.list(dir)
+      try Scratch.orderMtimes(s.toArray.map(_.asInstanceOf[java.nio.file.Path])
+        .filter(_.getFileName.toString.startsWith("part-")).sortBy(_.toString).toSeq)
+      finally s.close()
     }.toString
 
   /** Stage a log as ONE FILE PER WAVE in wave order

@@ -159,8 +159,8 @@ object JoinCdcQueries {
       .unionByName(gone.withColumn(StateStore.DeletedCol, lit(true)))
       .withColumn(StateStore.BucketCol,
         StateStore.bucketExpr(Seq("c_custkey"), NBuckets))
-    // Nothing reads the index merge's slices, so they stay unpersisted.
-    MergeCommit.mergeBatchMeta(store, IdxTable, idxBatch,
+    // Nothing reads the index merge's slices: it commits as a delta.
+    MergeCommit.appendBatchMeta(store, IdxTable, idxBatch,
       Seq("c_custkey", "o_orderkey"))
     ()
   }

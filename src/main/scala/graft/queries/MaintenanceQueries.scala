@@ -2655,6 +2655,9 @@ object MaintenanceQueries {
 
     store.compactTable(spark, dst)
     store.vacuum(dst, keepVersions = 1)
+    // The source's delta chains are folded first, so its manifest names
+    // every dir its head still reads.
+    store.compactTable(spark, src)
     store.vacuum(src, keepVersions = 1)
     val refsPruned = !Files.exists(
       whPath.resolve(src).resolve(graft.cdc.StateStore.RefsFile))
