@@ -19,16 +19,21 @@ object Tables {
   val all: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Configs every engine SparkSession needs: the fixture layout's, and
+  /** Configs every engine SparkSession needs: the fixture layout's,
     * local file I/O that starts no process — file modes set in-process
     * ([[NioLocalFileSystem]]) and a checkpoint manager that renames
     * through the FileSystem API (the FileContext one forks a `readlink`
-    * per rename).
+    * per rename) — and driver-side listing of up to 1,024 paths: a
+    * chained state read passes one path per bucket dir of every chain
+    * (`StateStore.readChains`), and past Spark's default of 32 each read
+    * would start a listing job for directories the driver lists in a
+    * few milliseconds.
     */
   val sessionConfigs: Map[String, String] = Map(
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.sql.session.timeZone" -> "UTC",
     "spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+    "spark.sql.sources.parallelPartitionDiscovery.threshold" -> "1024",
     "spark.sql.streaming.checkpointFileManagerClass" ->
       ("org.apache.spark.sql.execution.streaming.checkpointing." +
         "FileSystemBasedCheckpointFileManager"))

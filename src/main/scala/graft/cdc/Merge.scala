@@ -74,12 +74,6 @@ object Merge {
     *
     * Same scale shape as [[compact]]: union + one `max_by` hash
     * aggregation (map-side combinable), over affected buckets only.
-    *
-    * It is also the READ-side resolver of [[StateStore]]'s bucket
-    * chains (base ∪ deltas), so a chain reads exactly as the rewrite
-    * it stands for would have committed. The key columns come out as
-    * the grouping columns, so a reader's key predicate (a point
-    * lookup) is pushed below the aggregation into the scans.
     */
   def mergeOrdered(state: DataFrame, batch: DataFrame,
                    pkCols: Seq[String]): DataFrame = {
@@ -89,9 +83,7 @@ object Merge {
     val payload = struct(all.columns.map(col): _*)
     all.groupBy(keys: _*)
       .agg(max_by(payload, order).as("latest"))
-      .select(all.columns.toSeq.map(c =>
-        if (pkCols.exists(_.equalsIgnoreCase(c))) col(s"`$c`")
-        else col("latest").getField(c).as(c)): _*)
+      .select(col("latest.*"))
   }
 }
 

@@ -9,13 +9,15 @@ import org.apache.spark.sql.functions._
   *  - MERGE-ON-READ ([[StateStore.commitDelta]]), when no caller asked
   *    for the merge's slices: the compacted batch is written as a delta
   *    and appended to its buckets' chains. No state is read and no
-  *    bucket is rewritten; readers resolve the chains latest-(ts,seq)-
-  *    wins. The pipeline, the lifecycle and maintenance waves
+  *    bucket is rewritten; readers resolve the chains newest-delta-wins
+  *    in their scan. The pipeline, the lifecycle and maintenance waves
   *    ([[mergeRows]]), the transactional appliers, MinHash and the join
   *    view's index ([[appendBatchMeta]]) commit this way.
   *  - REWRITE, for callers that hold the merged buckets
-  *    ([[mergeMaintained]]'s persisted slices), a WAP stage, or a write
-  *    that folds a chain at its length limit ([[StateStore.foldDue]]):
+  *    ([[mergeMaintained]]'s persisted slices), a WAP stage, a write
+  *    that folds a chain at its length limit ([[StateStore.foldDue]]),
+  *    or a batch with an event no newer than the chains (which the
+  *    store refuses as a delta):
   *    read only the affected state buckets, mutually align schemas, run
   *    the latest-(ts,seq)-wins merge, and commit just those buckets as
   *    plain bases, atomically.
@@ -30,24 +32,15 @@ object MergeCommit {
     * pass), the committed version and the sorted buckets it touched
     * (so a derived table on the same bucketing reads no bucket set of
     * its own). All frames stay readable after later commits — version
-    * dirs are immutable until vacuum. A delta commit's slices are read
-    * from the two versions on first use, so a caller that never reads
-    * them pays nothing.
+    * dirs are immutable until vacuum. A delta commit has no slices: its
+    * frames are empty, as no caller that asks for slices commits one.
     */
-  final class Result(pre: => DataFrame, post: => DataFrame,
-                     val version: Int, val affected: Seq[Int]) {
-    lazy val preSlice: DataFrame = pre
-    lazy val postSlice: DataFrame = post
+  final case class Result(preSlice: DataFrame, postSlice: DataFrame,
+                          version: Int, affected: Seq[Int]) {
     def unpersist(): Unit = {
       preSlice.unpersist(blocking = false)
       postSlice.unpersist(blocking = false)
     }
-  }
-
-  object Result {
-    def apply(preSlice: => DataFrame, postSlice: => DataFrame, version: Int,
-              affected: Seq[Int]): Result =
-      new Result(preSlice, postSlice, version, affected)
   }
 
   /** Merge-metadata projection of a [[Merge.compactKeepTombstones]]
@@ -68,7 +61,11 @@ object MergeCommit {
     * column subset that keeps the pk + metadata columns) into `table`
     * by rewriting its buckets. None when the batch is empty. With
     * `persistSlices` the returned pre/post slices are persisted — the
-    * caller unpersists via [[Result.unpersist]].
+    * caller unpersists via [[Result.unpersist]]. The copy-on-write form
+    * of [[appendBatchMeta]], kept beside it because its callers rely on
+    * the physical layout it leaves: every touched bucket one plain base
+    * holding the merged rows (the files-metadata query and the specs
+    * that count rows in the newest dir), or persisted slices.
     */
   def mergeBatchMeta(store: StateStore, table: String, batchMeta: DataFrame,
                      pkCols: Seq[String],
@@ -109,24 +106,26 @@ object MergeCommit {
   }
 
   /** The merge-on-read commit: the batch, aligned to the state's
-    * schema as the rewrite would align it, written as a delta. The
-    * Result's slices read the touched buckets at the two versions.
+    * schema as the rewrite would align it, written as a delta. A batch
+    * the store refuses as a delta (an event no newer than the chains,
+    * [[StateStore.commitDelta]]) is merged by the rewrite of the
+    * buckets it touched.
     */
   private def appendDelta(store: StateStore, table: String,
                           batchMeta: DataFrame, pkCols: Seq[String],
                           compacted: Boolean): Option[Result] = {
     val spark = batchMeta.sparkSession
-    val prev = store.currentVersion(table)
     val empty = SchemaEvolution.align(store.emptyState(spark, table), batchMeta)
     val batch = SchemaEvolution.align(batchMeta, empty)
     val delta =
       if (compacted) empty.unionByName(batch, allowMissingColumns = true)
       else Merge.mergeOrdered(empty, batch, pkCols)
-    store.commitDelta(spark, table, delta, pkCols).map { case (v, affected) =>
-      Result(
-        if (prev < 0) emptyLike(delta)
-        else store.readBucketsAt(spark, table, prev, affected),
-        store.readBucketsAt(spark, table, v, affected), v, affected)
+    store.commitDelta(spark, table, delta, pkCols) match {
+      case Right((v, affected)) =>
+        Some(Result(emptyLike(delta), emptyLike(delta), v, affected))
+      case Left(touched) =>
+        mergeBatchMetaAffected(store, table, batchMeta, pkCols, touched,
+          persistSlices = false, stage = false)
     }
   }
 

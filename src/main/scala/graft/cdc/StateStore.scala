@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StringType, StructType}
 
 /** Versioned, bucket-partitioned current-state table store — the
   * engine's stand-in for Iceberg's snapshot commit
@@ -45,18 +45,21 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * dirs committed above it, oldest first. A delta commit
   * ([[commitDelta]]) writes only a micro-batch's compacted rows, with
   * their merge metadata, and appends each touched bucket's new dir to
-  * its chain; a commit that rewrites a bucket ([[commit]], the WAP
-  * stage, [[commitOptimistic]], compaction, purge) publishes a plain
-  * base that ends the chain. Readers resolve a chained bucket with the
-  * write-side rule, latest-(ts, seq)-wins over base ∪ deltas
-  * ([[Merge.mergeOrdered]], grouped by the key the manifest records);
-  * a bucket with a one-dir chain reads as it is. Every dir holds at
-  * most one row per key, so only a chain needs resolving. On the
-  * 15,000-row, 16-bucket customer table fed 150 events per write,
-  * rewriting every touched bucket rewrote 100.9 rows per event (every
-  * bucket is touched once a batch holds a few keys per bucket); a
-  * delta commit writes about one. A chain that reaches [[MaxDeltas]]
-  * deltas is folded by the next write ([[foldDue]]).
+  * its chain, recording the keys the dir holds; a commit that rewrites
+  * a bucket ([[commit]], the WAP stage, [[commitOptimistic]],
+  * compaction, purge) publishes a plain base that ends the chain. A
+  * delta is published only when all its rows are newer than every row
+  * the chains reach (the manifest's `upto` bound); a batch with an
+  * older event is merged by a rewrite instead. So in a chain the newest
+  * dir holding a key holds its winner, and a read resolves the chains
+  * inside its one scan by a key filter ([[readChains]]) — the
+  * equality-delete read of Iceberg's merge-on-read, with no shuffle.
+  * Every dir holds at most one row per key, so only a chain needs
+  * resolving. On the 15,000-row, 16-bucket customer table fed 150
+  * events per write, rewriting every touched bucket rewrote 100.9 rows
+  * per event (every bucket is touched once a batch holds a few keys
+  * per bucket); a delta commit writes 1.0. A chain that reaches
+  * [[MaxDeltas]] deltas is folded by the next write ([[foldDue]]).
   *
   * Readers resolve `_VERSION` → manifest → data dirs, so they always
   * see one consistent snapshot; the pointer swap is an atomic rename
@@ -284,6 +287,10 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
   def manifestAt(target: String, version: Int): Map[Int, String] =
     chainsAt(target, version).newest
 
+  /** Every data dir `version` reads: each bucket's base and deltas. */
+  def dirsAt(target: String, version: Int): Seq[String] =
+    chainsAt(target, version).dirs.distinct.sorted
+
   private def chainsAt(target: String, version: Int): Chains = {
     val f = manifestFile(target, version)
     if (version < 0 || !Files.exists(f)) Chains.empty else readManifest(f)
@@ -359,28 +366,66 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
     readBucketsAt(spark, target, currentVersion(target), buckets)
 
   /** [[readBuckets]] as of `version`. */
-  private[cdc] def readBucketsAt(spark: SparkSession, target: String,
+  private def readBucketsAt(spark: SparkSession, target: String,
                                  version: Int, buckets: Seq[Int]): DataFrame =
     readChains(spark, target, chainsAt(target, version).only(buckets.toSet),
-      schemaAt(target, version), columnRenames(target, version))
+      schemaAt(target, version), columnRenames(target, version),
+      withBucket = true)
 
-  /** Shared read path for any manifest subset. A bucket whose chain is
-    * one dir reads as it is; the chained buckets' bases and deltas are
-    * resolved latest-(ts, seq)-wins per key ([[Merge.mergeOrdered]]).
+  /** Shared read path for any manifest subset. Without chains every
+    * bucket reads its one dir ([[readDirs]]). With chains, every dir of
+    * the read — bases and deltas — is read by ONE scan per written
+    * schema and resolved in that scan by [[newestWins]]: no shuffle and
+    * no extra job. Its `_bucket` comes from each file's path, only when
+    * `withBucket` (a live read drops it, and the file-path column costs
+    * the scan even when pruned).
     */
   private def readChains(spark: SparkSession, target: String, c: Chains,
-                         schema: StructType,
-                         renames: Seq[(String, String)]): DataFrame = {
-    val (plain, chained) = c.buckets.partition(_._2.size == 1)
-    val read = readDirs(spark, target, schema, renames) _
-    val resolved = if (chained.isEmpty) None else {
+                         schema: StructType, renames: Seq[(String, String)],
+                         withBucket: Boolean): DataFrame =
+    if (c.buckets.values.forall(_.size == 1))
+      readDirs(spark, target, schema, renames)(c.dirs)
+        .getOrElse(emptyState(spark, target))
+    else {
       require(c.key.nonEmpty, s"$target has chained buckets but no key")
-      Some(Merge.mergeOrdered(read(chained.values.map(_.head).toSeq).get,
-        read(chained.values.flatMap(_.tail).toSeq).get, c.key))
+      val byVersion = c.dirs.groupBy(p => p.substring(0, p.lastIndexOf('/')))
+        .map { case (v, ps) => (v, writtenSchema(target, v), ps) }
+      // A version with no schema file reads on its own (inferred).
+      byVersion.groupBy { case (v, w, _) => w.fold(v)(_.json) }.values
+        .map { vs =>
+          val paths = vs.toSeq.flatMap(_._3).map(p => dir(target).resolve(p).toString)
+          val df = vs.head._2.fold(spark.read)(spark.read.schema).parquet(paths: _*)
+          SchemaEvolution.alignTo(mapRenames(
+            if (!withBucket) df
+            else df.withColumn(BucketCol, substring_index(substring_index(
+              col("_metadata.file_path"), s"/$BucketCol=", -1), "/", 1)
+              .cast("int")), renames), schema)
+        }
+        .reduce(_.unionByName(_, allowMissingColumns = true))
+        .filter(newestWins(c, schema))
     }
-    (read(plain.values.map(_.head).toSeq) ++ resolved)
-      .reduceOption(_.unionByName(_, allowMissingColumns = true))
-      .getOrElse(emptyState(spark, target))
+
+  /** The chain rule as a row filter. Every delta holds only rows newer
+    * than all its chain held before it ([[commitDelta]]), so the newest
+    * delta holding a key holds the key's winner, and that is the one
+    * row of the key at or above that delta's least (ts, seq). A key
+    * lives in one bucket, so the deltas of every chain share one CASE,
+    * newest first; a key no delta holds has one row in its chain.
+    */
+  private def newestWins(c: Chains, schema: StructType): org.apache.spark.sql.Column = {
+    val keyCol = keyColumn(c.key, schema)
+    val at = struct(col(TsCol).as("ts"), col(SeqCol).as("seq"))
+    val deltas = c.buckets.values.flatMap(_.tail).flatMap(c.deltaKeys.get)
+      .groupMapReduce(_.lo)(_.keys)(_ ++ _).toSeq.sortBy(_._1)(order.reverse)
+    // Struct literals and hashed key sets are referenced, not inlined,
+    // by generated code, so every read of this shape reuses one
+    // compiled filter whatever its bounds and keys.
+    deltas.foldLeft(Option.empty[org.apache.spark.sql.Column]) {
+      case (acc, ((ts, seq), ks)) =>
+        val cond = keyCol.isin(ks.map(keyLiteral(c.key, schema, _)): _*)
+        val atOrAbove = at >= struct(lit(ts).as("ts"), lit(seq).as("seq"))
+        Some(acc.fold(when(cond, atOrAbove))(_.when(cond, atOrAbove)))
+    }.fold(lit(true))(_.otherwise(true))
   }
 
   /** Bucket dirs from different versions, read per version group (each
@@ -413,30 +458,34 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
       val reader0 = spark.read.option("basePath", base)
       val reader = writtenSchema(target, verDir)
         .fold(reader0)(s => reader0.schema(s.add(BucketCol, "int")))
-      val df = reader.parquet(paths: _*)
-      // Name mapping FIRST ([[columnRenames]]): files written before a
-      // rename carry the old name; applied in journal order the chain
-      // lands every historical name on its current one, and a mapping
-      // whose old name is absent (file post-dates that rename) is a
-      // no-op. PRESENCE-GUARDED (VERDICT r16 #1): a mapping whose NEW
-      // name is already a column of this file group is skipped — that
-      // file post-dates a rename-back (a→b then b→a) or a retired-name
-      // re-target (c→a), and applying the stale leading mapping would
-      // collide with or capture the revived column. [[renameColumn]]'s
-      // fold-identity validation rejects at DDL time any chain the
-      // guard cannot disambiguate. Only then does alignTo
-      // widen/backfill — without the mapping it would read a renamed
-      // column as drop+add and null every pre-rename value.
-      val mapped = renames.foldLeft(df) { case (acc, (from, to)) =>
-        val cols = acc.columns
-        if (cols.exists(_.equalsIgnoreCase(from)) &&
-            !cols.exists(_.equalsIgnoreCase(to)))
-          acc.withColumnRenamed(from, to)
-        else acc
-      }
-      SchemaEvolution.alignTo(mapped, schema)
+      SchemaEvolution.alignTo(mapRenames(reader.parquet(paths: _*), renames),
+        schema)
     }.reduceOption(_.unionByName(_, allowMissingColumns = true))
   }
+
+  /** Name mapping FIRST ([[columnRenames]]): files written before a
+    * rename carry the old name; applied in journal order the chain
+    * lands every historical name on its current one, and a mapping
+    * whose old name is absent (file post-dates that rename) is a
+    * no-op. PRESENCE-GUARDED (VERDICT r16 #1): a mapping whose NEW
+    * name is already a column of this file group is skipped — that
+    * file post-dates a rename-back (a→b then b→a) or a retired-name
+    * re-target (c→a), and applying the stale leading mapping would
+    * collide with or capture the revived column. [[renameColumn]]'s
+    * fold-identity validation rejects at DDL time any chain the
+    * guard cannot disambiguate. Only then does alignTo
+    * widen/backfill — without the mapping it would read a renamed
+    * column as drop+add and null every pre-rename value.
+    */
+  private def mapRenames(df: DataFrame,
+                         renames: Seq[(String, String)]): DataFrame =
+    renames.foldLeft(df) { case (acc, (from, to)) =>
+      val cols = acc.columns
+      if (cols.exists(_.equalsIgnoreCase(from)) &&
+          !cols.exists(_.equalsIgnoreCase(to)))
+        acc.withColumnRenamed(from, to)
+      else acc
+    }
 
   /** Empty frame in the target's current schema (+ `_bucket`). */
   def emptyState(spark: SparkSession, target: String): DataFrame = {
@@ -455,7 +504,8 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
     * what `SELECT * FROM <target>` means.
     */
   def currentState(spark: SparkSession, target: String): DataFrame =
-    live(rawState(spark, target))
+    if (!exists(target)) live(emptyState(spark, target))
+    else stateAt(spark, target, currentVersion(target))
 
   /** Live rows in user shape: tombstones filtered, metadata dropped. */
   private def live(raw: DataFrame): DataFrame =
@@ -471,7 +521,8 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
     val c = chainsAt(target, version)
     if (c.buckets.isEmpty) emptyState(spark, target).drop(MetaCols: _*)
     else live(readChains(spark, target, c,
-      schemaAt(target, version), columnRenames(target, version)))
+      schemaAt(target, version), columnRenames(target, version),
+      withBucket = false))
   }
 
   /** COMMIT INSTANT of a version: the millisecond timestamp recorded in
@@ -634,22 +685,28 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
   /** MERGE-ON-READ commit: `delta` — a compacted batch, at most one row
     * per `key` with metadata + `_bucket` — is written as version N+1,
     * and each bucket the write produced gets that dir appended to its
-    * chain. No state is read and no bucket is rewritten; the touched
-    * buckets are the dirs the one write job produced. The manifest
-    * records `key`, which readers resolve chains by. Returns the
-    * version and those buckets, or None (no version) for an empty
-    * `delta`. Callers fold due chains first ([[foldDue]]).
+    * chain, with the keys it holds. No state is read and no bucket is
+    * rewritten; the touched buckets and their keys are observed on the
+    * one write job. The delta is published only when every row is
+    * newer than anything the chains hold (its least (ts, seq) above the
+    * manifest's `upto` bound), so the newest delta holding a key holds
+    * its winner ([[newestWins]]); otherwise nothing is published.
+    * Right(version, buckets) when published; Left(buckets) when not —
+    * none for an empty `delta`, else the buckets a rewrite must merge
+    * the batch into. Callers fold due chains first ([[foldDue]]).
     */
   def commitDelta(spark: SparkSession, target: String, delta: DataFrame,
-                  key: Seq[String]): Option[(Int, Seq[Int])] = {
+                  key: Seq[String]): Either[Seq[Int], (Int, Seq[Int])] = {
     val prev = currentVersion(target)
     val carried = chainsAt(target, prev)
     require(carried.key.isEmpty || carried.key.map(_.toLowerCase) ==
       key.map(_.toLowerCase),
       s"$target is keyed by ${carried.key.mkString(",")}, not ${key.mkString(",")}")
-    // Every merge writes its columns nullable ([[Merge.mergeOrdered]]'s
-    // `latest.*`); the delta's schema file says the same, so a delta
-    // version's schema equals the one a rewrite would have committed.
+    require(Seq(TsCol, SeqCol).forall(delta.columns.contains),
+      s"a delta of $target needs $TsCol and $SeqCol")
+    // Written nullable, as the rewrite's [[Merge.mergeOrdered]] writes
+    // every column (`latest.*`): a delta version's schema equals the one
+    // a rewrite would have committed.
     val schema = StructType(delta.drop(BucketCol).schema
       .map(_.copy(nullable = true)))
     writeVersion(target, prev, Head, carried, schema.json, Nil,
@@ -877,7 +934,7 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
     val changed = changedBucketsBetween(target, vFrom, vTo)
     def side(v: Int): DataFrame =
       live(readChains(spark, target, chainsAt(target, v).only(changed.toSet),
-        schemaAt(target, v), columnRenames(target, v)))
+        schemaAt(target, v), columnRenames(target, v), withBucket = false))
     val before0 = side(vFrom)
     val after0 = side(vTo)
     val before = SchemaEvolution.align(before0, after0)
@@ -941,14 +998,15 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
     *      an EMPTY parquet file, not left missing: each rewritten `b`
     *      gets the one-dir chain `v<next>/_bucket=b`. A delta's rows
     *      append `v<next>/_bucket=b` to the chain of every bucket `b`
-    *      the write produced; a delta that produced none publishes
-    *      nothing (its dir goes, None is returned). An optimistic
-    *      writer's heartbeat runs for the whole data write;
-    *   4. the manifest (`carried` with those chains, and a delta's key)
-    *      and the schema file;
+    *      the write produced. A delta that produced none, or whose
+    *      least (ts, seq) is not above the carried `upto` bound, publishes
+    *      nothing: its dir goes and Left(its buckets) is returned. An
+    *      optimistic writer's heartbeat runs for the whole data write;
+    *   4. the manifest (`carried` with those chains, a delta's key and
+    *      keys, the new `upto` bound) and the schema file;
     *   5. the claim check: the pointer must still say `prev`, and an
     *      optimistic claim's marker must still carry its token. A lost
-    *      optimistic claim returns None (the caller retries); any
+    *      optimistic claim returns Left (the caller retries); any
     *      other lost claim throws — BEFORE the journal append (ADVICE
     *      r16, low), so a lost race never leaves a journal line at a
     *      version another writer is about to claim;
@@ -968,7 +1026,7 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
     *      instant;
     *   8. the atomic `_VERSION` swap, except for a WAP branch.
     *
-    * Returns the buckets `rows` wrote (none without rows) once
+    * Returns Right(the buckets `rows` wrote, none without rows) once
     * published.
     *
     * The retired-name guard: renamed-away names may never come back
@@ -984,7 +1042,7 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
   private def writeVersion(target: String, prev: Int, claim: Claim,
                            carried: Chains, schemaJson: String,
                            renames: Seq[(String, String)],
-                           rows: Option[Rows]): Option[Seq[Int]] = {
+                           rows: Option[Rows]): Either[Seq[Int], Seq[Int]] = {
     val d = dir(target)
     val next = prev + 1
     val retired = retiredNames(columnRenames(target, prev) ++ renames)
@@ -1005,23 +1063,38 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
       if (prev < 0) Seq(d.resolve(HistoryFile), d.resolve(CommitsFile)) else Nil
     (Seq(manifestFile(target, next), d.resolve(s"schema-$next.json")) ++
       lock ++ unpublished).foreach(Files.deleteIfExists)
-    val appended = rows.fold(Seq.empty[Int]) { r =>
+    // Only a table that can take deltas tracks `upto`: a new one, or
+    // one keyed by an earlier delta.
+    val track = carried.buckets.isEmpty || carried.key.nonEmpty ||
+      rows.exists(_.deltaKey.nonEmpty)
+    val wrote = rows.map { r =>
       claim match {
         case m: Marker =>
-          heartbeat(m, s"occ-heartbeat-$target-$next")(writeData(d, next, r))
-        case _ => writeData(d, next, r)
+          heartbeat(m, s"occ-heartbeat-$target-$next")(writeData(d, next, r, track))
+        case _ => writeData(d, next, r, track)
       }
     }
+    val appended = wrote.fold(Map.empty[Int, Seq[String]])(_.keys)
     val rewritten = rows.fold(Seq.empty[Int])(_.rewritten)
-    if (rows.exists(_.deltaKey.nonEmpty) && appended.isEmpty) {
+    // What the carried rows stay within: nothing for a table with no
+    // buckets yet.
+    val floor = if (carried.buckets.isEmpty) Some(Floor) else carried.upTo
+    if (rows.exists(_.deltaKey.nonEmpty) &&
+        !(appended.nonEmpty && wrote.flatMap(_.lo)
+          .exists(lo => floor.exists(order.gt(lo, _))))) {
       graft.Scratch.delete(d.resolve(s"v$next"))
-      return None
+      return Left(appended.keys.toSeq.sorted)
     }
     def own(b: Int) = s"v$next/$BucketCol=$b"
     val chains = Chains(carried.buckets ++
       rewritten.map(b => b -> Seq(own(b))) ++
-      appended.map(b => b -> (carried.buckets.getOrElse(b, Nil) :+ own(b))),
-      rows.flatMap(_.deltaKey).getOrElse(carried.key))
+      appended.keys.map(b => b -> (carried.buckets.getOrElse(b, Nil) :+ own(b))),
+      rows.flatMap(_.deltaKey).getOrElse(carried.key),
+      carried.deltaKeys ++ appended.map { case (b, ks) =>
+        own(b) -> Delta(wrote.flatMap(_.lo).get, ks) },
+      wrote.fold(carried.upTo)(w =>
+        if (!w.ordered) None
+        else floor.map(f => w.hi.fold(f)(order.max(f, _))))).pruned
     Files.writeString(manifestFile(target, next), encodeManifest(chains))
     Files.writeString(d.resolve(s"schema-$next.json"), schemaJson)
     val held = currentVersion(target) == prev && (claim match {
@@ -1032,7 +1105,7 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
       case _ => true
     })
     if (!held) claim match {
-      case _: Marker => return None
+      case _: Marker => return Left(Nil)
       case _ => throw new IllegalStateException(
         s"single-writer invariant violated on $target: version moved " +
           s"from $prev to ${currentVersion(target)} while writing $next")
@@ -1056,7 +1129,7 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
     val ts = math.max(System.currentTimeMillis(), last + 1)
     append(log, Seq(s"""{"version":$next,"ts":$ts}"""))
     if (claim != Branch) swapPointer(target, next)
-    Some(rewritten ++ appended)
+    Right(rewritten ++ appended.keys.toSeq.sorted)
   }
 
   /** A merge result as version `prev + 1`: the head's manifest with
@@ -1068,18 +1141,29 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
                         claim: Claim): Boolean =
     writeVersion(target, prev, claim, chainsAt(target, prev),
       merged.drop(BucketCol).schema.json, Nil,
-      Some(Rows(spark, merged, affected, None))).isDefined
+      Some(Rows(spark, merged, affected, None))).isRight
 
   /** One Spark job writes every bucket of `r` (`partitionBy`), then
     * each rewritten bucket the job skipped gets an empty file: one
     * cached 0-row template per schema, file-copied per bucket, because
     * publishing an emptied bucket is metadata work and must not cost a
-    * Spark job each ([[StateStore.emptyParquetFor]]). Returns the
-    * buckets a delta's write produced, ascending (none for a rewrite).
+    * Spark job each ([[StateStore.emptyParquetFor]]). With `track`,
+    * rows that carry merge metadata are observed on that one job: their
+    * least and greatest (ts, seq), and a delta's keys per bucket it
+    * wrote.
     */
-  private def writeData(d: Path, next: Int, r: Rows): Seq[Int] = {
+  private def writeData(d: Path, next: Int, r: Rows, track: Boolean): Wrote = {
     val out = d.resolve(s"v$next")
-    r.frame.write.mode("overwrite").partitionBy(BucketCol).parquet(out.toString)
+    val ordered = track && Seq(TsCol, SeqCol).forall(r.frame.columns.contains)
+    val obs = new org.apache.spark.sql.Observation()
+    val frame = if (!ordered) r.frame else {
+      val at = struct(col(TsCol).cast("long"), col(SeqCol).cast("long"))
+      r.frame.observe(obs, max(at).as("hi"), (min(at).as("lo") +:
+        r.deltaKey.map(k =>
+          collect_list(struct(col(BucketCol), keyString(k))).as("keys"))
+          .toSeq): _*)
+    }
+    frame.write.mode("overwrite").partitionBy(BucketCol).parquet(out.toString)
     val missing = r.rewritten.map(b => out.resolve(s"$BucketCol=$b"))
       .filterNot(Files.exists(_))
     if (missing.nonEmpty) {
@@ -1091,12 +1175,19 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
           StandardCopyOption.REPLACE_EXISTING)
       }
     }
-    if (r.deltaKey.isEmpty || !Files.exists(out)) Nil
+    if (!ordered) Wrote(Map.empty, None, None, ordered = false)
     else {
-      val s = Files.list(out)
-      try s.iterator().asScala.map(_.getFileName.toString)
-        .collect { case BucketDir(b) => b.toInt }.toSeq.sorted
-      finally s.close()
+      val m = obs.get
+      require(r.deltaKey.isEmpty || m.contains("keys"),
+        s"the keys of delta $out were not observed")
+      def at(name: String) = m.get(name).collect {
+        case row: org.apache.spark.sql.Row if !row.isNullAt(0) && !row.isNullAt(1) =>
+          (row.getLong(0), row.getLong(1))
+      }
+      val keys = m.get("keys").toSeq
+        .flatMap(_.asInstanceOf[scala.collection.Seq[org.apache.spark.sql.Row]])
+        .groupMap(_.getInt(0))(_.getString(1))
+      Wrote(keys, at("lo"), at("hi"), ordered = true)
     }
   }
 
@@ -1271,9 +1362,7 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
     // ([[columnRenames]]); with it, the clone reads and guards
     // (retired-name reintroduction) exactly like the source.
     val srcChains = chainsAt(src, srcV)
-    writeVersion(dst, -1, Head,
-      srcChains.copy(buckets = srcChains.buckets.map { case (b, c) =>
-        b -> c.map(p => s"$rel/$p") }),
+    writeVersion(dst, -1, Head, srcChains.mapDirs(p => s"$rel/$p"),
       Files.readString(dir(src).resolve(s"schema-$srcV.json")),
       columnRenames(src, srcV), None)
     // Back-reference for clone-aware vacuum: the source records who
@@ -1500,9 +1589,8 @@ final class StateStore(val warehouse: String, val nBuckets: Int = 16) {
       // Atomically re-point every retained manifest.
       perVersion.foreach { case (v, m) =>
         if (m.only(buckets).dirs.exists(rewritten.contains)) {
-          replace(manifestFile(target, v), encodeManifest(m.copy(
-            buckets = m.buckets.map { case (b, c) =>
-              b -> c.map(p => rewritten.getOrElse(p, p)) })))
+          replace(manifestFile(target, v), encodeManifest(
+            m.mapDirs(p => rewritten.getOrElse(p, p))))
         }
       }
       // All manifests now point at purged dirs — the old files can go.
@@ -1804,28 +1892,104 @@ object StateStore {
                                 deltaKey: Option[Seq[String]])
 
   /** A version's bucket chains — each bucket's base dir, then its delta
-    * dirs, oldest first — and the key chained buckets resolve by (empty
-    * until the table's first delta commit).
+    * dirs, oldest first — and what resolving them takes: the key (empty
+    * until the table's first delta commit), each delta dir's [[Delta]],
+    * and `upTo`, a (ts, seq) no row the chains reach exceeds (None when
+    * unknown: rows written without merge metadata, or into a table
+    * that took no delta).
     */
   private final case class Chains(buckets: Map[Int, Seq[String]],
-                                  key: Seq[String]) {
+                                  key: Seq[String],
+                                  deltaKeys: Map[String, Delta],
+                                  upTo: Option[(Long, Long)]) {
     def newest: Map[Int, String] = buckets.map { case (b, c) => b -> c.last }
     def dirs: Seq[String] = buckets.values.flatten.toSeq
-    def only(bs: Set[Int]): Chains = copy(buckets = buckets.filter(e => bs(e._1)))
+    def only(bs: Set[Int]): Chains =
+      copy(buckets = buckets.filter(e => bs(e._1))).pruned
+    def mapDirs(f: String => String): Chains =
+      copy(buckets = buckets.map { case (b, c) => b -> c.map(f) },
+        deltaKeys = deltaKeys.map { case (p, ks) => f(p) -> ks })
+    /** Keys kept only for dirs that are still some chain's delta. */
+    def pruned: Chains = {
+      val deltas = buckets.values.flatMap(_.tail).toSet
+      copy(deltaKeys = deltaKeys.filter(e => deltas(e._1)))
+    }
   }
 
   private object Chains {
-    val empty: Chains = Chains(Map.empty, Nil)
+    val empty: Chains = Chains(Map.empty, Nil, Map.empty, Some(Floor))
   }
 
+  /** A delta dir's least (ts, seq) — above every row committed before
+    * it — and its keys ([[keyString]] form).
+    */
+  private final case class Delta(lo: (Long, Long), keys: Seq[String])
+
+  /** What a version's data write produced: the buckets a delta wrote,
+    * each with its keys, and the least and greatest (ts, seq) written
+    * (`ordered` false when not observed: rows with no merge metadata,
+    * or a table that takes no deltas).
+    */
+  private final case class Wrote(keys: Map[Int, Seq[String]],
+                                 lo: Option[(Long, Long)],
+                                 hi: Option[(Long, Long)], ordered: Boolean)
+
+  /** The (ts, seq) below every row's. */
+  private val Floor = (Long.MinValue, Long.MinValue)
+
+  private val order = Ordering[(Long, Long)]
+
   /** Deltas a chain may hold; the next write folds a longer one
-    * ([[StateStore.foldDue]]). Reading a chained bucket costs one
-    * aggregation whatever its length; more deltas add files to it.
+    * ([[StateStore.foldDue]]). Each delta adds a dir per bucket to the
+    * one scan a chained read makes, and its keys to the read's filter.
     */
   private val MaxDeltas = 4
 
-  private val BucketDir = s"$BucketCol=(\\d+)".r
+  /** A key as one string: each column cast to string and URL-encoded
+    * (null as `!`, which URL encoding never produces), comma-joined —
+    * the form a delta's keys are recorded in and [[keyLiteral]] reads.
+    */
+  private def keyString(key: Seq[String]): org.apache.spark.sql.Column =
+    concat_ws(",", key.map(c =>
+      coalesce(url_encode(col(c).cast("string")), lit("!"))): _*)
 
+  /** `key` as [[keyLiteral]] compares it: the column itself (an
+    * integral one as a long), or a struct of the columns.
+    */
+  private def keyColumn(key: Seq[String],
+                        schema: StructType): org.apache.spark.sql.Column =
+    if (key.size == 1) {
+      val c = col(key.head)
+      if (integral(schema, key.head)) c.cast(LongType) else c
+    } else struct(key.map(col): _*)
+
+  private def integral(schema: StructType, c: String): Boolean =
+    schema.find(_.name.equalsIgnoreCase(c)).exists(f =>
+      Seq(ByteType, ShortType, IntegerType).contains(f.dataType))
+
+  /** A [[keyString]] as a literal of `key`'s types in `schema`: the
+    * value itself for one column (an integral one as a long, which
+    * Spark hashes rather than compiling into a switch), a struct named
+    * like the columns for several, so `isin` compares values (a widened
+    * decimal included).
+    */
+  private def keyLiteral(key: Seq[String], schema: StructType,
+                         encoded: String): org.apache.spark.sql.Column = {
+    val parts = encoded.split(",", -1).toSeq.map(p =>
+      if (p == "!") None
+      else Some(java.net.URLDecoder.decode(p, java.nio.charset.StandardCharsets.UTF_8)))
+    val lits = key.zip(parts).map { case (k, v) =>
+      val t = schema.find(_.name.equalsIgnoreCase(k)).get.dataType
+      v.fold(lit(null).cast(t))(x => t match {
+        case LongType => lit(x.toLong)
+        case StringType => lit(x)
+        case _ => lit(x).cast(t)
+      })
+    }
+    if (lits.size == 1)
+      if (integral(schema, key.head)) lits.head.cast(LongType) else lits.head
+    else struct(key.zip(lits).map { case (k, l) => l.as(k) }: _*)
+  }
   /** Replace `f` atomically: write its `<name>.tmp` sibling, then move
     * it over `f` — readers see the old or the new content, never a mix.
     */
@@ -1843,20 +2007,32 @@ object StateStore {
         StandardOpenOption.CREATE, StandardOpenOption.APPEND)
 
   /** Manifest file format: a `key<TAB>column…` line once the table has
-    * a key, then one `bucket<TAB>data dir…` line per bucket (its chain,
-    * base first), ascending by bucket, no trailing newline.
+    * a key, an `upto<TAB>ts<TAB>seq` line when that bound is known, a
+    * `keys<TAB>dir<TAB>ts<TAB>seq<TAB>key…` line per delta dir (its
+    * least (ts, seq), then its keys), then one
+    * `bucket<TAB>data dir…` line per bucket (its chain, base first),
+    * ascending by bucket, no trailing newline.
     */
   private def encodeManifest(m: Chains): String =
     ((if (m.key.isEmpty) Nil else Seq(("key" +: m.key).mkString("\t"))) ++
+      m.upTo.map { case (ts, seq) => s"upto\t$ts\t$seq" } ++
+      m.deltaKeys.toSeq.sortBy(_._1).map { case (p, Delta((ts, seq), ks)) =>
+        (Seq("keys", p, ts.toString, seq.toString) ++ ks).mkString("\t") } ++
       m.buckets.toSeq.sortBy(_._1).map { case (b, c) =>
         (b.toString +: c).mkString("\t") }).mkString("\n")
 
   private def readManifest(f: Path): Chains = {
     val lines = Files.readAllLines(f).asScala.filter(_.nonEmpty)
-      .map(_.split("\t").toSeq).toSeq
-    val (key, buckets) = lines.partition(_.head == "key")
-    Chains(buckets.map(l => l.head.toInt -> l.tail).toMap,
-      key.headOption.fold(Seq.empty[String])(_.tail))
+      .map(_.split("\t", -1).toSeq).toSeq
+    val buckets = lines.collect {
+      case l if l.head.forall(_.isDigit) => l.head.toInt -> l.tail
+    }.toMap
+    Chains(buckets,
+      lines.collectFirst { case "key" +: k => k }.getOrElse(Nil),
+      lines.collect { case "keys" +: p +: ts +: seq +: ks =>
+        p -> Delta((ts.toLong, seq.toLong), ks) }.toMap,
+      lines.collectFirst { case Seq("upto", ts, seq) => (ts.toLong, seq.toLong) }
+        .orElse(if (buckets.isEmpty) Some(Floor) else None))
   }
 
   private def parseSchema(json: String): StructType =

@@ -2648,22 +2648,19 @@ object MaintenanceQueries {
     commitPhase(store, src, pk, ev.filter(ts > 3000))
     store.vacuum(src, keepVersions = 1)
     // Every dir the clone's manifest reaches into must have survived.
-    val cloneDirsIntact = store.manifest(dst).values.forall(p =>
+    val cloneDirsIntact = store.dirsAt(dst, store.currentVersion(dst)).forall(p =>
       Files.exists(whPath.resolve(dst).resolve(p).normalize))
     val cloneAfterVacuum = summarize(store.currentState(spark, dst))
     val sourceCurrent = summarize(store.currentState(spark, src))
 
     store.compactTable(spark, dst)
     store.vacuum(dst, keepVersions = 1)
-    // The source's delta chains are folded first, so its manifest names
-    // every dir its head still reads.
-    store.compactTable(spark, src)
     store.vacuum(src, keepVersions = 1)
     val refsPruned = !Files.exists(
       whPath.resolve(src).resolve(graft.cdc.StateStore.RefsFile))
     // Reclaim check: no source version dir outlives its own retained
     // manifest once the clone detached.
-    val srcManifestDirs = store.manifest(src).values
+    val srcManifestDirs = store.dirsAt(src, store.currentVersion(src))
       .map(_.split("/")(0)).toSet
     val srcVersionDirs = {
       val s = Files.list(whPath.resolve(src))

@@ -25,8 +25,10 @@ class DeltaLayoutSpec extends SparkTestBase {
   private final case class Ev(k: Long, v: Long, w: Option[Double], op: String,
                               ts: Long, seq: Long)
 
-  /** Seeded batches: out-of-order timestamps, duplicate keys within a
-    * batch, deletes and re-inserts; batch 3 widens the row with `w`.
+  /** Seeded batches: out-of-order timestamps within a batch (each
+    * batch newer than the last, so each commits as a delta), duplicate
+    * keys within a batch, deletes and re-inserts; batch 3 widens the row
+    * with `w`.
     */
   private def batches(seed: Long): Seq[Seq[Ev]] = {
     val rnd = new scala.util.Random(seed)
@@ -39,7 +41,7 @@ class DeltaLayoutSpec extends SparkTestBase {
           else Envelope.OpUpdate
         Ev(k, rnd.nextInt(1000).toLong,
           if (b >= 3) Some(rnd.nextDouble()) else None, op,
-          1000L * (b + 1) + rnd.nextInt(3000), seq)
+          10000L * (b + 1) + rnd.nextInt(3000), seq)
       }
     }
   }
@@ -90,9 +92,13 @@ class DeltaLayoutSpec extends SparkTestBase {
 
   private val T = "d.t"
 
-  private def chainLengths(store: StateStore, v: Int): Seq[Int] =
+  /** The manifest's bucket lines, split: bucket, base, deltas. */
+  private def bucketLines(store: StateStore, v: Int): Seq[Seq[String]] =
     Files.readAllLines(Paths.get(store.warehouse, T, s"manifest-$v.tsv"))
-      .asScala.filterNot(_.startsWith("key")).map(_.split("\t").length - 1).toSeq
+      .asScala.map(_.split("\t").toSeq).filter(_.head.forall(_.isDigit)).toSeq
+
+  private def chainLengths(store: StateStore, v: Int): Seq[Int] =
+    bucketLines(store, v).map(_.length - 1)
 
   /** Every state read of `store` against the reference of the events
     * each live version applied.
@@ -134,6 +140,18 @@ class DeltaLayoutSpec extends SparkTestBase {
     assert(chainLengths(two, 2).max == 3)
   }
 
+  test("a chained read resolves in its scan: no exchange in the plan") {
+    val store = freshStore()
+    applyAll(store, batches(5L).take(3).map(Seq(_)))
+    assert(chainLengths(store, store.currentVersion(T)).max == 3)
+    Seq(store.rawState(spark, T), store.currentState(spark, T),
+        store.stateAt(spark, T, 1),
+        store.currentState(spark, T).filter(col("k") === 7L)).foreach { df =>
+      val plan = df.queryExecution.sparkPlan.toString
+      assert(!plan.contains("Exchange"), plan)
+    }
+  }
+
   test("a delta commit of k events writes k rows and runs no bucket " +
       "collect job") {
     val store = freshStore()
@@ -173,11 +191,8 @@ class DeltaLayoutSpec extends SparkTestBase {
 
   /** Top-level dirs the manifests of `versions` reach. */
   private def reached(store: StateStore, versions: Seq[Int]): Set[String] =
-    versions.flatMap { v =>
-      Files.readAllLines(Paths.get(store.warehouse, T, s"manifest-$v.tsv"))
-        .asScala.filterNot(_.startsWith("key"))
-        .flatMap(_.split("\t").tail.map(_.split("/")(0)))
-    }.toSet
+    versions.flatMap(v =>
+      bucketLines(store, v).flatMap(_.tail.map(_.split("/")(0)))).toSet
 
   test("chained buckets through clone, restore, rename, WAP publish and " +
       "drop, optimistic commit, a crash, vacuum, purge and compaction") {
@@ -235,20 +250,29 @@ class DeltaLayoutSpec extends SparkTestBase {
     assert(chainLengths(store, store.currentVersion(T)).max == 1)
 
     // A crash inside atomically: the retry runs on the pre-batch state.
-    // Its events are older than the state's, so most of them lose.
-    val late = batches(13L).head
+    val next = batches(13L).last.map(e => e.copy(ts = e.ts + 100000L))
     intercept[IllegalStateException] {
       store.atomically(Seq(T)) {
-        MergeCommit.mergeFlattened(store, T, slice(late), Pk)
+        MergeCommit.mergeFlattened(store, T, slice(next), Pk)
         throw new IllegalStateException("crash")
       }
     }
     store.atomically(Seq(T)) {
-      MergeCommit.mergeFlattened(store, T, slice(late), Pk)
+      MergeCommit.mergeFlattened(store, T, slice(next), Pk)
     }
-    so = so ++ late
+    so = so ++ next
     assert(rows(store.rawState(spark, T)) == ref)
     assert(chainLengths(store, store.currentVersion(T)).max == 2)
+
+    // A late batch — events older than the state's — is no delta: the
+    // rewrite merges it into the buckets it touches, and most of its
+    // events lose.
+    val late = batches(13L).head
+    val lateV = MergeCommit.mergeFlattened(store, T, slice(late), Pk).get.version
+    so = so ++ late
+    assert(rows(store.rawState(spark, T)) == ref)
+    assert(bucketLines(store, lateV).forall(l =>
+      l.tail == Seq(s"v$lateV/_bucket=${l.head}")), "every touched chain rewritten")
 
     // Vacuum, the clone detached: exactly the dirs that neither the
     // head nor the tag reaches go, and both still read.
