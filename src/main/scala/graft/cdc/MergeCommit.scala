@@ -353,8 +353,7 @@ object MergeCommit {
         StateStore.bucketExpr(bucketCols, store.nBuckets))
       .persist()
     try {
-      val affected = deltas.select(StateStore.BucketCol).distinct()
-        .collect().map(_.getInt(0)).toSeq.sorted
+      val affected = bucketsOf(deltas)
       if (affected.nonEmpty) {
         val state =
           if (store.exists(table)) store.readBuckets(spark, table, affected)
@@ -373,6 +372,27 @@ object MergeCommit {
           StateStore.bucketExpr(bucketCols, store.nBuckets)), affected)
       }
     } finally deltas.unpersist(blocking = false)
+  }
+
+  /** FROM-SCRATCH COUNTER REBUILD — the hygiene twin of
+    * [[commitDeltas]]: `rebuilt` (a counter table recomputed from its
+    * source, in table column order) is bucketed by `bucketCols`,
+    * persisted and committed as a fresh version of `table`. The commit
+    * is TOTAL (VERDICT r16 #3): every bucket the rebuild fills is
+    * rewritten, and every previously-manifested bucket it no longer
+    * owns (each key hashing there emptied) commits empty. One persist,
+    * one bucket collect and one commit; returns the committed version.
+    */
+  def commitRebuilt(store: StateStore, table: String, rebuilt: DataFrame,
+                    bucketCols: Seq[String]): Int = {
+    val bucketed = rebuilt.withColumn(StateStore.BucketCol,
+      StateStore.bucketExpr(bucketCols, store.nBuckets)).persist()
+    try {
+      val owned =
+        if (store.exists(table)) store.manifest(table).keySet.toSeq else Nil
+      store.commit(rebuilt.sparkSession, table, bucketed,
+        (bucketsOf(bucketed) ++ owned).distinct.sorted)
+    } finally bucketed.unpersist(blocking = false)
   }
 
   /** Audit-scope tag for [[mergeGatedFlattened]]: batch rows carry

@@ -115,11 +115,18 @@ object HnswCdcQueries {
 
   // --------------------------------------------------- micro-batch
 
-  /** Phase label for the UI / JobProf (guide §1.5): thread-local, so
-    * it sticks to the actions this batch thread launches next.
+  /** Run `body` under the phase label `hnsw: s` for the UI / JobProf
+    * (guide §1.5). The label is thread-local, so it marks every action
+    * `body` launches on this thread; the thread's previous label comes
+    * back however `body` ends, so no caller (a bench or verify thread,
+    * a pooled [[graft.Par]] thread) inherits an HNSW label.
     */
-  private def label(spark: SparkSession, s: String): Unit =
-    spark.sparkContext.setJobDescription(s"hnsw: $s")
+  private def labelled[T](spark: SparkSession, s: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(s"hnsw: $s")
+    try body finally sc.setJobDescription(prev)
+  }
 
   /** One micro-batch ([[MergeCommit.mergeMaintained]]): bands
     * scan-local on batch rows, then the census deltas — ±1 per (stored
@@ -127,24 +134,27 @@ object HnswCdcQueries {
     * — and the relink.
     */
   private[queries] def processBatch(store: StateStore,
-                                    batch: DataFrame): Unit = {
-    label(batch.sparkSession, "merge batch")
-    MergeCommit.mergeMaintained(store, VecTable,
-      Seq(CensusTable, EdgeTable), batch, Seq("vec_id"))(_ =>
-        Seq(col("vec_id"), col("emb").as("v")) ++
-          BandDims.map { case (g, dims) =>
-            bandExpr(col("emb"), g, dims).as(s"b$g") }) {
-      (featMeta, result) =>
-        label(featMeta.sparkSession, "census deltas")
-        MergeCommit.commitDeltas(store, CensusTable, result,
-          featMeta.select("vec_id").distinct(), Seq("band"), Seq("band"),
-          dropAtZero = true)(
-          _.select(explode(array(BandDims.map { case (g, _) =>
-              col(s"b$g") }: _*)).as("band"))
-            .withColumn("n", lit(1L)))
-        linkBatch(store, featMeta, result)
+                                    batch: DataFrame): Unit =
+    labelled(batch.sparkSession, "merge batch") {
+      MergeCommit.mergeMaintained(store, VecTable,
+        Seq(CensusTable, EdgeTable), batch, Seq("vec_id"))(_ =>
+          Seq(col("vec_id"), col("emb").as("v")) ++
+            BandDims.map { case (g, dims) =>
+              bandExpr(col("emb"), g, dims).as(s"b$g") }) {
+        (featMeta, result) =>
+          labelled(featMeta.sparkSession, "census deltas") {
+            MergeCommit.commitDeltas(store, CensusTable, result,
+              featMeta.select("vec_id").distinct(), Seq("band"),
+              Seq("band"), dropAtZero = true)(
+              _.select(explode(array(BandDims.map { case (g, _) =>
+                  col(s"b$g") }: _*)).as("band"))
+                .withColumn("n", lit(1L)))
+          }
+          labelled(featMeta.sparkSession, "candidate pairs") {
+            linkBatch(store, featMeta, result)
+          }
+      }
     }
-  }
 
   /** Candidate pairs — batch live winners × stored bucket mates over
     * cap-eligible bands of THIS batch — then the layered [[relink]].
@@ -152,7 +162,6 @@ object HnswCdcQueries {
   private def linkBatch(store: StateStore, featMeta: DataFrame,
                         result: MergeCommit.Result): Unit = {
     val spark = featMeta.sparkSession
-    label(spark, "candidate pairs")
     val newLive = result.postSlice.filter(!col(StateStore.DeletedCol))
       .select("vec_id", "v", "b1", "b2", "b3").persist()
     def postings(df: DataFrame): DataFrame =
@@ -195,8 +204,7 @@ object HnswCdcQueries {
           .withColumn("layer", lit(L1Layer)))
         .select("layer", "vec_id", "neighbor", "cos")
       val batchKeys = featMeta.select("vec_id").distinct()
-      label(spark, "relink")
-      relink(spark, store, candL, batchKeys)
+      labelled(spark, "relink")(relink(spark, store, candL, batchKeys))
     } finally {
       cand.unpersist(blocking = false)
       newLive.unpersist(blocking = false)
@@ -306,56 +314,56 @@ object HnswCdcQueries {
     */
   private def walk(scored: DataFrame, baseEdges: DataFrame,
                    l1Edges: DataFrame, ownScored: Boolean = true,
-                   label: String = "hnsw: walk"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    scored.sparkSession.sparkContext.setJobDescription(label)
-    // `ownScored = false`: the caller persists/unpersists the shared
-    // scored frame (the recall audit runs two walks CONCURRENTLY over
-    // one scored cache — r17's deferred persist-ownership blocker).
-    val scoredP = if (ownScored) scored.persist() else scored
-    // Persist the edge frames: every hop's candidate join re-evaluates
-    // its edges argument, and for the recall audit's REBUILT graph that
-    // argument is the whole buildEdges pipeline (banded pair join +
-    // fanout window) — r17 JobProf measured the walks at 18 s of the
-    // 27 s cdc_hnsw_recall wall precisely because 5 hops × 2 walks
-    // recomputed it per hop. One materialization each, dropped on exit.
-    val baseP = baseEdges.persist()
-    val l1P = l1Edges.persist()
-    // Per-hop eager localCheckpoint is load-bearing: an attempted lazy
-    // five-hop lineage (one action at walk end) re-timed SLOWER
-    // (24.5 s vs 17.7 s for cdc_hnsw_incremental) — the nested
-    // limit-inside-join tree costs the optimizer more than the per-hop
-    // driver round-trips save (guide §1.1's "ideal plan is usually
-    // slower at first" case). The hop inputs (scores, edges) stay
-    // persisted above, which is where the real win was.
-    def expand(beam0: DataFrame, edges: DataFrame, hops: Int,
-               width: Int): DataFrame = {
-      var beam = beam0
-      for (_ <- 1 to hops) {
-        val c = beam.select("vec_id")
-          .join(edges, Seq("vec_id"))
-          .select(col("neighbor").as("vec_id")).distinct()
-        beam = beam.unionByName(c.join(scoredP, Seq("vec_id"))).distinct()
-          .orderBy(col("cos").desc, col("vec_id")).limit(width)
-          .localCheckpoint(true)
+                   label: String = "walk"): DataFrame =
+    labelled(scored.sparkSession, label) {
+      import org.apache.spark.sql.expressions.Window
+      // `ownScored = false`: the caller persists/unpersists the shared
+      // scored frame (the recall audit runs two walks CONCURRENTLY over
+      // one scored cache — r17's deferred persist-ownership blocker).
+      val scoredP = if (ownScored) scored.persist() else scored
+      // Persist the edge frames: every hop's candidate join re-evaluates
+      // its edges argument, and for the recall audit's REBUILT graph that
+      // argument is the whole buildEdges pipeline (banded pair join +
+      // fanout window) — r17 JobProf measured the walks at 18 s of the
+      // 27 s cdc_hnsw_recall wall precisely because 5 hops × 2 walks
+      // recomputed it per hop. One materialization each, dropped on exit.
+      val baseP = baseEdges.persist()
+      val l1P = l1Edges.persist()
+      // Per-hop eager localCheckpoint is load-bearing: an attempted lazy
+      // five-hop lineage (one action at walk end) re-timed SLOWER
+      // (24.5 s vs 17.7 s for cdc_hnsw_incremental) — the nested
+      // limit-inside-join tree costs the optimizer more than the per-hop
+      // driver round-trips save (guide §1.1's "ideal plan is usually
+      // slower at first" case). The hop inputs (scores, edges) stay
+      // persisted above, which is where the real win was.
+      def expand(beam0: DataFrame, edges: DataFrame, hops: Int,
+                 width: Int): DataFrame = {
+        var beam = beam0
+        for (_ <- 1 to hops) {
+          val c = beam.select("vec_id")
+            .join(edges, Seq("vec_id"))
+            .select(col("neighbor").as("vec_id")).distinct()
+          beam = beam.unionByName(c.join(scoredP, Seq("vec_id"))).distinct()
+            .orderBy(col("cos").desc, col("vec_id")).limit(width)
+            .localCheckpoint(true)
+        }
+        beam
       }
-      beam
+      val entry = scoredP.filter(col("vec_id") % 25 === 1)
+        .orderBy(col("cos").desc, col("vec_id")).limit(4)
+      val l1Beam = expand(entry, l1P, hops = 2, width = 8)
+      val out = expand(l1Beam, baseP, hops = 3, width = 16)
+        .withColumn("rank", row_number().over(
+          Window.orderBy(col("cos").desc, col("vec_id"))))
+        .filter(col("rank") <= 10)
+        .select("rank", "vec_id", "cos")
+        .orderBy("rank")
+        .localCheckpoint(true)
+      if (ownScored) scoredP.unpersist(blocking = false)
+      baseP.unpersist(blocking = false)
+      l1P.unpersist(blocking = false)
+      out
     }
-    val entry = scoredP.filter(col("vec_id") % 25 === 1)
-      .orderBy(col("cos").desc, col("vec_id")).limit(4)
-    val l1Beam = expand(entry, l1P, hops = 2, width = 8)
-    val out = expand(l1Beam, baseP, hops = 3, width = 16)
-      .withColumn("rank", row_number().over(
-        Window.orderBy(col("cos").desc, col("vec_id"))))
-      .filter(col("rank") <= 10)
-      .select("rank", "vec_id", "cos")
-      .orderBy("rank")
-      .localCheckpoint(true)
-    if (ownScored) scoredP.unpersist(blocking = false)
-    baseP.unpersist(blocking = false)
-    l1P.unpersist(blocking = false)
-    out
-  }
 
   private def scoredLive(spark: SparkSession, sfDir: String,
                          store: StateStore): DataFrame = {
@@ -408,9 +416,10 @@ object HnswCdcQueries {
     // The exact top-10 doubles as the scored cache's materializing
     // action, so the two concurrent walks below read a built cache
     // instead of racing to compute it.
-    spark.sparkContext.setJobDescription("hnsw: exact top-10")
-    val exact = scored.orderBy(col("cos").desc, col("vec_id"))
-      .limit(10).select("vec_id").localCheckpoint(true)
+    val exact = labelled(spark, "exact top-10") {
+      scored.orderBy(col("cos").desc, col("vec_id"))
+        .limit(10).select("vec_id").localCheckpoint(true)
+    }
     // The maintained walk and the rebuilt-baseline walk are independent
     // given the drain and the shared (read-only) scored cache, so they
     // run CONCURRENTLY (guide §2.6 — VERDICT r17 #2; r17 measured them
@@ -423,16 +432,15 @@ object HnswCdcQueries {
       () => {
         val (base, l1) = maintainedLayers(spark, store)
         walk(scored, base, l1,
-          ownScored = false, label = "hnsw: walk maintained")
+          ownScored = false, label = "walk maintained")
           .select("vec_id")
       },
-      () => {
-        spark.sparkContext.setJobDescription("hnsw: rebuild baseline")
+      () => labelled(spark, "rebuild baseline") {
         val live = store.currentState(spark, VecTable).persist()
         val (rb, rl1) = buildEdges(live)
         val out = walk(scored, rb.select("vec_id", "neighbor"),
           rl1.select("vec_id", "neighbor"),
-          ownScored = false, label = "hnsw: walk rebuilt")
+          ownScored = false, label = "walk rebuilt")
           .select("vec_id")
         live.unpersist(blocking = false)
         out

@@ -27,6 +27,18 @@ class HnswCdcSpec extends SparkTestBase {
       s"maintained recall $recInc fell more than 0.3 below rebuilt $recReb")
   }
 
+  test("the recall audit leaves the caller thread's job description " +
+      "as it found it") {
+    val sc = spark.sparkContext
+    val key = "spark.job.description"
+    val prev = sc.getLocalProperty(key)
+    try {
+      sc.setJobDescription("caller: before recall")
+      HnswCdcQueries.hnswRecall(spark, sf).collect()
+      assert(sc.getLocalProperty(key) === "caller: before recall")
+    } finally sc.setJobDescription(prev)
+  }
+
   test("deleted vectors never appear in the walk; fanout bound holds") {
     val store = HnswCdcQueries.runMaintenance(spark, sf)
     val top = HnswCdcQueries.hnswIncremental(spark, sf)
